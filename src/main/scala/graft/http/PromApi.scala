@@ -445,18 +445,9 @@ class PromApi(spark: SparkSession, samples: DataFrame, port: Int = 0,
             .map(id => (id, p, len))
         }.filter(_._1 < drainableBelow).sortBy(_._1)
         // capped prefix: at least one file, then stop at either cap
-        val files = {
-          val b = Seq.newBuilder[(Long, org.apache.hadoop.fs.Path)]
-          var bytes = 0L
-          var i = 0
-          while (i < completed.length && i < spoolDrainMaxFiles &&
-                 (i == 0 || bytes + completed(i)._3 <= spoolDrainMaxBytes)) {
-            b += ((completed(i)._1, completed(i)._2))
-            bytes += completed(i)._3
-            i += 1
-          }
-          b.result()
-        }
+        val fitting = completed.iterator.scanLeft(0L)(_ + _._3).drop(1)
+          .takeWhile(_ <= spoolDrainMaxBytes).size
+        val files = completed.take(math.min(spoolDrainMaxFiles, math.max(1, fitting))).toSeq
         if (files.isEmpty) 0
         else {
           // opt-in phase timing (SPARK_GRAFT_DRAIN_TIMING=1): where a
@@ -464,17 +455,17 @@ class PromApi(spark: SparkSession, samples: DataFrame, port: Int = 0,
           // commit chain — feeding the ingest ladder's floor analysis
           val timing = sys.env.get("SPARK_GRAFT_DRAIN_TIMING").contains("1")
           val t0 = System.nanoTime()
-          // EXECUTOR-SIDE decode: the window reads as a `binaryFile`
-          // frame and the wire codec (pure over Array[Byte]) runs in a
-          // flatMap where the tasks run — the driver sees only per-file
-          // outcome headers, window flags, and the tiny v2 metadata rows,
-          // never the batch itself (the r15 LocalRelation hop was the
-          // last named driver-side scale bottleneck). Cached: the window
-          // feeds the samples commit, the exemplar append, and the
-          // metadata upsert from one decode pass.
+          // EXECUTOR-SIDE decode: tasks read the listed window files and
+          // run the wire codec (pure over Array[Byte]) where they read —
+          // the driver sees only per-file outcome headers, window flags,
+          // and the tiny v2 metadata rows, never the batch itself (the
+          // r15 LocalRelation hop was the last named driver-side scale
+          // bottleneck). Cached: the window feeds the samples commit, the
+          // exemplar append, and the metadata upsert from one decode pass.
           import graft.streaming.SpoolDrain
           val decoded = SpoolDrain
-            .decodedFrame(spark, files.map(_._2.toString)).persist()
+            .decodedFrame(spark, files.map { case (_, p, len) => (p.toString, len) })
+            .persist()
           val flags = SpoolDrain.windowFlags(decoded)
           // a malformed SERIES inside an otherwise-good payload drops
           // alone (kind 7 — its payload-mates land): counted, because it
@@ -535,12 +526,12 @@ class PromApi(spark: SparkSession, samples: DataFrame, port: Int = 0,
           // rename means a sender with a symbol-table bug loses data
           // forever with no operator signal (r15 advisor finding). The
           // renames happen HERE, after the last action over `decoded`: an
-          // executor/cache loss mid-commit recomputes lost partitions from
-          // the binaryFile source, which must still see every window file
+          // executor/cache loss mid-commit recomputes lost partitions by
+          // re-reading the window's paths, which must all still exist
           // (r16 advisor finding — renaming before the commit made that
           // recompute a FileNotFoundException).
           if (flags.badPaths.nonEmpty) {
-            val byName = files.map { case (_, p) => p.getName -> p }.toMap
+            val byName = files.map { case (_, p, _) => p.getName -> p }.toMap
             flags.badPaths.foreach { uri =>
               byName.get(new org.apache.hadoop.fs.Path(uri).getName).foreach { p =>
                 fs.rename(p, new org.apache.hadoop.fs.Path(s"${p.toString}.bad"))
@@ -550,7 +541,7 @@ class PromApi(spark: SparkSession, samples: DataFrame, port: Int = 0,
               }
             }
           }
-          files.foreach { case (_, p) => fs.delete(p, false) }
+          files.foreach { case (_, p, _) => fs.delete(p, false) }
           lastDrainSamples.set(flags.samplesTotal)
           lastDrainNanos.set(tCommit - tDecode)
           if (timing) System.err.println(

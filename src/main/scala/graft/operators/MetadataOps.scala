@@ -77,17 +77,13 @@ object MetadataOps {
     * from this index touch series-cardinality-sized data (millions of
     * rows at 100 TB) instead of sample-scale scans; persist it with
     * [[graft.model.TsLayout.writeSeriesIndex]] and refresh per ingest
-    * window. The tag map round-trips through its sorted-entries JSON so
-    * the groupBy key is well-defined (MapType can't feed one). */
+    * window. The tag map is a grouping key as-is: Spark sorts a map
+    * grouping key by its keys, so maps holding the same entries in a
+    * different insertion order fold into one row. */
   def buildSeriesIndex(samples: DataFrame): DataFrame =
     samples
-      .withColumn("__k", to_json(array_sort(map_entries(col("tags")))))
-      .groupBy(col("series_id"), col("metric"), col("__k"))
+      .groupBy(col("series_id"), col("metric"), col("tags"))
       .agg(min(col("ts")).as("start_ts"), max(col("ts")).as("end_ts"))
-      .withColumn("tags", map_from_entries(from_json(col("__k"),
-        org.apache.spark.sql.types.DataType.fromDDL("array<struct<key:string,value:string>>"))))
-      .select(col("series_id"), col("metric"), col("tags"),
-        col("start_ts"), col("end_ts"))
 
   /** Merge-on-read combine for APPEND-ONLY series-index deltas (the
     * streaming ingest writes one [[buildSeriesIndex]] frame per

@@ -147,11 +147,6 @@ object Ingest {
       }
       .start()
 
-  /** One quota/sink/index microbatch over ALREADY-DEDUPED canonical rows —
-    * the `foreachBatch` body of [[startCanonicalIngestWithQuota]], factored
-    * out so the HTTP remote-write path ([[remoteWriteBatch]]) commits
-    * through the exact same protocol. BatchId-keyed overwrites keep a
-    * replay idempotent (the startIngestWithIndex contract). */
   /** Opt-in phase timing (SPARK_GRAFT_DRAIN_TIMING=1, same switch as the
     * drain's decode/commit split): prints per-phase wall time of the
     * commit chain's Spark actions, feeding the ingest ladder's floor
@@ -166,6 +161,11 @@ object Ingest {
       r
     }
 
+  /** One quota/sink/index microbatch over ALREADY-DEDUPED canonical rows —
+    * the `foreachBatch` body of [[startCanonicalIngestWithQuota]], factored
+    * out so the HTTP remote-write path ([[remoteWriteBatch]]) commits
+    * through the exact same protocol. BatchId-keyed overwrites keep a
+    * replay idempotent (the startIngestWithIndex contract). */
   def processCanonicalBatch(df0: DataFrame, batchId: Long, sinkDir: String,
                             indexDir: String, rejectDir: String,
                             cfg: graft.operators.Quota.QuotaConfig): Unit = {
@@ -445,7 +445,9 @@ object Ingest {
     // in-batch equal-ts dedup: least (value, exp payload) per (series, ts)
     // — min over a struct keeps the plain path's min-value contract and
     // picks deterministically for histogram rows (value is null there,
-    // and struct comparison falls through to the payload fields)
+    // and struct comparison falls through to the payload fields); a
+    // value-only window takes min(value) — the same least value, NaN
+    // largest in both — which plans as a HashAggregate, not SortAggregates
     val payload = Seq("value") ++
       (if (hasExp) ExpCols ++ Seq("__reset_hint") else Nil) ++
       // NHCB rows (custom-bucket native histograms canonicalized to
@@ -454,11 +456,11 @@ object Ingest {
       // the commit carries one — see PromApi.commitWriteRequest)
       Seq("le", "values", "hist_sum", "series_type", "__stale")
         .filter(canonical.columns.contains)
-    val inBatch = withId
-      .groupBy(col("series_id"), col("metric"), col("tags"), col("ts"))
-      .agg(min(struct(payload.map(col): _*)).as("__p"))
-      .select(Seq(col("series_id"), col("metric"), col("tags"), col("ts")) ++
-        payload.map(c => col(s"__p.$c").as(c)): _*)
+    val keys = Seq(col("series_id"), col("metric"), col("tags"), col("ts"))
+    val grouped = withId.groupBy(keys: _*)
+    val inBatch = if (payload == Seq("value")) grouped.agg(min(col("value")).as("value"))
+      else grouped.agg(min(struct(payload.map(col): _*)).as("__p"))
+        .select(keys ++ payload.map(c => col(s"__p.$c").as(c)): _*)
     val fresh = seriesHwm(spark, indexDir) match {
       case None => inBatch
       case Some(hwm) =>

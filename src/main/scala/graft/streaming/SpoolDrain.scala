@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.SerializableConfiguration
 import graft.http.ProtoWire
 
 /** Executor-side spool decode for the group-commit drain (and the shared
@@ -12,11 +13,11 @@ import graft.http.ProtoWire
   * the DRIVER-side drain: every spool file was read into driver memory,
   * decoded there, and shipped to executors as a LocalRelation embedded in
   * each commit's plan — at 100-TB ingest the driver becomes the funnel
-  * every byte squeezes through. Here the drain window becomes a
-  * `binaryFile` DataFrame (one row per spool file, content read where the
-  * task runs) and [[ProtoWire]]'s wire codec — a pure function over
-  * `Array[Byte]` — runs in a `flatMap` on the executors; the driver only
-  * ever sees per-file outcome headers and the (tiny) v2 metadata rows.
+  * every byte squeezes through. Here executor tasks read the window's
+  * spool files through the Hadoop `FileSystem` and run [[ProtoWire]]'s
+  * wire codec — a pure function over `Array[Byte]` — where they read;
+  * the driver only ever sees per-file outcome headers and the (tiny) v2
+  * metadata rows.
   *
   * Everything a drain window carries flattens into ONE union row shape
   * ([[SpoolRow]]), so a single decode pass feeds the samples commit, the
@@ -156,17 +157,24 @@ object SpoolDrain {
         (ok.flatMap(_._2) ++ badRows ++ metaRows)
     }.getOrElse(Seq(SpoolRow(5, path = path)))
 
-  /** The drain window as a DISTRIBUTED decoded dataset: spool files in as
-    * a `binaryFile` frame (content materializes in the scan task, never on
-    * the driver), wire decode in a flatMap on the executors. Caller must
-    * persist/unpersist (several downstream frames read it). */
+  /** The drain window as a DISTRIBUTED decoded dataset: the drain's own
+    * listed (path, length) pairs over min(files, defaultParallelism)
+    * tasks, each reading and decoding its files through the Hadoop
+    * `FileSystem` (bytes never reach the driver, and no file-source scan
+    * lists the paths again). Caller must persist/unpersist. */
   private[graft] def decodedFrame(spark: SparkSession,
-                                  paths: Seq[String]): Dataset[SpoolRow] = {
+                                  files: Seq[(String, Long)]): Dataset[SpoolRow] = {
     import spark.implicits._
-    spark.read.format("binaryFile").load(paths: _*)
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .flatMap { case (p, b) => decodeFile(p, b) }
+    val sc = spark.sparkContext
+    val conf = sc.broadcast(new SerializableConfiguration(sc.hadoopConfiguration))
+    val slices = math.min(files.size, sc.defaultParallelism)
+    spark.createDataset(sc.parallelize(files, slices).flatMap { case (p, len) =>
+      val path = new org.apache.hadoop.fs.Path(p)
+      val in = path.getFileSystem(conf.value.value).open(path)
+      val body = new Array[Byte](len.toInt)
+      try in.readFully(body) finally in.close()
+      decodeFile(p, body)
+    })
   }
 
   /** Aggregate drain-window facts the driver needs before committing —

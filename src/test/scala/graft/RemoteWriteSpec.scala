@@ -519,6 +519,66 @@ class RemoteWriteSpec extends AnyFunSuite with Matchers {
     } finally api.stop()
   }
 
+  test("spool window dedup: equal-ts duplicates keep the least value — two " +
+       "numbers, NaN as largest, a real NaN over a staleness marker — and a " +
+       "value-only window dedups without a SortAggregate") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val dir = tmp("graft-spooldedup")
+    val ws = PromApi.WriteSink(s"$dir/sink", s"$dir/index", s"$dir/reject", cfg)
+    val api = new PromApi(spark, spark.range(0).toDF(), writeSink = Some(ws),
+      spoolDrainMs = 3600000L).start()
+    val url = s"http://localhost:${api.boundPort}"
+    // one POST = one spool file; every pair below lands in one drain window
+    def post(job: String, v: Double, stale: Boolean = false): Unit =
+      RemoteRead.remoteWriteSeries(Seq(ProtoWire.PSeries(
+        Seq("__name__" -> "m", "job" -> job),
+        Seq(ProtoWire.PSample(v, 1000L, stale)))), url)
+    def sunk(job: String): Seq[(Double, Boolean)] = {
+      val df = spark.read.option("mergeSchema", "true").parquet(s"$dir/sink")
+      val stale =
+        if (df.columns.contains("__stale")) coalesce(col("__stale"), lit(false))
+        else lit(false)
+      df.filter(col("tags")("job") === job).select(col("value"), stale)
+        .collect().map(r => (r.getDouble(0), r.getBoolean(1))).toSeq
+    }
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      post("a", 5.0); post("a", 3.0)
+      post("b", Double.NaN); post("b", 2.0)
+      api.drainSpool() shouldEqual 4
+      // listener events arrive in order: once the sentinel's plan is
+      // seen, every plan the drain executed has been recorded
+      spark.range(1).select(col("id").as("dedup_sentinel")).collect()
+      val deadline = System.currentTimeMillis() + 30000L
+      while (!plans.toArray.exists(_.toString.contains("dedup_sentinel")) &&
+             System.currentTimeMillis() < deadline) Thread.sleep(20)
+      val executed = plans.toArray.mkString("\n")
+      executed should include("dedup_sentinel")
+      executed should include("min(value") // the dedup was recorded
+      executed should not include "SortAggregate"
+      sunk("a") shouldEqual Seq((3.0, false))
+      sunk("b") shouldEqual Seq((2.0, false)) // NaN orders largest
+      // a window carrying a marker keeps the struct rule over
+      // (value, __stale): the NaNs tie, the unflagged one is least
+      post("c", Double.NaN, stale = true); post("c", Double.NaN)
+      api.drainSpool() shouldEqual 2
+      val c = sunk("c")
+      c should have size 1
+      c.head._1.isNaN shouldBe true
+      c.head._2 shouldBe false
+    } finally {
+      spark.listenerManager.unregister(listener)
+      api.stop()
+    }
+  }
+
   test("spool crash windows: a crashed instance's acked spool drains clean " +
        "on the next instance; re-draining an identical window re-commits " +
        "the SAME batch id (idempotent overwrite, no duplicates)") {
@@ -597,6 +657,22 @@ class RemoteWriteSpec extends AnyFunSuite with Matchers {
       fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/sink/_spool"))
         .count(_.getPath.getName.endsWith(".wr")) shouldEqual 0
     } finally api.stop()
+    // the byte cap stops a window too, but never below one file: under a
+    // 1-byte cap every spooled POST drains as its own micro-batch
+    val byteCap = new PromApi(spark, spark.range(0).toDF(), writeSink = Some(
+        PromApi.WriteSink(s"$dir/sink2", s"$dir/index2", s"$dir/reject2", cfg)),
+      spoolDrainMs = 3600000L, spoolDrainMaxBytes = 1L).start()
+    try {
+      (0 until 3).foreach { i =>
+        RemoteRead.remoteWriteSeries(Seq(ProtoWire.PSeries(
+          Seq("__name__" -> "m", "i" -> i.toString),
+          Seq(ProtoWire.PSample(i.toDouble, 1000L)))),
+          s"http://localhost:${byteCap.boundPort}")
+      }
+      byteCap.drainSpool() shouldEqual 3
+      new java.io.File(s"$dir/sink2").list()
+        .count(_.startsWith("batch_id=")) shouldEqual 3
+    } finally byteCap.stop()
   }
 
   test("a crashed CAPPED drain re-derives the identical window and batch " +

@@ -109,7 +109,8 @@ class SpoolDrainSpec extends AnyFunSuite with Matchers {
     val p = new Path(s"$dir/0.wr")
     val out = fs.create(p, true)
     try out.write(body) finally out.close()
-    val decoded = SpoolDrain.decodedFrame(spark, Seq(p.toString)).persist()
+    val decoded = SpoolDrain
+      .decodedFrame(spark, Seq(p.toString -> body.length.toLong)).persist()
     try {
       val flags = SpoolDrain.windowFlags(decoded)
       flags.badSeries shouldEqual 1L
@@ -126,11 +127,11 @@ class SpoolDrainSpec extends AnyFunSuite with Matchers {
     import org.apache.hadoop.fs.Path
     val dir = java.nio.file.Files.createTempDirectory("spooldecode").toString
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def put(name: String, b: Array[Byte]): String = {
+    def put(name: String, b: Array[Byte]): (String, Long) = {
       val p = new Path(s"$dir/$name")
       val out = fs.create(p, true)
       try out.write(b) finally out.close()
-      p.toString
+      p.toString -> b.length.toLong
     }
     val p1 = put("0.wr", ProtoWire.encodeWriteRequest(Seq(series("a"))))
     val p2 = put("1.wr2", ProtoWire.encodeWriteRequestV2(Seq(
@@ -156,5 +157,45 @@ class SpoolDrainSpec extends AnyFunSuite with Matchers {
       canonical.columns.toSeq shouldEqual Seq("metric", "tags", "ts", "value")
       canonical.count() shouldEqual 4L
     } finally { decoded.unpersist(); () }
+  }
+
+  test("decode of a 40-file window (above Spark's 32-path parallel listing " +
+       "threshold) runs ONE job: the drain's own listing feeds the tasks, " +
+       "no file-listing job lists the paths again") {
+    import org.apache.hadoop.fs.Path
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val dir = java.nio.file.Files.createTempDirectory("spoolnolisting").toString
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val files = (0 until 40).map { i =>
+      val p = new Path(s"$dir/$i.wr")
+      val b = ProtoWire.encodeWriteRequest(Seq(series(s"m$i")))
+      val out = fs.create(p, true)
+      try out.write(b) finally out.close()
+      p.toString -> b.length.toLong
+    }
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties).map(_.getProperty("spark.jobGroup.id"))
+          .flatMap(Option(_)).getOrElse("none"))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("spool-decode-40", "decode")
+      val rows = try SpoolDrain.decodedFrame(spark, files).collect()
+                 finally sc.clearJobGroup()
+      rows.count(_.kind == 6) shouldEqual 40
+      rows.count(_.kind == 0) shouldEqual 80
+      // listener events arrive in order: once a later job's start is seen,
+      // every job the decode started has been counted
+      sc.setJobGroup("spool-decode-sentinel", "sentinel")
+      try spark.range(1).collect() finally sc.clearJobGroup()
+      val deadline = System.currentTimeMillis() + 30000L
+      while (!groups.contains("spool-decode-sentinel") &&
+             System.currentTimeMillis() < deadline) Thread.sleep(20)
+      groups.contains("spool-decode-sentinel") shouldBe true
+      groups.toArray.count(_ == "spool-decode-40") shouldEqual 1
+    } finally sc.removeSparkListener(listener)
   }
 }

@@ -121,6 +121,30 @@ class TsLayoutSpec extends AnyFunSuite with Matchers {
       .select("series_id", "ts", "value").collect().toSet shouldEqual beforeRows
   }
 
+  test("series index: tag maps with the same entries in a different " +
+       "insertion order fold into one row with widened bounds") {
+    import graft.operators.MetadataOps
+    import spark.implicits._
+    val samples = Seq(
+      (7L, "m", Map("a" -> "1", "b" -> "2", "c" -> "3"), 1000L),
+      (7L, "m", Map("c" -> "3", "a" -> "1", "b" -> "2"), 3000L),
+      (7L, "m", Map("b" -> "2", "c" -> "3", "a" -> "1"), 2000L))
+      .toDF("series_id", "metric", "tags", "ts")
+    val idx = MetadataOps.buildSeriesIndex(samples)
+      .select(col("start_ts"), col("end_ts"), map_entries(col("tags"))).collect()
+    idx should have size 1
+    idx.head.getLong(0) shouldEqual 1000L
+    idx.head.getLong(1) shouldEqual 3000L
+    // the entries, in order, of the sorted-entries JSON round trip the
+    // index once grouped on
+    val roundTrip = samples.select(map_from_entries(from_json(
+        to_json(array_sort(map_entries(col("tags")))),
+        org.apache.spark.sql.types.DataType.fromDDL(
+          "array<struct<key:string,value:string>>"))).as("tags"))
+      .select(map_entries(col("tags"))).head().getSeq[org.apache.spark.sql.Row](0)
+    idx.head.getSeq[org.apache.spark.sql.Row](2) shouldEqual roundTrip
+  }
+
   test("series index: one row per series, equals the scan path, prunes by metric") {
     import graft.operators.MetadataOps
     val samples = TsTables.eventsAsSamples(spark, "/root/testdata/sf0.001")
