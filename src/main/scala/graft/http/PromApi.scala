@@ -897,9 +897,10 @@ class PromApi(spark: SparkSession, samples: DataFrame, port: Int = 0,
     if (s.nonEmpty && s.last.isLetter) graft.promql.Parser.parseDuration(s)
     else math.round(s.toDouble * 1000)
 
-  /** Per-query staleness override (Prometheus `lookback_delta`). */
+  /** Per-query staleness override (Prometheus `lookback_delta`); zero or
+    * negative falls back to the default, as Prometheus' engine does. */
   private def lookback(p: Map[String, String]): Long =
-    p.get("lookback_delta").map(stepMs).getOrElse(PromPlanner.DefaultLookbackMs)
+    p.get("lookback_delta").map(stepMs).filter(_ > 0).getOrElse(PromPlanner.DefaultLookbackMs)
 
   /** Prometheus `stats` parameter: any non-empty value adds a
     * data.stats.timings/samples block (evaluation wall time + result
@@ -967,7 +968,15 @@ class PromApi(spark: SparkSession, samples: DataFrame, port: Int = 0,
     queriesServed.incrementAndGet()
     val t0 = System.nanoTime()
     val hook = statsHook(p)
-    val ctx = PromPlanner.Ctx(spark, liveSamples, ms(p("start")), ms(p("end")), stepMs(p("step")),
+    val (start, end, step) = (ms(p("start")), ms(p("end")), stepMs(p("step")))
+    // upstream's checks and messages, before any planning: a step grid
+    // needs a positive step
+    if (end < start)
+      throw new IllegalArgumentException("end timestamp must not be before start time")
+    if (step <= 0)
+      throw new IllegalArgumentException(
+        "zero or negative query resolution step widths are not accepted. Try a positive integer")
+    val ctx = PromPlanner.Ctx(spark, liveSamples, start, end, step,
       lookbackMs = lookback(p), stats = hook)
     val df = PromPlanner.queryRange(ctx, p("query"))
     if (p.get("explainOnly").contains("true")) explainResponse(p("query"), df)

@@ -312,14 +312,14 @@ object PromPlanner {
     * string key byte-for-byte. Kernel inputs group on THIS and serialize
     * the JSON per SERIES after aggregation — the per-sample to_json was
     * measured at ~2x the whole rate-kernel cost on the 8000-series
-    * scenario fixture (r17 ScenProbe). */
+    * scenario fixture (OPTIMIZATION_r17.md §8). */
   private def sortedEntries(labels: Column): Column =
     array_sort(map_entries(labels))
 
   /** [[sortedEntries]] built DIRECTLY from (metric, tags) by concatenating
     * entry arrays — no intermediate map_concat map is materialized per
     * row (measured 3x cheaper: 3.01 s -> 1.04 s over the 5.76M-row
-    * scenario fixture, r17 ScenProbe L1a vs L1b). Byte-identical to
+    * scenario fixture, OPTIMIZATION_r17.md §8). Byte-identical to
     * sortedEntries(labels-as-built-by-selectorSamplesFrom) whenever tags
     * does not itself contain a "__name__" key; when it does, the labels
     * path THROWS today (map_concat duplicate-key EXCEPTION policy) while
@@ -583,8 +583,8 @@ object PromPlanner {
     // selector provided it, else derived from the labels map): identical
     // partitioning to the JSON string key, but the per-SAMPLE row pays
     // only the entry-array build — to_json and the map rebuild run once
-    // per SERIES on the kernel output (r17; ScenProbe measured the whole
-    // rate kernel 2.1x faster end-to-end).
+    // per SERIES on the kernel output (the whole rate kernel measured
+    // 2.1x faster end-to-end, OPTIMIZATION_r17.md §8).
     val keyE = if (src0.columns.contains("__ent")) col("__ent")
                else sortedEntries(col("labels"))
     val slim = src0.select(keyE.as("__ke"), col("ts"), col("value"), col("__tie"))
@@ -596,7 +596,7 @@ object PromPlanner {
       case Some(at) => (at, at)
       case None => (ctx.startMs, ctx.endMs)
     }
-    val out = PeriodicSamples.viaAggregate(slim, Seq("__ke"), "ts", "value",
+    val out = PeriodicSamples(slim, Seq("__ke"), "ts", "value",
       evalStart, evalEnd, ctx.stepMs, windowMs, fn,
       offsetMs = sel.offsetMs, tieCol = Some("__tie"))
     // The key IS the sorted label set serialized as JSON — produce it (and

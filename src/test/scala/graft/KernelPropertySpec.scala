@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
-import graft.operators.{PeriodicSamples, RangeFns}
+import graft.operators.{PeriodicSamples, RangeFn, RangeFns}
 import graft.promql.Matchers.regexMatch
 
 /** Randomized equivalence checks (fixed seed, deterministic): the kernel
@@ -145,21 +145,41 @@ class KernelPropertySpec extends AnyFunSuite with Matchers {
     }
   }
 
-  test("groupByKey and columnar viaAggregate shapes agree exactly on adversarial input") {
+  test("kernel matches a plain-Scala per-step oracle exactly on adversarial input") {
     // unsorted arrival order, duplicate timestamps disambiguated by tie,
-    // counter resets — the two physical shapes (full-row groupByKey vs
-    // three aligned collect_lists + sortedness fast path) must be
-    // bit-identical for every range function family
+    // counter resets, NaN (no-data) samples, a null tie and an offset
     val rnd = new scala.util.Random(424242)
     val rows = (0 until 30).flatMap { sid =>
       val n = 1 + rnd.nextInt(60)
       (0 until n).map { i =>
         val ts = (rnd.nextInt(50) * 200 + 100).toLong // collisions on purpose
-        (s"s$sid", ts, rnd.nextDouble() * 1000, i.toLong)
+        val v = if (rnd.nextInt(12) == 0) Double.NaN else rnd.nextDouble() * 1000
+        // the null tie counts as 0, below every other tie of its series
+        (s"s$sid", ts, v, if (i == 0) None else Some(i.toLong + 1))
       }
     }
     val df = rnd.shuffle(rows).toDF("skey", "ts", "value", "tie").repartition(7)
-    val (start, end, step, w) = (1000L, 10000L, 700L, 2500L)
+    val (start, end, step, w, offset) = (1000L, 10000L, 700L, 2500L, 300L)
+
+    def oracle(fn: RangeFn): Map[(String, Long), Double] =
+      rows.groupBy(_._1).toSeq.flatMap { case (sid, ss) =>
+        val scanned = ss
+          .filter(r => !r._3.isNaN && r._2 > start - offset - w && r._2 <= end - offset)
+          .sortBy(r => (r._2, r._4.getOrElse(0L)))
+        val ts = scanned.map(_._2).toArray
+        val vs = scanned.map(_._3).toArray
+        if (fn.needsCounterCorrection) PeriodicSamples.monotonize(vs)
+        (start to end by step).flatMap { t =>
+          val (wStart, wEnd) = (t - offset - w, t - offset)
+          val in = ts.indices.filter(i => ts(i) > wStart && ts(i) <= wEnd)
+          if (in.isEmpty) None
+          else {
+            val v = fn.eval(in.map(ts).toArray, in.map(vs).toArray, 0, in.size, wStart, wEnd)
+            if (v.isNaN) None else Some((sid, t) -> v)
+          }
+        }
+      }.toMap
+
     for (fnName <- Seq("sum_over_time", "rate", "increase", "last_over_time",
                        "irate", "deriv", "quantile_over_time:0.7")) {
       val fn = fnName.split(":") match {
@@ -167,15 +187,14 @@ class KernelPropertySpec extends AnyFunSuite with Matchers {
         case Array(n) => RangeFns.byName(n)
       }
       val name = fnName.split(":").head
-      val a = PeriodicSamples(df, Seq("skey"), "ts", "value", start, end, step, w,
-        fn, tieCol = Some("tie"))
+      val got = PeriodicSamples(df, Seq("skey"), "ts", "value", start, end, step, w,
+        fn, offsetMs = offset, tieCol = Some("tie"))
         .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getDouble(2)).toMap
-      val b = PeriodicSamples.viaAggregate(df, Seq("skey"), "ts", "value", start, end, step, w,
-        fn, tieCol = Some("tie"))
-        .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getDouble(2)).toMap
-      withClue(s"$name: keys") { b.keySet shouldEqual a.keySet }
-      a.foreach { case (k, v) =>
-        withClue(s"$name at $k") { b(k) shouldEqual v }
+      val want = oracle(fn)
+      want should not be empty
+      withClue(s"$name: keys") { got.keySet shouldEqual want.keySet }
+      want.foreach { case (k, v) =>
+        withClue(s"$name at $k") { got(k) shouldEqual v }
       }
     }
   }

@@ -45,6 +45,27 @@ class PlanQualitySpec extends AnyFunSuite with Matchers {
     "Exchange hashpartitioning".r.findAllIn(p).length shouldEqual 1
   }
 
+  test("subqueries and histogram bucket rates run the columnar window kernel: " +
+       "no MapGroups or AppendColumns node in the executed plan") {
+    import spark.implicits._
+    import graft.functions.Histograms
+    def assertColumnar(df: org.apache.spark.sql.DataFrame): Unit = {
+      df.collect() // runs df's own plan, so AQE finalizes the one we read
+      val p = plan(df)
+      p should include("partial_collect_list")
+      (p should not).include("MapGroups")
+      (p should not).include("AppendColumns")
+    }
+    val start = TsTables.EventsStartMs + TsTables.Hour
+    val ctx = PromPlanner.Ctx(spark, TsTables.eventsAsTypeSamples(spark, dir),
+      start, start + TsTables.Hour, 300000L)
+    assertColumnar(PromPlanner.queryRange(ctx, "max_over_time(rate(purchase[5m])[30m:1m])"))
+    val hists = Seq(("s1", 10000L, Seq(10.0, 20.0)), ("s1", 20000L, Seq(30.0, 60.0)))
+      .toDF("series", "ts", "values")
+    assertColumnar(Histograms.periodicBucketRate(hists, Seq("series"), "ts",
+      20000L, 20000L, 10000L, 20000L, isRate = true))
+  }
+
   test("staleness-cutoff plan: the last-live-ts pass is bounded by a " +
        "BROADCAST semi-join on the marker series keys (a dead target must " +
        "not cost a second full scan); marker-free frames keep the " +

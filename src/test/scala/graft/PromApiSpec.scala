@@ -1530,4 +1530,43 @@ class PromApiSpec extends AnyFunSuite with Matchers {
       parse.body() should include(""""errorType":"bad_data"""")
     } finally api.stop()
   }
+
+  test("query_range rejects a non-positive step and an end before start with " +
+       "400 bad_data; lookback_delta <= 0 falls back to the default") {
+    import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
+    import org.scalatest.time.SpanSugar._
+    import spark.implicits._
+    implicit val signaler: Signaler = ThreadSignaler
+    // one sample a minute for two hours
+    val samples = (0 until 120).map(i => ("purchase", Map("user" -> "1"), i * 60000L, i.toDouble))
+      .toDF("metric", "tags", "ts", "value")
+    val api = new PromApi(spark, samples).start()
+    try {
+      val client = HttpClient.newHttpClient()
+      def send(path: String) = client.send(
+        HttpRequest.newBuilder(
+          URI.create(s"http://localhost:${api.boundPort}$path")).GET().build(),
+        HttpResponse.BodyHandlers.ofString())
+      val range = "/api/v1/query_range?query=purchase&start=0&end=7200"
+      // bounded: a zero step that reached a step loop would never return
+      for (step <- Seq("0", "-60", "0s")) {
+        val r = TimeLimits.failAfter(60.seconds)(send(s"$range&step=$step"))
+        withClue(s"step=$step") {
+          r.statusCode() shouldEqual 400
+          r.body() should include(""""errorType":"bad_data"""")
+          r.body() should include("zero or negative query resolution step widths are not accepted")
+        }
+      }
+      val backwards = send("/api/v1/query_range?query=purchase&start=7200&end=0&step=3600")
+      backwards.statusCode() shouldEqual 400
+      backwards.body() should include("end timestamp must not be before start time")
+
+      val default = send(s"$range&step=3600").body()
+      default should include(""""__name__":"purchase"""")
+      for (lb <- Seq("0", "0s", "-300"))
+        withClue(s"lookback_delta=$lb") {
+          send(s"$range&step=3600&lookback_delta=$lb").body() shouldEqual default
+        }
+    } finally api.stop()
+  }
 }
