@@ -5,6 +5,7 @@ import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.model.SeriesKey
 import graft.promql.PromPlanner
 import graft.operators.MetadataOps
 
@@ -676,7 +677,7 @@ class PromApi(spark: SparkSession, samples: DataFrame, port: Int = 0,
       if (wind.columns.contains("__stale")) coalesce(col("__stale"), lit(false))
       else lit(false)
     val newest = wind
-      .withColumn("__k", to_json(array_sort(map_entries(col("tags")))))
+      .withColumn("__k", SeriesKey.key(col("tags")))
       .groupBy(col("metric"), col("__k"))
       .agg(
         max_by(struct(col("ts"), col("value"), stale.as("st")), col("ts")).as("s"),
@@ -985,7 +986,7 @@ class PromApi(spark: SparkSession, samples: DataFrame, port: Int = 0,
       val (collected, executed) = collectLimited(df, seriesCap(p))
       val rows = collected.groupBy(_.getString(0)).toSeq.sortBy(_._1)
       val result = rows.map { case (key, rs) =>
-        val metric = keyToJsonObject(key)
+        val metric = jsObject(SeriesKey.decode(key))
         val values = rs.sortBy(_.getLong(1)).map { r =>
           s"""[${fmtTs(r.getLong(1))},${js(fmt(r.getDouble(2)))}]"""
         }.mkString(",")
@@ -1032,7 +1033,7 @@ class PromApi(spark: SparkSession, samples: DataFrame, port: Int = 0,
         s"""{"status":"success","data":$body$qs}"""
       } else {
         val result = rows.sortBy(_.getString(0)).map { r =>
-          s"""{"metric":${keyToJsonObject(r.getString(0))},"value":[${fmtTs(r.getLong(1))},${js(fmt(r.getDouble(2)))}]}"""
+          s"""{"metric":${jsObject(SeriesKey.decode(r.getString(0)))},"value":[${fmtTs(r.getLong(1))},${js(fmt(r.getDouble(2)))}]}"""
         }.mkString(",")
         val stats = statsJson(p, t0, rows.size, rows.size.toLong)
         val body = s"""{"resultType":"vector","result":[$result]$stats}"""
@@ -1583,11 +1584,9 @@ class PromApi(spark: SparkSession, samples: DataFrame, port: Int = 0,
       optCol("__stale", "boolean"))
     slim.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      // MAP columns don't support set ops — count distinct on the sorted
-      // entries key projection instead
-      val n = slim
-        .select(col("metric"), to_json(array_sort(map_entries(col("tags")))))
-        .distinct().limit(maxResultSeries + 1).count()
+      // MAP columns don't support set ops, but group as-is
+      val n = slim.groupBy(col("metric"), col("tags")).count()
+        .limit(maxResultSeries + 1).count()
       if (n > maxResultSeries)
         throw new IllegalStateException(
           s"remote read exceeds the per-query limit of $maxResultSeries series")
@@ -1714,53 +1713,48 @@ class PromApi(spark: SparkSession, samples: DataFrame, port: Int = 0,
   private def tsdbStatus(p: Map[String, String]): String = {
     val k = p.get("limit").map(_.toInt).getOrElse(10)
     val df = metaFrame(p)
-    // one series = (metric, sorted tag entries); reuse the engine's key
-    val keyed = df.select(col("metric"),
-      map_concat(map(lit("__name__"), col("metric")), col("tags")).as("lbls"))
-      .withColumn("__sk", to_json(array_sort(map_entries(col("lbls")))))
-    keyed.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // one series = (metric, tags): the tag map groups as-is
+    val series = df.groupBy(col("metric"), col("tags")).count()
+      .select(map_concat(map(lit("__name__"), col("metric")), col("tags")).as("lbls"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      // MAP columns can't go through set ops — distinct on the key only
-      val series = keyed.groupBy(col("__sk")).agg(first(col("lbls")).as("lbls"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val numSeries = series.count()
-        val pairs = series.select(col("__sk"), explode(col("lbls")).as(Seq("l", "v")))
-        val numLabelPairs = pairs.select(col("l"), col("v")).distinct().count()
-        val (minT, maxT) = {
-          // the series index carries per-series bounds instead of raw ts
-          val (lo, hi) =
-            if (df.columns.contains("ts")) (col("ts"), col("ts"))
-            else (col("start_ts"), col("end_ts"))
-          val r = df.agg(min(lo), max(hi)).collect().head
-          (if (r.isNullAt(0)) 0L else r.getLong(0),
-            if (r.isNullAt(1)) 0L else r.getLong(1))
-        }
-        // distributed top-k (TakeOrderedAndProject): never collect every
-        // group — a 1M-metric head must not land on the driver
-        def ranked(g: DataFrame): Seq[(String, Long)] = g
-          .orderBy(col("c").desc, col("n").asc).limit(k)
-          .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-        val byMetric = ranked(series.groupBy(col("lbls")("__name__").as("n"))
-          .agg(count(lit(1)).as("c")))
-        val valsByLabel = ranked(pairs.groupBy(col("l").as("n"))
-          .agg(countDistinct(col("v")).as("c")))
-        val byPair = ranked(pairs
-          .select(concat(col("l"), lit("="), col("v")).as("n"), col("__sk"))
-          .groupBy(col("n")).agg(countDistinct(col("__sk")).as("c")))
-        val bytesByLabel = ranked(pairs.groupBy(col("l").as("n"))
-          .agg(sum(length(col("v"))).as("c")))
-        def arr(xs: Seq[(String, Long)]): String = xs
-          .map { case (n, v) => s"""{"name":${js(n)},"value":$v}""" }
-          .mkString("[", ",", "]")
-        s"""{"status":"success","data":{"headStats":{"numSeries":$numSeries,""" +
-          s""""numLabelPairs":$numLabelPairs,"chunkCount":0,"minTime":$minT,""" +
-          s""""maxTime":$maxT},"seriesCountByMetricName":${arr(byMetric)},""" +
-          s""""labelValueCountByLabelName":${arr(valsByLabel)},""" +
-          s""""seriesCountByLabelValuePair":${arr(byPair)},""" +
-          s""""memoryInBytesByLabelName":${arr(bytesByLabel)}}}"""
-      } finally series.unpersist(false)
-    } finally keyed.unpersist(false)
+      val numSeries = series.count()
+      val pairs = series.select(explode(col("lbls")).as(Seq("l", "v")))
+      val numLabelPairs = pairs.select(col("l"), col("v")).distinct().count()
+      val (minT, maxT) = {
+        // the series index carries per-series bounds instead of raw ts
+        val (lo, hi) =
+          if (df.columns.contains("ts")) (col("ts"), col("ts"))
+          else (col("start_ts"), col("end_ts"))
+        val r = df.agg(min(lo), max(hi)).collect().head
+        (if (r.isNullAt(0)) 0L else r.getLong(0),
+          if (r.isNullAt(1)) 0L else r.getLong(1))
+      }
+      // distributed top-k (TakeOrderedAndProject): never collect every
+      // group — a 1M-metric head must not land on the driver
+      def ranked(g: DataFrame): Seq[(String, Long)] = g
+        .orderBy(col("c").desc, col("n").asc).limit(k)
+        .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+      val byMetric = ranked(series.groupBy(col("lbls")("__name__").as("n"))
+        .agg(count(lit(1)).as("c")))
+      val valsByLabel = ranked(pairs.groupBy(col("l").as("n"))
+        .agg(countDistinct(col("v")).as("c")))
+      // each series row is distinct and holds a label once, so a
+      // pair's row count is its distinct series count
+      val byPair = ranked(pairs.groupBy(concat(col("l"), lit("="), col("v")).as("n"))
+        .agg(count(lit(1)).as("c")))
+      val bytesByLabel = ranked(pairs.groupBy(col("l").as("n"))
+        .agg(sum(length(col("v"))).as("c")))
+      def arr(xs: Seq[(String, Long)]): String = xs
+        .map { case (n, v) => s"""{"name":${js(n)},"value":$v}""" }
+        .mkString("[", ",", "]")
+      s"""{"status":"success","data":{"headStats":{"numSeries":$numSeries,""" +
+        s""""numLabelPairs":$numLabelPairs,"chunkCount":0,"minTime":$minT,""" +
+        s""""maxTime":$maxT},"seriesCountByMetricName":${arr(byMetric)},""" +
+        s""""labelValueCountByLabelName":${arr(valsByLabel)},""" +
+        s""""seriesCountByLabelValuePair":${arr(byPair)},""" +
+        s""""memoryInBytesByLabelName":${arr(bytesByLabel)}}}"""
+    } finally series.unpersist(false)
   }
 
   /** Hierarchical time-series cardinality over a label path (reference
@@ -1861,13 +1855,11 @@ class PromApi(spark: SparkSession, samples: DataFrame, port: Int = 0,
         r.getMap[String, String](1).toSeq.sortBy(_._1)))
       .toSeq.sortBy(_._1.mkString)
     val data = bySeries.map { case (labels, rs) =>
-      val lbl = labels.map { case (k, v) => s"${js(k)}:${js(v)}" }.mkString(",")
       val exs = rs.sortBy(_.getLong(3)).map { r =>
-        val exLbl = r.getMap[String, String](2).toSeq.sortBy(_._1)
-          .map { case (k, v) => s"${js(k)}:${js(v)}" }.mkString(",")
-        s"""{"labels":{$exLbl},"value":${js(fmt(r.getDouble(4)))},"timestamp":${fmtTs(r.getLong(3))}}"""
+        val exLbl = jsObject(r.getMap[String, String](2).toSeq.sortBy(_._1))
+        s"""{"labels":$exLbl,"value":${js(fmt(r.getDouble(4)))},"timestamp":${fmtTs(r.getLong(3))}}"""
       }.mkString(",")
-      s"""{"seriesLabels":{$lbl},"exemplars":[$exs]}"""
+      s"""{"seriesLabels":${jsObject(labels)},"exemplars":[$exs]}"""
     }.mkString(",")
     s"""{"status":"success","data":[$data]}"""
   }
@@ -1905,21 +1897,14 @@ class PromApi(spark: SparkSession, samples: DataFrame, port: Int = 0,
       case None => MetadataOps.series(liveSamples, from, to, matchExprs(p))
     }
     val rows = found.collect().map { r =>
-      val metric = r.getString(0)
-      val tags = r.getMap[String, String](1)
-      val entries = (("__name__" -> metric) +: tags.toSeq.sortBy(_._1))
-        .map { case (k, v) => s"${js(k)}:${js(v)}" }.mkString(",")
-      s"{$entries}"
+      jsObject(("__name__" -> r.getString(0)) +: r.getMap[String, String](1).toSeq.sortBy(_._1))
     }.sorted
     s"""{"status":"success","data":[${rows.mkString(",")}]}"""
   }
 
-  /** "[{"key":"a","value":"b"},...]" (our sorted key) → {"a":"b",...} */
-  private def keyToJsonObject(key: String): String = {
-    val entries = "\"key\":\"(.*?)\",\"value\":\"(.*?)\"".r
-      .findAllMatchIn(key).map(m => s"${js(m.group(1))}:${js(m.group(2))}").mkString(",")
-    s"{$entries}"
-  }
+  /** Label pairs → the JSON object {"a":"b",...}. */
+  private def jsObject(labels: Seq[(String, String)]): String =
+    labels.map { case (k, v) => s"${js(k)}:${js(v)}" }.mkString("{", ",", "}")
 
   /** epoch-ms → decimal seconds, never scientific notation. */
   private def fmtTs(ms: Long): String =

@@ -5,6 +5,7 @@ import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
+import graft.model.SeriesKey
 import graft.promql.{Parser, Printer, PromPlanner}
 
 /** HTTP federation read (the reference's PromQlRemoteExec semantics,
@@ -58,7 +59,7 @@ object RemoteRead {
       .select(col("labels"),
         (element_at(col("v"), 1).cast("double") * 1000).cast("long").as("step_ts"),
         element_at(col("v"), 2).cast("double").as("value"))
-      .withColumn("__key", PromPlanner.seriesKey(col("labels")))
+      .withColumn("__key", SeriesKey.key(col("labels")))
       .select(col("labels"), col("__key"), col("step_ts"), col("value"))
   }
 

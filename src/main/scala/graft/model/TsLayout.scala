@@ -19,13 +19,13 @@ import org.apache.spark.sql.functions._
   */
 object TsLayout {
 
-  /** Canonical series identity — ONE formula for every layout, so the
-    * partitioned and bucketed layouts can never compute different ids
-    * for the same series (their reconciliation joins depend on it). */
+  /** Canonical series identity ([[SeriesKey.id]]) — the same id every
+    * writer persists, so the partitioned and bucketed layouts can never
+    * compute different ids for the same series (their reconciliation
+    * joins depend on it). */
   private def withSeriesId(samples: DataFrame): DataFrame =
-    samples.withColumn("series_id",
-      if (samples.columns.contains("series_id")) col("series_id")
-      else xxhash64(col("metric"), to_json(array_sort(map_entries(col("tags"))))))
+    if (samples.columns.contains("series_id")) samples
+    else samples.withColumn("series_id", SeriesKey.id(col("metric"), col("tags")))
 
   /** Write samples (metric, tags, ts ms, value, [series_id]) to the
     * partitioned layout. */

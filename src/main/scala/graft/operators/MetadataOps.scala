@@ -36,15 +36,13 @@ object MetadataOps {
 
   /** Distinct series (metric + full label map) in range, optionally
     * filtered by match[] selectors. MapType cannot feed a set operation,
-    * so dedupe on a serialized sorted-entries key. */
+    * but it can be a grouping key (as in [[buildSeriesIndex]]). */
   def series(samples: DataFrame, fromMs: Long, toMs: Long,
              matchExprs: Seq[String] = Nil): DataFrame =
     samples.filter(col("ts").between(fromMs, toMs))
       .filter(matchPred(matchExprs))
+      .groupBy(col("metric"), col("tags")).count()
       .select(col("metric"), col("tags"))
-      .withColumn("__k", to_json(array_sort(map_entries(col("tags")))))
-      .dropDuplicates("metric", "__k")
-      .drop("__k")
 
   /** All label names present (tag keys + metric pseudo-label). */
   def labelNames(samples: DataFrame, matchExprs: Seq[String] = Nil): DataFrame =

@@ -3,6 +3,7 @@ package graft.promql
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.model.SeriesKey
 import graft.operators._
 
 /** PromQL planner: PromExpr → DataFrame transformations over the canonical
@@ -13,8 +14,9 @@ import graft.operators._
   * `walkLogicalPlanTree` (SURVEY.md §3.1 step 4): each AST node maps to a
   * declarative DataFrame op, Catalyst owns all physical planning (predicate
   * pushdown to the parquet scan, partial aggregation, broadcast-vs-shuffle
-  * join choice via AQE). Vector identity is a deterministic sorted-entries
-  * JSON key (`__key`) because Spark cannot group/join on MapType directly.
+  * join choice via AQE). Vector identity is the sorted-entries JSON key
+  * `__key`, and the window kernel groups on its entry array; both come
+  * from [[graft.model.SeriesKey]], which owns the identity format.
   *
   * Result shape: (labels MAP<STRING,STRING>, __key STRING, step_ts LONG,
   * value DOUBLE).
@@ -51,7 +53,7 @@ object PromPlanner {
     def selectorCount: Int = frames.synchronized { frames.size }
     /** Distinct series touched across all registered selectors. */
     def timeSeriesScanned(): Long = frames.synchronized { frames.toSeq }.map { df =>
-      df.select(to_json(array_sort(map_entries(col("labels"))))).distinct().count()
+      df.select(SeriesKey.key(col("labels"))).distinct().count()
     }.sum
     /** Samples the registered selectors would read — a count on each
       * post-pushdown, time-bounded frame (scan-only jobs, no shuffle).
@@ -292,48 +294,15 @@ object PromPlanner {
     case _ => false
   }
 
-  /** Deterministic series key for a labels map — the engine's canonical
-    * vector identity, exposed for result-shape producers outside the
-    * planner (federation reads, custom sources). */
-  def seriesKey(labels: Column): Column = sortedKey(labels)
+  /** Deterministic series key for a labels map ([[SeriesKey.key]]). Kept
+    * as a forwarder because `graftbench/Dashboard.scala` calls it by name;
+    * new code calls SeriesKey directly. */
+  def seriesKey(labels: Column): Column = SeriesKey.key(labels)
 
   // ----- helpers -----
 
-  /** Deterministic series identity: sorted entries as a JSON array
-    * (to_json is codegen'd and measured faster than hand-rolled
-    * concat_ws/split codecs); invertible via labelsFromKey. */
-  private def sortedKey(labels: Column): Column =
-    to_json(array_sort(map_entries(labels)))
-
-  /** Pre-serialization form of [[sortedKey]]: the sorted entries ARRAY.
-    * Equal arrays ⟺ equal JSON strings (to_json is injective on
-    * string-entry arrays), so grouping on this column partitions series
-    * exactly as the string key does, and `to_json` of it reproduces the
-    * string key byte-for-byte. Kernel inputs group on THIS and serialize
-    * the JSON per SERIES after aggregation — the per-sample to_json was
-    * measured at ~2x the whole rate-kernel cost on the 8000-series
-    * scenario fixture (OPTIMIZATION_r17.md §8). */
-  private def sortedEntries(labels: Column): Column =
-    array_sort(map_entries(labels))
-
-  /** [[sortedEntries]] built DIRECTLY from (metric, tags) by concatenating
-    * entry arrays — no intermediate map_concat map is materialized per
-    * row (measured 3x cheaper: 3.01 s -> 1.04 s over the 5.76M-row
-    * scenario fixture, OPTIMIZATION_r17.md §8). Byte-identical to
-    * sortedEntries(labels-as-built-by-selectorSamplesFrom) whenever tags
-    * does not itself contain a "__name__" key; when it does, the labels
-    * path THROWS today (map_concat duplicate-key EXCEPTION policy) while
-    * this form keeps both entries — a divergence only on data that
-    * currently fails every query. */
-  private def directEntries(metric: Column, tags: Column): Column =
-    array_sort(concat(
-      when(metric.isNotNull,
-        array(struct(lit("__name__").as("key"), metric.as("value"))))
-        .otherwise(array().cast("array<struct<key:string,value:string>>")),
-      map_entries(tags)))
-
   private def withKey(df: DataFrame): DataFrame =
-    df.withColumn("__key", sortedKey(col("labels")))
+    df.withColumn("__key", SeriesKey.key(col("labels")))
 
   private def finish(df: DataFrame): DataFrame =
     df.select(col("labels"), col("__key"), col("step_ts"), col("value"))
@@ -511,7 +480,7 @@ object PromPlanner {
       // the kernel's grouping form, kept alongside the map: a lazy
       // projection (pruned whenever unused) that periodicFrom groups on
       // instead of re-deriving entries through the map_concat map
-      directEntries(col("metric"), col("tags")).as("__ent"),
+      SeriesKey.entries(col("metric"), col("tags")).as("__ent"),
       col("ts"), col("value"), tie.as("__tie")) ++
       // staleness-marker tombstones ride along for the instant-lookback
       // cutoff (periodicWithStaleCutoff); absent everywhere else
@@ -586,7 +555,7 @@ object PromPlanner {
     // per SERIES on the kernel output (the whole rate kernel measured
     // 2.1x faster end-to-end, OPTIMIZATION_r17.md §8).
     val keyE = if (src0.columns.contains("__ent")) col("__ent")
-               else sortedEntries(col("labels"))
+               else SeriesKey.entriesOf(col("labels"))
     val slim = src0.select(keyE.as("__ke"), col("ts"), col("value"), col("__tie"))
     // @ modifier pins the evaluation time: compute the single pinned step,
     // then replicate its value across the requested step grid.
@@ -606,7 +575,7 @@ object PromPlanner {
       case None => out
     }
     finish(gridded
-      .withColumn("__key", to_json(col("__ke")))
+      .withColumn("__key", SeriesKey.keyOf(col("__ke")))
       .withColumn("labels", map_from_entries(col("__ke")))
       .drop("__ke"))
   }
@@ -617,11 +586,6 @@ object PromPlanner {
     case At.End => ctx.endMs
     case ms => ms
   }
-
-  /** Inverse of sortedKey: parse the JSON entry array back to a map. */
-  private def labelsFromKey(key: Column): Column =
-    map_from_entries(from_json(key,
-      org.apache.spark.sql.types.DataType.fromDDL("array<struct<key:string,value:string>>")))
 
   private def dropName(df: DataFrame): DataFrame =
     withKey(df.withColumn("labels",
@@ -732,7 +696,7 @@ object PromPlanner {
           finish(withKey(withLbl)
             .groupBy(col("__key"), col("step_ts"))
             .agg(count(lit(1)).cast("double").as("value"))
-            .withColumn("labels", labelsFromKey(col("__key"))))
+            .withColumn("labels", SeriesKey.labels(col("__key"))))
         case "quantile" =>
           val phi = constParam(param)
           // φ outside [0,1] answers ±Inf per group (upstream promql; Spark's
@@ -744,11 +708,11 @@ object PromPlanner {
                     else Double.PositiveInfinity
             finish(keyed.groupBy(col("__key"), col("step_ts"))
               .agg(min(lit(v)).as("value"))
-              .withColumn("labels", labelsFromKey(col("__key"))))
+              .withColumn("labels", SeriesKey.labels(col("__key"))))
           } else
             finish(keyed.groupBy(col("__key"), col("step_ts"))
               .agg(percentile(col("value"), lit(phi)).as("value"))
-              .withColumn("labels", labelsFromKey(col("__key"))))
+              .withColumn("labels", SeriesKey.labels(col("__key"))))
         case simple =>
           val aggCol = simple match {
             case "sum" => sum(col("value"))
@@ -763,7 +727,7 @@ object PromPlanner {
           }
           finish(keyed.groupBy(col("__key"), col("step_ts"))
             .agg(aggCol.as("value"))
-            .withColumn("labels", labelsFromKey(col("__key"))))
+            .withColumn("labels", SeriesKey.labels(col("__key"))))
       }
 
     case BinOp(op, lhs, rhs, bool, matching) => planBinOp(ctx, op, lhs, rhs, bool, matching)
@@ -823,7 +787,7 @@ object PromPlanner {
       else if (without.nonEmpty)
         map_filter(col("labels"), (k, _) => !k.isin(without :+ "__name__": _*))
       else map().cast("map<string,string>")
-    to_json(array_sort(map_entries(filtered)))
+    SeriesKey.key(filtered)
   }
 
   /** Prometheus stamps count_values labels with Go's shortest-'f' float
@@ -1362,7 +1326,7 @@ object PromPlanner {
         .select(col("step_ts").as("__ist"),
           col("labels")("job").as("__ij"),
           col("labels")("instance").as("__ii"),
-          to_json(array_sort(map_entries(dataLabels))).as("__dk"),
+          SeriesKey.key(dataLabels).as("__dk"),
           dataLabels.as("__data"))
         .groupBy(col("__ist"), col("__ij"), col("__ii"))
         .agg(min_by(col("__data"), col("__dk")).as("__data"))
@@ -1483,7 +1447,7 @@ object PromPlanner {
       (acc, x) => concat(acc,
         array(greatest(x.getField("v"), coalesce(element_at(acc, -1), x.getField("v"))))))
     collected
-      .withColumn("labels", labelsFromKey(col("__key")))
+      .withColumn("labels", SeriesKey.labels(col("__key")))
       .withColumn("__le_arr", col("__b").getField("le"))
       .withColumn("__vals", mono)
       .drop("__b")
@@ -1736,5 +1700,5 @@ object PromPlanner {
 
   /** join-key column from on/ignoring; default = all labels minus __name__ */
   private def matchKeyCol(matching: Option[VectorMatch]): Column =
-    to_json(array_sort(map_entries(matchKeyMap(matching))))
+    SeriesKey.key(matchKeyMap(matching))
 }

@@ -2,6 +2,7 @@ package graft.promql
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.model.SeriesKey
 
 /** Runner for the upstream Prometheus `promql/testdata` `.test` format
   * (public prometheus/prometheus repo, promql/test.go) — `load` blocks
@@ -483,7 +484,7 @@ object TestCorpus {
           val ast = PromPlanner.resolveStepDurations(Parser.parse(e.expr), e.stepMs)
           PromPlanner.planVector(ctx, ast)
             .select(col("__key"), col("step_ts"), col("value")).collect()
-            .map(r => (PromApiLabels.fromKey(r.getString(0)), r.getLong(1)) -> r.getDouble(2))
+            .map(r => (SeriesKey.decode(r.getString(0)).toMap, r.getLong(1)) -> r.getDouble(2))
             .toMap
         }
         attempt match {
@@ -517,7 +518,7 @@ object TestCorpus {
           val ast = PromPlanner.resolveStepDurations(Parser.parse(e.expr), 1000L)
           val df = PromPlanner.planVector(ctx, ast)
           val rows = df.select(col("__key"), col("value")).collect()
-            .map(r => (PromApiLabels.fromKey(r.getString(0)), r.getDouble(1))).toSeq
+            .map(r => (SeriesKey.decode(r.getString(0)).toMap, r.getDouble(1))).toSeq
           (PromPlanner.isScalarTyped(ast), rows)
         }
         (attempt, e.expectFail) match {
@@ -556,13 +557,4 @@ object TestCorpus {
   private def render(xs: Seq[(Map[String, String], Double)]): String =
     xs.sortBy(_._1.toSeq.sorted.mkString)
       .map { case (l, v) => renderOne(l) + s" $v" }.mkString("; ")
-}
-
-/** Key-string → label map (the API's __key is the sorted JSON entry
-  * array; shared here so the corpus runner reads results the same way
-  * the HTTP layer does). */
-object PromApiLabels {
-  def fromKey(key: String): Map[String, String] =
-    "\"key\":\"(.*?)\",\"value\":\"(.*?)\"".r
-      .findAllMatchIn(key).map(m => m.group(1) -> m.group(2)).toMap
 }

@@ -1614,8 +1614,8 @@ object HistQueries {
         s.sparkContext.hadoopConfiguration)
         .delete(new org.apache.hadoop.fs.Path(idxDir), true)
       graft.operators.MetadataOps.buildSeriesIndex(
-          samples.withColumn("series_id", graft.streaming.Ingest
-            .canonicalSeriesId(col("metric"), col("tags"))))
+          samples.withColumn("series_id",
+            graft.model.SeriesKey.id(col("metric"), col("tags"))))
         .write.mode("overwrite").parquet(idxDir)
       val api = new graft.http.PromApi(s, samples,
         seriesIndex = Some(s.read.parquet(idxDir))).start()

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
+import graft.model.SeriesKey
 
 /** Gateway wire-format decode: InfluxDB line protocol → the canonical
   * samples shape, the seam the reference's gateway keeps between raw
@@ -195,8 +196,7 @@ object Gateway {
     * (series_id, metric, tags, ts, value, kind). */
   def influxSamples(lines: DataFrame, defaultTsMs: Long): DataFrame =
     influxDecode(lines, defaultTsMs).filter(col("err").isNull)
-      .withColumn("series_id",
-        xxhash64(col("metric"), to_json(array_sort(map_entries(col("tags"))))))
+      .withColumn("series_id", SeriesKey.id(col("metric"), col("tags")))
       .select(col("series_id"), col("metric"), col("tags"), col("ts"),
         col("value"), col("kind"))
 
@@ -508,8 +508,7 @@ object Gateway {
   /** Good samples in the canonical shape (see [[influxSamples]]). */
   def promTextSamples(payloads: DataFrame, defaultTsMs: Long): DataFrame =
     promTextDecode(payloads, defaultTsMs).filter(col("err").isNull)
-      .withColumn("series_id",
-        xxhash64(col("metric"), to_json(array_sort(map_entries(col("tags"))))))
+      .withColumn("series_id", SeriesKey.id(col("metric"), col("tags")))
       .select(col("series_id"), col("metric"), col("tags"), col("ts"),
         col("value"), col("kind"))
 

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.model.SeriesKey
 
 /** Streaming ingestion of the canonical samples model (SURVEY.md §2.9).
   *
@@ -234,13 +235,6 @@ object Ingest {
     ()
   }
 
-  /** The canonical series identity every wire decoder uses (Gateway
-    * influx/prom-text, remote-write): hash of metric + the name-sorted tag
-    * entries, so the same series gets the same id on every path. */
-  def canonicalSeriesId(metric: org.apache.spark.sql.Column,
-                        tags: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    xxhash64(metric, to_json(array_sort(map_entries(tags))))
-
   /** The native-histogram payload columns a remote-write batch may carry
     * beside `value` (see [[graft.http.ProtoWire.PHistogram]]); rows whose
     * `exp_counts` is non-null are CUMULATIVE native-histogram samples
@@ -440,8 +434,7 @@ object Ingest {
                        cfg: graft.operators.Quota.QuotaConfig): Unit = {
     val spark = canonical.sparkSession
     val hasExp = canonical.columns.contains("exp_counts")
-    val withId = canonical.withColumn("series_id",
-      canonicalSeriesId(col("metric"), col("tags")))
+    val withId = canonical.withColumn("series_id", SeriesKey.id(col("metric"), col("tags")))
     // in-batch equal-ts dedup: least (value, exp payload) per (series, ts)
     // — min over a struct keeps the plain path's min-value contract and
     // picks deterministically for histogram rows (value is null there,
@@ -1331,8 +1324,8 @@ object Ingest {
                            segment: String): Unit = {
     import org.apache.spark.sql.functions._
     def keyed(df: DataFrame): DataFrame = df
-      .withColumn("__t", to_json(array_sort(map_entries(col("tags")))))
-      .withColumn("__l", to_json(array_sort(map_entries(col("exemplar_labels")))))
+      .withColumn("__t", SeriesKey.key(col("tags")))
+      .withColumn("__l", SeriesKey.key(col("exemplar_labels")))
     val joinCols = Seq("metric", "__t", "__l", "ts", "value")
     // in-batch dedup on the keyed projection (MAP columns cannot feed a
     // set operation, so no .distinct() on the raw frame)

@@ -32,7 +32,7 @@ object DownsampleJob {
       .filter(f => seriesCols.contains(f.name) && f.dataType.isInstanceOf[MapType])
       .map(_.name).toSeq
     val prepped = mapCols.foldLeft(raw)((d, c) =>
-      d.withColumn(c, array_sort(map_entries(col(c)))))
+      d.withColumn(c, graft.model.SeriesKey.entriesOf(col(c))))
     resolutions.foreach { res =>
       val ds = Ingest.downsample(prepped, res, bucketOffset = "1 millisecond",
           seriesCols = seriesCols)

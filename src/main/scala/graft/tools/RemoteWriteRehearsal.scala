@@ -62,7 +62,7 @@ object RemoteWriteRehearsal {
       .select(lit("seed_metric").as("metric"),
         map(lit("i"), col("id").cast("string")).as("tags"),
         lit(1000L).as("ts"), col("id").cast("double").as("value"))
-      .withColumn("series_id", Ingest.canonicalSeriesId(col("metric"), col("tags")))
+      .withColumn("series_id", graft.model.SeriesKey.id(col("metric"), col("tags")))
     Ingest.processCanonicalBatch(canonical, 0L, sink, index, reject, cfg)
     Ingest.compactHwm(spark, index)
     (sink, index, reject, (System.nanoTime() - t0) / 1e9)

@@ -760,7 +760,7 @@ class PromApiSpec extends AnyFunSuite with Matchers {
         .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
       val direct = PromPlanner.queryRange(
           PromPlanner.Ctx(spark, deduped.withColumn("series_id",
-              graft.streaming.Ingest.canonicalSeriesId(col("metric"), col("tags"))),
+              graft.model.SeriesKey.id(col("metric"), col("tags"))),
             TsTables.EventsStartMs, TsTables.EventsEndMs, 86400000L), q)
         .select("__key", "step_ts", "value").collect()
         .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
@@ -834,7 +834,7 @@ class PromApiSpec extends AnyFunSuite with Matchers {
           .agg(org.apache.spark.sql.functions.min(col("value")).as("value"))
         val local = PromPlanner.queryRange(
             PromPlanner.Ctx(spark, aDeduped.withColumn("series_id",
-              graft.streaming.Ingest.canonicalSeriesId(col("metric"), col("tags"))),
+              graft.model.SeriesKey.id(col("metric"), col("tags"))),
               s0, e0, 86400000L), q)
           .select("__key", "step_ts", "value").collect()
           .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
@@ -1567,6 +1567,33 @@ class PromApiSpec extends AnyFunSuite with Matchers {
         withClue(s"lookback_delta=$lb") {
           send(s"$range&step=3600&lookback_delta=$lb").body() shouldEqual default
         }
+    } finally api.stop()
+  }
+
+  test("query and query_range render escaped label values exactly as stored") {
+    import spark.implicits._
+    val values = Seq("quo\"te", "back\\slash", "new\nline\ttab", "unié中", "")
+    val series = values.zipWithIndex.map { case (v, i) => Map("v" -> v, "i" -> i.toString) } :+
+      Map("a" -> "quo\"te", "b" -> "back\\slash", "c" -> "new\nline\ttab", "d" -> "unié中")
+    val samples = series.map(t => ("adv", t, 60000L, 1.0)).toDF("metric", "tags", "ts", "value")
+    val want = series.map(_ + ("__name__" -> "adv")).toSet
+    val api = new PromApi(spark, samples).start()
+    try {
+      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+      def metrics(body: String): Set[Map[String, String]] = {
+        val root = mapper.readTree(body)
+        root.path("status").asText() shouldEqual "success"
+        val out = Set.newBuilder[Map[String, String]]
+        root.path("data").path("result").elements().forEachRemaining { r =>
+          val m = Map.newBuilder[String, String]
+          r.path("metric").properties().forEach(e => m += e.getKey -> e.getValue.asText())
+          out += m.result()
+        }
+        out.result()
+      }
+      metrics(get(api.boundPort, "/api/v1/query?query=adv&time=60")) shouldEqual want
+      metrics(get(api.boundPort,
+        "/api/v1/query_range?query=adv&start=60&end=120&step=60")) shouldEqual want
     } finally api.stop()
   }
 }

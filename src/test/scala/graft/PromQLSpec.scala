@@ -746,4 +746,20 @@ class PromQLSpec extends AnyFunSuite with Matchers {
       .collect().map(_.getString(0)).sorted
     actual.map(_.getString(0)).sorted shouldEqual expected
   }
+
+  test("a tags map holding __name__ beside a metric fails with a named error") {
+    // such a row names two series at once; the kernel's entry array must
+    // refuse it as the map_concat labels path does, not keep both names
+    // an RDD-backed frame, like a scan: a local Seq would be folded by
+    // ConvertToLocalRelation, which evaluates the unpruned labels map
+    val df = spark.sparkContext.parallelize(Seq(("m", Map("__name__" -> "other", "a" -> "1"),
+      1000L, 1.0))).toDF("metric", "tags", "ts", "value")
+    val c = PromPlanner.Ctx(spark, df, 60000L, 60000L, 1000L)
+    for (q <- Seq("rate(m[5m])", "m")) withClue(q) {
+      val ex = intercept[Exception](PromPlanner.queryRange(c, q).collect())
+      Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
+        .exists(e => Option(e.getMessage).exists(
+          _.contains(graft.model.SeriesKey.NameInTagsError))) shouldEqual true
+    }
+  }
 }

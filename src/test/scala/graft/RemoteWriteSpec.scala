@@ -153,7 +153,7 @@ class RemoteWriteSpec extends AnyFunSuite with Matchers {
     // sink/index commit never happened
     val crashed = canonicalHist(Seq("m" -> hist(2000L, Seq(5.0, 2.0))))
       .withColumn("series_id",
-        Ingest.canonicalSeriesId(col("metric"), col("tags")))
+        graft.model.SeriesKey.id(col("metric"), col("tags")))
     Ingest.expCumulativeToDelta(crashed, 1L, stateDir).collect()
     spark.read.parquet(stateDir).count() shouldEqual 2L // both versions live
     // sender retry (new batch id, same samples): the fold must seed from
