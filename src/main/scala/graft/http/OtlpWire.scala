@@ -512,9 +512,9 @@ object OtlpWire {
             val (stales, live) = pts.partition(_.stale)
             val hs = live.map { e =>
               // OTel bucket i covers (base^i, base^(i+1)] — the engine's
-              // exp-storage indexing exactly; commitWriteRequest subtracts
-              // one from the prompb offset, so pre-add it here. DELTA
-              // temporality IS the storage temporality: the GAUGE reset
+              // exp-storage indexing exactly; SpoolDrain.seriesRows
+              // subtracts one from the prompb offset, so pre-add it here.
+              // DELTA temporality IS the storage temporality: the GAUGE reset
               // hint routes such points around the cumulative→delta
               // conversion (stored as-is), upstream's own trick for
               // gauge-hinted native histograms.

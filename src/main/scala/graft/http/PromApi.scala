@@ -3,11 +3,12 @@ package graft.http
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model.SeriesKey
 import graft.promql.PromPlanner
 import graft.operators.MetadataOps
+import graft.streaming.SpoolDrain
 
 /** Prometheus-compatible HTTP API (SURVEY.md §3.1/§2.8), served by the JDK
   * HttpServer (zero extra dependencies):
@@ -102,7 +103,7 @@ class PromApi(spark: SparkSession, samples: DataFrame, port: Int = 0,
   private val pool = java.util.concurrent.Executors.newFixedThreadPool(
     math.max(2, httpThreads))
 
-  /** Backpressure for `/api/v1/write`: at most `maxInFlightWrites` POSTs
+  /** Backpressure for both write routes: at most `maxInFlightWrites` POSTs
     * are decoding/committing at once; the rest get 429 + Retry-After,
     * which remote-write senders honor with backoff. */
   private val writePermits = new java.util.concurrent.Semaphore(
@@ -146,25 +147,33 @@ class PromApi(spark: SparkSession, samples: DataFrame, port: Int = 0,
   def lastDrainStats: (Long, Long) =
     (lastDrainSamples.get(), lastDrainNanos.get())
 
-  /** Local batch-id counter — a STARTING GUESS only; the claim protocol
-    * below is what makes ids collision-free across racing instances. */
+  /** Local batch-id counter of SYNCHRONOUS mode — a STARTING GUESS only;
+    * the claim protocol below is what makes ids collision-free across
+    * racing instances. Spool mode never touches it: its batch ids are
+    * spool ids (see the spool section). */
   private lazy val writeBatchId = new java.util.concurrent.atomic.AtomicLong(
-    writeSink.map { ws =>
-      val fs = new org.apache.hadoop.fs.Path(ws.sinkDir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      // guarded parse: a crashed-write leftover like `batch_id=7.tmp`
-      // must not throw in this lazy init (it would permanently 400 the
-      // write endpoint) — only all-digit suffixes count
-      def maxIn(dir: String, prefix: String): Long = {
-        val p = new org.apache.hadoop.fs.Path(dir)
-        if (!fs.exists(p)) -1L
-        else fs.listStatus(p).map(_.getPath.getName)
-          .flatMap(n => if (n.startsWith(prefix)) n.stripPrefix(prefix).toLongOption else None)
-          .foldLeft(-1L)(math.max)
-      }
-      math.max(maxIn(ws.sinkDir, "batch_id="),
-        maxIn(s"${ws.sinkDir}/_claims", "")) + 1L
-    }.getOrElse(0L))
+    writeSink.map(ws => math.max(maxId(ws.sinkDir)(batchDirId),
+      maxId(s"${ws.sinkDir}/_claims")(_.toLongOption)) + 1L).getOrElse(0L))
+
+  /** The write sink's filesystem. */
+  private def sinkFs(ws: PromApi.WriteSink): org.apache.hadoop.fs.FileSystem =
+    new org.apache.hadoop.fs.Path(ws.sinkDir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** Largest id `id` parses from the names in `dir`; -1 when none. Seeds
+    * both id counters. The parse is guarded: a crashed-write leftover
+    * like `batch_id=7.tmp` must not throw in a counter's lazy init (it
+    * would permanently fail the write endpoint). */
+  private def maxId(dir: String)(id: String => Option[Long]): Long = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) -1L
+    else fs.listStatus(p).flatMap(st => id(st.getPath.getName)).foldLeft(-1L)(math.max)
+  }
+
+  /** `batch_id=<n>` → n; only all-digit suffixes count. */
+  private def batchDirId(name: String): Option[Long] =
+    if (name.startsWith("batch_id=")) name.stripPrefix("batch_id=").toLongOption else None
 
   /** Mint a batch id no other writer holds: atomically create a claim
     * file under `<sink>/_claims/<id>` (createNewFile is the one atomic
@@ -173,8 +182,7 @@ class PromApi(spark: SparkSession, samples: DataFrame, port: Int = 0,
     * Makes the single-writer batch-id contract STRUCTURAL: two PromApi
     * instances pointed at one sink can no longer mint colliding ids. */
   private def claimBatchId(ws: PromApi.WriteSink): Long = {
-    val fs = new org.apache.hadoop.fs.Path(ws.sinkDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = sinkFs(ws)
     fs.mkdirs(new org.apache.hadoop.fs.Path(s"${ws.sinkDir}/_claims"))
     var id = writeBatchId.getAndIncrement()
     while (!fs.createNewFile(
@@ -193,13 +201,16 @@ class PromApi(spark: SparkSession, samples: DataFrame, port: Int = 0,
   // (the r10 judge's one perf-weak finding). Group commit decouples the
   // ack from the commit:
   //
-  //   POST → decode (400 on bad payload) → durable spool append → 204
+  //   POST → decode (400 on bad payload) → durable spool append → 2xx
   //   drainer (every spoolDrainMs) → ALL spooled requests as ONE batch
-  //     through the same commitWriteRequest chain → delete drained files
+  //     through the same commitRows chain → delete drained files
   //
-  // Spool files are length-irrelevant single-request protobuf blobs named
-  // `<id>.wr` under `<sink>/_spool/` (written as `<id>.tmp`, hsync'd,
-  // renamed — the same atomic-publish primitive the compactions use).
+  // Spool mode spools EVERY write — remote-write v1/v2 and OTLP alike — so
+  // the drain is its only committer. Spool files are length-irrelevant
+  // single-request protobuf blobs named `<id>.<ext>` under `<sink>/_spool/`,
+  // the extension naming the wire format ([[graft.streaming.SpoolDrain
+  // .Payload]]); written as `<id>.tmp`, hsync'd, renamed — the same
+  // atomic-publish primitive the compactions use.
   // Semantics across the spool boundary:
   //   - a re-POST landing in the same drain batch dedups IN-batch
   //     (remoteWriteBatch's equal-ts least-payload rule);
@@ -212,34 +223,22 @@ class PromApi(spark: SparkSession, samples: DataFrame, port: Int = 0,
   //     max so successive drains never collide. The spool sequence seeds
   //     past both live spool files and committed batch dirs, so a restart
   //     cannot re-mint a drained id.
-  // One mode per sink: a spool-mode instance must not share a sink with a
-  // synchronous-mode instance (their id namespaces would interleave).
+  // Each mode has ONE batch-id namespace: spool ids in spool mode,
+  // claimBatchId's `_claims` in synchronous mode. So one mode per sink: a
+  // spool-mode instance must not share a sink with a synchronous-mode
+  // instance (the two namespaces would interleave).
 
   private lazy val spoolSeq = new java.util.concurrent.atomic.AtomicLong(
-    writeSink.map { ws =>
-      val fs = new org.apache.hadoop.fs.Path(ws.sinkDir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val sp = new org.apache.hadoop.fs.Path(s"${ws.sinkDir}/_spool")
-      val spoolMax =
-        if (!fs.exists(sp)) -1L
-        else fs.listStatus(sp).map(_.getPath.getName)
-          .flatMap(n => n.split('.').headOption.flatMap(_.toLongOption))
-          .foldLeft(-1L)(math.max)
-      val sinkRoot = new org.apache.hadoop.fs.Path(ws.sinkDir)
-      val batchMax =
-        if (!fs.exists(sinkRoot)) -1L
-        else fs.listStatus(sinkRoot).map(_.getPath.getName)
-          .flatMap(_.stripPrefix("batch_id=").toLongOption)
-          .foldLeft(-1L)(math.max)
-      math.max(spoolMax, batchMax) + 1L
-    }.getOrElse(0L))
+    writeSink.map(ws => math.max(
+      maxId(s"${ws.sinkDir}/_spool")(_.split('.').headOption.flatMap(_.toLongOption)),
+      maxId(ws.sinkDir)(batchDirId)) + 1L).getOrElse(0L))
 
   // ---- in-process claim ledger --------------------------------------------
   //
   // spoolAppend claims id N (getAndIncrement) strictly BEFORE its `.tmp`
   // becomes visible to a drain listing. In that gap a sibling writer can
   // claim AND fully publish N+1; a drain listing then sees N+1 as a
-  // drainable `.wr` with nothing gating N — and commits batch ids out of
+  // drainable payload with nothing gating N — and commits batch ids out of
   // spool-id order (the r12 advisor's remaining data-loss window: an hwm
   // compaction between the two commits hides N's index delta forever).
   // The `.tmp` prefix rule cannot see a claim that has no file yet, so the
@@ -247,7 +246,7 @@ class PromApi(spark: SparkSession, samples: DataFrame, port: Int = 0,
   // drainOnce snapshots the ledger floor BEFORE listing: any id claimed
   // before the snapshot and still unpublished is in the ledger (gated);
   // any id claimed AFTER the snapshot is ≥ the snapshot's seq value, which
-  // the floor also gates — so no listed `.wr` can outrun a lower pending
+  // the floor also gates — so no listed payload can outrun a lower pending
   // claim. A claim older than `spoolTmpAbandonMs` (writer wedged before
   // even creating its `.tmp`) is POISONED instead of gating forever: the
   // drain moves past it, and if the wedged writer later completes, its
@@ -291,23 +290,21 @@ class PromApi(spark: SparkSession, samples: DataFrame, port: Int = 0,
       if (spoolClaims.isEmpty) spoolSeq.get() else spoolClaims.firstKey()
     }
 
-  /** Durably append one decoded-valid WriteRequest body to the spool:
-    * exclusive-create the tmp (claims the id), write + hsync, rename.
-    * Returns only once the bytes are down — the 204 is a durability ack.
-    * v2 (io.prometheus.write.v2.Request) bodies publish as `.wr2` so the
-    * drain decodes each file with its own wire version (and keeps v2's
-    * inline metadata). Only a genuine id COLLISION (the exclusive create
-    * lost because the id is already claimed as `.tmp`, `.wr` or `.wr2`)
-    * retries with a fresh id; any other IOException (disk full,
+  /** Durably append one validated write body to the spool: exclusive-
+    * create the tmp (claims the id), write + hsync, rename. Returns only
+    * once the bytes are down — the 2xx is a durability ack. The body
+    * publishes under its payload's extension, so the drain decodes each
+    * file with its own wire codec (and keeps v2's and OTLP's metadata).
+    * Only a genuine id COLLISION (the exclusive create lost because the id
+    * is already claimed as `.tmp` or a published payload) retries with a
+    * fresh id; any other IOException (disk full,
     * permissions, a dying filesystem) propagates so the handler answers
     * 500 and the sender backs off — retrying those here would spin the
     * POST handler forever while burning spool ids (r11 advisor finding). */
   private def spoolAppend(ws: PromApi.WriteSink, body: Array[Byte],
-                          v2: Boolean): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(ws.sinkDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+                          payload: SpoolDrain.Payload): Unit = {
+    val fs = sinkFs(ws)
     fs.mkdirs(new org.apache.hadoop.fs.Path(s"${ws.sinkDir}/_spool"))
-    val ext = if (v2) "wr2" else "wr"
     var id = claimSpoolId()
     var out: org.apache.hadoop.fs.FSDataOutputStream = null
     try {
@@ -320,9 +317,8 @@ class PromApi(spark: SparkSession, samples: DataFrame, port: Int = 0,
           case e: java.io.IOException =>
             // some FS impls throw plain IOException on exists-collision —
             // verify before deciding it was a collision
-            if (fs.exists(tmp) ||
-                fs.exists(new org.apache.hadoop.fs.Path(s"${ws.sinkDir}/_spool/$id.wr")) ||
-                fs.exists(new org.apache.hadoop.fs.Path(s"${ws.sinkDir}/_spool/$id.wr2")))
+            if (fs.exists(tmp) || SpoolDrain.Payload.all.exists(p =>
+                fs.exists(new org.apache.hadoop.fs.Path(s"${ws.sinkDir}/_spool/$id.${p.ext}"))))
               { abandonSpoolClaim(id); id = claimSpoolId() }
             else throw e
         }
@@ -332,7 +328,7 @@ class PromApi(spark: SparkSession, samples: DataFrame, port: Int = 0,
       // past spoolTmpAbandonMs has had its .tmp quarantined by the drainer,
       // and acking after a failed rename would silently drop the request —
       // fail instead (500), which remote-write senders retry
-      val dst = new org.apache.hadoop.fs.Path(s"${ws.sinkDir}/_spool/$id.$ext")
+      val dst = new org.apache.hadoop.fs.Path(s"${ws.sinkDir}/_spool/$id.${payload.ext}")
       if (!fs.rename(new org.apache.hadoop.fs.Path(s"${ws.sinkDir}/_spool/$id.tmp"), dst))
         throw new java.io.IOException(
           s"spool publish of id $id lost its claim (writer stalled past the abandonment threshold?)")
@@ -358,7 +354,7 @@ class PromApi(spark: SparkSession, samples: DataFrame, port: Int = 0,
     * sequence, capped at `spoolDrainMaxFiles` files / `spoolDrainMaxBytes`
     * bytes:
     *
-    *  - PREFIX: a `.wr` with an id above any still-pending `.tmp` is left
+    *  - PREFIX: a payload with an id above any still-pending `.tmp` is left
     *    for the next pass. spoolAppend claims ids in order but can RENAME
     *    out of order, so without this rule a drain could commit id N+1
     *    while N is mid-rename — then batch ids stop being monotone with
@@ -407,8 +403,7 @@ class PromApi(spark: SparkSession, samples: DataFrame, port: Int = 0,
   /** One bounded micro-batch (see [[drainSpool]]): 0 = nothing drainable. */
   private def drainOnce(): Int = writeSink.map { ws =>
     drainLock.synchronized {
-      val fs = new org.apache.hadoop.fs.Path(ws.sinkDir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val fs = sinkFs(ws)
       val sp = new org.apache.hadoop.fs.Path(s"${ws.sinkDir}/_spool")
       if (!fs.exists(sp)) 0
       else {
@@ -427,7 +422,7 @@ class PromApi(spark: SparkSession, samples: DataFrame, port: Int = 0,
             val id = st.getPath.getName.stripSuffix(".tmp").toLongOption
             if (id.isDefined && now - st.getModificationTime > spoolTmpAbandonMs) {
               // a FAILED quarantine rename means the stalled writer just
-              // published this id as .wr (between our listing and now) —
+              // published this id (between our listing and now) —
               // it must keep gating the prefix this pass, or higher ids
               // would drain past it (the rename-inversion window)
               if (fs.rename(st.getPath, new org.apache.hadoop.fs.Path(
@@ -439,8 +434,8 @@ class PromApi(spark: SparkSession, samples: DataFrame, port: Int = 0,
           math.min(claimFloor,
             if (pendingIds.isEmpty) Long.MaxValue else pendingIds.min)
         val completed = listing.collect {
-          case st if st.getPath.getName.endsWith(".wr") ||
-                     st.getPath.getName.endsWith(".wr2") => (st.getPath, st.getLen)
+          case st if SpoolDrain.Payload.of(st.getPath.getName).isDefined =>
+            (st.getPath, st.getLen)
         }.flatMap { case (p, len) =>
           p.getName.split('.').headOption.flatMap(_.toLongOption)
             .map(id => (id, p, len))
@@ -451,21 +446,17 @@ class PromApi(spark: SparkSession, samples: DataFrame, port: Int = 0,
         val files = completed.take(math.min(spoolDrainMaxFiles, math.max(1, fitting))).toSeq
         if (files.isEmpty) 0
         else {
-          // opt-in phase timing (SPARK_GRAFT_DRAIN_TIMING=1): where a
-          // drain micro-batch spends its time — read+decode vs the Spark
-          // commit chain — feeding the ingest ladder's floor analysis
-          val timing = sys.env.get("SPARK_GRAFT_DRAIN_TIMING").contains("1")
           val t0 = System.nanoTime()
           // EXECUTOR-SIDE decode: tasks read the listed window files and
           // run the wire codec (pure over Array[Byte]) where they read —
           // the driver sees only per-file outcome headers, window flags,
-          // and the tiny v2 metadata rows, never the batch itself (the
+          // and the tiny metadata rows, never the batch itself (the
           // r15 LocalRelation hop was the last named driver-side scale
           // bottleneck). Cached: the window feeds the samples commit, the
           // exemplar append, and the metadata upsert from one decode pass.
-          import graft.streaming.SpoolDrain
           val decoded = SpoolDrain
-            .decodedFrame(spark, files.map { case (_, p, len) => (p.toString, len) })
+            .decodedFrame(spark, files.map { case (_, p, len) => (p.toString, len) },
+              otlpAcceptDelta)
             .persist()
           val flags = SpoolDrain.windowFlags(decoded)
           // a malformed SERIES inside an otherwise-good payload drops
@@ -488,15 +479,15 @@ class PromApi(spark: SparkSession, samples: DataFrame, port: Int = 0,
           commitLock.synchronized {
             def committed(dir: String) = fs.exists(
               new org.apache.hadoop.fs.Path(s"$dir/batch_id=$batchId/_SUCCESS"))
-            if (flags.seriesTotal == 0L) ()
-            else if (committed(ws.sinkDir)) {
+            if (flags.seriesTotal > 0L && committed(ws.sinkDir)) {
               // a predecessor crashed between this very window's commit and
               // its spool cleanup. Re-running the chain would hwm-drop every
               // sample and OVERWRITE the committed batch dir with an empty
               // one — instead repair forward: the sink write is durable, so
-              // rebuild the (possibly missing) index delta from it and
+              // rebuild the (possibly missing) index delta from it,
               // re-append exemplars (content-dedup'd, so a no-op when they
-              // landed), then clean up.
+              // landed) and re-apply the metadata (idempotent), then clean
+              // up.
               if (!committed(ws.indexDir)) {
                 val rows = spark.read.parquet(s"${ws.sinkDir}/batch_id=$batchId")
                 graft.operators.MetadataOps.buildSeriesIndex(
@@ -505,18 +496,8 @@ class PromApi(spark: SparkSession, samples: DataFrame, port: Int = 0,
                   .parquet(s"${ws.indexDir}/batch_id=$batchId")
               }
               appendExemplarFrame(ws, decoded, flags, batchId)
-            } else {
-              val canonical = SpoolDrain.assembleCanonical(decoded,
-                flags.anyStale, flags.anyTyped, flags.hasExp, flags.hasNhcb)
-              commitCanonical(ws, canonical, batchId) {
-                appendExemplarFrame(ws, decoded, flags, batchId)
-              }
-            }
-            if (flags.hasMetas) // idempotent; once per micro-batch
-              upsertMetas(decoded.filter(col("kind") === 4)
-                .select(col("metric"), col("mTyp"), col("mHelp"), col("mUnit"))
-                .collect().toSeq.map(r => ProtoWire.PMetaV2(
-                  r.getString(0), r.getString(1), r.getString(2), r.getString(3))))
+              upsertMetas(decoded, flags)
+            } else commitRows(ws, decoded, flags, batchId)
           }
           decoded.unpersist()
           val tCommit = System.nanoTime()
@@ -545,7 +526,7 @@ class PromApi(spark: SparkSession, samples: DataFrame, port: Int = 0,
           files.foreach { case (_, p, _) => fs.delete(p, false) }
           lastDrainSamples.set(flags.samplesTotal)
           lastDrainNanos.set(tCommit - tDecode)
-          if (timing) System.err.println(
+          if (graft.streaming.Ingest.drainTiming) System.err.println(
             f"[drain] files=${files.length} samples=${flags.samplesTotal} " +
               f"decode=${(tDecode - t0) / 1e9}%.2fs commit=${(tCommit - tDecode) / 1e9}%.2fs " +
               f"cleanup=${(System.nanoTime() - tCommit) / 1e9}%.2fs")
@@ -591,8 +572,9 @@ class PromApi(spark: SparkSession, samples: DataFrame, port: Int = 0,
       server.createContext("/api/v1/metadata", handler(metricMetadata))
     server.createContext("/api/v1/read", remoteReadHandler)
     writeSink.foreach { _ =>
-      server.createContext("/api/v1/write", remoteWriteHandler)
-      server.createContext("/api/v1/otlp/v1/metrics", otlpHandler)
+      val write = writeHandler
+      server.createContext("/api/v1/write", write)
+      server.createContext("/api/v1/otlp/v1/metrics", write)
     }
     server.createContext("/api/v1/status/buildinfo", handler(buildInfo))
     server.createContext("/api/v1/status/tsdb", handler(tsdbStatus))
@@ -655,7 +637,7 @@ class PromApi(spark: SparkSession, samples: DataFrame, port: Int = 0,
     if (sels.isEmpty)
       throw new IllegalArgumentException("federate needs at least one match[] selector")
     val base = liveSamples
-    val t = p.get("time").map(ms).getOrElse {
+    val t = p.get("time").map(ms("time", _)).getOrElse {
       // default instant = the store's newest sample. A federation scrape
       // hits this every 15 s, so it must NOT cost a full-table max(ts)
       // aggregate at 100 TB — the series index's end_ts IS the persisted
@@ -784,8 +766,8 @@ class PromApi(spark: SparkSession, samples: DataFrame, port: Int = 0,
             "out of band via graft.operators.Snapshots)"))
         // under commitLock: a snapshot concurrent with an in-flight write
         // commit could otherwise capture the sink batch without its
-        // index/_hwm/_exp_state counterparts (commitWriteRequest publishes
-        // them sequentially) — a restored copy would then re-admit
+        // index/_hwm/_exp_state counterparts (commitRows publishes them
+        // sequentially) — a restored copy would then re-admit
         // duplicates (hwm below sink contents) or mis-convert exp deltas.
         // Also serializes two snapshot POSTs on this server so one
         // attempt's staging sweep cannot delete the other's.
@@ -811,8 +793,8 @@ class PromApi(spark: SparkSession, samples: DataFrame, port: Int = 0,
     * touched — `clean_tombstones` (or MaintenanceJob) makes it physical. */
   private def deleteSeries(p: Map[String, String]): Unit = {
     val sels = matchExprs(p)
-    val from = p.get("start").map(ms).getOrElse(Long.MinValue)
-    val to = p.get("end").map(ms).getOrElse(Long.MaxValue)
+    val from = p.get("start").map(ms("start", _)).getOrElse(Long.MinValue)
+    val to = p.get("end").map(ms("end", _)).getOrElse(Long.MaxValue)
     graft.operators.Tombstones.write(spark, adminDir.get, sels, from, to)
   }
 
@@ -888,10 +870,22 @@ class PromApi(spark: SparkSession, samples: DataFrame, port: Int = 0,
       .filter(_.startsWith("match[]="))
       .map(_.stripPrefix("match[]="))
 
-  /** Prometheus time parameter: unix seconds (float) or RFC3339. */
-  private def ms(s: String): Long =
-    if (s.contains("T")) java.time.OffsetDateTime.parse(s).toInstant.toEpochMilli
-    else math.round(s.toDouble * 1000)
+  /** A required parameter; absent = 400 `bad_data` naming it. */
+  private def param(p: Map[String, String], name: String): String =
+    p.getOrElse(name,
+      throw new IllegalArgumentException(s"""invalid parameter "$name": missing"""))
+
+  /** Prometheus time parameter `name`: unix seconds (float) or RFC3339;
+    * unparseable = 400 `bad_data` naming it. */
+  private def ms(name: String, s: String): Long =
+    try {
+      if (s.contains("T")) java.time.OffsetDateTime.parse(s).toInstant.toEpochMilli
+      else math.round(s.toDouble * 1000)
+    } catch {
+      case _: java.time.format.DateTimeParseException | _: NumberFormatException =>
+        throw new IllegalArgumentException(
+          s"""invalid parameter "$name": cannot parse "$s" to a valid timestamp""")
+    }
 
   /** Prometheus step parameter: float seconds or a duration string. */
   private def stepMs(s: String): Long =
@@ -969,7 +963,8 @@ class PromApi(spark: SparkSession, samples: DataFrame, port: Int = 0,
     queriesServed.incrementAndGet()
     val t0 = System.nanoTime()
     val hook = statsHook(p)
-    val (start, end, step) = (ms(p("start")), ms(p("end")), stepMs(p("step")))
+    val (start, end, step) = (ms("start", param(p, "start")),
+      ms("end", param(p, "end")), stepMs(param(p, "step")))
     // upstream's checks and messages, before any planning: a step grid
     // needs a positive step
     if (end < start)
@@ -979,8 +974,8 @@ class PromApi(spark: SparkSession, samples: DataFrame, port: Int = 0,
         "zero or negative query resolution step widths are not accepted. Try a positive integer")
     val ctx = PromPlanner.Ctx(spark, liveSamples, start, end, step,
       lookbackMs = lookback(p), stats = hook)
-    val df = PromPlanner.queryRange(ctx, p("query"))
-    if (p.get("explainOnly").contains("true")) explainResponse(p("query"), df)
+    val df = PromPlanner.queryRange(ctx, param(p, "query"))
+    if (p.get("explainOnly").contains("true")) explainResponse(param(p, "query"), df)
     else {
       enforce(hook)
       val (collected, executed) = collectLimited(df, seriesCap(p))
@@ -1009,10 +1004,10 @@ class PromApi(spark: SparkSession, samples: DataFrame, port: Int = 0,
     queriesServed.incrementAndGet()
     val t0 = System.nanoTime()
     val hook = statsHook(p)
-    val t = ms(p.getOrElse("time", (System.currentTimeMillis() / 1000).toString))
+    val t = ms("time", p.getOrElse("time", (System.currentTimeMillis() / 1000).toString))
     val ctx = PromPlanner.Ctx(spark, liveSamples, t, t, 1000L, lookbackMs = lookback(p),
       stats = hook)
-    val ast0 = graft.promql.Parser.parse(p("query"))
+    val ast0 = graft.promql.Parser.parse(param(p, "query"))
     // an instant query has no step for `Ni` to multiply — resolving
     // against the internal placeholder would silently mean "N seconds"
     if (PromPlanner.hasStepDurations(ast0))
@@ -1020,7 +1015,7 @@ class PromApi(spark: SparkSession, samples: DataFrame, port: Int = 0,
         "interval-multiple (Ni) durations require a range query with a step")
     val ast = PromPlanner.resolveStepDurations(ast0, ctx.stepMs)
     val df = PromPlanner.planVector(ctx, ast)
-    if (p.get("explainOnly").contains("true")) explainResponse(p("query"), df)
+    if (p.get("explainOnly").contains("true")) explainResponse(param(p, "query"), df)
     else {
       enforce(hook)
       val (rows, executed) = collectLimited(df, seriesCap(p))
@@ -1064,7 +1059,7 @@ class PromApi(spark: SparkSession, samples: DataFrame, port: Int = 0,
     * parse∘print==id property suite). Invalid queries get the standard
     * error envelope. */
   private def formatQuery(p: Map[String, String]): String = {
-    val printed = graft.promql.Printer.print(graft.promql.Parser.parse(p("query")))
+    val printed = graft.promql.Printer.print(graft.promql.Parser.parse(param(p, "query")))
     s"""{"status":"success","data":${js(printed)}}"""
   }
 
@@ -1076,7 +1071,7 @@ class PromApi(spark: SparkSession, samples: DataFrame, port: Int = 0,
     * (`line:col: parse error: ...`, 1-based — the ranges Grafana's error
     * underlining keys on; pinned in PromApiSpec). */
   private def parseQuery(p: Map[String, String]): String = {
-    val ast = graft.promql.Parser.parse(p("query"))
+    val ast = graft.promql.Parser.parse(param(p, "query"))
     s"""{"status":"success","data":${graft.promql.AstJson.render(ast)}}"""
   }
 
@@ -1120,14 +1115,12 @@ class PromApi(spark: SparkSession, samples: DataFrame, port: Int = 0,
 
   private def spoolGauges: Option[SpoolGauges] =
     writeSink.filter(_ => spoolDrainMs > 0).map { ws =>
-      val fs = new org.apache.hadoop.fs.Path(ws.sinkDir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val fs = sinkFs(ws)
       val sp = new org.apache.hadoop.fs.Path(s"${ws.sinkDir}/_spool")
       val listing =
         if (!fs.exists(sp)) Array.empty[org.apache.hadoop.fs.FileStatus]
         else fs.listStatus(sp)
-      val wr = listing.filter(st =>
-        st.getPath.getName.endsWith(".wr") || st.getPath.getName.endsWith(".wr2"))
+      val wr = listing.filter(st => SpoolDrain.Payload.of(st.getPath.getName).isDefined)
       val tmp = listing.filter(_.getPath.getName.endsWith(".tmp"))
       val bad = listing.count(_.getPath.getName.endsWith(".bad"))
       def oldestAge(sts: Array[org.apache.hadoop.fs.FileStatus]): Long =
@@ -1160,10 +1153,10 @@ class PromApi(spark: SparkSession, samples: DataFrame, port: Int = 0,
     emit("graft_queries_total", "counter",
       "PromQL instant and range queries served.", queriesServed.get().toDouble)
     emit("graft_writes_accepted_total", "counter",
-      "Remote-write commits accepted (one drain micro-batch in spool mode).",
+      "Write commits accepted (one drain micro-batch in spool mode).",
       writesAccepted.get().toDouble)
     emit("graft_writes_inflight", "gauge",
-      "Remote-write POSTs decoding or committing right now.",
+      "Write POSTs decoding or committing right now.",
       (math.max(1, maxInFlightWrites) - writePermits.availablePermits()).toDouble)
     adminDir.foreach { d =>
       emit("graft_tombstones_pending", "gauge",
@@ -1227,30 +1220,42 @@ class PromApi(spark: SparkSession, samples: DataFrame, port: Int = 0,
     } finally ex.close()
   }
 
-  /** Prometheus REMOTE WRITE (`/api/v1/write`): snappy-compressed protobuf
-    * WriteRequest in (the wire every real Prometheus `remote_write` stanza
-    * pushes through), 204 out. Decoded series become canonical (metric,
-    * tags, ts, value) rows and commit through the standard ingest chain —
-    * out-of-order/duplicate drop against the series index's persisted
-    * high-water marks, cardinality quota admission, partitioned sink +
-    * index delta ([[graft.streaming.Ingest.remoteWriteBatch]]) — so
-    * remote-written data is immediately queryable by every endpoint above
-    * when the API serves from the sink directory.
+  /** The one write handler, registered on both write routes:
     *
-    * NATIVE histograms (prompb `histograms`, Prometheus v2.40+) decode
-    * through the same chain: spans/deltas expand to absolute per-bucket
-    * counts ([[ProtoWire.PHistogram]]) and land as exp-histogram storage
-    * rows (exp_scale/exp_offset/exp_counts + zero bucket), converted to
-    * the engine's delta temporality per series
-    * ([[graft.streaming.Ingest.expCumulativeToDelta]]) — so
-    * `histogram_quantile(φ, sum by (le) (rate(m[w])))` works on
-    * remote-written native histograms straight from a PromQL string.
-    * Negative buckets fold into the zero bucket (every negative
-    * observation is ≤ any non-negative `le` bound, so the CDF the bucket
-    * functions read stays exact; only sub-zero resolution is lost).
-    * Exemplars append to the sink's exemplar side table when the
-    * [[PromApi.WriteSink]] names one. */
-  private def remoteWriteHandler: com.sun.net.httpserver.HttpHandler = (ex: HttpExchange) => {
+    *  - `/api/v1/write`, Prometheus REMOTE WRITE: a snappy-compressed
+    *    protobuf WriteRequest (the wire every real Prometheus
+    *    `remote_write` stanza pushes through; remote-write 2.0 when the
+    *    Content-Type names `io.prometheus.write.v2.Request`), answered
+    *    204 — with the RW2 written-stats headers on a v2 POST.
+    *  - `/api/v1/otlp/v1/metrics`, the OTLP/HTTP metrics export wire
+    *    modern collectors speak (upstream Prometheus serves the same
+    *    route): a protobuf ExportMetricsServiceRequest, gzip
+    *    Content-Encoding accepted (the OTLP/HTTP default), translated to
+    *    the prompb model per the published otlptranslator rules
+    *    ([[OtlpWire]]), answered 200 + an empty
+    *    ExportMetricsServiceResponse. 405 on a non-POST, 415 on a
+    *    non-protobuf content type (OTLP/JSON is not served).
+    *
+    * Both answer 429 + Retry-After past the in-flight cap, 400 on payloads
+    * upstream rejects (malformed wire or series, OTLP delta temporality
+    * without `otlpAcceptDelta`), and 500 on a failure past the decode —
+    * ours, so a well-behaved sender retries instead of dropping data.
+    *
+    * Past the decode every write takes its mode's one path. Spool mode
+    * appends the body to the spool and acks; the drain commits it (see
+    * the spool section). Synchronous mode decodes the body into wire-fact
+    * rows ([[SpoolDrain.decode]]) and commits them through [[commitRows]]
+    * before it acks — the chain the drain runs: out-of-order/duplicate
+    * drop against the series index's high-water marks, cardinality quota
+    * admission, partitioned sink + index delta
+    * ([[graft.streaming.Ingest.remoteWriteBatch]]), native histograms as
+    * exp-histogram storage converted to the engine's delta temporality
+    * per series, NHCB as classic bucket storage, the exemplar side table
+    * when the [[PromApi.WriteSink]] names one, and the metadata upsert. */
+  private def writeHandler: HttpHandler = (ex: HttpExchange) => {
+    import SpoolDrain.Payload
+    def badData(code: Int, msg: String): Unit = respondJson(ex, code,
+      s"""{"status":"error","errorType":"bad_data","error":${js(msg)}}""")
     try {
       if (!writePermits.tryAcquire()) {
         // backpressure past the in-flight cap: 429 + Retry-After, the
@@ -1260,148 +1265,84 @@ class PromApi(spark: SparkSession, samples: DataFrame, port: Int = 0,
           s"""{"status":"error","errorType":"unavailable","error":"too many in-flight writes"}""")
       } else try {
         val ws = writeSink.get
-        // remote-write 2.0 negotiation (Prometheus v3): the sender labels
-        // the payload via Content-Type `application/x-protobuf;
-        // proto=io.prometheus.write.v2.Request`; absent/other = v1
-        val isV2 = Option(ex.getRequestHeaders.getFirst("Content-Type"))
-          .exists(_.contains("io.prometheus.write.v2.Request"))
-        // DECODE phase (parallel across POSTs): a malformed payload is the
-        // client's fault — 400, which senders treat as non-retryable.
-        // SPOOL mode never materializes series on the ack path: the
-        // structural walk ([[ProtoWire.countWriteRequest]]) validates the
-        // wire framing and yields the RW2 header counts at a fraction of
-        // full-decode cost (the ingest ladder's largest per-POST CPU term
-        // was this decode); the real decode runs ONCE, at drain, which
-        // quarantines the rare framing-ok-but-semantically-bad payload.
-        val decoded =
-          try Right {
-            val body = org.xerial.snappy.Snappy.uncompress(ex.getRequestBody.readAllBytes())
-            if (spoolDrainMs > 0)
-              (body, null: Seq[ProtoWire.PSeries], Nil: Seq[ProtoWire.PMetaV2],
-                ProtoWire.countWriteRequest(body, isV2))
-            else if (isV2) {
-              val (series, metas) = ProtoWire.decodeWriteRequestV2(body)
-              (body, series, metas,
-                (series.iterator.map(_.samples.size.toLong).sum,
-                 series.iterator.map(_.histograms.size.toLong).sum,
-                 series.iterator.map(_.exemplars.size.toLong).sum))
-            } else (body, ProtoWire.decodeWriteRequest(body),
-              Nil: Seq[ProtoWire.PMetaV2], (0L, 0L, 0L))
-          } catch { case e: Exception => Left(e) }
-        decoded match {
-          case Left(e) =>
-            respondJson(ex, 400,
-              s"""{"status":"error","errorType":"bad_data","error":${js(e.getMessage)}}""")
-          case Right((body, series, metas, counts)) =>
-            // a failure past decode is OURS — 500, so a well-behaved
-            // sender RETRIES instead of silently dropping data (round-9
-            // advisor finding)
-            try {
-              if (spoolDrainMs > 0) {
-                // GROUP-COMMIT mode: ack on durable spool append; the
-                // drainer folds spooled requests through the commit chain
-                // in micro-batches (see the spool section above) and
-                // applies v2 inline metadata at drain time
-                spoolAppend(ws, body, isV2)
-              } else {
-                // SYNCHRONOUS mode: full commit inside the handler,
-                // serialized — admission must observe the previous
-                // batch's index delta
-                commitLock.synchronized {
-                  commitWriteRequest(ws, series, claimBatchId(ws))
-                  upsertMetas(metas)
-                }
-              }
-              if (isV2) {
-                // RW2 response stats (the spec's 2xx contract): counts of
-                // the accepted payload — in spool mode the commit is
-                // deferred, so these are accepted-for-write counts
-                val h = ex.getResponseHeaders
-                h.add("X-Prometheus-Remote-Write-Samples-Written", counts._1.toString)
-                h.add("X-Prometheus-Remote-Write-Histograms-Written", counts._2.toString)
-                h.add("X-Prometheus-Remote-Write-Exemplars-Written", counts._3.toString)
-              }
-              ex.sendResponseHeaders(204, -1)
-            } catch {
-              case e: IllegalArgumentException =>
-                // payload-level rejection past wire decode (malformed
-                // series canonicalization) — upstream 400s these; a 500
-                // would make the sender retry a permanently-bad payload
-                respondJson(ex, 400,
-                  s"""{"status":"error","errorType":"bad_data","error":${js(e.getMessage)}}""")
-              case e: Exception =>
-                // the sender only sees the message; the operator needs the
-                // stack (a 500 here is OUR bug or a dying filesystem)
-                System.err.println(s"[promapi] write commit failed: $e")
-                e.printStackTrace()
-                respondJson(ex, 500,
-                  s"""{"status":"error","errorType":"internal","error":${js(e.getMessage)}}""")
-            }
-        }
-      } finally writePermits.release()
-    } finally ex.close()
-  }
-
-  /** `/api/v1/otlp/v1/metrics` (the OTLP/HTTP metrics export wire modern
-    * collectors speak; upstream Prometheus serves the same route): decode
-    * the protobuf ExportMetricsServiceRequest ([[OtlpWire]]), translate to
-    * the prompb model per the published otlptranslator rules, and commit
-    * through the exact remote-write chain — hwm dedup, quota, NHCB bucket
-    * storage for explicit-bound histograms, the exp path for exponential
-    * histograms (delta temporality stores as-is, cumulative converts),
-    * exemplar side table, metadata upserts. gzip Content-Encoding is
-    * accepted (the OTLP/HTTP default). Commits are SYNCHRONOUS under the
-    * commit lock (the group-commit spool is a remote-write-payload
-    * optimization; collectors batch on their own cadence). Responses per
-    * the OTLP/HTTP spec: 200 + empty ExportMetricsServiceResponse, 400 on
-    * payloads upstream rejects (malformed wire, delta sums/histograms),
-    * 415 on a non-protobuf content type. */
-  private def otlpHandler: com.sun.net.httpserver.HttpHandler = (ex: HttpExchange) => {
-    try {
-      if (!writePermits.tryAcquire()) {
-        ex.getResponseHeaders.add("Retry-After", "1")
-        respondJson(ex, 429,
-          s"""{"status":"error","errorType":"unavailable","error":"too many in-flight writes"}""")
-      } else try {
         val ctype = Option(ex.getRequestHeaders.getFirst("Content-Type")).getOrElse("")
-        if (ex.getRequestMethod != "POST")
-          respondJson(ex, 405,
-            """{"status":"error","errorType":"bad_data","error":"OTLP export requires POST"}""")
-        else if (!ctype.startsWith("application/x-protobuf"))
-          respondJson(ex, 415,
-            """{"status":"error","errorType":"bad_data","error":"unsupported Content-Type (application/x-protobuf only; OTLP/JSON is not served)"}""")
+        val otlp = ex.getRequestURI.getPath.startsWith("/api/v1/otlp/")
+        if (otlp && ex.getRequestMethod != "POST")
+          badData(405, "OTLP export requires POST")
+        else if (otlp && !ctype.startsWith("application/x-protobuf"))
+          badData(415, "unsupported Content-Type (application/x-protobuf only; " +
+            "OTLP/JSON is not served)")
         else {
+          val payload =
+            if (otlp) Payload.Otlp
+            else if (ctype.contains("io.prometheus.write.v2.Request")) Payload.RemoteWriteV2
+            else Payload.RemoteWriteV1
+          // DECODE phase (parallel across POSTs): a malformed payload is the
+          // client's fault — 400, which senders treat as non-retryable. A
+          // spooled remote-write body gets only the structural walk
+          // ([[ProtoWire.countWriteRequest]]: wire framing + the RW2 header
+          // counts at a fraction of full-decode cost); its real decode runs
+          // once, at drain. An OTLP body is fully decoded here in both
+          // modes, so its 400s (delta temporality) stay at POST time.
           val decoded =
             try Right {
               val raw = ex.getRequestBody.readAllBytes()
               val body =
-                if (Option(ex.getRequestHeaders.getFirst("Content-Encoding"))
+                if (!otlp) org.xerial.snappy.Snappy.uncompress(raw)
+                else if (Option(ex.getRequestHeaders.getFirst("Content-Encoding"))
                     .exists(_.contains("gzip")))
                   new java.util.zip.GZIPInputStream(
                     new java.io.ByteArrayInputStream(raw)).readAllBytes()
                 else raw
-              OtlpWire.decodeExportRequest(body, acceptDelta = otlpAcceptDelta)
+              val counts =
+                if (otlp) (0L, 0L, 0L)
+                else ProtoWire.countWriteRequest(body, payload == Payload.RemoteWriteV2)
+              val rows =
+                if (spoolDrainMs > 0 && !otlp) Nil
+                else SpoolDrain.decode(payload, body, otlpAcceptDelta, path = null,
+                  lenient = false)
+              (body, counts, rows)
             } catch { case e: Exception => Left(e) }
           decoded match {
-            case Left(e) =>
-              respondJson(ex, 400,
-                s"""{"status":"error","errorType":"bad_data","error":${js(e.getMessage)}}""")
-            case Right((series, metas)) =>
+            case Left(e) => badData(400, e.getMessage)
+            case Right((body, counts, rows)) =>
               try {
-                val ws = writeSink.get
-                commitLock.synchronized {
-                  commitWriteRequest(ws, series, claimBatchId(ws))
-                  upsertMetas(metas)
+                if (spoolDrainMs > 0) spoolAppend(ws, body, payload)
+                else {
+                  import spark.implicits._
+                  // serialized: admission must observe the previous
+                  // commit's index delta
+                  commitLock.synchronized {
+                    commitRows(ws, spark.createDataset(rows),
+                      SpoolDrain.windowFlags(rows), claimBatchId(ws))
+                  }
                 }
-                // empty ExportMetricsServiceResponse (zero bytes) = full success
-                ex.getResponseHeaders.add("Content-Type", "application/x-protobuf")
-                ex.sendResponseHeaders(200, -1)
+                if (otlp) {
+                  // empty ExportMetricsServiceResponse (zero bytes) = full success
+                  ex.getResponseHeaders.add("Content-Type", "application/x-protobuf")
+                  ex.sendResponseHeaders(200, -1)
+                } else {
+                  if (payload == Payload.RemoteWriteV2) {
+                    // RW2 response stats (the spec's 2xx contract): counts of
+                    // the accepted payload — in spool mode the commit is
+                    // deferred, so these are accepted-for-write counts
+                    val h = ex.getResponseHeaders
+                    h.add("X-Prometheus-Remote-Write-Samples-Written", counts._1.toString)
+                    h.add("X-Prometheus-Remote-Write-Histograms-Written", counts._2.toString)
+                    h.add("X-Prometheus-Remote-Write-Exemplars-Written", counts._3.toString)
+                  }
+                  ex.sendResponseHeaders(204, -1)
+                }
               } catch {
                 case e: IllegalArgumentException =>
-                  respondJson(ex, 400,
-                    s"""{"status":"error","errorType":"bad_data","error":${js(e.getMessage)}}""")
+                  // a payload-level rejection past the decode — upstream
+                  // 400s these; a 500 would make the sender retry a
+                  // permanently-bad payload
+                  badData(400, e.getMessage)
                 case e: Exception =>
-                  System.err.println(s"[promapi] otlp commit failed: $e")
+                  // the sender only sees the message; the operator needs the
+                  // stack (a 500 here is OUR bug or a dying filesystem)
+                  System.err.println(s"[promapi] write commit failed: $e")
                   e.printStackTrace()
                   respondJson(ex, 500,
                     s"""{"status":"error","errorType":"internal","error":${js(e.getMessage)}}""")
@@ -1412,134 +1353,78 @@ class PromApi(spark: SparkSession, samples: DataFrame, port: Int = 0,
     } finally ex.close()
   }
 
-  /** Persist v2 inline metadata (type/help/unit per metric family) into
-    * the metadata store when one is configured; idempotent last-write-wins
-    * merge, so crash-repair and drain retries may re-apply freely. */
-  private def upsertMetas(metas: Seq[ProtoWire.PMetaV2]): Unit =
+  /** The one commit of decoded write rows, for both modes — a drain
+    * window's cached decode or a synchronous POST's local rows — under
+    * [[commitLock]]: the canonical frame ([[SpoolDrain.assembleCanonical]])
+    * through the quota/hwm/sink/index chain, the exemplar append, the
+    * periodic `_hwm`/exp-state/exemplar compaction cadence (and the opt-in
+    * sink compaction), then the metadata upsert. Rows holding no series
+    * commit nothing but their metadata. */
+  private def commitRows(ws: PromApi.WriteSink,
+                         decoded: Dataset[SpoolDrain.SpoolRow],
+                         flags: SpoolDrain.WindowFlags, batchId: Long): Unit = {
+    import graft.streaming.Ingest
+    if (flags.seriesTotal > 0L) {
+      Ingest.remoteWriteBatch(
+        SpoolDrain.assembleCanonical(decoded,
+          flags.anyStale, flags.anyTyped, flags.hasExp, flags.hasNhcb),
+        batchId, ws.sinkDir, ws.indexDir, ws.rejectDir, ws.cfg)
+      appendExemplarFrame(ws, decoded, flags, batchId)
+      val n = writesAccepted.incrementAndGet()
+      if (hwmCompactEvery > 0 && n % hwmCompactEvery == 0) Ingest.phase("compaction") {
+        Ingest.compactHwm(spark, ws.indexDir)
+        Ingest.compactExpState(spark, s"${ws.indexDir}/_exp_state")
+        // the exemplar side table is an LSM too: fold its per-commit delta
+        // dirs on the same cadence so the dedup anti-join reads one base
+        ws.exemplarDir.foreach(Ingest.compactExemplars(spark, _))
+      }
+      // minBatches=2: the operator opted into a cadence, so every trigger
+      // folds whatever has accumulated beyond the kept tail
+      if (sinkCompactEvery > 0 && n % sinkCompactEvery == 0)
+        Ingest.compactSink(spark, ws.sinkDir, minBatches = 2)
+    }
+    upsertMetas(decoded, flags)
+  }
+
+  /** Persist the rows' inline metadata (type/help/unit per metric family:
+    * remote-write v2, OTLP descriptors) into the metadata store when one
+    * is configured; idempotent last-write-wins merge, so crash-repair and
+    * drain retries may re-apply freely. */
+  private def upsertMetas(decoded: Dataset[SpoolDrain.SpoolRow],
+                          flags: SpoolDrain.WindowFlags): Unit =
     metadataDir.foreach { dir =>
-      if (metas.nonEmpty) {
+      if (flags.hasMetas) {
         import spark.implicits._
+        val metas = decoded.filter(col("kind") === 4)
+          .select(col("metric"), col("mTyp"), col("mHelp"), col("mUnit"))
+          .collect().toSeq.map(r =>
+            (r.getString(0), r.getString(1), r.getString(2), r.getString(3)))
         graft.streaming.Ingest.upsertMetricMeta(spark, dir,
-          metas.distinct.map(m => (m.metric,
-            if (m.typ == "unknown") null else m.typ, m.help, m.unit))
-            .toDF("metric", "type", "help", "unit"))
+          metas.distinct.map { case (m, typ, help, unit) =>
+            (m, if (typ == "unknown") null else typ, help, unit)
+          }.toDF("metric", "type", "help", "unit"))
       }
     }
 
-  /** Decoded WriteRequest series → canonical rows (+ native-histogram
-    * payload columns when present) → [[graft.streaming.Ingest
-    * .remoteWriteBatch]], exemplar side-table append, and the periodic
-    * `_hwm` compaction. Runs under [[commitLock]]. SYNCHRONOUS mode only
-    * (one POST) — the spool drain builds the same canonical frame from
-    * the distributed decode instead; both modes share
-    * [[graft.streaming.SpoolDrain]]'s row builder + assembly so the wire
-    * canonicalization rules (staleness markers, exp-offset shift, NHCB
-    * cumulate, series_type routing — see the scaladoc there) cannot
-    * drift between them.
-    *
-    * Column-presence contract: `__stale` and `series_type` are added ONLY
-    * when this commit actually carries a marker / an explicitly-typed
-    * sample — marker-free, untyped sinks keep their exact single-pass
-    * plan shapes. */
-  private def commitWriteRequest(ws: PromApi.WriteSink,
-                                 series: Seq[ProtoWire.PSeries],
-                                 batchId: Long): Unit = {
-    import spark.implicits._
-    import graft.streaming.SpoolDrain
-    // SYNCHRONOUS mode can still reject the whole POST (upstream answers
-    // 400 for a malformed series): surface canonicalization failures as
-    // bad_data, not a 500 the sender would retry forever. The spool drain
-    // path instead quarantines per series (kind 7) — its payload is
-    // already acked.
-    val rows = series.flatMap { s =>
-      try SpoolDrain.seriesRows(s)
-      catch { case e: Exception =>
-        throw new IllegalArgumentException(
-          s"malformed series ${s.labels.collectFirst { case ("__name__", v) => v }
-            .getOrElse("")}: ${e.getMessage}", e)
-      }
-    }
-    val anyStale = rows.exists(r => r.kind == 0 && r.stale)
-    val anyTyped = rows.exists(r => r.kind == 0 && r.seriesType != null)
-    val hasExp = rows.exists(_.kind == 1)
-    val hasNhcb = rows.exists(_.kind == 2)
-    val canonical = SpoolDrain.assembleCanonical(
-      spark.createDataset(rows.filter(_.kind <= 2)),
-      anyStale, anyTyped, hasExp, hasNhcb)
-    commitCanonical(ws, canonical, batchId) {
-      appendExemplars(ws, series, batchId)
-    }
-  }
-
-  /** The shared commit tail both ingest modes run under [[commitLock]]:
-    * the quota/hwm/sink/index chain, the exemplar append, and the
-    * periodic `_hwm`/exp-state/exemplar compaction cadence. */
-  private def commitCanonical(ws: PromApi.WriteSink, canonical: DataFrame,
-                              batchId: Long)(appendEx: => Unit): Unit = {
-    graft.streaming.Ingest.remoteWriteBatch(
-      canonical, batchId, ws.sinkDir, ws.indexDir, ws.rejectDir, ws.cfg)
-    appendEx
-    val n = writesAccepted.incrementAndGet()
-    if (hwmCompactEvery > 0 && n % hwmCompactEvery == 0) {
-      val c0 = System.nanoTime()
-      graft.streaming.Ingest.compactHwm(spark, ws.indexDir)
-      graft.streaming.Ingest.compactExpState(spark, s"${ws.indexDir}/_exp_state")
-      // the exemplar side table is an LSM too: fold its per-commit delta
-      // dirs on the same cadence so the dedup anti-join reads one base
-      ws.exemplarDir.foreach(graft.streaming.Ingest.compactExemplars(spark, _))
-      if (sys.env.get("SPARK_GRAFT_DRAIN_TIMING").contains("1"))
-        System.err.println(
-          f"[drain-phase] compaction     ${(System.nanoTime() - c0) / 1e9}%.2fs")
-    }
-    // minBatches=2: the operator opted into a cadence, so every trigger
-    // folds whatever has accumulated beyond the kept tail
-    if (sinkCompactEvery > 0 && n % sinkCompactEvery == 0)
-      graft.streaming.Ingest.compactSink(spark, ws.sinkDir, minBatches = 2)
-  }
-
-  /** [[appendExemplars]] for a DISTRIBUTED drain window: the exemplar
-    * frame projects off the cached decode (no driver hop);
-    * [[graft.streaming.Ingest.appendExemplarsDedup]] content-dedups
-    * in-batch and against the table, so no pre-distinct is needed. The
-    * touched-metric list (it bounds the table-side anti-join scan) is the
-    * one small collect. */
+  /** Exemplar side-table append of decoded rows: the exemplar frame
+    * projects off the rows (no driver hop for a drain window);
+    * [[graft.streaming.Ingest.appendExemplarsDedup]] dedups by CONTENT
+    * identity in-batch and against the table — a sender retry after a
+    * lost ack re-carries old exemplars, and the side table has no hwm
+    * (r10 advisor finding) — so it is idempotent and crash-repair may call
+    * it again freely. The touched-metric list (it bounds the table-side
+    * anti-join scan) is the one small collect. */
   private def appendExemplarFrame(ws: PromApi.WriteSink,
-                                  decoded: org.apache.spark.sql.Dataset[
-                                    graft.streaming.SpoolDrain.SpoolRow],
-                                  flags: graft.streaming.SpoolDrain.WindowFlags,
+                                  decoded: Dataset[SpoolDrain.SpoolRow],
+                                  flags: SpoolDrain.WindowFlags,
                                   batchId: Long): Unit =
     ws.exemplarDir.foreach { dir =>
       if (flags.hasExemplars) {
-        val frame = graft.streaming.SpoolDrain.exemplarFrame(decoded)
+        val frame = SpoolDrain.exemplarFrame(decoded)
         val metrics = frame.select(col("metric")).distinct()
           .collect().map(_.getString(0)).toSeq
         graft.streaming.Ingest.appendExemplarsDedup(spark, dir, frame,
           metrics, batchId.toString)
-      }
-    }
-
-  /** Exemplar side-table append, dedup'd by CONTENT identity: a
-    * WriteRequest may repeat an exemplar across its series entries
-    * (distinct), and a sender retry after a lost 204 re-carries old ones —
-    * the samples path no-ops those via hwm, but the side table has no hwm,
-    * so the append anti-joins against the table (r10 advisor finding) —
-    * the dedup itself lives in [[graft.streaming.Ingest.appendExemplarsDedup]]
-    * (shared with the OpenMetrics scrape stream). Idempotent, so
-    * crash-repair paths may call it again freely. */
-  private def appendExemplars(ws: PromApi.WriteSink,
-                              series: Seq[ProtoWire.PSeries], batchId: Long): Unit =
-    ws.exemplarDir.foreach { dir =>
-      val exRows = series.flatMap { s =>
-        val (metric, tags) =
-          (s.labels.collectFirst { case ("__name__", v) => v }.getOrElse(""),
-            s.labels.filter(_._1 != "__name__").toMap)
-        s.exemplars.map(e => (metric, tags, e.labels.toMap, e.ts, e.value))
-      }.distinct
-      if (exRows.nonEmpty) {
-        import spark.implicits._
-        graft.streaming.Ingest.appendExemplarsDedup(spark, dir,
-          exRows.toDF("metric", "tags", "exemplar_labels", "ts", "value"),
-          exRows.map(_._1).distinct, batchId.toString)
       }
     }
 
@@ -1671,8 +1556,8 @@ class PromApi(spark: SparkSession, samples: DataFrame, port: Int = 0,
   /** samples restricted to the optional start/end params (Prometheus
     * allows a time range on every metadata endpoint). */
   private def ranged(p: Map[String, String]) = {
-    val from = p.get("start").map(ms).getOrElse(Long.MinValue)
-    val to = p.get("end").map(ms).getOrElse(Long.MaxValue)
+    val from = p.get("start").map(ms("start", _)).getOrElse(Long.MinValue)
+    val to = p.get("end").map(ms("end", _)).getOrElse(Long.MaxValue)
     if (from == Long.MinValue && to == Long.MaxValue) liveSamples
     else liveSamples.filter(col("ts").between(from, to))
   }
@@ -1684,8 +1569,8 @@ class PromApi(spark: SparkSession, samples: DataFrame, port: Int = 0,
     * becomes an interval overlap on the index's per-series bounds. */
   private def metaFrame(p: Map[String, String]): DataFrame = seriesIndex match {
     case Some(idx) =>
-      val from = p.get("start").map(ms).getOrElse(Long.MinValue)
-      val to = p.get("end").map(ms).getOrElse(Long.MaxValue)
+      val from = p.get("start").map(ms("start", _)).getOrElse(Long.MinValue)
+      val to = p.get("end").map(ms("end", _)).getOrElse(Long.MaxValue)
       liveIndex(idx).filter(col("start_ts") <= to && col("end_ts") >= from)
     case None => ranged(p)
   }
@@ -1826,11 +1711,11 @@ class PromApi(spark: SparkSession, samples: DataFrame, port: Int = 0,
     import graft.promql.{LabelMatcher, MatchOp, Matchers}
     val dir = exemplarStore.getOrElse(
       throw new IllegalStateException("no exemplar store configured"))
-    val selectors = collectSelectors(graft.promql.Parser.parse(p("query")))
+    val selectors = collectSelectors(graft.promql.Parser.parse(param(p, "query")))
     if (selectors.isEmpty)
       throw new IllegalArgumentException("query contains no vector selectors")
-    val from = p.get("start").map(ms).getOrElse(Long.MinValue)
-    val to = p.get("end").map(ms).getOrElse(Long.MaxValue)
+    val from = p.get("start").map(ms("start", _)).getOrElse(Long.MinValue)
+    val to = p.get("end").map(ms("end", _)).getOrElse(Long.MaxValue)
     // exemplars of delete_series'd spans disappear with the samples
     // (upstream: the exemplar storage is rebuilt from live series) — the
     // side table carries the same (metric, tags, ts) triple the sample
@@ -1890,8 +1775,8 @@ class PromApi(spark: SparkSession, samples: DataFrame, port: Int = 0,
     }
 
   private def series(p: Map[String, String]): String = {
-    val from = p.get("start").map(ms).getOrElse(Long.MinValue)
-    val to = p.get("end").map(ms).getOrElse(Long.MaxValue)
+    val from = p.get("start").map(ms("start", _)).getOrElse(Long.MinValue)
+    val to = p.get("end").map(ms("end", _)).getOrElse(Long.MaxValue)
     val found = seriesIndex match {
       case Some(idx) => MetadataOps.seriesFromIndex(liveIndex(idx), from, to, matchExprs(p))
       case None => MetadataOps.series(liveSamples, from, to, matchExprs(p))

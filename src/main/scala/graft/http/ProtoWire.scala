@@ -553,40 +553,37 @@ object ProtoWire {
     w.toBytes
   }
 
-  def decodeWriteRequest(b: Array[Byte]): Seq[PSeries] = {
-    val r = new Reader(b, 0, b.length)
-    val series = Seq.newBuilder[PSeries]
-    while (r.hasNext) r.readKey() match {
-      case (1, 2) => series += readSeries(r.readMessage())
-      case (_, wt) => r.skip(wt)
-    }
-    series.result()
-  }
+  def decodeWriteRequest(b: Array[Byte]): Seq[PSeries] =
+    decodeWriteRequest(b, v2 = false, lenient = false)._1
 
-  /** [[decodeWriteRequest]] with PER-SERIES error isolation — the spool
-    * DRAIN's decoder: a TimeSeries frame whose decode fails (e.g. a
-    * malformed NHCB bucket layout the ack's framing walk cannot see) is
-    * skipped and reported by its best-effort metric name instead of
-    * failing the whole payload. The payload was already acked, so its
-    * well-formed series must land; the synchronous path keeps the strict
-    * decoder and 400s the whole POST like upstream. Top-level framing
-    * errors still throw (the caller quarantines the file). */
-  def decodeWriteRequestLenient(b: Array[Byte]): (Seq[PSeries], Seq[String]) = {
-    val r = new Reader(b, 0, b.length)
-    val series = Seq.newBuilder[PSeries]
-    val badMetrics = Seq.newBuilder[String]
-    while (r.hasNext) r.readKey() match {
-      case (1, 2) =>
-        val m = r.readMessage()
-        val start = m.pos
-        try series += readSeries(m)
-        catch { case _: Exception =>
-          badMetrics += seriesMetricOnly(new Reader(m.buf, start, m.end))
-        }
-      case (_, wt) => r.skip(wt)
+  /** A remote-write body of either wire version → (series, v2 inline
+    * metadata, best-effort metric names of the series whose decode
+    * failed). `lenient` isolates failures PER SERIES — the spool drain's
+    * mode: a TimeSeries frame whose decode fails (e.g. a malformed NHCB
+    * bucket layout the ack's framing walk cannot see) is skipped and
+    * reported by name, because the payload was already acked and its
+    * well-formed series must land. Strict rethrows the first failure — the
+    * synchronous POST's whole-payload 400, like upstream. Top-level
+    * framing errors throw either way (the drain quarantines the file). */
+  def decodeWriteRequest(b: Array[Byte], v2: Boolean, lenient: Boolean)
+      : (Seq[PSeries], Seq[PMetaV2], Seq[String]) =
+    if (v2) decodeWriteRequestV2Impl(b, lenient)
+    else {
+      val r = new Reader(b, 0, b.length)
+      val series = Seq.newBuilder[PSeries]
+      val badMetrics = Seq.newBuilder[String]
+      while (r.hasNext) r.readKey() match {
+        case (1, 2) =>
+          val m = r.readMessage()
+          val start = m.pos
+          try series += readSeries(m)
+          catch { case _: Exception if lenient =>
+            badMetrics += seriesMetricOnly(new Reader(m.buf, start, m.end))
+          }
+        case (_, wt) => r.skip(wt)
+      }
+      (series.result(), Nil, badMetrics.result())
     }
-    (series.result(), badMetrics.result())
-  }
 
   /** Best-effort `__name__` of a v1 TimeSeries frame that failed full
     * decode (labels-only walk; any error → ""). Error-report use only. */
@@ -671,16 +668,10 @@ object ProtoWire {
     (series, metas)
   }
 
-  /** [[decodeWriteRequestV2]] with per-series error isolation (see
-    * [[decodeWriteRequestLenient]]): a series whose decode fails — a
-    * malformed histogram, an out-of-range labels ref — is skipped and
-    * reported by best-effort metric name; the rest of the payload lands.
-    * A corrupt SYMBOL TABLE still fails the whole payload (nothing can
-    * resolve without it). */
-  def decodeWriteRequestV2Lenient(b: Array[Byte])
-      : (Seq[PSeries], Seq[PMetaV2], Seq[String]) =
-    decodeWriteRequestV2Impl(b, lenient = true)
-
+  /** The v2 half of [[decodeWriteRequest]]: a series whose decode fails —
+    * a malformed histogram, an out-of-range labels ref — is isolated like
+    * v1's; a corrupt SYMBOL TABLE still fails the whole payload (nothing
+    * can resolve without it). */
   private def decodeWriteRequestV2Impl(b: Array[Byte], lenient: Boolean)
       : (Seq[PSeries], Seq[PMetaV2], Seq[String]) = {
     val r = new Reader(b, 0, b.length)

@@ -391,7 +391,7 @@ object TestCorpus {
           samples.map { case (ts, h) =>
             // literal `offset` is the prompb positive-span start; exp
             // storage bucket j covers (base^j, base^(j+1)] — shift by one
-            // like the remote-write decode (PromApi commitWriteRequest)
+            // like the remote-write decode (SpoolDrain.seriesRows)
             (base.toLong + i, metric, tags, ts, null.asInstanceOf[java.lang.Double],
               h.schema, h.offset - 1, h.buckets, h.zBucket, h.zBucketW, h.sum,
               "otel_exp_histogram")

@@ -3,21 +3,28 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.SerializableConfiguration
-import graft.http.ProtoWire
+import graft.http.{OtlpWire, ProtoWire}
 
-/** Executor-side spool decode for the group-commit drain (and the shared
-  * wire-rows → canonical-frame assembly the synchronous write path uses
-  * too, so the two ingest modes cannot drift).
+/** The decode half of the write path, for both ingest modes: one wire
+  * decode per payload format, one row builder, one canonical assembly.
+  * The spool drain runs it on executors over a window's files; the
+  * synchronous write path runs the same decode and row builder strictly,
+  * on the driver, over one POST body. Both then commit the rows through
+  * [[graft.http.PromApi]]'s one `commitRows`, so the two modes cannot
+  * drift.
   *
   * The r15 ingest ladder pinned the sustained committed-ingest floor to
   * the DRIVER-side drain: every spool file was read into driver memory,
   * decoded there, and shipped to executors as a LocalRelation embedded in
   * each commit's plan — at 100-TB ingest the driver becomes the funnel
   * every byte squeezes through. Here executor tasks read the window's
-  * spool files through the Hadoop `FileSystem` and run [[ProtoWire]]'s
-  * wire codec — a pure function over `Array[Byte]` — where they read;
-  * the driver only ever sees per-file outcome headers and the (tiny) v2
-  * metadata rows.
+  * spool files through the Hadoop `FileSystem` and run the wire codecs
+  * ([[ProtoWire]], [[OtlpWire]] — pure functions over `Array[Byte]`)
+  * where they read; the driver only ever sees per-file outcome headers
+  * and the (tiny) metadata rows.
+  *
+  * Every write payload the spool holds is named here and nowhere else
+  * ([[Payload]]: remote-write v1 `.wr`, v2 `.wr2`, OTLP `.otlp`).
   *
   * Everything a drain window carries flattens into ONE union row shape
   * ([[SpoolRow]]), so a single decode pass feeds the samples commit, the
@@ -27,19 +34,20 @@ import graft.http.ProtoWire
   *   kind 1 = exponential native-histogram sample
   *   kind 2 = NHCB sample canonicalized to prom_histogram storage
   *   kind 3 = exemplar
-  *   kind 4 = remote-write-v2 inline metadata
+  *   kind 4 = inline metadata (remote-write v2, OTLP metric descriptors)
   *   kind 5 = file failed decode (framing-ok-at-ack, bad-at-drain → the
   *            caller quarantines it to `.bad`)
-  *   kind 6 = file decoded OK (carries its series/sample counts so the
+  *   kind 6 = payload decoded OK (carries its series/sample counts so the
   *            driver can reproduce the `series.isEmpty` no-op check and
   *            ingest-rate accounting without touching the data)
   *   kind 7 = ONE SERIES failed canonicalization inside an otherwise-good
   *            file (e.g. an NHCB payload whose bucket offsets overrun its
   *            bounds list): the bad series alone is dropped-and-counted,
   *            its payload-mates land — upstream 400s the whole write at
-  *            POST time, but an acked spool payload must not lose 999
-  *            good series to one malformed one (whole-file `.bad`
-  *            quarantine stays for framing errors, kind 5)
+  *            POST time (the synchronous path still does), but an acked
+  *            spool payload must not lose 999 good series to one
+  *            malformed one (whole-file `.bad` quarantine stays for
+  *            framing errors, kind 5)
   */
 object SpoolDrain {
 
@@ -126,35 +134,81 @@ object SpoolDrain {
     plain ++ exp ++ nhcb ++ ex
   }
 
+  /** A write payload format: the spool file extension it publishes under
+    * and the wire codec that decodes it. */
+  private[graft] sealed abstract class Payload(val ext: String)
+
+  private[graft] object Payload {
+    /** prompb WriteRequest (snappy-decompressed). */
+    case object RemoteWriteV1 extends Payload("wr")
+    /** io.prometheus.write.v2.Request (snappy-decompressed). */
+    case object RemoteWriteV2 extends Payload("wr2")
+    /** OTLP ExportMetricsServiceRequest (gzip-decompressed). */
+    case object Otlp extends Payload("otlp")
+
+    val all: Seq[Payload] = Seq(RemoteWriteV1, RemoteWriteV2, Otlp)
+
+    /** The payload a spool file holds; None for `.tmp`, `.bad` and
+      * `.abandoned` leftovers. */
+    def of(fileName: String): Option[Payload] =
+      all.find(p => fileName.endsWith("." + p.ext))
+  }
+
+  /** Decoded (series, metadata) → wire-fact rows: the kind-6 header, then
+    * kinds 0–4. Lenient (the drain) turns each series whose
+    * canonicalization fails, and each `wireBad` name, into a kind-7 row;
+    * strict (the synchronous POST) throws IllegalArgumentException on the
+    * first malformed series instead, so the POST answers 400. */
+  private[graft] def rows(series: Seq[ProtoWire.PSeries],
+                          metas: Seq[ProtoWire.PMetaV2], wireBad: Seq[String],
+                          path: String, lenient: Boolean): Seq[SpoolRow] = {
+    def metricOf(s: ProtoWire.PSeries): String =
+      s.labels.collectFirst { case ("__name__", v) => v }.getOrElse("")
+    val decoded = series.map(s => s -> scala.util.Try(seriesRows(s)))
+    if (!lenient) decoded.collectFirst { case (s, scala.util.Failure(e)) =>
+      throw new IllegalArgumentException(
+        s"malformed series ${metricOf(s)}: ${e.getMessage}", e)
+    }
+    val ok = decoded.collect { case (s, scala.util.Success(r)) => (s, r) }
+    val badRows = (wireBad ++ decoded.collect {
+      case (s, scala.util.Failure(_)) => metricOf(s)
+    }).map(m => SpoolRow(7, m, path = path, seriesN = 1L))
+    val metaRows = metas.map(m =>
+      SpoolRow(4, m.metric, mTyp = m.typ, mHelp = m.help, mUnit = m.unit))
+    SpoolRow(6, path = path, seriesN = ok.size.toLong,
+      samplesN = ok.iterator
+        .map { case (s, _) => (s.samples.size + s.histograms.size).toLong }.sum) +:
+      (ok.flatMap(_._2) ++ badRows ++ metaRows)
+  }
+
+  /** One payload body → its wire-fact rows: the payload's wire decode,
+    * then [[rows]]; `lenient` as there and in
+    * [[ProtoWire.decodeWriteRequest]]. An OTLP body was fully decoded at
+    * the ack, so it has no per-series wire failures to isolate. */
+  private[graft] def decode(payload: Payload, body: Array[Byte], acceptDelta: Boolean,
+                            path: String, lenient: Boolean): Seq[SpoolRow] = {
+    val (series, metas, wireBad) = payload match {
+      case Payload.Otlp =>
+        val (s, m) = OtlpWire.decodeExportRequest(body, acceptDelta)
+        (s, m, Nil)
+      case rw =>
+        ProtoWire.decodeWriteRequest(body, rw == Payload.RemoteWriteV2, lenient)
+    }
+    rows(series, metas, wireBad, path, lenient)
+  }
+
   /** Decode ONE spool file to its wire-fact rows plus a per-file outcome
-    * header (kind 6 ok / kind 5 corrupt). Pure — safe on executors. Wire
-    * version dispatches on the spool extension ([[graft.http.PromApi]]'s
-    * spoolAppend publishes v2 bodies as `.wr2`). */
-  private[graft] def decodeFile(path: String,
-                                body: Array[Byte]): Seq[SpoolRow] =
+    * header (kind 6 ok / kind 5 corrupt). Pure — safe on executors. The
+    * wire codec follows the file's [[Payload]] extension; `acceptDelta`
+    * is the server's OTLP delta opt-in. */
+  private[graft] def decodeFile(path: String, body: Array[Byte],
+                                acceptDelta: Boolean = false): Seq[SpoolRow] =
     scala.util.Try {
       // PER-SERIES leniency (kind 7, see the kinds table): a series whose
       // wire decode or canonicalization fails drops alone, by best-effort
       // metric name — the file-level Try around this block keeps catching
       // top-level framing errors (kind 5, whole-file `.bad` quarantine)
-      val (series, metas, wireBad) =
-        if (path.endsWith(".wr2")) ProtoWire.decodeWriteRequestV2Lenient(body)
-        else {
-          val (s, bad) = ProtoWire.decodeWriteRequestLenient(body)
-          (s, Nil, bad)
-        }
-      val decoded = series.map(s => s -> scala.util.Try(seriesRows(s)))
-      val ok = decoded.collect { case (s, scala.util.Success(r)) => (s, r) }
-      val badRows = (wireBad ++ decoded.collect {
-        case (s, scala.util.Failure(_)) =>
-          s.labels.collectFirst { case ("__name__", v) => v }.getOrElse("")
-      }).map(m => SpoolRow(7, m, path = path, seriesN = 1L))
-      val metaRows = metas.map(m =>
-        SpoolRow(4, m.metric, mTyp = m.typ, mHelp = m.help, mUnit = m.unit))
-      SpoolRow(6, path = path, seriesN = ok.size.toLong,
-        samplesN = ok.iterator
-          .map { case (s, _) => (s.samples.size + s.histograms.size).toLong }.sum) +:
-        (ok.flatMap(_._2) ++ badRows ++ metaRows)
+      decode(Payload.of(path).get, body, acceptDelta, path, lenient = true)
     }.getOrElse(Seq(SpoolRow(5, path = path)))
 
   /** The drain window as a DISTRIBUTED decoded dataset: the drain's own
@@ -162,8 +216,8 @@ object SpoolDrain {
     * tasks, each reading and decoding its files through the Hadoop
     * `FileSystem` (bytes never reach the driver, and no file-source scan
     * lists the paths again). Caller must persist/unpersist. */
-  private[graft] def decodedFrame(spark: SparkSession,
-                                  files: Seq[(String, Long)]): Dataset[SpoolRow] = {
+  private[graft] def decodedFrame(spark: SparkSession, files: Seq[(String, Long)],
+                                  acceptDelta: Boolean = false): Dataset[SpoolRow] = {
     import spark.implicits._
     val sc = spark.sparkContext
     val conf = sc.broadcast(new SerializableConfiguration(sc.hadoopConfiguration))
@@ -173,7 +227,7 @@ object SpoolDrain {
       val in = path.getFileSystem(conf.value.value).open(path)
       val body = new Array[Byte](len.toInt)
       try in.readFully(body) finally in.close()
-      decodeFile(p, body)
+      decodeFile(p, body, acceptDelta)
     })
   }
 
@@ -206,6 +260,18 @@ object SpoolDrain {
       hasExp = has(1), hasNhcb = has(2),
       hasExemplars = has(3), hasMetas = has(4),
       badSeries = row(7).map(_.getLong(1)).getOrElse(0L))
+  }
+
+  /** [[windowFlags]] of rows already on the driver (one synchronous POST),
+    * without the Spark job that would add its latency to every POST. */
+  private[graft] def windowFlags(rows: Seq[SpoolRow]): WindowFlags = {
+    def has(k: Int) = rows.exists(_.kind == k)
+    val headers = rows.filter(_.kind == 6)
+    WindowFlags(badPaths = Nil, seriesTotal = headers.map(_.seriesN).sum,
+      samplesTotal = headers.map(_.samplesN).sum,
+      anyStale = rows.exists(r => r.kind == 0 && r.stale),
+      anyTyped = rows.exists(r => r.kind == 0 && r.seriesType != null),
+      hasExp = has(1), hasNhcb = has(2), hasExemplars = has(3), hasMetas = has(4))
   }
 
   /** Wire-fact rows → the canonical samples frame

@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
-import graft.http.{OtlpWire, PromApi, ProtoWire}
+import graft.http.{OtlpWire, PromApi, ProtoWire, RemoteRead}
 import graft.operators.Quota
 import graft.promql.PromPlanner
 
@@ -309,6 +309,50 @@ class OtlpSpec extends AnyFunSuite with Matchers {
       ex should include(""""span_id":"01"""")
       ex should include(""""path":"/checkout"""")
       ex should include(""""value":"1.25"""")
+    } finally api.stop()
+  }
+
+  private def postOtlp(baseUrl: String, body: Array[Byte]): Int =
+    HttpClient.newHttpClient().send(
+      HttpRequest.newBuilder(URI.create(s"$baseUrl/api/v1/otlp/v1/metrics"))
+        .header("Content-Type", "application/x-protobuf")
+        .POST(HttpRequest.BodyPublishers.ofByteArray(body)).build(),
+      HttpResponse.BodyHandlers.ofByteArray()).statusCode()
+
+  test("spool mode spools OTLP too: a remote-write POST and an OTLP export " +
+       "both land after one drain (the export waits in _spool as .otlp and " +
+       "counts in /__health), a delta sum still answers 400 at POST time, " +
+       "and no _claims dir is minted") {
+    val dir = tmp("graft-otlp-spool")
+    val ws = PromApi.WriteSink(s"$dir/sink", s"$dir/index", s"$dir/reject", cfg)
+    val api = new PromApi(spark, spark.range(0).toDF(), writeSink = Some(ws),
+      metadataDir = Some(s"$dir/meta"), spoolDrainMs = 3600000L).start()
+    try {
+      val base = s"http://localhost:${api.boundPort}"
+      RemoteRead.remoteWriteSeries(Seq(ProtoWire.PSeries(
+        Seq("__name__" -> "rw_metric"), Seq(ProtoWire.PSample(1.0, 1000L)))), base)
+      // no resource attributes beyond job/instance: no target_info series
+      val job = Seq("service.name" -> "shop")
+      postOtlp(base, OtlpWire.encodeExportRequest(job, Seq(OtlpWire.EncMetric(
+        "cpu", kind = "gauge", points = Seq((Nil, 1000L, 0.5, 0)))))) shouldEqual 200
+      postOtlp(base, OtlpWire.encodeExportRequest(job, Seq(OtlpWire.EncMetric(
+        "d", kind = "sum", monotonic = true, temporality = 1,
+        points = Seq((Nil, 1000L, 1.0, 0)))))) shouldEqual 400
+      val fs = new org.apache.hadoop.fs.Path(s"$dir/sink")
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/sink/_spool"))
+        .map(_.getPath.getName).toSet shouldEqual Set("0.wr", "1.otlp")
+      val health = HttpClient.newHttpClient().send(
+        HttpRequest.newBuilder(URI.create(s"$base/__health")).GET().build(),
+        HttpResponse.BodyHandlers.ofString()).body()
+      health should include(""""spool":{"depth":2""")
+      api.drainSpool() shouldEqual 2
+      spark.read.parquet(s"$dir/sink").select("metric").distinct()
+        .collect().map(_.getString(0)).toSet shouldEqual Set("rw_metric", "cpu")
+      fs.exists(new org.apache.hadoop.fs.Path(s"$dir/sink/_claims")) shouldBe false
+      graft.streaming.Ingest.readMetricMeta(spark, s"$dir/meta").get
+        .filter(col("metric") === "cpu").select("type")
+        .head().getString(0) shouldEqual "gauge"
     } finally api.stop()
   }
 }

@@ -1570,6 +1570,32 @@ class PromApiSpec extends AnyFunSuite with Matchers {
     } finally api.stop()
   }
 
+  test("a missing or unparseable query parameter answers 400 bad_data " +
+       "naming the parameter, never 500") {
+    import spark.implicits._
+    val samples = Seq(("purchase", Map("user" -> "1"), 0L, 1.0))
+      .toDF("metric", "tags", "ts", "value")
+    val api = new PromApi(spark, samples).start()
+    try {
+      val client = HttpClient.newHttpClient()
+      def send(path: String) = client.send(
+        HttpRequest.newBuilder(
+          URI.create(s"http://localhost:${api.boundPort}$path")).GET().build(),
+        HttpResponse.BodyHandlers.ofString())
+      for ((path, param) <- Seq(
+          "/api/v1/query_range?query=purchase&end=60&step=15" -> "start",
+          "/api/v1/query_range?start=0&end=60&step=15" -> "query",
+          "/api/v1/query?time=0" -> "query",
+          "/api/v1/query?query=purchase&time=2024-13-01T00:00:00Z" -> "time"))
+        withClue(path) {
+          val r = send(path)
+          r.statusCode() shouldEqual 400
+          r.body() should include(""""errorType":"bad_data"""")
+          r.body() should include(s"""invalid parameter \\"$param\\"""")
+        }
+    } finally api.stop()
+  }
+
   test("query and query_range render escaped label values exactly as stored") {
     import spark.implicits._
     val values = Seq("quo\"te", "back\\slash", "new\nline\ttab", "unié中", "")

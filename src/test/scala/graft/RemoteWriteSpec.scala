@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
-import graft.http.{PromApi, ProtoWire, RemoteRead}
+import graft.http.{OtlpWire, PromApi, ProtoWire, RemoteRead}
 import graft.streaming.Ingest
 import graft.operators.Quota
 
@@ -1352,5 +1352,73 @@ class RemoteWriteSpec extends AnyFunSuite with Matchers {
         fwd.filter(coalesce(col("__stale"), lit(false))).count() shouldEqual 1L
       } finally api2.stop()
     } finally api.stop()
+  }
+
+  test("sync and spool modes store identical rows for one payload mix: " +
+       "samples, a StaleNaN marker, exponential and NHCB native histograms, " +
+       "exemplars, RW2 inline metadata and an OTLP gauge with a descriptor") {
+    val v1 = ProtoWire.encodeWriteRequest(Seq(
+      ProtoWire.PSeries(Seq("__name__" -> "mix_plain", "job" -> "j"),
+        Seq(ProtoWire.PSample(1.0, 1000L), ProtoWire.PSample(2.0, 2000L),
+          ProtoWire.PSample(Double.NaN, 3000L, stale = true)),
+        exemplars = Seq(ProtoWire.PExemplar(Seq("trace_id" -> "t1"), 1.5, 1500L))),
+      ProtoWire.PSeries(Seq("__name__" -> "mix_exp"), Nil, histograms = Seq(
+        hist(1000L, Seq(1.0, 2.0)), hist(2000L, Seq(3.0, 5.0))))))
+    val v2 = ProtoWire.encodeWriteRequestV2(Seq(
+      ProtoWire.PSeries(Seq("__name__" -> "mix_nhcb"), Nil, histograms = Seq(
+        nhcb(1000L, Seq(2.0, 3.0, 1.0), Seq(1.0, 5.0, 10.0), sumV = 18.0))),
+      ProtoWire.PSeries(Seq("__name__" -> "mix_v2", "job" -> "j"),
+        Seq(ProtoWire.PSample(5.0, 1000L)))),
+      Map("mix_v2" -> (("gauge", "A v2 gauge.", "bytes"))))
+    val otlp = OtlpWire.encodeExportRequest(Seq("service.name" -> "shop"), Seq(
+      OtlpWire.EncMetric("mix_otlp", description = "An OTLP gauge.", kind = "gauge",
+        points = Seq((Seq("core" -> "0"), 1000L, 0.5, 0)))))
+    def post(url: String, ctype: String, body: Array[Byte]): Int =
+      java.net.http.HttpClient.newHttpClient().send(
+        java.net.http.HttpRequest.newBuilder(java.net.URI.create(url))
+          .header("Content-Type", ctype)
+          .POST(java.net.http.HttpRequest.BodyPublishers.ofByteArray(body)).build(),
+        java.net.http.HttpResponse.BodyHandlers.ofString()).statusCode()
+    /** every stored row of one store, batch_id dropped, maps as sorted
+      * entries. A commit without a marker writes no `__stale` column (the
+      * sink's column-presence contract), so absent reads as false: sync
+      * mode commits the three payloads apart, the drain as one window. */
+    def stored(df: DataFrame): Seq[String] =
+      df.select(df.schema.fields.filter(_.name != "batch_id").sortBy(_.name).map { f =>
+          f.dataType match {
+            case _: org.apache.spark.sql.types.MapType =>
+              array_sort(map_entries(col(f.name))).as(f.name)
+            case _ if f.name == "__stale" => coalesce(col(f.name), lit(false)).as(f.name)
+            case _ => col(f.name)
+          }
+        }: _*)
+        .collect().map(_.toString).toSeq.sorted
+    def read(path: String) = stored(spark.read.option("mergeSchema", "true").parquet(path))
+    def run(spool: Boolean): Seq[Seq[String]] = {
+      val dir = tmp(if (spool) "graft-parity-spool" else "graft-parity-sync")
+      val ws = PromApi.WriteSink(s"$dir/sink", s"$dir/index", s"$dir/reject", cfg,
+        exemplarDir = Some(s"$dir/ex"))
+      val api = new PromApi(spark, spark.range(0).toDF(), writeSink = Some(ws),
+        metadataDir = Some(s"$dir/meta"),
+        spoolDrainMs = if (spool) 3600000L else 0L).start()
+      try {
+        val base = s"http://localhost:${api.boundPort}"
+        post(s"$base/api/v1/write", "application/x-protobuf",
+          org.xerial.snappy.Snappy.compress(v1)) shouldEqual 204
+        post(s"$base/api/v1/write",
+          "application/x-protobuf;proto=io.prometheus.write.v2.Request",
+          org.xerial.snappy.Snappy.compress(v2)) shouldEqual 204
+        post(s"$base/api/v1/otlp/v1/metrics", "application/x-protobuf", otlp) shouldEqual 200
+        if (spool) api.drainSpool() shouldEqual 3
+      } finally api.stop()
+      Seq(read(s"$dir/sink"), read(s"$dir/index"), read(s"$dir/ex"),
+        stored(Ingest.readMetricMeta(spark, s"$dir/meta").get))
+    }
+    val Seq(sink, index, ex, meta) = run(spool = false)
+    sink.size shouldEqual 8 // 3 plain + 2 exp + 1 NHCB + 1 v2 + 1 OTLP
+    ex.size shouldEqual 1
+    meta.exists(_.contains("A v2 gauge.")) shouldBe true
+    meta.exists(_.contains("An OTLP gauge.")) shouldBe true
+    run(spool = true) shouldEqual Seq(sink, index, ex, meta)
   }
 }
