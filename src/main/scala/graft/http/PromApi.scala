@@ -3,7 +3,7 @@ package graft.http
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model.SeriesKey
 import graft.promql.PromPlanner
@@ -978,19 +978,15 @@ class PromApi(spark: SparkSession, samples: DataFrame, port: Int = 0,
     if (p.get("explainOnly").contains("true")) explainResponse(param(p, "query"), df)
     else {
       enforce(hook)
-      val (collected, executed) = collectLimited(df, seriesCap(p))
-      val rows = collected.groupBy(_.getString(0)).toSeq.sortBy(_._1)
-      val result = rows.map { case (key, rs) =>
-        val metric = jsObject(SeriesKey.decode(key))
-        val values = rs.sortBy(_.getLong(1)).map { r =>
-          s"""[${fmtTs(r.getLong(1))},${js(fmt(r.getDouble(2)))}]"""
-        }.mkString(",")
-        s"""{"metric":$metric,"values":[$values]}"""
+      val (series, executed) = collectSeries(df, seriesCap(p))
+      val result = series.map { case (key, points) =>
+        val values = points.map(point).mkString(",")
+        s"""{"metric":${jsObject(SeriesKey.decode(key))},"values":[$values]}"""
       }.mkString(",")
-      val nSamples = rows.iterator.map(_._2.size.toLong).sum
-      val stats = statsJson(p, t0, rows.size, nSamples)
+      val nSamples = series.iterator.map(_._2.size.toLong).sum
+      val stats = statsJson(p, t0, series.size, nSamples)
       val body = s"""{"resultType":"matrix","result":[$result]$stats}"""
-      val qs = queryStatsJson(p, executed, hook, rows.size, nSamples, t0,
+      val qs = queryStatsJson(p, executed, hook, series.size, nSamples, t0,
         body.length.toLong, gid)
       s"""{"status":"success","data":$body$qs}"""
     }
@@ -1018,21 +1014,23 @@ class PromApi(spark: SparkSession, samples: DataFrame, port: Int = 0,
     if (p.get("explainOnly").contains("true")) explainResponse(param(p, "query"), df)
     else {
       enforce(hook)
-      val (rows, executed) = collectLimited(df, seriesCap(p))
+      val (series, executed) = collectSeries(df, seriesCap(p))
       if (PromPlanner.isScalarTyped(ast)) {
         // exactly one grid step (start == end): one value, NaN when empty
-        val v = rows.headOption.map(_.getDouble(2)).getOrElse(Double.NaN)
+        val v = series.headOption.map(_._2.head.getDouble(1)).getOrElse(Double.NaN)
         val stats = statsJson(p, t0, 1, 1L)
         val body = s"""{"resultType":"scalar","result":[${fmtTs(t)},${js(fmt(v))}]$stats}"""
         val qs = queryStatsJson(p, executed, hook, 1, 1L, t0, body.length.toLong, gid)
         s"""{"status":"success","data":$body$qs}"""
       } else {
-        val result = rows.sortBy(_.getString(0)).map { r =>
-          s"""{"metric":${jsObject(SeriesKey.decode(r.getString(0)))},"value":[${fmtTs(r.getLong(1))},${js(fmt(r.getDouble(2)))}]}"""
-        }.mkString(",")
-        val stats = statsJson(p, t0, rows.size, rows.size.toLong)
-        val body = s"""{"resultType":"vector","result":[$result]$stats}"""
-        val qs = queryStatsJson(p, executed, hook, rows.size, rows.size.toLong, t0,
+        // one point per series: the grid has one step
+        val result = series.flatMap { case (key, points) =>
+          val metric = jsObject(SeriesKey.decode(key))
+          points.map(pt => s"""{"metric":$metric,"value":${point(pt)}}""")
+        }
+        val stats = statsJson(p, t0, result.size, result.size.toLong)
+        val body = s"""{"resultType":"vector","result":[${result.mkString(",")}]$stats}"""
+        val qs = queryStatsJson(p, executed, hook, result.size, result.size.toLong, t0,
           body.length.toLong, gid)
         s"""{"status":"success","data":$body$qs}"""
       }
@@ -1198,8 +1196,8 @@ class PromApi(spark: SparkSession, samples: DataFrame, port: Int = 0,
     * format (snappy-java `Snappy.compress`), as the Prometheus spec
     * requires — not the framed stream format. Like the reference (which
     * marks the route "intended only for functional testing"), this is a
-    * presentation surface: results collect at the driver, bounded by the
-    * same per-query row guard as the JSON endpoints. */
+    * presentation surface: results collect at the driver, one row per
+    * series, capped at `maxResultSeries` as the JSON endpoints are. */
   private def remoteReadHandler: com.sun.net.httpserver.HttpHandler = (ex: HttpExchange) => {
     try {
       val body = org.xerial.snappy.Snappy.uncompress(ex.getRequestBody.readAllBytes())
@@ -1456,92 +1454,89 @@ class PromApi(spark: SparkSession, samples: DataFrame, port: Int = 0,
     // not reset-credit deltas). Scalar rows stay plain samples.
     def optCol(name: String, typ: String): Column =
       if (df.columns.contains(name)) col(name) else lit(null).cast(typ)
-    val slim = df.select(col("metric"), col("tags"), col("ts").cast("long"),
-      col("value"),
-      optCol("le", "array<double>"), optCol("values", "array<double>"),
-      optCol("hist_sum", "double"),
-      optCol("exp_scale", "int"), optCol("exp_offset", "int"),
-      optCol("exp_counts", "array<double>"),
-      optCol("exp_zero_count", "double"), optCol("exp_zero_threshold", "double"),
-      optCol("exp_sum", "double"),
-      // staleness markers ship on the remote-read wire as StaleNaN
-      // samples (upstream serves them; the bits re-encode in ProtoWire)
-      optCol("__stale", "boolean"))
-    slim.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // MAP columns don't support set ops, but group as-is
-      val n = slim.groupBy(col("metric"), col("tags")).count()
-        .limit(maxResultSeries + 1).count()
-      if (n > maxResultSeries)
-        throw new IllegalStateException(
-          s"remote read exceeds the per-query limit of $maxResultSeries series")
-      slim.collect()
-        .groupBy(r => (r.getString(0), r.getMap[String, String](1).toSeq.sortBy(_._1)))
-        .toSeq
-        .map { case ((metric, tags), rows) =>
-          val samples = rows.filter(!_.isNullAt(3))
-            .map(r => ProtoWire.PSample(r.getDouble(3), r.getLong(2),
-              stale = !r.isNullAt(13) && r.getBoolean(13)))
-            .sortBy(_.ts).toSeq
-          val hists = rows.flatMap { r =>
-            if (!r.isNullAt(4) && !r.isNullAt(5)) {
-              // NHCB: le = bounds + Inf, values cumulative, last = count
-              val le = r.getSeq[Double](4)
-              val cum = r.getSeq[Double](5)
-              val bounds = le.dropRight(1)
-              val perBucket = cum.take(bounds.size).zipWithIndex.map {
-                case (c, 0) => c
-                case (c, i) => c - cum(i - 1)
-              }
-              val count = cum.last
-              val overflow = count - (if (bounds.isEmpty) 0.0 else cum(bounds.size - 1))
-              val counts =
-                if (overflow > 0) perBucket :+ overflow else perBucket
-              Some(ProtoWire.PHistogram(r.getLong(2), -53, 0.0, 0.0, count,
-                if (r.isNullAt(6)) 0.0 else r.getDouble(6), 0,
-                posOffset = 0, posCounts = counts, negOffset = 0,
-                negCounts = Nil, customValues = bounds))
-            } else if (!r.isNullAt(9)) {
-              // exp storage: delta temporality -> GAUGE hint (3)
-              val counts = r.getSeq[Double](9)
-              val zero = if (r.isNullAt(10)) 0.0 else r.getDouble(10)
-              Some(ProtoWire.PHistogram(r.getLong(2), r.getInt(7), // schema
-                if (r.isNullAt(11)) 0.0 else r.getDouble(11), zero,
-                zero + counts.sum,
-                if (r.isNullAt(12)) 0.0 else r.getDouble(12), 3,
-                posOffset = r.getInt(8) + 1, posCounts = counts,
-                negOffset = 0, negCounts = Nil))
-            } else None
-          }.sortBy(_.ts).toSeq
-          ProtoWire.PSeries(
-            (("__name__" -> metric) +: tags).sortBy(_._1),
-            samples, histograms = hists)
-        }
-        .sortBy(_.labels.mkString)
-    } finally slim.unpersist(false)
+    // one row per series (MAP columns group as-is), its rows folded on
+    // the executors: ONE action, capped one series past the limit
+    val series = df.groupBy(col("metric"), col("tags"))
+      .agg(collect_list(struct(col("ts").cast("long"), col("value"),
+        optCol("le", "array<double>"), optCol("values", "array<double>"),
+        optCol("hist_sum", "double"),
+        optCol("exp_scale", "int"), optCol("exp_offset", "int"),
+        optCol("exp_counts", "array<double>"),
+        optCol("exp_zero_count", "double"), optCol("exp_zero_threshold", "double"),
+        optCol("exp_sum", "double"),
+        // staleness markers ship on the remote-read wire as StaleNaN
+        // samples (upstream serves them; the bits re-encode in ProtoWire)
+        optCol("__stale", "boolean"))))
+      .limit(maxResultSeries + 1).collect()
+    if (series.length > maxResultSeries)
+      throw new IllegalStateException(
+        s"remote read exceeds the per-query limit of $maxResultSeries series")
+    series.toSeq.map { s =>
+      val rows = s.getSeq[Row](2)
+      val samples = rows.filter(!_.isNullAt(1))
+        .map(r => ProtoWire.PSample(r.getDouble(1), r.getLong(0),
+          stale = !r.isNullAt(11) && r.getBoolean(11)))
+        .sortBy(_.ts)
+      val hists = rows.flatMap { r =>
+        if (!r.isNullAt(2) && !r.isNullAt(3)) {
+          // NHCB: le = bounds + Inf, values cumulative, last = count
+          val le = r.getSeq[Double](2)
+          val cum = r.getSeq[Double](3)
+          val bounds = le.dropRight(1)
+          val perBucket = cum.take(bounds.size).zipWithIndex.map {
+            case (c, 0) => c
+            case (c, i) => c - cum(i - 1)
+          }
+          val count = cum.last
+          val overflow = count - (if (bounds.isEmpty) 0.0 else cum(bounds.size - 1))
+          val counts =
+            if (overflow > 0) perBucket :+ overflow else perBucket
+          Some(ProtoWire.PHistogram(r.getLong(0), -53, 0.0, 0.0, count,
+            if (r.isNullAt(4)) 0.0 else r.getDouble(4), 0,
+            posOffset = 0, posCounts = counts, negOffset = 0,
+            negCounts = Nil, customValues = bounds))
+        } else if (!r.isNullAt(7)) {
+          // exp storage: delta temporality -> GAUGE hint (3)
+          val counts = r.getSeq[Double](7)
+          val zero = if (r.isNullAt(8)) 0.0 else r.getDouble(8)
+          Some(ProtoWire.PHistogram(r.getLong(0), r.getInt(5), // schema
+            if (r.isNullAt(9)) 0.0 else r.getDouble(9), zero,
+            zero + counts.sum,
+            if (r.isNullAt(10)) 0.0 else r.getDouble(10), 3,
+            posOffset = r.getInt(6) + 1, posCounts = counts,
+            negOffset = 0, negCounts = Nil))
+        } else None
+      }.sortBy(_.ts)
+      ProtoWire.PSeries(
+        (("__name__" -> s.getString(0)) +: s.getMap[String, String](1).toSeq).sortBy(_._1),
+        samples, histograms = hists)
+    }.sortBy(_.labels.mkString)
   }
 
   /** The reference enforces PerQueryLimits on result cardinality
-    * (QueryContext) DURING execution. Same here: count distinct series —
-    * capped at limit+1, executors do the counting — BEFORE collect(), so a
-    * runaway query fails without ever materializing on the driver.
-    *
-    * The result is persisted across the guard + collect pair so the query
-    * executes ONCE: the guard's count populates the cache, the collect
-    * reads it (the round-2 judge flagged the guard re-executing the whole
-    * plan from the scan — 2× cluster work per endpoint hit). */
-  private def collectLimited(df: DataFrame,
-                             cap: Int): (Array[org.apache.spark.sql.Row], DataFrame) = {
-    val slim = df.select(col("__key"), col("step_ts"), col("value"))
-    slim.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val n = slim.select(col("__key")).distinct().limit(cap + 1).count()
-      if (n > cap)
-        throw new IllegalStateException(
-          s"query result exceeds the per-query limit of $cap series")
-      (slim.collect(), slim)
-    } finally slim.unpersist(false)
+    * (QueryContext) DURING execution, and answers with RangeVectors: one
+    * key plus its rows. Same here, in ONE Spark action: the executors fold
+    * each series into one row (its `__key` and its step-sorted
+    * `(step_ts, value)` points), and `limit(cap + 1)` stops the collect
+    * one series past the cap, so a runaway query fails without ever
+    * materializing on the driver. Returns the series sorted by key, and
+    * the limited frame that ran — its executed plan is the one
+    * `stats=all` harvests scan metrics from. */
+  private def collectSeries(df: DataFrame,
+                            cap: Int): (Seq[(String, Seq[Row])], DataFrame) = {
+    val limited = df.groupBy(col("__key"))
+      .agg(sort_array(collect_list(struct(col("step_ts"), col("value")))))
+      .limit(cap + 1)
+    val rows = limited.collect()
+    if (rows.length > cap)
+      throw new IllegalStateException(
+        s"query result exceeds the per-query limit of $cap series")
+    (rows.map(r => (r.getString(0), r.getSeq[Row](1))).sortBy(_._1).toSeq, limited)
   }
+
+  /** One `(step_ts, value)` point as Prometheus' `[ts, "value"]` pair. */
+  private def point(pt: Row): String =
+    s"""[${fmtTs(pt.getLong(0))},${js(fmt(pt.getDouble(1)))}]"""
 
   /** Effective series cap for one request: the server's `maxResultSeries`,
     * tightened by an optional per-request `limit` param — a federation

@@ -20,8 +20,8 @@ import graft.promql.PromPlanner
   * materializes, the executed physical plan's SQL metrics are harvested —
   * leaf-scan `numOutputRows` is the samples scanned (post-pushdown rows
   * actually read) and `filesSize` the bytes of files read after partition
-  * pruning (descending through AQE stages, exchange reuse and the
-  * collect-guard's InMemoryRelation to reach the real scans).
+  * pruning (descending through AQE stages, exchange reuse and a cached
+  * samples frame's InMemoryRelation to reach the real scans).
   * `timeSeriesScanned` comes from the planner seam every raw selector
   * passes through ([[graft.promql.PromPlanner]] registers each selector
   * frame on the hook): one narrow distinct-count job per selector, run
@@ -100,8 +100,8 @@ object QueryStatsCollector {
 
   /** Sum (samplesScanned, dataBytesScanned) over the REAL leaf scans of an
     * executed plan: descends AQE's final plan, materialized query stages,
-    * reused exchanges and InMemoryRelation cached plans (the collect-guard
-    * persists, so the true scan sits beneath an InMemoryTableScan). */
+    * reused exchanges and InMemoryRelation cached plans (a server over a
+    * cached samples frame has its true scan beneath an InMemoryTableScan). */
   def harvestScans(plan: SparkPlan): (Long, Long) = {
     var rows = 0L
     var bytes = 0L

@@ -83,7 +83,8 @@ object Bpe {
     require(nMerges >= 1, s"nMerges must be positive: $nMerges")
     // ONE corpus-scale SQL pass builds the (initial-symbols, n) vocabulary
     // table; the merge loop then runs on its RDD. Per-round SQL jobs were
-    // pure overhead on the vocabulary-bounded working set (r17 BpeProbe:
+    // pure overhead on the vocabulary-bounded working set (r17 BpeProbe,
+    // a probe main retired after commit d710d6d:
     // 165 ms/round — a fresh whole-stage-codegen class per round from the
     // literal-bearing fold, an AQE replan, a Catalyst plan — over a
     // 31-row vocab). The RDD round keeps the identical distributed shape:

@@ -7,8 +7,9 @@ import graft.pipeline.{CorpusLayout, Multimodal}
 import graft.streaming.Ingest
 
 /** STREAMING-scale rehearsal: the batch operators' 10x/100x rehearsal
-  * (ScaleRehearsal + TimeOne) covers one-shot jobs; this drives the
-  * STANDING-SERVICE write path — `processDocBatch` / `processMediaBatch`
+  * (ScaleRehearsal; TimeOne was retired after commit d710d6d) covers
+  * one-shot jobs; this drives the STANDING-SERVICE write path —
+  * `processDocBatch` / `processMediaBatch`
   * against a pre-seeded index — and records per-batch latency as a
   * function of standing-index size: the axis that decides whether the
   * near-dup ingest service holds at corpus scale. By the bucketed-probe

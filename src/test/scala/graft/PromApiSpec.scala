@@ -567,9 +567,10 @@ class PromApiSpec extends AnyFunSuite with Matchers {
     import org.apache.spark.sql.functions.{col, udf}
     import graft.promql.PromPlanner
     // count source-row reads with an accumulator inside an always-true
-    // filter: the series-limit guard's count populates the persisted
-    // result, the collect reads the cache — so the source is scanned once
-    // per request (the round-2 judge flagged a 2x re-execution here)
+    // filter: the endpoint runs the query as ONE action (a per-series
+    // aggregate whose collect is capped at limit + 1 series), so the
+    // source is scanned once per request (a separate series-cap guard
+    // once re-ran the whole plan: 2x the reads)
     val reads = spark.sparkContext.longAccumulator("sourceReads")
     val tick = udf { (_: Long) => reads.add(1L); true }
     val counted = TsTables.eventsAsSamples(spark, "/root/testdata/sf0.001")
@@ -590,6 +591,134 @@ class PromApiSpec extends AnyFunSuite with Matchers {
       // pre-fix the endpoint scanned ~2x the baseline; allow 1.5x headroom
       reads.value.longValue should be <= (oneRun * 3) / 2
       reads.value.longValue should be > 0L
+    } finally api.stop()
+  }
+
+  test("query and query_range each run exactly one SQL execution and " +
+       "leave the cache as they found it") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val samples = TsTables.eventsAsSamples(spark, "/root/testdata/sf0.001")
+    val api = new PromApi(spark, samples).start()
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    // listener events arrive in order on one bus: once a sentinel's plan
+    // is seen, every execution before it has been recorded
+    def sentinel(tag: String): Unit = {
+      spark.range(1).select(col("id").as(tag)).collect()
+      val deadline = System.currentTimeMillis() + 30000L
+      while (!plans.toArray.exists(_.toString.contains(tag)) &&
+             System.currentTimeMillis() < deadline) Thread.sleep(20)
+    }
+    val q = java.net.URLEncoder.encode("sum_over_time(purchase[1d])", "UTF-8")
+    val requests = Seq(
+      "range" -> (s"/api/v1/query_range?query=$q&start=${TsTables.EventsStartMs / 1000}" +
+        s"&end=${TsTables.EventsEndMs / 1000}&step=86400"),
+      "instant" -> s"/api/v1/query?query=$q&time=${TsTables.EventsEndMs / 1000}")
+    spark.listenerManager.register(listener)
+    try {
+      for ((name, path) <- requests) withClue(s"$name: ") {
+        val cacheWasEmpty = spark.sharedState.cacheManager.isEmpty
+        sentinel(s"sentinel_${name}_open")
+        get(api.boundPort, path) should include(""""status":"success"""")
+        sentinel(s"sentinel_${name}_close")
+        val inside = plans.toArray.map(_.toString).toSeq
+          .dropWhile(!_.contains(s"sentinel_${name}_open")).drop(1)
+          .takeWhile(!_.contains(s"sentinel_${name}_close"))
+        inside should have size 1
+        // nothing persisted: the one execution reads no cached relation
+        inside.head should not include "InMemoryTableScan"
+        spark.sharedState.cacheManager.isEmpty shouldEqual cacheWasEmpty
+      }
+    } finally {
+      spark.listenerManager.unregister(listener)
+      api.stop()
+    }
+  }
+
+  /** Three series for the remote-read cases: `up{job="a"}` (two samples,
+    * stored out of order, then a staleness marker), `up{job="b",i="x"}`
+    * (its tag map stored in two key orders) and the NHCB `lat{job="a"}`. */
+  private def mixedReadFrame = {
+    import spark.implicits._
+    val ab = Map("job" -> "b", "i" -> "x")
+    val ba = Map("i" -> "x", "job" -> "b")
+    val inf = Double.PositiveInfinity
+    Seq[(String, Map[String, String], Long, Option[Double], Option[Seq[Double]],
+        Option[Seq[Double]], Option[Double], Boolean)](
+      ("up", Map("job" -> "a"), 2000L, Some(2.0), None, None, None, false),
+      ("up", Map("job" -> "a"), 1000L, Some(1.0), None, None, None, false),
+      ("up", Map("job" -> "a"), 3000L, Some(Double.NaN), None, None, None, true),
+      ("up", ab, 1000L, Some(5.0), None, None, None, false),
+      ("up", ba, 2000L, Some(6.0), None, None, None, false),
+      ("lat", Map("job" -> "a"), 2000L, None, Some(Seq(0.5, 1.0, inf)),
+        Some(Seq(2.0, 5.0, 7.0)), Some(6.0), false),
+      ("lat", Map("job" -> "a"), 1000L, None, Some(Seq(0.5, 1.0, inf)),
+        Some(Seq(1.0, 3.0, 4.0)), Some(2.5), false))
+      .toDF("metric", "tags", "ts", "value", "le", "values", "hist_sum", "__stale")
+  }
+
+  /** POST one remote-read query for `__name__=~"up|lat"` over [0, 10000]
+    * ms; answers the status and the raw (snappy-decoded when 200) body. */
+  private def readMixed(port: Int): (Int, Array[Byte]) = {
+    import graft.http.ProtoWire
+    val req = org.xerial.snappy.Snappy.compress(ProtoWire.encodeReadRequest(
+      ProtoWire.PReadRequest(Seq(ProtoWire.PQuery(0L, 10000L,
+        Seq(ProtoWire.PMatcher(2, "__name__", "up|lat")))))))
+    val resp = HttpClient.newHttpClient().send(
+      HttpRequest.newBuilder(URI.create(s"http://localhost:$port/api/v1/read"))
+        .header("Content-Type", "application/x-protobuf")
+        .header("Content-Encoding", "snappy")
+        .POST(HttpRequest.BodyPublishers.ofByteArray(req)).build(),
+      HttpResponse.BodyHandlers.ofByteArray())
+    val body =
+      if (resp.statusCode() == 200) org.xerial.snappy.Snappy.uncompress(resp.body())
+      else resp.body()
+    (resp.statusCode(), body)
+  }
+
+  test("remote read exceeds the per-query limit: 400 with the named error") {
+    val api = new PromApi(spark, mixedReadFrame, maxResultSeries = 2).start()
+    try {
+      val (code, body) = readMixed(api.boundPort)
+      code shouldEqual 400
+      new String(body, "UTF-8") should include(
+        "remote read exceeds the per-query limit of 2 series")
+    } finally api.stop()
+  }
+
+  test("remote read of scalar, NHCB and stale-marker rows: per-series " +
+       "samples and histograms, labels and timestamps sorted") {
+    import graft.http.ProtoWire
+    import graft.http.ProtoWire.{PHistogram, PSample, PSeries}
+    // exactly at the cap: answers
+    val api = new PromApi(spark, mixedReadFrame, maxResultSeries = 3).start()
+    try {
+      val (code, body) = readMixed(api.boundPort)
+      code shouldEqual 200
+      val got = ProtoWire.decodeReadResponse(body)
+      def nhcb(ts: Long, count: Double, sum: Double, counts: Seq[Double]) =
+        PHistogram(ts, -53, 0.0, 0.0, count, sum, 0, posOffset = 0,
+          posCounts = counts, negOffset = 0, negCounts = Nil,
+          customValues = Seq(0.5, 1.0))
+      val want = Seq(Seq(
+        PSeries(Seq("__name__" -> "lat", "job" -> "a"), Nil,
+          histograms = Seq(nhcb(1000L, 4.0, 2.5, Seq(1.0, 2.0, 1.0)),
+            nhcb(2000L, 7.0, 6.0, Seq(2.0, 3.0, 2.0)))),
+        PSeries(Seq("__name__" -> "up", "i" -> "x", "job" -> "b"),
+          Seq(PSample(5.0, 1000L), PSample(6.0, 2000L))),
+        PSeries(Seq("__name__" -> "up", "job" -> "a"),
+          Seq(PSample(1.0, 1000L), PSample(2.0, 2000L),
+            PSample(Double.NaN, 3000L, stale = true)))))
+      // sample values compare rendered: a NaN never equals itself
+      def norm(r: Seq[Seq[PSeries]]) = r.map(_.map(s => (s.labels,
+        s.samples.map(p => (p.value.toString, p.ts, p.stale)), s.histograms)))
+      norm(got) shouldEqual norm(want)
     } finally api.stop()
   }
 

@@ -217,6 +217,10 @@ class RemoteWriteSpec extends AnyFunSuite with Matchers {
         client.send(HttpRequest.newBuilder(URI.create(url))
           .POST(HttpRequest.BodyPublishers.ofByteArray(body)).build(),
           HttpResponse.BodyHandlers.ofByteArray()).statusCode()
+      // the senders retry every 429 until their write lands: how long six
+      // serialized sync commits take depends on the box, so only one
+      // generous overall deadline bounds the wait, not a retry count
+      val deadline = System.nanoTime() + 600L * 1000000000L
       val threads = (1 to 6).map { i =>
         new Thread(() => {
           val body = org.xerial.snappy.Snappy.compress(
@@ -224,9 +228,8 @@ class RemoteWriteSpec extends AnyFunSuite with Matchers {
               Seq("__name__" -> s"m$i"),
               Seq(ProtoWire.PSample(i.toDouble, 1000L))))))
           var code = postOnce(body)
-          var tries = 0
-          while (code == 429 && tries < 200) { // the sender backoff loop
-            codes.add(code); Thread.sleep(50); code = postOnce(body); tries += 1
+          while (code == 429 && System.nanoTime() < deadline) { // sender backoff
+            codes.add(code); Thread.sleep(50); code = postOnce(body)
           }
           codes.add(code)
         })
