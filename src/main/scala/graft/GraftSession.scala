@@ -15,6 +15,16 @@ import org.apache.spark.sql.SparkSession
   *    stores TIMESTAMP(NANOS) which Spark 4 otherwise rejects; reading it
   *    as epoch-nanos Long is exact and we normalize to epoch millis
   *    (the reference's native unit, see SURVEY.md §1.2 `ts`).
+  *  - `spark.sql.codegen.cache.maxEntries` — Spark caches generated
+  *    classes JVM-wide, 100 by default. One refresh of graftbench's
+  *    8-panel `promql_small` dashboard needs 150–260 of them, so at 100
+  *    every refresh recompiled 71–79 classes with janino, and HotSpot then
+  *    JIT-compiled them again: 4.2–5.3 of the 10.6–12 CPU-seconds a
+  *    refresh cost on 4 cores. (PromApiSpec's scaled-down copy of that
+  *    dashboard compiles 124, then 67 classes on two refreshes at 100
+  *    entries; 85, then 0 at 1000.) 1000 leaves room above that working
+  *    set for a served mix of several dashboards. It is a STATIC conf:
+  *    only the first session in the JVM applies it, and [[tune]] cannot.
   */
 object GraftSession {
   /** Engine version — single source for the API's buildinfo and build.sbt. */
@@ -45,6 +55,8 @@ object GraftSession {
       // default ANSI mode raises DIVIDE_BY_ZERO instead — turn it off.
       .config("spark.sql.ansi.enabled", "false")
       .config("spark.ui.enabled", "false")
+      // generated-class cache above the served working set (see header)
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
 
   def local(cpus: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
     val s = builder(s"local[$cpus]", math.max(cpus, 4).toString).getOrCreate()
@@ -52,7 +64,10 @@ object GraftSession {
     s
   }
 
-  /** Apply graft settings onto an externally-created session (driver owns it). */
+  /** Apply graft settings onto an externally-created session (driver owns it).
+    * Runtime confs only: the static `spark.sql.codegen.cache.maxEntries`
+    * cannot be set on a live session, so such a session keeps Spark's
+    * 100-entry generated-class cache unless its owner sets it at build. */
   def tune(spark: SparkSession): SparkSession = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")

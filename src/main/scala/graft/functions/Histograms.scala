@@ -142,7 +142,7 @@ object Histograms {
       .groupBy(keyCols.map(col): _*)
       .agg(
         first(col("le")).as("le"),
-        array_sort(collect_list(struct(col("pos"), col("bv"))))
+        sort_array(collect_list(struct(col("pos"), col("bv"))))
           .getField("bv").as("values"))
   }
 
@@ -162,7 +162,7 @@ object Histograms {
     val rated = PeriodicSamples(buckets, seriesCols :+ "pos", "__bts", "bucket_value",
       startMs, endMs, stepMs, windowMs, fn)
     rated.groupBy((seriesCols.map(col) :+ col("step_ts")): _*)
-      .agg(array_sort(collect_list(struct(col("pos"), col("value"))))
+      .agg(sort_array(collect_list(struct(col("pos"), col("value"))))
         .getField("value").as("values"))
   }
 

@@ -1142,8 +1142,10 @@ class PromApi(spark: SparkSession, samples: DataFrame, port: Int = 0,
   /** `/metrics` — the engine's OWN telemetry in Prometheus text
     * exposition, so a fleet of graft servers is scrapeable by any
     * Prometheus (and by another graft via the gateway's exposition
-    * parser): queries served, write commits, in-flight writes, and the
-    * spool drain-lag gauges. */
+    * parser): queries served, write commits, in-flight writes, the
+    * spool drain-lag gauges, and generated-code compilations (a refresh
+    * that keeps compiling means the plan cache thrashes, see
+    * [[graft.GraftSession]]). */
   private def selfMetrics(p: Map[String, String]): String = {
     val sb = new StringBuilder
     def emit(name: String, typ: String, help: String, v: Double): Unit =
@@ -1156,6 +1158,9 @@ class PromApi(spark: SparkSession, samples: DataFrame, port: Int = 0,
     emit("graft_writes_inflight", "gauge",
       "Write POSTs decoding or committing right now.",
       (math.max(1, maxInFlightWrites) - writePermits.availablePermits()).toDouble)
+    emit("graft_codegen_compilations_total", "counter",
+      "Generated classes compiled (misses of the JVM-wide generated-class cache).",
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount.toDouble)
     adminDir.foreach { d =>
       emit("graft_tombstones_pending", "gauge",
         "delete_series tombstones awaiting physical purge.",

@@ -12,7 +12,15 @@ import org.apache.spark.sql.types.DataType
   * a label set), the persisted 64-bit `series_id`, and the key's inverse.
   * Where a key would only de-duplicate tag maps, group on the map itself:
   * Spark folds maps that differ only in insertion order (but `distinct`,
-  * `dropDuplicates` and `orderBy` still reject map columns). */
+  * `dropDuplicates` and `orderBy` still reject map columns).
+  *
+  * The entries sort with `sort_array`, never `array_sort`: in Spark 4.1
+  * `ArraySort` is a `CodegenFallback` higher-order function that runs an
+  * interpreted lambda comparator per row (41% of the sampled executor
+  * stacks of a dashboard loop), while `SortArray` is generated code. The
+  * entry structs are never null and map keys are unique, so ascending
+  * struct order is the permutation `array_sort` gave: keys and ids keep
+  * their bytes. */
 object SeriesKey {
 
   private val EntriesType = DataType.fromDDL("array<struct<key:string,value:string>>")
@@ -28,7 +36,7 @@ object SeriesKey {
     * `entriesOf(map_concat(map("__name__", metric), tags))`, and fails the
     * same rows that map_concat's duplicate-key policy does. */
   def entries(metric: Column, tags: Column): Column =
-    array_sort(concat(
+    sort_array(concat(
       when(metric.isNotNull,
         when(map_contains_key(tags, "__name__"), raise_error(lit(NameInTagsError)))
           .otherwise(array(struct(lit("__name__").as("key"), metric.as("value")))))
@@ -36,7 +44,7 @@ object SeriesKey {
       map_entries(tags)))
 
   /** Sorted entries of a label map. */
-  def entriesOf(labels: Column): Column = array_sort(map_entries(labels))
+  def entriesOf(labels: Column): Column = sort_array(map_entries(labels))
 
   /** The JSON series key of a label map (to_json is codegen'd and measured
     * faster than hand-rolled concat_ws/split codecs). */

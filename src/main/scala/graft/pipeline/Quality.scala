@@ -244,6 +244,12 @@ object Quality {
       (!hasLorem && !hasBrace && !hasPolicy && nSentences >= minSentences).as("c4_pass"))
   }
 
+  /** Columns [[gopherSignals]] adds or uses internally; a passThrough
+    * column of the same name would appear twice. */
+  private val GopherColumns: Set[String] = Set("word_count", "mean_word_len", "dup_word_frac",
+    "dup_line_frac", "symbol_ratio", "alpha_word_frac", "top2_frac", "top3_frac",
+    "gopher_pass", "__text", "__nsc", "__ltoks", "__wmap")
+
   /** The assembled Gopher filter: per-doc signals plus a pass/fail verdict
     * under the published thresholds (adapted: word-count bounds scaled to
     * the corpus under test via minWords/maxWords).
@@ -268,7 +274,11 @@ object Quality {
     // with at least one word gram.
     require(passThrough.forall(docs.columns.contains),
       s"passThrough columns must exist on docs: $passThrough vs ${docs.columns.toSeq}")
-    val pt = passThrough.filterNot(_ == idCol).map(col)
+    val carried = passThrough.filterNot(_ == idCol)
+    val clash = carried.filter(GopherColumns.contains) ++ carried.diff(carried.distinct)
+    require(clash.isEmpty,
+      s"passThrough columns would duplicate gopherSignals columns: ${clash.distinct.mkString(", ")}")
+    val pt = carried.map(col)
     val ns = Seq(2, 3)
     // base is consumed twice (the gram-count subtree and the final
     // signals join). A localCheckpoint here measured NET NEGATIVE

@@ -1441,7 +1441,7 @@ object PromPlanner {
     val collected = withKey(stripped)
       .select(col("__key"), col("step_ts"), col("__le"), col("value"))
       .groupBy(col("__key"), col("step_ts"))
-      .agg(array_sort(collect_list(struct(col("__le").as("le"), col("value").as("v"))))
+      .agg(sort_array(collect_list(struct(col("__le").as("le"), col("value").as("v"))))
         .as("__b"))
     val mono = aggregate(col("__b"), array().cast("array<double>"),
       (acc, x) => concat(acc,

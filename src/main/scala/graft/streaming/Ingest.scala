@@ -758,7 +758,7 @@ object Ingest {
         min(col("vmin")).as("vmin"), max(col("vmax")).as("vmax"))
       .groupBy(seriesCols.map(col) :+ col("w"): _*)
       .agg(first(col("le")).as("le"),
-        array_sort(collect_list(struct(col("pos"), col("bv"))))
+        sort_array(collect_list(struct(col("pos"), col("bv"))))
           .getField("bv").as("values"),
         min(col("vmin")).as("min"), max(col("vmax")).as("max"))
       .select(seriesCols.map(col) ++ Seq(unix_millis(col("w.end")).as("ts"),

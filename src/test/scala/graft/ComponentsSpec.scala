@@ -134,6 +134,21 @@ class ComponentsSpec extends AnyFunSuite with Matchers {
     s(1L).getAs[Boolean]("gopher_pass") shouldEqual true
   }
 
+  test("gopher signals reject a passThrough column that would duplicate an output column") {
+    // dup_word_frac feeds no later expression, so it would come out twice
+    val docs = Seq((1L, "some words here and there", "web", 0.5))
+      .toDF("doc_id", "text", "source", "dup_word_frac")
+    for (pass <- Seq(Seq("dup_word_frac"), Seq("source", "source"))) withClue(pass) {
+      val e = intercept[IllegalArgumentException](Quality.gopherSignals(docs, passThrough = pass))
+      e.getMessage should include(s"would duplicate gopherSignals columns: ${pass.head}")
+    }
+    // a distinct caller column still rides along, once
+    val ok = Quality.gopherSignals(docs, minWords = 1, passThrough = Seq("doc_id", "source"))
+    ok.columns.count(_ == "source") shouldEqual 1
+    ok.columns.count(_ == "dup_word_frac") shouldEqual 1
+    ok.head().getAs[String]("source") shouldEqual "web"
+  }
+
   test("duplicate line fraction sees repeated lines; single-line docs score 0") {
     val docs = Seq(
       (1L, "one line only"),

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
-import graft.pipeline.{Dedup, Similarity, TextAnalysis}
+import graft.pipeline.{Bpe, Dedup, Similarity, TextAnalysis}
 
 class PipelineSpec extends AnyFunSuite with Matchers {
 
@@ -466,39 +466,39 @@ class PipelineSpec extends AnyFunSuite with Matchers {
     all should contain("!") // punctuation is its own token
   }
 
+  // brute-force reference: same algorithm, plain Scala on the driver
+  private def bruteTrain(words: Map[String, Long], nMerges: Int): Seq[(Int, String, String, Long)] = {
+    var syms = words.map { case (w, n) => (w.map(_.toString).toVector :+ Bpe.EndOfWord, n) }
+    val out = scala.collection.mutable.ArrayBuffer[(Int, String, String, Long)]()
+    var rank = 0
+    while (rank < nMerges) {
+      val counts = scala.collection.mutable.Map[(String, String), Long]()
+      for ((s, n) <- syms; i <- 0 until s.length - 1)
+        counts((s(i), s(i + 1))) = counts.getOrElse((s(i), s(i + 1)), 0L) + n
+      if (counts.isEmpty || counts.values.max < 2) rank = nMerges
+      else {
+        val ((a, b), c) = counts.toSeq.minBy { case ((x, y), n) => (-n, x, y) }
+        out += ((rank, a, b, c))
+        syms = syms.map { case (s, n) =>
+          val merged = s.foldLeft(Vector.empty[String]) { (acc, x) =>
+            if (acc.nonEmpty && acc.last == a && x == b) acc.init :+ (a + b)
+            else acc :+ x
+          }
+          (merged, n)
+        }
+        rank += 1
+      }
+    }
+    out.toSeq
+  }
+
   test("bpe train matches a brute-force reference; encode applies merges in rank order") {
-    import graft.pipeline.Bpe
     val corpus = Seq(
       (1L, "low low low low low lower lower newest newest"),
       (2L, "newest newest newest newest widest widest widest"),
       (3L, "low lower newest widest")
     ).toDF("doc_id", "text")
 
-    // brute-force reference: same algorithm, plain Scala on the driver
-    def bruteTrain(words: Map[String, Long], nMerges: Int): Seq[(Int, String, String, Long)] = {
-      var syms = words.map { case (w, n) => (w.map(_.toString).toVector :+ Bpe.EndOfWord, n) }
-      val out = scala.collection.mutable.ArrayBuffer[(Int, String, String, Long)]()
-      var rank = 0
-      while (rank < nMerges) {
-        val counts = scala.collection.mutable.Map[(String, String), Long]()
-        for ((s, n) <- syms; i <- 0 until s.length - 1)
-          counts((s(i), s(i + 1))) = counts.getOrElse((s(i), s(i + 1)), 0L) + n
-        if (counts.isEmpty || counts.values.max < 2) rank = nMerges
-        else {
-          val ((a, b), c) = counts.toSeq.minBy { case ((x, y), n) => (-n, x, y) }
-          out += ((rank, a, b, c))
-          syms = syms.map { case (s, n) =>
-            val merged = s.foldLeft(Vector.empty[String]) { (acc, x) =>
-              if (acc.nonEmpty && acc.last == a && x == b) acc.init :+ (a + b)
-              else acc :+ x
-            }
-            (merged, n)
-          }
-          rank += 1
-        }
-      }
-      out.toSeq
-    }
     val wordMap = corpus.flatMap(_.getString(1).split("\\s+")).groupBy("value").count()
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val expected = bruteTrain(wordMap, 8)
@@ -515,6 +515,28 @@ class PipelineSpec extends AnyFunSuite with Matchers {
     // determinism under repartitioning (the corpus pass is a groupBy;
     // round tie-breaks are total-ordered)
     Bpe.train(corpus.repartition(5), 8) shouldEqual learned
+  }
+
+  test("bpe train truncates its lineage: 240 merge rounds leave the final words " +
+       "RDD at most TruncateEvery steps past a local checkpoint, merges still exact") {
+    // 40 distinct 12-letter words over 16 letters, each twice: every
+    // adjacent pair counts >= 2, so merging runs until words are whole
+    var st = 1L
+    val words = (0 until 40).map { _ =>
+      (0 until 12).map { _ =>
+        st = st * 6364136223846793005L + 1442695040888963407L
+        ('a' + ((st >>> 33) % 16).toInt).toChar
+      }.mkString
+    }
+    val corpus = words.zipWithIndex.map { case (w, i) => (i.toLong, s"$w $w") }.toDF("doc_id", "text")
+    val (merges, last) = Bpe.trainRounds(corpus, 240, "text")
+    merges shouldEqual bruteTrain(words.map(_ -> 2L).toMap, 240)
+    merges.length should be >= 200
+    def depth(r: org.apache.spark.rdd.RDD[_]): Int =
+      if (r.dependencies.isEmpty) 0 else 1 + r.dependencies.map(d => depth(d.rdd)).max
+    // one persisted map per round since the newest cut, the cut itself,
+    // and the checkpoint RDD under it
+    depth(last) should be <= Bpe.TruncateEvery + 1
   }
 
   test("topk cardinality: ranks groups by series count under a label-path prefix") {

@@ -178,6 +178,39 @@ class PlanQualitySpec extends AnyFunSuite with Matchers {
     } finally spark.conf.set("spark.sql.codegen.fallback", prevFallback)
   }
 
+  test("the series identity is generated code: no ArraySort in the executed plans " +
+       "of the kernel, its aggregation or SeriesKey.id, and they compile") {
+    import org.apache.spark.sql.catalyst.expressions.ArraySort
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    // an RDD-backed frame, like a scan: a local Seq would be folded by
+    // ConvertToLocalRelation and its expressions never reach the plan
+    val samples = spark.sparkContext.parallelize(for {
+      i <- 0 until 6; k <- 0 until 40
+    } yield ("m", Map("job" -> s"j${i % 2}", "instance" -> s"h$i"), k * 15000L, (k * (i + 1)).toDouble))
+      .toDF("metric", "tags", "ts", "value")
+    val ctx = PromPlanner.Ctx(spark, samples, 300000L, 600000L, 60000L)
+    val helper = new AdaptiveSparkPlanHelper {}
+    val prevFallback = spark.conf.get("spark.sql.codegen.fallback")
+    try {
+      // a generated class that fails to compile must fail the run, not
+      // fall back to interpreted evaluation silently
+      spark.conf.set("spark.sql.codegen.fallback", "false")
+      for ((name, df) <- Seq(
+          "rate(m[5m])" -> PromPlanner.queryRange(ctx, "rate(m[5m])"),
+          "sum by (job) (rate(m[5m]))" -> PromPlanner.queryRange(ctx, "sum by (job) (rate(m[5m]))"),
+          "SeriesKey.id" -> samples.select(
+            graft.model.SeriesKey.id(col("metric"), col("tags")).as("series_id"))))
+        withClue(name) {
+          df.collect() should not be empty // AQE finalizes the plan read below
+          val exprs = helper.flatMap(df.queryExecution.executedPlan)(_.expressions)
+          exprs.exists(_.exists(_.isInstanceOf[ArraySort])) shouldEqual false
+          plan(df) should include("sort_array")
+        }
+    } finally spark.conf.set("spark.sql.codegen.fallback", prevFallback)
+  }
+
   test("vector_agree is native: SQL-callable, codegen-compiled, and the standing " +
        "near-dup probe plans no interpreted lambda in its estimator stage") {
     import org.apache.spark.sql.functions.{array, col, lit}

@@ -1321,6 +1321,72 @@ class PromApiSpec extends AnyFunSuite with Matchers {
     } finally api.stop()
   }
 
+  test("/metrics counts generated-code compilations, and a repeated dashboard " +
+       "refresh compiles almost nothing: the plan cache holds its working set") {
+    import org.apache.spark.sql.functions.{col, lit, pmod, when}
+    // graftbench's promql_small shape, scaled down: gauges, counters that
+    // reset, and 8-bucket histograms, one sample every 10 s for an hour
+    val t0 = 1704067200000L
+    val les = Seq("0.005", "0.01", "0.025", "0.05", "0.1", "0.25", "1", "+Inf")
+    def common(i: Int) = Map("instance" -> f"inst-$i%05d", "job" -> s"job-${i % 4}",
+      "_ws_" -> "demo", "_ns_" -> "App-2")
+    val series = (0 until 8).flatMap(i => Seq(
+        ("heap_usage0", common(i), 1000L * (i + 1)), ("http_requests_total", common(i), 0L))) ++
+      (for (h <- 0 until 2; (le, b) <- les.zipWithIndex)
+        yield ("http_request_duration_seconds_bucket", common(h) + ("le" -> le), b + 1L))
+    import spark.implicits._
+    val k = col("id")
+    val samples = series.toDF("metric", "tags", "base")
+      .crossJoin(spark.range(360))
+      .select(col("metric"), col("tags"), (lit(t0) + k * 10000L).as("ts"),
+        when(col("metric") === "heap_usage0", col("base") + pmod(k * 7, lit(101L)))
+          .when(col("metric") === "http_requests_total", pmod(k, lit(240L)) * 3)
+          .otherwise(col("base") * pmod(k, lit(240L))).cast("double").as("value"))
+      .cache()
+    samples.count()
+    val s = """_ws_="demo",_ns_="App-2""""
+    // the 8 panels of graftbench/NOTES.md
+    val panels = Seq(
+      s"heap_usage0{$s}",
+      s"sum(rate(heap_usage0{$s}[5m]))",
+      s"quantile(0.75, heap_usage0{$s})",
+      s"sum_over_time(heap_usage0{$s}[5m])",
+      s"sum by (job) (rate(http_requests_total{$s}[5m])) / on (job) sum by (job) (heap_usage0{$s})",
+      s"histogram_quantile(0.9, sum by (le) (rate(http_request_duration_seconds_bucket{$s}[5m])))",
+      s"max_over_time(rate(http_requests_total{$s}[5m])[30m:1m])",
+      s"topk(5, avg_over_time(heap_usage0{$s}[10m]))")
+    val end = (t0 + 3600000L) / 1000
+    val api = new PromApi(spark, samples).start()
+    try {
+      val port = api.boundPort
+      def compilations(): Long = {
+        val m = get(port, "/metrics")
+        m should include("# TYPE graft_codegen_compilations_total counter")
+        "graft_codegen_compilations_total ([0-9]+)".r.findFirstMatchIn(m).get.group(1).toLong
+      }
+      def refresh(): Unit = panels.foreach { q =>
+        withClue(q) {
+          get(port, "/api/v1/query_range?query=" + java.net.URLEncoder.encode(q, "UTF-8") +
+            s"&start=${end - 3300}&end=$end&step=150") should include(""""status":"success"""")
+        }
+      }
+      val c0 = compilations()
+      refresh()
+      val c1 = compilations()
+      refresh()
+      val c2 = compilations()
+      val (first, second) = (c1 - c0, c2 - c1)
+      info(s"generated classes compiled: first refresh $first, second $second")
+      withClue(s"compilations: first refresh $first, second $second") {
+        first should be > 0L
+        (second * 10) should be < first
+      }
+    } finally {
+      api.stop()
+      samples.unpersist()
+    }
+  }
+
   test("self-scrape: the gateway's exposition parser ingests a graft " +
        "server's own /metrics (a graft fleet is Prometheus-scrapeable)") {
     val samples = TsTables.eventsAsSamples(spark, "/root/testdata/sf0.001")
