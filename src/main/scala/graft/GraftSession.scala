@@ -16,15 +16,24 @@ import org.apache.spark.sql.SparkSession
   *    as epoch-nanos Long is exact and we normalize to epoch millis
   *    (the reference's native unit, see SURVEY.md §1.2 `ts`).
   *  - `spark.sql.codegen.cache.maxEntries` — Spark caches generated
-  *    classes JVM-wide, 100 by default. One refresh of graftbench's
-  *    8-panel `promql_small` dashboard needs 150–260 of them, so at 100
-  *    every refresh recompiled 71–79 classes with janino, and HotSpot then
-  *    JIT-compiled them again: 4.2–5.3 of the 10.6–12 CPU-seconds a
-  *    refresh cost on 4 cores. (PromApiSpec's scaled-down copy of that
-  *    dashboard compiles 124, then 67 classes on two refreshes at 100
-  *    entries; 85, then 0 at 1000.) 1000 leaves room above that working
-  *    set for a served mix of several dashboards. It is a STATIC conf:
-  *    only the first session in the JVM applies it, and [[tune]] cannot.
+  *    classes JVM-wide, keyed by their generated source, 100 by default.
+  *    Measured with graftbench, seed 1, 4 cores, counting Spark's janino
+  *    compiles: a first `promql_small` refresh (8 panels) compiles 143
+  *    classes, a first `remote_write` drain 121–136. At 100 entries every
+  *    refresh recompiled 126–130 of them and every other drain about 60,
+  *    and HotSpot then JIT-compiled them again (4.2–5.3 of the 10.6–12
+  *    CPU-seconds a refresh cost). At 250, 500 and 1000 entries a repeated
+  *    refresh compiles 0–5 classes and a drain 0.
+  *    A hit needs byte-identical generated code, and the plans carry the
+  *    query range as literals: only a repeated query with the same range
+  *    hits in full. A refresh whose window moved one step compiles the
+  *    13–18 classes that hold the range and reuses the rest.
+  *    1000 is about 3.7 times the ~270 classes the two served paths
+  *    compile together (143 + 121–136, each measured alone); 250 held one
+  *    dashboard but is below that sum, and the margin above it (other
+  *    plan shapes, the dead classes moving windows leave for the LRU to
+  *    age out) is not measured. It is a STATIC conf: only the first
+  *    session in the JVM applies it, and [[tune]] cannot.
   */
 object GraftSession {
   /** Engine version — single source for the API's buildinfo and build.sbt. */

@@ -17,8 +17,8 @@ import org.apache.spark.sql.functions._
   * (pair, weight) rows) and a best-pair lookup (the only driver action —
   * ONE row per round, like Components' fixed-point signature). The merge
   * rewrite is a map-side higher-order `aggregate` fold, no shuffle.
-  * Lineage is truncated every [[TruncateEvery]] rounds (localCheckpoint)
-  * so round N does not replay rounds 1..N-1.
+  * Each round's table is a local checkpoint, so round N's lineage starts
+  * at round N-1's blocks and never replays rounds 1..N-1.
   */
 object Bpe {
 
@@ -76,9 +76,6 @@ object Bpe {
     out.toArray
   }
 
-  /** Merge rounds between two lineage cuts of the `words` RDD. */
-  val TruncateEvery = 8
-
   /** Learn `nMerges` merges. Returns them in rank order as
     * (rank, left, right, pairCount); ties break on (left, right) asc so
     * the learned tokenizer is deterministic across engines and runs. */
@@ -86,7 +83,7 @@ object Bpe {
     trainRounds(docs, nMerges, textCol)._1
 
   /** [[train]], plus the final round's `words` RDD (already released; its
-    * lineage is what the truncation bounds). */
+    * lineage is what the per-round checkpoint bounds). */
   private[graft] def trainRounds(docs: DataFrame, nMerges: Int, textCol: String)
       : (Seq[(Int, String, String, Long)], org.apache.spark.rdd.RDD[(Array[String], Long)]) = {
     require(nMerges >= 1, s"nMerges must be positive: $nMerges")
@@ -117,10 +114,6 @@ object Bpe {
     val merges = scala.collection.mutable.ArrayBuffer[(Int, String, String, Long)]()
     var words = seed
     var prev: Option[org.apache.spark.rdd.RDD[(Array[String], Long)]] = None
-    // the newest materialized cut: rounds after it recompute from its
-    // blocks, which (unlike a persisted round's) cannot be rebuilt, so it
-    // stays until the next cut is materialized
-    var cut = seed
     var rank = 0
     var done = false
     while (rank < nMerges && !done) {
@@ -130,13 +123,9 @@ object Bpe {
         }
         .reduceByKey(_ + _)
         .takeOrdered(1)(bestOrd)
-      // the action above materialized `words` (and cut its lineage if it
-      // was marked); the round before it is safe to drop now
-      if (words.isCheckpointed) {
-        cut.unpersist(blocking = false)
-        cut = words
-      }
-      prev.filterNot(_ eq cut).foreach(_.unpersist(blocking = false))
+      // the action above materialized `words` and cut its lineage; the
+      // round before it is safe to drop now
+      prev.foreach(_.unpersist(blocking = false))
       prev = None
       if (best.isEmpty) done = true
       else {
@@ -145,8 +134,7 @@ object Bpe {
         else {
           merges += ((rank, a, b, cnt))
           val next = words.map { case (syms, n) => (applyMerge(syms, a, b), n) }
-          if ((rank + 1) % TruncateEvery == 0) next.localCheckpoint()
-          else next.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+            .localCheckpoint()
           prev = Some(words)
           words = next
           rank += 1
@@ -154,7 +142,6 @@ object Bpe {
       }
     }
     prev.foreach(_.unpersist(blocking = false))
-    cut.unpersist(blocking = false)
     words.unpersist(blocking = false)
     (merges.toSeq, words)
   }

@@ -244,12 +244,6 @@ object Quality {
       (!hasLorem && !hasBrace && !hasPolicy && nSentences >= minSentences).as("c4_pass"))
   }
 
-  /** Columns [[gopherSignals]] adds or uses internally; a passThrough
-    * column of the same name would appear twice. */
-  private val GopherColumns: Set[String] = Set("word_count", "mean_word_len", "dup_word_frac",
-    "dup_line_frac", "symbol_ratio", "alpha_word_frac", "top2_frac", "top3_frac",
-    "gopher_pass", "__text", "__nsc", "__ltoks", "__wmap")
-
   /** The assembled Gopher filter: per-doc signals plus a pass/fail verdict
     * under the published thresholds (adapted: word-count bounds scaled to
     * the corpus under test via minWords/maxWords).
@@ -274,11 +268,16 @@ object Quality {
     // with at least one word gram.
     require(passThrough.forall(docs.columns.contains),
       s"passThrough columns must exist on docs: $passThrough vs ${docs.columns.toSeq}")
-    val carried = passThrough.filterNot(_ == idCol)
-    val clash = carried.filter(GopherColumns.contains) ++ carried.diff(carried.distinct)
-    require(clash.isEmpty,
-      s"passThrough columns would duplicate gopherSignals columns: ${clash.distinct.mkString(", ")}")
-    val pt = carried.map(col)
+    // a passThrough name that one of the frames below also uses (or that
+    // is listed twice) would come out twice or resolve ambiguously: each
+    // frame that adds columns is checked before anything reads from it
+    def distinctNames(df: DataFrame): DataFrame = {
+      val dup = df.columns.diff(df.columns.distinct).distinct
+      require(dup.isEmpty,
+        s"passThrough columns would duplicate gopherSignals columns: ${dup.mkString(", ")}")
+      df
+    }
+    val pt = passThrough.filterNot(_ == idCol).map(col)
     val ns = Seq(2, 3)
     // base is consumed twice (the gram-count subtree and the final
     // signals join). A localCheckpoint here measured NET NEGATIVE
@@ -289,10 +288,10 @@ object Quality {
     // Compositions that DO have an expensive upstream (q118's Gopher
     // gate join) get their single-derivation barrier downstream in
     // removeDuplicateSpans instead, where one is already needed.
-    val base = docs.select(Seq(
+    val base = distinctNames(docs.select(Seq(
       col(idCol), col(textCol).as("__text"),
       length(regexp_replace(trim(col(textCol)), "\\s+", "")).as("__nsc"),
-      TextAnalysis.tokens(lower(col(textCol))).as("__ltoks")) ++ pt: _*)
+      TextAnalysis.tokens(lower(col(textCol))).as("__ltoks")) ++ pt: _*))
     val counted = base
       .select(col(idCol), col("__nsc"),
         explode(flatten(array(ns.map(n =>
@@ -318,7 +317,7 @@ object Quality {
       round(entry.getField("cnt") * length(regexp_replace(topg, " ", "")) /
         col("__nsc").cast("double"), 6)
     }
-    base.join(winners, Seq(idCol))
+    val signals = distinctNames(distinctNames(base.join(winners, Seq(idCol)))
       .select(Seq(
         col(idCol)) ++ pt ++ Seq(
         wordCount(t).as("word_count"),
@@ -328,15 +327,15 @@ object Quality {
         round(symbolToWordRatio(t), 6).as("symbol_ratio"),
         round(alphaWordFraction(t), 6).as("alpha_word_frac"),
         fracFor(2).as("top2_frac"),
-        fracFor(3).as("top3_frac")): _*)
-      .withColumn("gopher_pass",
+        fracFor(3).as("top3_frac")): _*))
+    distinctNames(signals.select(col("*"), (
         col("word_count").between(minWords, maxWords) &&
         col("mean_word_len").between(1.0, 10.0) &&
         col("symbol_ratio") < 0.1 &&
         col("dup_line_frac") < 0.3 &&
         col("alpha_word_frac") > 0.8 &&
         col("top2_frac") < 0.20 &&
-        col("top3_frac") < 0.18)
+        col("top3_frac") < 0.18).as("gopher_pass")))
   }
 
   /** Mean NLL under a REFERENCE unigram LM — the actual CCNet filter shape

@@ -135,10 +135,12 @@ class ComponentsSpec extends AnyFunSuite with Matchers {
   }
 
   test("gopher signals reject a passThrough column that would duplicate an output column") {
-    // dup_word_frac feeds no later expression, so it would come out twice
-    val docs = Seq((1L, "some words here and there", "web", 0.5))
-      .toDF("doc_id", "text", "source", "dup_word_frac")
-    for (pass <- Seq(Seq("dup_word_frac"), Seq("source", "source"))) withClue(pass) {
+    // dup_word_frac feeds no later expression, so it would come out twice;
+    // the others clash with an internal column or the verdict
+    val docs = Seq((1L, "some words here and there", "web", 0.5, 1L, 2L, true))
+      .toDF("doc_id", "text", "source", "dup_word_frac", "__ltoks", "__wmap", "gopher_pass")
+    for (pass <- Seq(Seq("dup_word_frac"), Seq("source", "source"), Seq("__ltoks"),
+                     Seq("__wmap"), Seq("gopher_pass"))) withClue(pass) {
       val e = intercept[IllegalArgumentException](Quality.gopherSignals(docs, passThrough = pass))
       e.getMessage should include(s"would duplicate gopherSignals columns: ${pass.head}")
     }

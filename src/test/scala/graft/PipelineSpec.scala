@@ -518,7 +518,7 @@ class PipelineSpec extends AnyFunSuite with Matchers {
   }
 
   test("bpe train truncates its lineage: 240 merge rounds leave the final words " +
-       "RDD at most TruncateEvery steps past a local checkpoint, merges still exact") {
+       "RDD two steps deep, merges still exact") {
     // 40 distinct 12-letter words over 16 letters, each twice: every
     // adjacent pair counts >= 2, so merging runs until words are whole
     var st = 1L
@@ -534,9 +534,9 @@ class PipelineSpec extends AnyFunSuite with Matchers {
     merges.length should be >= 200
     def depth(r: org.apache.spark.rdd.RDD[_]): Int =
       if (r.dependencies.isEmpty) 0 else 1 + r.dependencies.map(d => depth(d.rdd)).max
-    // one persisted map per round since the newest cut, the cut itself,
-    // and the checkpoint RDD under it
-    depth(last) should be <= Bpe.TruncateEvery + 1
+    // the last round's map over the round before it, whose lineage its
+    // local checkpoint cut to the checkpoint RDD (no dependencies)
+    depth(last) should be <= 2
   }
 
   test("topk cardinality: ranks groups by series count under a label-path prefix") {
