@@ -834,6 +834,8 @@ object ProtoWire {
     w.toBytes
   }
 
+  /** One series list per query result; a malformed series throws
+    * IllegalArgumentException naming it. */
   def decodeReadResponse(b: Array[Byte]): Seq[Seq[PSeries]] = {
     val r = new Reader(b, 0, b.length)
     val results = Seq.newBuilder[Seq[PSeries]]
@@ -842,7 +844,14 @@ object ProtoWire {
         val qr = r.readMessage()
         val series = Seq.newBuilder[PSeries]
         while (qr.hasNext) qr.readKey() match {
-          case (1, 2) => series += readSeries(qr.readMessage())
+          case (1, 2) =>
+            val m = qr.readMessage()
+            val start = m.pos
+            try series += readSeries(m)
+            catch { case e: IllegalArgumentException =>
+              throw new IllegalArgumentException(s"malformed series " +
+                s"${seriesMetricOnly(new Reader(m.buf, start, m.end))}: ${e.getMessage}", e)
+            }
           case (_, wt) => qr.skip(wt)
         }
         results += series.result()

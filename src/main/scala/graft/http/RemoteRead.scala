@@ -78,7 +78,13 @@ object RemoteRead {
     * range at once) under a hard `maxSamples` cap that ERRORS — never
     * truncates — the moment the decoded total crosses it. A federated
     * raw-selector fetch over an unbounded range fails fast instead of
-    * exhausting the driver. */
+    * exhausting the driver.
+    *
+    * The fetched series take the stored shape through ingest's own rules
+    * ([[graft.streaming.SpoolDrain.storedFrame]]); exp rows arrive as the
+    * server's per-interval deltas, so the round trip is lossless. A series
+    * ingest would reject (an NHCB span overrunning its bounds) fails the
+    * read with an IllegalArgumentException naming it. */
   def remoteRead(spark: SparkSession, baseUrl: String, selector: String,
                  startMs: Long, endMs: Long,
                  chunkMs: Long = 6L * 3600 * 1000,
@@ -98,17 +104,7 @@ object RemoteRead {
       sel.metric.map(m => ProtoWire.PMatcher(0, "__name__", m)).toSeq ++
         sel.matchers.map(m => ProtoWire.PMatcher(typOf(m.op), m.label, m.value))
     val client = HttpClient.newHttpClient()
-    val rows = Seq.newBuilder[(String, Map[String, String], Long, Double, Boolean)]
-    // native histograms ride back as prompb histograms and decode to the
-    // engine's canonical storage shapes: NHCB (custom_values) -> classic
-    // cumulative bucket rows (le/values/hist_sum, prom_histogram); exp
-    // schemas -> exp columns. The server GAUGE-hints exp rows because its
-    // storage is per-interval deltas — otel_exp_histogram is exactly the
-    // delta-temporality schema, so the round-trip is lossless.
-    val nhcbRows = Seq.newBuilder[
-      (String, Map[String, String], Long, Seq[Double], Seq[Double], Double)]
-    val expRows = Seq.newBuilder[(String, Map[String, String], Long, Int, Int,
-      Seq[Double], Double, Double, Double)]
+    val series = Seq.newBuilder[ProtoWire.PSeries]
     var total = 0L
     // inclusive-bound windows [s, s + chunkMs - 1]; the server's range
     // filter is inclusive both ends, so adjacent chunks never overlap
@@ -131,75 +127,16 @@ object RemoteRead {
       val results = ProtoWire.decodeReadResponse(
         org.xerial.snappy.Snappy.uncompress(httpResp.body()))
       results.headOption.getOrElse(Nil).foreach { ser =>
-        val metric = ser.labels.collectFirst { case ("__name__", v) => v }.getOrElse("")
-        val tags = ser.labels.filter(_._1 != "__name__").toMap
         total += ser.samples.length + ser.histograms.length
         if (total > maxSamples)
           throw new IllegalStateException(
             s"remote read exceeds the $maxSamples-sample cap at window " +
               s"[$s, $e] — narrow the selector or range, or raise maxSamples")
-        // staleness markers survive the round trip: the wire's StaleNaN
-        // bits decode to PSample.stale and land as __stale tombstone rows
-        ser.samples.foreach(p => rows += ((metric, tags, p.ts, p.value, p.stale)))
-        ser.histograms.foreach { h =>
-          if (h.customValues.nonEmpty) {
-            // NHCB: spans index the bounds list; absolute index
-            // bounds.size is the (+Inf] overflow, folded into count
-            val nB = h.customValues.size
-            val dense = Array.fill(nB)(0.0)
-            h.posCounts.zipWithIndex.foreach { case (c, j) =>
-              val k = h.posOffset + j
-              if (k < nB) dense(k) += c
-            }
-            val cum = dense.scanLeft(0.0)(_ + _).tail.toSeq
-            nhcbRows += ((metric, tags, h.ts,
-              h.customValues :+ Double.PositiveInfinity,
-              cum :+ h.count, h.sum))
-          } else {
-            // exp schema; the wire posOffset is the prompb span start,
-            // stored as exp_offset = posOffset - 1 like the write decode
-            expRows += ((metric, tags, h.ts, h.schema, h.posOffset - 1,
-              h.posCounts, h.zeroCount, h.zeroThreshold, h.sum))
-          }
-        }
+        series += ser
       }
       s = e + 1
     }
-    import spark.implicits._
-    val allRows = rows.result()
-    // the tombstone column exists only when a marker actually arrived —
-    // marker-free reads keep their exact single-pass plan shapes
-    val scalar0 = allRows.toDF("metric", "tags", "ts", "value", "__stale")
-    val scalar = if (allRows.exists(_._5)) scalar0 else scalar0.drop("__stale")
-    val (nhcb, exp) = (nhcbRows.result(), expRows.result())
-    if (nhcb.isEmpty && exp.isEmpty) scalar
-    else {
-      val padded = scalar
-        .withColumn("le", lit(null).cast("array<double>"))
-        .withColumn("values", lit(null).cast("array<double>"))
-        .withColumn("hist_sum", lit(null).cast("double"))
-        .withColumn("exp_scale", lit(null).cast("int"))
-        .withColumn("exp_offset", lit(null).cast("int"))
-        .withColumn("exp_counts", lit(null).cast("array<double>"))
-        .withColumn("exp_zero_count", lit(null).cast("double"))
-        .withColumn("exp_zero_threshold", lit(null).cast("double"))
-        .withColumn("exp_sum", lit(null).cast("double"))
-        .withColumn("series_type", lit(null).cast("string"))
-      val nhcbDf = nhcb
-        .toDF("metric", "tags", "ts", "le", "values", "hist_sum")
-        .withColumn("value", lit(null).cast("double"))
-        .withColumn("series_type", lit("prom_histogram"))
-      val expDf = exp
-        .toDF("metric", "tags", "ts", "exp_scale", "exp_offset", "exp_counts",
-          "exp_zero_count", "exp_zero_threshold", "exp_sum")
-        .withColumn("value", lit(null).cast("double"))
-        .withColumn("series_type", lit("otel_exp_histogram"))
-      val parts = Seq.newBuilder[org.apache.spark.sql.DataFrame]
-      if (nhcb.nonEmpty) parts += nhcbDf
-      if (exp.nonEmpty) parts += expDf
-      parts.result()
-        .foldLeft(padded)((acc, d) => acc.unionByName(d, allowMissingColumns = true))
-    }
+    graft.streaming.SpoolDrain.storedFrame(spark, series.result())
   }
 
   /** Prometheus remote-WRITE client: POST canonical (metric, tags, ts,

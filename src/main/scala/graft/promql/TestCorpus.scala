@@ -2,6 +2,7 @@ package graft.promql
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.http.ProtoWire
 import graft.model.SeriesKey
 
 /** Runner for the upstream Prometheus `promql/testdata` `.test` format
@@ -40,30 +41,39 @@ import graft.model.SeriesKey
   * Selectors and expected-line label sets parse through the engine's own
   * [[Parser]] (they are valid PromQL selectors), so the corpus exercises
   * the parser too.
+  *
+  * Loaded series are stored exactly as a remote-write POST of them would
+  * be: [[wireSeries]], then [[graft.streaming.SpoolDrain.storedFrame]].
   */
 object TestCorpus {
 
   case class ExpectedSample(labels: Map[String, String], value: Double)
 
   /** Upstream native-histogram load literal `{{schema:0 sum:5 count:4
-    * buckets:[1 2 1] offset:1 z_bucket:2 z_bucket_w:0.5}}` — maps to one
-    * exp-histogram storage row (the engine's otel_exp_histogram schema;
-    * the literal's `offset` is the prompb positive-span start, stored as
-    * exp_offset = offset - 1 exactly like the remote-write decode).
-    * Supported fields: schema, sum, count, buckets, offset, z_bucket,
-    * z_bucket_w, custom_values (schema:-53 NHCB — canonicalized to
-    * classic cumulative bucket storage like the remote-write ingest),
+    * buckets:[1 2 1] offset:1 z_bucket:2 z_bucket_w:0.5}}`: one native
+    * histogram sample, loaded as the prompb histogram it is on the wire
+    * ([[toWire]]; `offset` is the positive-span start, `z_bucket` the zero
+    * count, `z_bucket_w` the zero threshold). Exp schemas are stored as
+    * given, as otel_exp_histogram rows. Supported fields: schema, sum,
+    * count, buckets, offset, z_bucket, z_bucket_w, custom_values
+    * (schema:-53 NHCB, stored as classic prom_histogram buckets),
     * counter_reset_hint (parsed, ignored — instant extractors don't
     * consult it). Repeat suffix `x<n>` and `_` gaps compose as for
-    * scalar values; a series is either all-histogram or all-scalar. */
+    * scalar values; a series is either all-histogram or all-scalar, and a
+    * histogram series is either all-NHCB or all-exp. */
   case class HistLit(schema: Int, offset: Int, buckets: Seq[Double],
                      zBucket: Double, zBucketW: Double,
                      sum: Double, count: Double,
                      customValues: Seq[Double] = Nil) {
-    /** NHCB literal (`schema:-53 custom_values:[...]`): canonicalized to
-      * classic cumulative bucket storage exactly like the remote-write
-      * ingest (le = bounds + Inf, values cumulative, +Inf = count). */
+    /** NHCB literal (`schema:-53 custom_values:[...]`). */
     def isCustom: Boolean = customValues.nonEmpty
+
+    /** This literal as the decoded wire sample at `ts`. */
+    def toWire(ts: Long): ProtoWire.PHistogram =
+      ProtoWire.PHistogram(ts, schema, zeroThreshold = zBucketW,
+        zeroCount = zBucket, count = count, sum = sum, resetHint = 0,
+        posOffset = offset, posCounts = buckets, negOffset = 0, negCounts = Nil,
+        customValues = customValues)
   }
 
   sealed trait Directive
@@ -86,7 +96,7 @@ object TestCorpus {
                        line: Int) extends Directive
   case object Clear extends Directive
 
-  case class Outcome(evalsRun: Int, failures: Seq[String], rangeSkipped: Int = 0)
+  case class Outcome(evalsRun: Int, failures: Seq[String])
 
   /** Parse one .test file's text into directives. */
   def parse(text: String): Seq[Directive] = {
@@ -235,6 +245,11 @@ object TestCorpus {
         }
       }
     }
+    val lits = slots.flatten
+    require(lits.map(_.isCustom).distinct.size <= 1,
+      s"series $sel mixes NHCB and exp histogram literals")
+    lits.filter(_.isCustom).foreach(h => require(h.count + 1e-9 >= h.buckets.sum,
+      s"NHCB literal count < bucket mass: $sel"))
     (labels, slots.zipWithIndex.collect { case (Some(h), k) => (k.toLong * stepMs, h) })
   }
 
@@ -349,117 +364,20 @@ object TestCorpus {
 
   // ===== execution =========================================================
 
-  /** Build the canonical samples frame for the loaded series. Histogram
-    * series add the engine's exp-histogram storage columns (the planner's
-    * bridgeExpHist converts them to bucket series query-time, exactly as
-    * for remote-written native histograms). */
-  private def samplesFrame(spark: SparkSession,
-                           loads: Seq[Load]): DataFrame = {
-    import spark.implicits._
-    val rows = loads.flatMap(l => l.series.map((_, l.seriesType))).zipWithIndex.flatMap {
-      case (((labels, samples), styp), sid) =>
-        val metric = labels.getOrElse("__name__", null)
-        val tags = labels - "__name__"
-        samples.map { case (ts, v, st) => (sid.toLong, metric, tags, ts, v, st, styp) }
-    }
-    // the __stale tombstone column exists only when the loaded set carries
-    // markers, series_type only when a load_delta block typed a series —
-    // every other corpus run keeps the single-pass instant path
-    val anyStale = rows.exists(_._6)
-    val anyTyped = rows.exists(_._7 != null)
-    var plain = rows.toDF("series_id", "metric", "tags", "ts", "value",
-      "__stale", "series_type")
-    if (!anyStale) plain = plain.drop("__stale")
-    if (!anyTyped) plain = plain.drop("series_type")
-    val histLoads = loads.flatMap(_.histSeries)
-    if (histLoads.isEmpty) plain
-    else {
-      // offset by the scalar SERIES count, not the flattened row count: a
-      // scalar series whose slots are all `_` gaps contributes zero rows
-      // while still consuming a zipWithIndex sid, so a row-count base can
-      // collide a histogram sid with a populated scalar sid and silently
-      // merge two distinct series (r12 advisor finding)
-      val base = loads.map(_.series.size).sum
-      // a series is routed whole: NHCB (custom_values) literals land as
-      // classic cumulative bucket storage, exp literals as exp columns
-      val (nhcbLoads, expLoads) =
-        histLoads.partition(_._2.exists(_._2.isCustom))
-      val hrows = expLoads.zipWithIndex.flatMap {
-        case ((labels, samples), i) =>
-          val metric = labels.getOrElse("__name__", null)
-          val tags = labels - "__name__"
-          samples.map { case (ts, h) =>
-            // literal `offset` is the prompb positive-span start; exp
-            // storage bucket j covers (base^j, base^(j+1)] — shift by one
-            // like the remote-write decode (SpoolDrain.seriesRows)
-            (base.toLong + i, metric, tags, ts, null.asInstanceOf[java.lang.Double],
-              h.schema, h.offset - 1, h.buckets, h.zBucket, h.zBucketW, h.sum,
-              "otel_exp_histogram")
-          }
+  /** The loaded series as the decoded remote-write series they stand for:
+    * plain slots as samples (`stale` as the marker), `{{...}}` literals as
+    * native histograms, `load_delta` as the "delta" series type. */
+  private[graft] def wireSeries(loads: Seq[Load]): Seq[ProtoWire.PSeries] =
+    loads.flatMap { l =>
+      l.series.map { case (labels, samples) =>
+        ProtoWire.PSeries(labels.toSeq,
+          samples.map { case (ts, v, stale) => ProtoWire.PSample(v, ts, stale) },
+          seriesType = l.seriesType)
+      } ++ l.histSeries.map { case (labels, hs) =>
+        ProtoWire.PSeries(labels.toSeq, Nil,
+          hs.map { case (ts, h) => h.toWire(ts) }, seriesType = l.seriesType)
       }
-      // NHCB canonicalization = the remote-write ingest's: le = bounds +
-      // Inf, values cumulative across buckets, the +Inf entry = count
-      val nrows = nhcbLoads.zipWithIndex.flatMap {
-        case ((labels, samples), i) =>
-          val metric = labels.getOrElse("__name__", null)
-          val tags = labels - "__name__"
-          samples.map { case (ts, h) =>
-            require(h.isCustom,
-              s"series $metric mixes NHCB and exp histogram literals")
-            // cum over the bounds; a (bounds.size+1)-th bucket is the
-            // overflow and lands in the +Inf entry via count
-            val cumBounds = h.buckets.scanLeft(0.0)(_ + _).tail
-              .take(h.customValues.size)
-              .padTo(h.customValues.size, h.buckets.sum)
-            require(h.count + 1e-9 >= h.buckets.sum,
-              s"NHCB literal count < bucket mass: $metric")
-            (base.toLong + expLoads.size + i, metric, tags, ts,
-              null.asInstanceOf[java.lang.Double],
-              h.customValues :+ Double.PositiveInfinity,
-              cumBounds :+ h.count, h.sum, "prom_histogram")
-          }
-      }
-      val hist0 = hrows.toDF("series_id", "metric", "tags", "ts", "value",
-          "exp_scale", "exp_offset", "exp_counts", "exp_zero_count",
-          "exp_zero_threshold", "exp_sum", "series_type")
-        .withColumn("value", col("value").cast("double"))
-        .withColumn("le", lit(null).cast("array<double>"))
-        .withColumn("values", lit(null).cast("array<double>"))
-        .withColumn("hist_sum", lit(null).cast("double"))
-      val nhcb0 = nrows.toDF("series_id", "metric", "tags", "ts", "value",
-          "le", "values", "hist_sum", "series_type")
-        .withColumn("value", col("value").cast("double"))
-        .withColumn("exp_scale", lit(null).cast("int"))
-        .withColumn("exp_offset", lit(null).cast("int"))
-        .withColumn("exp_counts", lit(null).cast("array<double>"))
-        .withColumn("exp_zero_count", lit(null).cast("double"))
-        .withColumn("exp_zero_threshold", lit(null).cast("double"))
-        .withColumn("exp_sum", lit(null).cast("double"))
-      val histAll0 = hist0.unionByName(nhcb0.select(hist0.columns.map(col): _*))
-      // keep frames WITHOUT NHCB literals free of bucket columns (other
-      // corpus runs must keep their exact pre-NHCB plan shapes)
-      val histAll1 =
-        if (nhcbLoads.isEmpty) histAll0.drop("le", "values", "hist_sum")
-        else histAll0
-      val histAll =
-        if (anyStale) histAll1.withColumn("__stale", lit(false)) else histAll1
-      var padded = plain
-        .withColumn("exp_scale", lit(null).cast("int"))
-        .withColumn("exp_offset", lit(null).cast("int"))
-        .withColumn("exp_counts", lit(null).cast("array<double>"))
-        .withColumn("exp_zero_count", lit(null).cast("double"))
-        .withColumn("exp_zero_threshold", lit(null).cast("double"))
-        .withColumn("exp_sum", lit(null).cast("double"))
-      // null-pad only when absent — a load_delta block already typed it
-      if (!padded.columns.contains("series_type"))
-        padded = padded.withColumn("series_type", lit(null).cast("string"))
-      if (nhcbLoads.nonEmpty) padded = padded
-        .withColumn("le", lit(null).cast("array<double>"))
-        .withColumn("values", lit(null).cast("array<double>"))
-        .withColumn("hist_sum", lit(null).cast("double"))
-      padded.unionByName(histAll.select(padded.columns.map(col): _*))
     }
-  }
 
   private def relEq(a: Double, b: Double): Boolean =
     (a.isNaN && b.isNaN) || a == b ||
@@ -470,14 +388,20 @@ object TestCorpus {
   def run(spark: SparkSession, directives: Seq[Directive],
           lookbackMs: Long = PromPlanner.DefaultLookbackMs): Outcome = {
     var loads = Seq.empty[Load]
+    // built once per load state, on the first eval after a Load or Clear
+    var frame: Option[DataFrame] = None
+    def samplesNow: DataFrame = frame.getOrElse {
+      val f = graft.streaming.SpoolDrain.storedFrame(spark, wireSeries(loads))
+      frame = Some(f); f
+    }
     var evals = 0
     val failures = Seq.newBuilder[String]
     directives.foreach {
-      case l: Load => loads :+= l
-      case Clear => loads = Seq.empty
+      case l: Load => loads :+= l; frame = None
+      case Clear => loads = Seq.empty; frame = None
       case e: EvalRange =>
         evals += 1
-        val samples = samplesFrame(spark, loads)
+        val samples = samplesNow
         val ctx = PromPlanner.Ctx(spark, samples, e.startMs, e.endMs, e.stepMs,
           lookbackMs = lookbackMs)
         val attempt = scala.util.Try {
@@ -511,7 +435,7 @@ object TestCorpus {
         }
       case e: Eval =>
         evals += 1
-        val samples = samplesFrame(spark, loads)
+        val samples = samplesNow
         val ctx = PromPlanner.Ctx(spark, samples, e.atMs, e.atMs, 1000L,
           lookbackMs = lookbackMs)
         val attempt = scala.util.Try {

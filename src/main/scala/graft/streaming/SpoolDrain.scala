@@ -11,7 +11,9 @@ import graft.http.{OtlpWire, ProtoWire}
   * synchronous write path runs the same decode and row builder strictly,
   * on the driver, over one POST body. Both then commit the rows through
   * [[graft.http.PromApi]]'s one `commitRows`, so the two modes cannot
-  * drift.
+  * drift. The PromQL corpus runner and the remote-read client build their
+  * stored-shape frames from in-memory series by the same rules
+  * ([[storedFrame]]).
   *
   * The r15 ingest ladder pinned the sustained committed-ingest floor to
   * the DRIVER-side drain: every spool file was read into driver memory,
@@ -343,6 +345,30 @@ object SpoolDrain {
         out = out.unionByName(nhcb.select(out.columns.map(col): _*))
       }
       out
+    }
+  }
+
+  /** Decoded in-memory series → the frame the sink stores for them, built
+    * by the strict [[rows]] and [[assembleCanonical]] of a synchronous
+    * POST. Exp histograms count as already stored: per-interval
+    * counts typed "otel_exp_histogram", as [[Ingest.expCumulativeToDelta]]
+    * writes them, without its transient `__reset_hint`. A malformed series
+    * throws IllegalArgumentException naming it. Callers:
+    * [[graft.promql.TestCorpus]] and [[graft.http.RemoteRead.remoteRead]]. */
+  private[graft] def storedFrame(spark: SparkSession,
+                                 series: Seq[ProtoWire.PSeries]): DataFrame = {
+    import spark.implicits._
+    val decoded = rows(series, Nil, Nil, path = null, lenient = false)
+    val f = windowFlags(decoded)
+    val canonical = assembleCanonical(spark.createDataset(decoded),
+      f.anyStale, f.anyTyped, f.hasExp, f.hasNhcb)
+    if (!f.hasExp) canonical
+    else {
+      val exp = when(col("exp_counts").isNotNull, lit("otel_exp_histogram"))
+      canonical.withColumn("series_type",
+          if (canonical.columns.contains("series_type")) exp.otherwise(col("series_type"))
+          else exp)
+        .drop("__reset_hint")
     }
   }
 

@@ -1258,6 +1258,91 @@ class RemoteWriteSpec extends AnyFunSuite with Matchers {
     } finally ingest.stop()
   }
 
+  /** A remote-read endpoint answering every query with `series`. */
+  private def cannedReadServer(series: Seq[ProtoWire.PSeries]): com.sun.net.httpserver.HttpServer = {
+    val body = org.xerial.snappy.Snappy.compress(ProtoWire.encodeReadResponse(Seq(series)))
+    val srv = com.sun.net.httpserver.HttpServer.create(
+      new java.net.InetSocketAddress("localhost", 0), 0)
+    srv.createContext("/api/v1/read", { ex =>
+      ex.getRequestBody.readAllBytes()
+      ex.sendResponseHeaders(200, body.length)
+      ex.getResponseBody.write(body)
+      ex.close()
+    })
+    srv.start()
+    srv
+  }
+
+  test("remote-read decodes as ingest stores: an NHCB span overrunning its " +
+       "bounds fails naming the series, negative exp buckets fold into the " +
+       "zero count") {
+    val overrun = cannedReadServer(Seq(
+      ProtoWire.PSeries(Seq("__name__" -> "ok_plain"), Seq(ProtoWire.PSample(1.0, 1000L))),
+      ProtoWire.PSeries(Seq("__name__" -> "bad_nhcb"), Nil, histograms = Seq(
+        nhcb(1000L, Seq(1.0, 1.0), Seq(1.0), posOffset = 1)))))
+    try {
+      val ex = intercept[IllegalArgumentException] {
+        RemoteRead.remoteRead(spark, s"http://localhost:${overrun.getAddress.getPort}",
+          """{__name__=~".+"}""", 0L, 10000L)
+      }
+      ex.getMessage should include("bad_nhcb")
+    } finally overrun.stop(0)
+    val neg = cannedReadServer(Seq(
+      ProtoWire.PSeries(Seq("__name__" -> "neg_exp"), Nil, histograms = Seq(
+        ProtoWire.PHistogram(1000L, schema = 0, zeroThreshold = 0.5, zeroCount = 2.0,
+          count = 7.5, sum = 4.0, resetHint = 3, posOffset = 1,
+          posCounts = Seq(1.0, 3.0), negOffset = 1, negCounts = Seq(1.5))))))
+    try {
+      val back = RemoteRead.remoteRead(spark,
+        s"http://localhost:${neg.getAddress.getPort}", "neg_exp", 0L, 10000L)
+      back.columns.take(4) shouldEqual Array("metric", "tags", "ts", "value")
+      back.columns should not contain "__reset_hint"
+      back.select(col("exp_offset"), col("exp_counts"), col("exp_zero_count"),
+          col("exp_zero_threshold"), col("series_type"))
+        .collect().map(r => (r.getInt(0), r.getSeq[Double](1).toList, r.getDouble(2),
+          r.getDouble(3), r.getString(4))).toList shouldEqual
+        List((0, List(1.0, 3.0), 3.5, 0.5, "otel_exp_histogram"))
+    } finally neg.stop(0)
+  }
+
+  test("a corpus load stores the same rows as a sync remote-write of its " +
+       "series: plain, stale marker, NHCB and one-sample exp") {
+    import graft.promql.TestCorpus
+    val loads = TestCorpus.parse(
+      """load 1m
+        |  par_plain{job="a"} 1 2 _ 4
+        |  par_stale{job="a"} 1 stale
+        |  par_nhcb{job="a"} {{schema:-53 custom_values:[1 5] buckets:[2 3 1] count:6 sum:9}}
+        |  par_exp{job="a"} {{schema:0 sum:10 count:5 buckets:[1 2 1] offset:1 z_bucket:1 z_bucket_w:0.5}}
+        |""".stripMargin).collect { case l: TestCorpus.Load => l }
+    val cols = Seq("metric", "tags", "ts", "value", "__stale", "le", "values",
+      "hist_sum", "exp_scale", "exp_offset", "exp_counts", "exp_zero_count",
+      "exp_zero_threshold", "exp_sum", "series_type")
+    def stored(df: DataFrame): Seq[String] =
+      df.select(cols.map {
+          case "tags" => array_sort(map_entries(col("tags"))).as("tags")
+          case "ts" => col("ts").cast("long").as("ts")
+          case c => col(c)
+        }: _*)
+        .collect().map(_.toString).toSeq.sorted
+    val viaCorpus = stored(graft.streaming.SpoolDrain.storedFrame(spark,
+      TestCorpus.wireSeries(loads)))
+    val dir = tmp("graft-corpus-parity")
+    val ws = PromApi.WriteSink(s"$dir/sink", s"$dir/index", s"$dir/reject", cfg)
+    val api = new PromApi(spark, spark.range(0).toDF(), writeSink = Some(ws)).start()
+    try RemoteRead.remoteWriteSeries(TestCorpus.wireSeries(loads),
+      s"http://localhost:${api.boundPort}")
+    finally api.stop()
+    val viaIngest = stored(spark.read.option("mergeSchema", "true").parquet(s"$dir/sink"))
+    viaCorpus.size shouldEqual 7 // 3 plain + 1 sample and 1 marker + NHCB + exp
+    viaCorpus shouldEqual viaIngest
+    // the literals map onto the wire as upstream reads them
+    viaCorpus.filter(_.startsWith("[par_exp,")).head should include(
+      "0,0,ArraySeq(1.0, 2.0, 1.0),1.0,0.5,10.0,otel_exp_histogram")
+    viaCorpus.filter(_.startsWith("[par_nhcb,")).head should include(
+      "ArraySeq(1.0, 5.0, Infinity),ArraySeq(2.0, 5.0, 6.0),9.0")
+  }
+
   // ===== staleness markers (upstream pkg/value StaleNaN) ==================
 
   test("StaleNaN wire bits: v1/v2 samples and histogram sums decode to the " +

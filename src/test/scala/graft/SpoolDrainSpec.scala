@@ -61,6 +61,33 @@ class SpoolDrainSpec extends AnyFunSuite with Matchers {
     ex.ts shouldEqual 1500L
   }
 
+  test("storedFrame: columns only for the shapes present; exp rows typed " +
+       "otel_exp_histogram, without the transient __reset_hint; an NHCB " +
+       "span overrunning its bounds fails naming the series") {
+    SpoolDrain.storedFrame(spark, Seq(series("p"))).columns.toSeq shouldEqual
+      Seq("metric", "tags", "ts", "value")
+    val withExp = SpoolDrain.storedFrame(spark, Seq(series("p"),
+      ProtoWire.PSeries(Seq("__name__" -> "e"), Nil, histograms = Seq(
+        ProtoWire.PHistogram(1000L, schema = 0, zeroThreshold = 0.0, zeroCount = 0.0,
+          count = 1.0, sum = 1.0, resetHint = 2, posOffset = 1, posCounts = Seq(1.0),
+          negOffset = 0, negCounts = Nil)))))
+    withExp.columns.toSeq shouldEqual Seq("metric", "tags", "ts", "value",
+      "exp_scale", "exp_offset", "exp_counts", "exp_zero_count",
+      "exp_zero_threshold", "exp_sum", "series_type")
+    withExp.select("metric", "series_type").collect()
+      .map(r => (r.getString(0), r.getString(1))).toSet shouldEqual
+      Set(("p", null), ("e", "otel_exp_histogram"))
+    val ex = intercept[IllegalArgumentException] {
+      SpoolDrain.storedFrame(spark, Seq(series("p"),
+        ProtoWire.PSeries(Seq("__name__" -> "overrun"), Nil, histograms = Seq(
+          ProtoWire.PHistogram(1000L, schema = -53, zeroThreshold = 0.0,
+            zeroCount = 0.0, count = 2.0, sum = 1.0, resetHint = 0, posOffset = 1,
+            posCounts = Seq(1.0, 1.0), negOffset = 0, negCounts = Nil,
+            customValues = Seq(1.0))))))
+    }
+    ex.getMessage should include("overrun")
+  }
+
   test("decodeFile: an ok file leads with a kind-6 header carrying series/" +
        "sample counts; a corrupt body yields ONLY the kind-5 header") {
     val good = ProtoWire.encodeWriteRequest(Seq(series("a"), series("b")))
