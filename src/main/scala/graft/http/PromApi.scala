@@ -113,12 +113,20 @@ class PromApi(spark: SparkSession, samples: DataFrame, port: Int = 0,
     * (hwm dedup, quota) must observe the previous batch's index delta. */
   private val commitLock = new Object
 
+  /** The write sink's held known-series state — the one source of the
+    * hwm dedup and the quota's known set. Loaded from the committed
+    * index at the first commit (never in [[start]]), then advanced under
+    * [[commitLock]] by every commit's index delta: drain windows, sync
+    * POSTs and the drain's crash-repair branch alike. */
+  private[graft] val knownSeries: Option[graft.streaming.Ingest.KnownSeries] =
+    writeSink.map(ws => new graft.streaming.Ingest.KnownSeries(spark, ws.indexDir))
+
   /** Accepted COMMITS since start — every `hwmCompactEvery`-th commit
-    * folds the index into the compact `_hwm` base (keeps per-commit hwm
-    * reads flat as the index grows). In synchronous mode one POST is one
-    * commit; in spool mode one DRAIN micro-batch is one commit, which is
-    * the right cadence unit — the delta-segment count the compaction
-    * bounds grows per drain, not per POST. */
+    * folds the index into the compact `_hwm` base (keeps the next
+    * start's state load flat as the index grows). In synchronous mode one
+    * POST is one commit; in spool mode one DRAIN micro-batch is one
+    * commit, which is the right cadence unit — the delta-segment count
+    * the compaction bounds grows per drain, not per POST. */
   private val writesAccepted = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** PromQL instant + range queries served (the /metrics counter). */
@@ -484,17 +492,21 @@ class PromApi(spark: SparkSession, samples: DataFrame, port: Int = 0,
               // its spool cleanup. Re-running the chain would hwm-drop every
               // sample and OVERWRITE the committed batch dir with an empty
               // one — instead repair forward: the sink write is durable, so
-              // rebuild the (possibly missing) index delta from it,
-              // re-append exemplars (content-dedup'd, so a no-op when they
-              // landed) and re-apply the metadata (idempotent), then clean
-              // up.
+              // rebuild the (possibly missing) index delta from it, fold it
+              // into the held state (a no-op when the state already has
+              // it), re-append exemplars (content-dedup'd, so a no-op when
+              // they landed) and re-apply the metadata (idempotent), then
+              // clean up.
+              val delta = s"${ws.indexDir}/batch_id=$batchId"
               if (!committed(ws.indexDir)) {
                 val rows = spark.read.parquet(s"${ws.sinkDir}/batch_id=$batchId")
                 graft.operators.MetadataOps.buildSeriesIndex(
                     rows.select(col("metric"), col("tags"), col("ts"), col("series_id")))
-                  .write.mode("overwrite").partitionBy("metric")
-                  .parquet(s"${ws.indexDir}/batch_id=$batchId")
+                  .write.mode("overwrite").partitionBy("metric").parquet(delta)
               }
+              val known = knownSeries.get
+              known.guard(known.advance(
+                graft.streaming.Ingest.readIndex(spark, ws.indexDir, delta)))
               appendExemplarFrame(ws, decoded, flags, batchId)
               upsertMetas(decoded, flags)
             } else commitRows(ws, decoded, flags, batchId)
@@ -607,6 +619,7 @@ class PromApi(spark: SparkSession, samples: DataFrame, port: Int = 0,
         System.err.println(s"[promapi] final spool drain failed: ${e.getMessage}") }
     pool.shutdown()
     spark.sparkContext.removeSparkListener(cpuListener)
+    knownSeries.foreach(_.invalidate()) // frees its executor memory
   }
 
   /** Text-exposition endpoints (federate): 200 text/plain on success,
@@ -1371,7 +1384,7 @@ class PromApi(spark: SparkSession, samples: DataFrame, port: Int = 0,
       Ingest.remoteWriteBatch(
         SpoolDrain.assembleCanonical(decoded,
           flags.anyStale, flags.anyTyped, flags.hasExp, flags.hasNhcb),
-        batchId, ws.sinkDir, ws.indexDir, ws.rejectDir, ws.cfg)
+        batchId, ws.sinkDir, ws.rejectDir, ws.cfg, knownSeries.get)
       appendExemplarFrame(ws, decoded, flags, batchId)
       val n = writesAccepted.incrementAndGet()
       if (hwmCompactEvery > 0 && n % hwmCompactEvery == 0) Ingest.phase("compaction") {

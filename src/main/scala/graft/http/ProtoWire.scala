@@ -577,13 +577,20 @@ object ProtoWire {
           val m = r.readMessage()
           val start = m.pos
           try series += readSeries(m)
-          catch { case _: Exception if lenient =>
-            badMetrics += seriesMetricOnly(new Reader(m.buf, start, m.end))
+          catch { case e: Exception =>
+            val metric = seriesMetricOnly(new Reader(m.buf, start, m.end))
+            if (lenient) badMetrics += metric else throw malformed(metric, e)
           }
         case (_, wt) => r.skip(wt)
       }
       (series.result(), Nil, badMetrics.result())
     }
+
+  /** A strict decode's failure, naming the series it hit (the format
+    * [[graft.streaming.SpoolDrain]]'s strict rows and the remote-read
+    * decode use), so a sync POST's 400 says which series to fix. */
+  private def malformed(metric: String, e: Exception): IllegalArgumentException =
+    new IllegalArgumentException(s"malformed series $metric: ${e.getMessage}", e)
 
   /** Best-effort `__name__` of a v1 TimeSeries frame that failed full
     * decode (labels-only walk; any error → ""). Error-report use only. */
@@ -719,8 +726,9 @@ object ProtoWire {
       try Some(readSeriesV2(tr, symAt, refsToLabels, metas))
       catch {
         case e: Exception =>
-          if (!lenient) throw e
-          badMetrics += metricOnly(new Reader(tr.buf, start, tr.end))
+          val metric = metricOnly(new Reader(tr.buf, start, tr.end))
+          if (!lenient) throw malformed(metric, e)
+          badMetrics += metric
           None
       }
     }
@@ -849,8 +857,7 @@ object ProtoWire {
             val start = m.pos
             try series += readSeries(m)
             catch { case e: IllegalArgumentException =>
-              throw new IllegalArgumentException(s"malformed series " +
-                s"${seriesMetricOnly(new Reader(m.buf, start, m.end))}: ${e.getMessage}", e)
+              throw malformed(seriesMetricOnly(new Reader(m.buf, start, m.end)), e)
             }
           case (_, wt) => qr.skip(wt)
         }

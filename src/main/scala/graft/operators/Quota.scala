@@ -73,7 +73,7 @@ object Quota {
 
   /** Project an index/samples-shaped frame to the distinct shard-key
     * tuples it contains, columns named __k0..__k{L-1}. */
-  private def keyTuples(df: DataFrame, cfg: QuotaConfig): DataFrame =
+  private[graft] def keyTuples(df: DataFrame, cfg: QuotaConfig): DataFrame =
     df.select(cfg.shardKey.zipWithIndex.map { case (l, i) =>
       keyExpr(df, l).cast("string").as(s"__k$i")
     }: _*).distinct()
@@ -83,9 +83,13 @@ object Quota {
     * tuple: (__k0.., admitted, reject_depth, quota) — `reject_depth` is
     * the shallowest depth whose quota the tuple breached (null when
     * admitted; tuples already present in `existing` are admitted by
-    * definition). Feed `existing` the merged series index; feed
-    * `incoming` the batch's buildSeriesIndex frame (or raw samples —
-    * only (metric, tags) are read).
+    * definition). A tuple missing a key label (a null value — gateway tag
+    * maps are open-ended) is rejected at depth 0 with a null quota: it
+    * can never equality-join the cascade, so letting it through would
+    * bypass enforcement and burn a slot of a real child (nulls rank
+    * first). Feed `existing` the known series (index or held state rows);
+    * feed `incoming` the batch's samples or buildSeriesIndex frame — only
+    * (metric, tags) are read.
     *
     * Deliberately LAZY, with no internal caching: the cascade references
     * the key-tuple frames at every depth, but within the caller's single
@@ -93,11 +97,16 @@ object Quota {
     * distinct-key subtrees — an explicit persist + materialize here was
     * measured SLOWER on the drain path (an extra job plus cache writes
     * per window, duplicating work exchange reuse already avoids). */
-  def admit(existing: DataFrame, incoming: DataFrame, cfg: QuotaConfig): DataFrame = {
+  def admit(existing: DataFrame, incoming: DataFrame, cfg: QuotaConfig): DataFrame =
+    admitKeys(keyTuples(existing, cfg), keyTuples(incoming, cfg), cfg)
+
+  /** [[admit]] over frames already projected by [[keyTuples]]. */
+  private[graft] def admitKeys(exKeys: DataFrame, allKeys: DataFrame,
+                               cfg: QuotaConfig): DataFrame = {
     val L = cfg.shardKey.length
     val kCols = (0 until L).map(i => s"__k$i")
-    val exKeys = keyTuples(existing, cfg)
-    val inKeys = keyTuples(incoming, cfg)
+    val complete = kCols.map(col(_).isNotNull).reduce(_ && _)
+    val inKeys = allKeys.filter(complete)
     // genuinely-new series: quotas only gate CREATION of children
     var surviving = inKeys.join(exKeys, kCols, "left_anti")
     var rejects: Option[DataFrame] = None
@@ -134,8 +143,8 @@ object Quota {
         if (ovr.isEmpty || pc.isEmpty)
           counted.withColumn("__q", lit(cfg.defaultChildrenQuota(d - 1)))
         else {
-          val ovrDf = incoming.sparkSession.createDataFrame(
-            incoming.sparkSession.sparkContext.parallelize(
+          val ovrDf = allKeys.sparkSession.createDataFrame(
+            allKeys.sparkSession.sparkContext.parallelize(
               ovr.map(o => org.apache.spark.sql.Row.fromSeq(o._1 :+ o._2))),
             org.apache.spark.sql.types.StructType.fromDDL(
               pc.map(c => s"$c STRING").mkString(", ") + ", __oq LONG"))
@@ -153,11 +162,14 @@ object Quota {
       rejects = Some(rejects.map(_.unionByName(rejSeries)).getOrElse(rejSeries))
       surviving = surviving.join(rejCh, pc :+ cc, "left_anti")
     }
-    val verdicts = inKeys
+    val incomplete = allKeys.filter(!complete)
+      .withColumn("reject_depth", lit(0))
+      .withColumn("quota", lit(null).cast("long"))
+    inKeys
       .join(rejects.get, kCols, "left")
+      .unionByName(incomplete)
       .withColumn("admitted", col("reject_depth").isNull)
       .select(kCols.map(col) :+ col("admitted") :+ col("reject_depth") :+ col("quota"): _*)
-    verdicts
   }
 
   /** Quota-state table: per parent prefix at every depth, the current

@@ -19,6 +19,13 @@ import graft.model.SeriesKey
   * the sink partitioning (metric, date) gives partition pruning to every
   * query with a metric + time predicate — the Spark analogue of shard-key
   * routing + time-bucketed chunks.
+  *
+  * The quota commit ([[processCanonicalBatch]], [[remoteWriteBatch]])
+  * reads one held [[KnownSeries]] state per series index: the committed
+  * series with their high-water marks, partitioned by series_id in
+  * executor memory. It is the source of the remote-write hwm dedup and of
+  * the quota's known set; each commit advances it by its own index delta,
+  * so a commit lists and scans no index files.
   */
 object Ingest {
 
@@ -138,21 +145,25 @@ object Ingest {
                                     indexDir: String, rejectDir: String,
                                     checkpointDir: String,
                                     cfg: graft.operators.Quota.QuotaConfig)
-      : org.apache.spark.sql.streaming.StreamingQuery =
+      : org.apache.spark.sql.streaming.StreamingQuery = {
+    // the query's held known-series state: loaded at its first batch,
+    // advanced by each batch's index delta
+    val known = new KnownSeries(samples.sparkSession, indexDir)
     dropOutOfOrderCanonical(samples).writeStream
       .outputMode(OutputMode.Append)
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[CanonicalSample], batchId: Long) =>
-        processCanonicalBatch(batch.toDF(), batchId, sinkDir, indexDir,
-          rejectDir, cfg)
+        processCanonicalBatch(batch.toDF(), batchId, sinkDir, rejectDir, cfg, known)
       }
       .start()
+  }
 
   /** Opt-in write-path timing (SPARK_GRAFT_DRAIN_TIMING=1), the one read
     * of the switch: the spool drain prints its `[drain]` decode/commit/
-    * cleanup split per window, and [[phase]] the per-phase wall time of
-    * the commit chain's Spark actions as `[drain-phase]` lines (the
-    * benchmark's traced run parses both). Zero-cost when off. */
+    * cleanup split per window (the one line the benchmark's traced run
+    * parses — keep its format), and [[phase]] the wall time of each step
+    * of the commit chain as `[drain-phase]` lines for a reader. Zero-cost
+    * when off. */
   private[graft] val drainTiming = sys.env.get("SPARK_GRAFT_DRAIN_TIMING").contains("1")
   private[graft] def phase[A](label: String)(f: => A): A =
     if (!drainTiming) f
@@ -163,77 +174,222 @@ object Ingest {
       r
     }
 
-  /** One quota/sink/index microbatch over ALREADY-DEDUPED canonical rows —
-    * the `foreachBatch` body of [[startCanonicalIngestWithQuota]], factored
-    * out so the HTTP remote-write path ([[remoteWriteBatch]]) commits
-    * through the exact same protocol. BatchId-keyed overwrites keep a
-    * replay idempotent (the startIngestWithIndex contract). */
-  def processCanonicalBatch(df0: DataFrame, batchId: Long, sinkDir: String,
+  /** The schema every series-index delta is written with
+    * ([[graft.operators.MetadataOps.buildSeriesIndex]] partitioned by
+    * metric): index reads pass it instead of inferring it per read. */
+  private val IndexSchema = org.apache.spark.sql.types.StructType.fromDDL(
+    "series_id BIGINT, tags MAP<STRING, STRING>, start_ts BIGINT, end_ts BIGINT, metric STRING")
+
+  /** `paths` (the index root, or `batch_id=` dirs under it) of the series
+    * index at `indexDir`, read with [[IndexSchema]]. */
+  private[graft] def readIndex(spark: SparkSession, indexDir: String, paths: String*): DataFrame =
+    spark.read.schema(IndexSchema).option("basePath", indexDir).parquet(paths: _*)
+
+  /** The known-series rows of the committed index, one or more per
+    * series: the `_hwm` base (one row per series, written by
+    * [[compactHwm]]) plus the delta dirs newer than it, or the whole index
+    * when no base exists or the base predates its metric/tags columns.
+    * None = no index yet. */
+  private def committedSeries(spark: SparkSession, indexDir: String): Option[DataFrame] = {
+    def index(paths: String*): DataFrame = readIndex(spark, indexDir, paths: _*)
+      .select(col("series_id"), col("metric"), col("tags"), col("end_ts").as("hwm"))
+    hwmLayout(spark, indexDir).map {
+      case (Some(basePath), deltaDirs) =>
+        val base = spark.read.parquet(basePath)
+        if (!base.columns.contains("metric")) index(indexDir)
+        else {
+          val b = base.select(col("series_id"), col("metric"), col("tags"), col("__hwm").as("hwm"))
+          if (deltaDirs.isEmpty) b else b.unionByName(index(deltaDirs: _*))
+        }
+      case (None, _) => index(indexDir)
+    }
+  }
+
+  /** The held KNOWN-SERIES state of one series index: one row per
+    * committed series, `(series_id, metric, tags, hwm)`, hash-partitioned
+    * by `series_id` and kept in executor memory across commits. It is the
+    * write path's one source for the high-water-mark dedup and for the
+    * quota's known set, the state the reference keeps in memory instead
+    * of re-reading its index per write (TimeSeriesPartition.scala:130-190
+    * last timestamps, CardinalityTracker counts). Derived state:
+    *  - loaded once, at the first [[frame]] call, from the committed index
+    *    (`_hwm` base plus newer deltas, read with the index schema);
+    *  - advanced by every commit's index delta ([[advance]]); each advance
+    *    folds the delta in without shuffling the held side and cuts the
+    *    lineage (local checkpoint), so the plan a commit joins against
+    *    does not grow with the number of commits;
+    *  - dropped when a commit against it fails ([[guard]]), so the next
+    *    commit reloads it from the files instead of trusting a state that
+    *    may have missed a delta or lost its blocks.
+    * The caller serializes commits per index (PromApi's commitLock, a
+    * streaming query's sequential batches), and the state assumes its
+    * holder is the index's one writer: another writer's deltas show up
+    * at the next load. */
+  final class KnownSeries(spark: SparkSession, val indexDir: String) {
+    /** Hash partitions of the held frame; a commit repartitions its rows
+      * to match, so its joins and folds against the state shuffle only
+      * the window side. */
+    val partitions: Int = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    private var held: DataFrame = null
+
+    /** The state, loaded from the committed index on first use. */
+    def frame: DataFrame = synchronized {
+      if (held == null) hold(fold(committedSeries(spark, indexDir).getOrElse(
+        spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+          org.apache.spark.sql.types.StructType.fromDDL(
+            "series_id BIGINT, metric STRING, tags MAP<STRING, STRING>, hwm BIGINT")))))
+      held
+    }
+
+    /** Fold one commit's index delta (buildSeriesIndex rows) into the
+      * state. A delta already folded in (a replayed window) changes
+      * nothing. */
+    def advance(delta: DataFrame): Unit = synchronized {
+      hold(fold(frame.unionByName(delta.select(col("series_id"), col("metric"),
+        col("tags"), col("end_ts").as("hwm")))))
+    }
+
+    /** Run one commit against the state; if it fails, drop the state. */
+    def guard[A](commit: => A): A =
+      try commit catch { case e: Throwable => invalidate(); throw e }
+
+    /** Drop the held state; the next [[frame]] reloads it. */
+    def invalidate(): Unit = synchronized {
+      if (held != null) release(held)
+      held = null
+    }
+
+    /** One row per series. The identity columns group beside
+      * `series_id` (they are functions of it) so the fold plans as a hash
+      * aggregate, never a sort of the whole state; the explicit
+      * repartition is a no-op (Spark drops it) when the input already
+      * carries the state's partitioning, as the held frame and a commit's
+      * delta both do. */
+    private def fold(rows: DataFrame): DataFrame =
+      rows.repartition(partitions, col("series_id"))
+        .groupBy(col("series_id"), col("metric"), col("tags"))
+        .agg(max(col("hwm")).as("hwm"))
+
+    private def hold(next: DataFrame): Unit = {
+      val cut = next.localCheckpoint(eager = true)
+      if (held != null) release(held)
+      held = cut
+    }
+
+    /** Free the checkpointed blocks of a state frame. */
+    private def release(df: DataFrame): Unit =
+      df.queryExecution.logical.collectFirst {
+        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
+      }.foreach(_.unpersist(blocking = false))
+  }
+
+  /** The stream commit of [[startCanonicalIngestWithQuota]] (its
+    * `foreachBatch` body) over ALREADY-DEDUPED canonical rows: the quota/
+    * sink/index chain of [[commitWindow]] against `known`. BatchId-keyed
+    * overwrites keep a replay idempotent (the startIngestWithIndex
+    * contract). */
+  def processCanonicalBatch(df: DataFrame, batchId: Long, sinkDir: String,
+                            rejectDir: String, cfg: graft.operators.Quota.QuotaConfig,
+                            known: KnownSeries): Unit = known.guard {
+    // persisted: admission and the writes both read the batch, which a
+    // streaming query would otherwise recompute, stateful drop included
+    val batch = df.persist()
+    try commitWindow(batch.repartition(known.partitions, col("series_id")), batch,
+      batchId, sinkDir, rejectDir, cfg, known)
+    finally { batch.unpersist(); () }
+  }
+
+  /** [[processCanonicalBatch]] for a caller that holds no state: it loads
+    * one from the committed index. */
+  def processCanonicalBatch(df: DataFrame, batchId: Long, sinkDir: String,
                             indexDir: String, rejectDir: String,
-                            cfg: graft.operators.Quota.QuotaConfig): Unit = {
-    val spark = df0.sparkSession
-    val missingKey = cfg.shardKey
-      .map(l => graft.operators.Quota.keyExpr(df0, l).isNull).reduce(_ || _)
-    // persist the INPUT, not the filtered side: the missing-key rejects
-    // branch below otherwise recomputes the whole upstream chain (batch
-    // LocalRelation serialization, in-batch dedup groupBy, hwm anti-join,
-    // exp conversion) a second time per commit — measured ~2x drain cost
-    // on the r15 ingest ladder
-    val all = df0.persist()
-    val df = all.filter(!missingKey)
+                            cfg: graft.operators.Quota.QuotaConfig): Unit =
+    processCanonicalBatch(df, batchId, sinkDir, rejectDir, cfg,
+      new KnownSeries(df.sparkSession, indexDir))
+
+  /** Window rows per sink/index write task (see [[commitWindow]]). */
+  private val RowsPerWriteTask = 100000L
+
+  /** The commit chain shared by both entries: quota admission, then the
+    * sink write, the index delta, and the state advance, in that order (an
+    * index delta that landed before its sink batch would make a replay
+    * hwm-drop acked samples).
+    *
+    * `rows` are the window's samples to store, hash-partitioned like the
+    * state (so the index delta needs no shuffle of its own); `candidates`
+    * are the window's samples as decoded, whose distinct shard-key tuples
+    * admission judges ([[graft.operators.Quota.admit]], with a tuple
+    * missing a key label rejected at depth 0). Judging the decoded tuples
+    * rather than the deduped rows gives the same verdicts: a tuple whose
+    * samples all drop on the high-water mark is known, and a known tuple
+    * is admitted either way.
+    *
+    * The rejects dir is written only when something was rejected, and on
+    * the store's first commit: a deployment that never rejects still
+    * gives root readers (`spark.read.parquet(rejectDir)`) an empty frame
+    * with the real schema instead of PATH_NOT_FOUND, and every reader
+    * treats a missing batch dir as an empty one. */
+  private def commitWindow(rows: DataFrame, candidates: DataFrame, batchId: Long,
+                           sinkDir: String, rejectDir: String,
+                           cfg: graft.operators.Quota.QuotaConfig,
+                           known: KnownSeries): Unit = {
+    import graft.operators.Quota
+    val spark = rows.sparkSession
     val kCols = cfg.shardKey.indices.map(i => s"__k$i")
-    // reject_depth = 0: shard key incomplete (no depth ever admitted it)
-    val missingRejects = graft.operators.Quota
-      .withShardKey(all.filter(missingKey), cfg)
-      .select(kCols.map(col): _*).distinct()
-      .withColumn("reject_depth", lit(0))
-      .withColumn("quota", lit(null).cast("long"))
-    // known-series set for quota admission: the compact catalog (base +
-    // deltas) when a compaction has run, else the full index fold
-    val existing = seriesCatalog(spark, indexDir).getOrElse(df.limit(0))
-    val verdicts = graft.operators.Quota.admit(existing, df, cfg).persist()
-    val rejected = verdicts.filter(!col("admitted"))
-    // nothing-rejected commits (the sustained-ingest fast path: an
-    // established writer under quota) SKIP the rejects write — an empty
-    // partitioned parquet write still costs a distinct shuffle plus the
-    // committer's mkdir/rename/_SUCCESS I/O per commit, and every reader
-    // treats a missing batch dir exactly as an empty one. The emptiness
-    // probes are limit-1 scans over the already-persisted frames.
-    // EXCEPT the store's very first commit, which always writes: a
-    // deployment that never rejects must still give root readers
-    // (`spark.read.parquet(rejectDir)`) an empty frame with the real
-    // schema instead of PATH_NOT_FOUND (r16 advisor finding) — one empty
-    // seed write does that without guessing the schema driver-side.
-    phase("rejects-write") {
+    val knownKeys = Quota.keyTuples(known.frame, cfg)
+    // one probe: the window's row count (it sizes the writes) and whether
+    // it carries a tuple the state does not know — only such a tuple can
+    // be rejected, so the quota cascade is built and run only then (and
+    // on the store's first commit, which seeds the rejects dir)
+    val (windowRows, rejected) = phase("admit") {
+      val probe = Quota.withShardKey(candidates, cfg)
+        .groupBy(kCols.map(col): _*).agg(count(lit(1)).as("__n"))
+        .join(knownKeys.withColumn("__known", lit(true)), kCols, "left")
+        .agg(coalesce(sum(col("__n")), lit(0L)), count(when(col("__known").isNull, 1)))
+        .head()
       val fs = new org.apache.hadoop.fs.Path(rejectDir)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
       val seeding = !fs.exists(new org.apache.hadoop.fs.Path(rejectDir))
-      if (seeding || !rejected.isEmpty || !all.filter(missingKey).isEmpty)
-        rejected
-          .select(kCols.map(col) :+ col("reject_depth") :+ col("quota"): _*)
-          .unionByName(missingRejects)
-          .write.mode("overwrite")
-          .parquet(s"$rejectDir/batch_id=$batchId")
+      val rejected =
+        if (!seeding && probe.getLong(1) == 0L) None
+        else {
+          val unknown = Quota.keyTuples(candidates, cfg).join(knownKeys, kCols, "left_anti")
+          val r = Quota.admitKeys(knownKeys, unknown, cfg)
+            .filter(!col("admitted"))
+            .select(kCols.map(col) :+ col("reject_depth") :+ col("quota"): _*)
+            .persist()
+          val any = !r.isEmpty
+          if (seeding || any) r.write.mode("overwrite").parquet(s"$rejectDir/batch_id=$batchId")
+          if (any) Some(r) else { r.unpersist(); None }
+        }
+      (probe.getLong(0), rejected)
     }
-    // persisted: the sink write and the index build below each read the
-    // admitted frame — without the persist the shard-key projection +
-    // reject anti-join run twice per commit
-    val admitted = graft.operators.Quota.withShardKey(df, cfg)
-      .join(rejected.select(kCols.map(col): _*), kCols.toSeq, "left_anti")
-      .drop(kCols: _*)
-      .persist()
-    phase("sink-write") {
-      admitted.write.mode("overwrite").partitionBy("metric")
-        .parquet(s"$sinkDir/batch_id=$batchId")
-    }
-    phase("index-write") {
-      graft.operators.MetadataOps.buildSeriesIndex(
-          admitted.select(col("metric"), col("tags"), col("ts"), col("series_id")))
-        .write.mode("overwrite").partitionBy("metric")
-        .parquet(s"$indexDir/batch_id=$batchId")
-    }
-    admitted.unpersist(); verdicts.unpersist(); all.unpersist()
-    ()
+    // write tasks: every task writes one file per metric it holds, and at
+    // a few thousand rows the per-file cost outweighs the parallelism
+    val writeTasks = math.max(1, math.min(known.partitions,
+      math.ceil(windowRows / RowsPerWriteTask.toDouble).toInt))
+    // persisted: the sink write, the index delta and the state advance
+    // each read it
+    val admitted = (rejected match {
+      case None => rows
+      case Some(r) => Quota.withShardKey(rows, cfg)
+        .filter(kCols.map(col(_).isNotNull).reduce(_ && _))
+        .join(broadcast(r.select(kCols.map(col): _*)), kCols.toSeq, "left_anti")
+        .drop(kCols: _*)
+    }).persist()
+    try {
+      phase("sink-write") {
+        admitted.coalesce(writeTasks).write.mode("overwrite").partitionBy("metric")
+          .parquet(s"$sinkDir/batch_id=$batchId")
+      }
+      val delta = graft.operators.MetadataOps.buildSeriesIndex(
+        admitted.select(col("metric"), col("tags"), col("ts"), col("series_id")))
+      phase("index-write") {
+        delta.coalesce(writeTasks).write.mode("overwrite").partitionBy("metric")
+          .parquet(s"${known.indexDir}/batch_id=$batchId")
+      }
+      phase("state-advance") { known.advance(delta) }
+    } finally { admitted.unpersist(); rejected.foreach(_.unpersist()) }
   }
 
   /** The native-histogram payload columns a remote-write batch may carry
@@ -339,55 +495,6 @@ object Ingest {
                          deltaDirs: Seq[String]): DataFrame =
     spark.read.option("basePath", indexDir).parquet(deltaDirs: _*)
 
-  /** Per-series high-water marks for remote-write dedup: the compacted
-    * `_hwm` base table when one exists (one row per series — written by
-    * [[compactHwm]]), merged with only the index DELTA segments newer
-    * than the base. Without a base this folds the whole index (the
-    * pre-compaction behavior). Keeps the per-POST cost independent of
-    * total index size: the base read is one compact table scan and the
-    * delta list only grows until the next compaction (the round-9 judge
-    * flagged the full per-POST `indexDir` fold as the scale-weak spot). */
-  def seriesHwm(spark: SparkSession, indexDir: String): Option[DataFrame] =
-    hwmLayout(spark, indexDir).flatMap {
-      case (None, _) =>
-        scala.util.Try(spark.read.parquet(indexDir)).toOption
-          .map(_.groupBy(col("series_id")).agg(max(col("end_ts")).as("__hwm")))
-      case (Some(basePath), deltaDirs) =>
-        val base = spark.read.parquet(basePath)
-          .select(col("series_id"), col("__hwm"))
-        val merged =
-          if (deltaDirs.isEmpty) base
-          else base.unionByName(
-            readDeltas(spark, indexDir, deltaDirs)
-              .select(col("series_id"), col("end_ts").as("__hwm")))
-            .groupBy(col("series_id")).agg(max(col("__hwm")).as("__hwm"))
-        Some(merged)
-    }
-
-  /** The known-series CATALOG for quota admission — (metric, tags) of
-    * every series the index has seen. Served from the compacted base +
-    * deltas like [[seriesHwm]] (the full-index fold that remained on the
-    * quota path was the same growing per-batch term the r9 judge flagged
-    * for dedup). Duplicate (metric, tags) rows across base and deltas are
-    * fine: [[graft.operators.Quota.admit]] key-tuple-distincts its
-    * `existing` input. Bases written before r10 lack the metric/tags
-    * columns — fall back to the full index read until the next
-    * compaction rewrites the base. */
-  def seriesCatalog(spark: SparkSession, indexDir: String): Option[DataFrame] =
-    hwmLayout(spark, indexDir).flatMap {
-      case (Some(basePath), deltaDirs) =>
-        val base = spark.read.parquet(basePath)
-        if (base.columns.contains("metric")) {
-          val b = base.select(col("metric"), col("tags"))
-          Some(
-            if (deltaDirs.isEmpty) b
-            else b.unionByName(readDeltas(spark, indexDir, deltaDirs)
-              .select(col("metric"), col("tags"))))
-        } else scala.util.Try(spark.read.parquet(indexDir)).toOption
-      case (None, _) =>
-        scala.util.Try(spark.read.parquet(indexDir)).toOption
-    }
-
   /** Fold the series index into a compact per-series high-water-mark base
     * at `_hwm/upto=<maxBatchId>` (one row per series), published atomically
     * via hidden-tmp + rename ([[publishBase]]) so a crash can never leave
@@ -402,11 +509,9 @@ object Ingest {
       .flatMap(_.stripPrefix("batch_id=").toLongOption)
     if (batchIds.isEmpty) return
     val upto = batchIds.max
-    // one row per series with its identity: the base doubles as the
-    // known-series CATALOG for quota admission ([[seriesCatalog]]), so
-    // neither the dedup nor the quota path re-folds the whole index per
-    // batch (metric/tags are functionally dependent on series_id — the
-    // grouping cardinality is unchanged)
+    // one row per series with its identity: the base is what a
+    // [[KnownSeries]] load starts from (metric/tags are functionally
+    // dependent on series_id — the grouping cardinality is unchanged)
     val folded = spark.read.parquet(indexDir)
       .groupBy(col("series_id"), col("metric"), col("tags"))
       .agg(max(col("end_ts")).as("__hwm"))
@@ -416,26 +521,28 @@ object Ingest {
   /** One HTTP remote-write batch (`/api/v1/write`, reference gateway
     * ingest semantics): canonical (metric, tags, ts, value[, exp_*]) rows
     * → out-of-order/duplicate drop → native-histogram cumulative→delta
-    * conversion → the standard quota/sink/index commit
-    * ([[processCanonicalBatch]]).
+    * conversion → the quota/sink/index commit ([[commitWindow]]).
     *
     * The streaming path's per-series high-water mark lives in stream
-    * state; an HTTP batch recovers the SAME semantics from data at rest:
+    * state; an HTTP batch recovers the SAME semantics from the held
+    * known-series state (`known`, [[KnownSeries]]):
     *  - in-batch: equal-ts duplicates keep the least (value, payload)
     *    row — exactly what the stateful drop admits when a batch carries
     *    them together;
-    *  - cross-batch: the series index's `end_ts` IS the persisted
-    *    high-water mark, served from the compacted `_hwm` base + index
-    *    deltas ([[seriesHwm]]) — samples at or below it drop, so a
+    *  - cross-batch: a series' `hwm` (its indexed `end_ts`) is the
+    *    persisted high-water mark — samples at or below it drop, so a
     *    re-POST of already-written data is a no-op and regressing writers
-    *    cannot interleave stale points under queries. The join is
-    *    index-scale (one row per series), never sample-scale. */
+    *    cannot interleave stale points under queries.
+    * The window shuffles once, by `series_id` into the state's
+    * partitioning: the dedup, the hwm join, the exp conversion and the
+    * index delta all run on that one partitioning, and the state side of
+    * the join is never shuffled. */
   def remoteWriteBatch(canonical: DataFrame, batchId: Long, sinkDir: String,
-                       indexDir: String, rejectDir: String,
-                       cfg: graft.operators.Quota.QuotaConfig): Unit = {
-    val spark = canonical.sparkSession
+                       rejectDir: String, cfg: graft.operators.Quota.QuotaConfig,
+                       known: KnownSeries): Unit = known.guard {
     val hasExp = canonical.columns.contains("exp_counts")
     val withId = canonical.withColumn("series_id", SeriesKey.id(col("metric"), col("tags")))
+      .repartition(known.partitions, col("series_id"))
     // in-batch equal-ts dedup: least (value, exp payload) per (series, ts)
     // — min over a struct keeps the plain path's min-value contract and
     // picks deterministically for histogram rows (value is null there,
@@ -455,18 +562,27 @@ object Ingest {
     val inBatch = if (payload == Seq("value")) grouped.agg(min(col("value")).as("value"))
       else grouped.agg(min(struct(payload.map(col): _*)).as("__p"))
         .select(keys ++ payload.map(c => col(s"__p.$c").as(c)): _*)
-    val fresh = seriesHwm(spark, indexDir) match {
-      case None => inBatch
-      case Some(hwm) =>
-        inBatch.join(hwm, Seq("series_id"), "left")
-          .filter(col("__hwm").isNull || col("ts") > col("__hwm"))
-          .drop("__hwm")
-    }
+    // shuffle_hash: the state is co-partitioned with the window, so the
+    // join builds from its partitions in place — a broadcast would
+    // collect the whole state to the driver every commit
+    val fresh = inBatch
+      .join(known.frame.select(col("series_id"), col("hwm")).hint("shuffle_hash"),
+        Seq("series_id"), "left")
+      .filter(col("hwm").isNull || col("ts") > col("hwm"))
+      .drop("hwm")
     val converted =
       if (!hasExp) fresh
-      else expCumulativeToDelta(fresh, batchId, s"$indexDir/_exp_state")
-    processCanonicalBatch(converted, batchId, sinkDir, indexDir, rejectDir, cfg)
+      else expCumulativeToDelta(fresh, batchId, s"${known.indexDir}/_exp_state")
+    commitWindow(converted, canonical, batchId, sinkDir, rejectDir, cfg, known)
   }
+
+  /** [[remoteWriteBatch]] for a caller that holds no state: it loads one
+    * from the committed index. */
+  def remoteWriteBatch(canonical: DataFrame, batchId: Long, sinkDir: String,
+                       indexDir: String, rejectDir: String,
+                       cfg: graft.operators.Quota.QuotaConfig): Unit =
+    remoteWriteBatch(canonical, batchId, sinkDir, rejectDir, cfg,
+      new KnownSeries(canonical.sparkSession, indexDir))
 
   /** Prometheus NATIVE histograms arrive over remote-write as CUMULATIVE
     * counters (each sample carries total bucket counts since the series

@@ -16,7 +16,8 @@ import graft.operators.Quota
   * the HTTP server, then drive K remote-write POSTs of `seriesPerPost`
   * existing series each (advancing timestamps — the steady scrape shape)
   * and report per-POST wall time. A flat line across decades of N is the
-  * measured contract that [[Ingest.seriesHwm]]'s compacted base keeps
+  * measured contract that the server's held known-series state
+  * ([[Ingest.KnownSeries]], loaded once from the compacted base) keeps
   * per-POST cost independent of index size; the pre-r10 per-POST full
   * index fold grew with N.
   *
@@ -63,7 +64,8 @@ object RemoteWriteRehearsal {
         map(lit("i"), col("id").cast("string")).as("tags"),
         lit(1000L).as("ts"), col("id").cast("double").as("value"))
       .withColumn("series_id", graft.model.SeriesKey.id(col("metric"), col("tags")))
-    Ingest.processCanonicalBatch(canonical, 0L, sink, index, reject, cfg)
+    Ingest.processCanonicalBatch(canonical, 0L, sink, reject, cfg,
+      new Ingest.KnownSeries(spark, index))
     Ingest.compactHwm(spark, index)
     (sink, index, reject, (System.nanoTime() - t0) / 1e9)
   }

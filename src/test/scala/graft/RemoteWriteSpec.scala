@@ -283,8 +283,8 @@ class RemoteWriteSpec extends AnyFunSuite with Matchers {
       val full = spark.read.parquet(s"$dir/index")
         .groupBy(col("series_id")).agg(max(col("end_ts")).as("__hwm"))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val merged = Ingest.seriesHwm(spark, s"$dir/index").get
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      val merged = new Ingest.KnownSeries(spark, s"$dir/index").frame
+        .select("series_id", "hwm").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       merged shouldEqual full
       // stale and duplicate samples still drop after compaction
       post("a", 1500L, 9.0); post("a", 2000L, 9.0)
@@ -348,16 +348,16 @@ class RemoteWriteSpec extends AnyFunSuite with Matchers {
       Ingest.compactHwm(spark, s"$dir/index") // base at upto=0
       post(2000L, 2.0); post(3000L, 3.0)      // TWO delta dirs past the base
       // reading the merged hwm must survive several explicit batch_id= dirs
-      val hwm = Ingest.seriesHwm(spark, s"$dir/index").get
-        .collect().map(r => r.getLong(1)).toList
+      val hwm = new Ingest.KnownSeries(spark, s"$dir/index").frame
+        .select("series_id", "hwm").collect().map(r => r.getLong(1)).toList
       hwm shouldEqual List(3000L)
       // and the next POST still stale-drops through it
       post(2500L, 9.0)
       spark.read.parquet(s"$dir/sink").select("ts").collect()
         .map(_.getLong(0)).toSet shouldEqual Set(1000L, 2000L, 3000L)
-      // the compact catalog (base + deltas) carries the same known-series
+      // the loaded state (base + deltas) carries the same known-series
       // identities as the full index fold (quota admission reads it)
-      val catalog = Ingest.seriesCatalog(spark, s"$dir/index").get
+      val catalog = new Ingest.KnownSeries(spark, s"$dir/index").frame
         .select("metric").distinct().collect().map(_.getString(0)).toList
       catalog shouldEqual List("m")
     } finally api.stop()
@@ -1088,6 +1088,38 @@ class RemoteWriteSpec extends AnyFunSuite with Matchers {
     rejects(nhcb(1000L, Seq(2.0), Seq(5.0, 1.0)), "strictly increasing")
     // bucket indexes past the bounds list (+1 overflow)
     rejects(nhcb(1000L, Seq(1.0, 1.0, 1.0), Seq(1.0), posOffset = 0), "exceed")
+  }
+
+  test("a sync POST carrying one malformed NHCB series among good ones " +
+       "answers 400 naming that series, on v1 and v2") {
+    val dir = tmp("graft-badseries")
+    val ws = PromApi.WriteSink(s"$dir/sink", s"$dir/index", s"$dir/reject", cfg)
+    val api = new PromApi(spark, spark.range(0).toDF(), writeSink = Some(ws)).start()
+    val url = s"http://localhost:${api.boundPort}/api/v1/write"
+    try {
+      val series = Seq(
+        ProtoWire.PSeries(Seq("__name__" -> "good_a"), Seq(ProtoWire.PSample(1.0, 1000L))),
+        // bucket indexes [0, 3) overrun the 1-bound list (+1 overflow)
+        ProtoWire.PSeries(Seq("__name__" -> "bad_nhcb", "job" -> "j"), Nil,
+          histograms = Seq(nhcb(1000L, Seq(1.0, 1.0, 1.0), Seq(1.0), posOffset = 0))),
+        ProtoWire.PSeries(Seq("__name__" -> "good_b"), Seq(ProtoWire.PSample(2.0, 1000L))))
+      val v1 = java.net.http.HttpClient.newHttpClient().send(
+        java.net.http.HttpRequest.newBuilder(java.net.URI.create(url))
+          .header("Content-Type", "application/x-protobuf")
+          .header("Content-Encoding", "snappy")
+          .POST(java.net.http.HttpRequest.BodyPublishers.ofByteArray(
+            org.xerial.snappy.Snappy.compress(ProtoWire.encodeWriteRequest(series)))).build(),
+        java.net.http.HttpResponse.BodyHandlers.ofString())
+      val v2 = postV2(url, ProtoWire.encodeWriteRequestV2(series))
+      Seq(v1, v2).foreach { r =>
+        r.statusCode() shouldEqual 400
+        r.body() should include("malformed series bad_nhcb: ")
+        r.body() should include("exceed")
+      }
+      // the whole payload is refused: its good series did not land either
+      Option(new java.io.File(s"$dir/sink").list()).toSeq.flatten
+        .filter(_.startsWith("batch_id=")) shouldBe empty
+    } finally api.stop()
   }
 
   test("NHCB ingest end-to-end: custom buckets land as classic cumulative " +
