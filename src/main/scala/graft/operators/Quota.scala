@@ -83,13 +83,9 @@ object Quota {
     * tuple: (__k0.., admitted, reject_depth, quota) — `reject_depth` is
     * the shallowest depth whose quota the tuple breached (null when
     * admitted; tuples already present in `existing` are admitted by
-    * definition). A tuple missing a key label (a null value — gateway tag
-    * maps are open-ended) is rejected at depth 0 with a null quota: it
-    * can never equality-join the cascade, so letting it through would
-    * bypass enforcement and burn a slot of a real child (nulls rank
-    * first). Feed `existing` the known series (index or held state rows);
-    * feed `incoming` the batch's samples or buildSeriesIndex frame — only
-    * (metric, tags) are read.
+    * definition). Feed `existing` the known series (index or held state
+    * rows); feed `incoming` the batch's buildSeriesIndex frame (or raw
+    * samples — only (metric, tags) are read).
     *
     * Deliberately LAZY, with no internal caching: the cascade references
     * the key-tuple frames at every depth, but within the caller's single
@@ -101,12 +97,10 @@ object Quota {
     admitKeys(keyTuples(existing, cfg), keyTuples(incoming, cfg), cfg)
 
   /** [[admit]] over frames already projected by [[keyTuples]]. */
-  private[graft] def admitKeys(exKeys: DataFrame, allKeys: DataFrame,
+  private[graft] def admitKeys(exKeys: DataFrame, inKeys: DataFrame,
                                cfg: QuotaConfig): DataFrame = {
     val L = cfg.shardKey.length
     val kCols = (0 until L).map(i => s"__k$i")
-    val complete = kCols.map(col(_).isNotNull).reduce(_ && _)
-    val inKeys = allKeys.filter(complete)
     // genuinely-new series: quotas only gate CREATION of children
     var surviving = inKeys.join(exKeys, kCols, "left_anti")
     var rejects: Option[DataFrame] = None
@@ -143,8 +137,8 @@ object Quota {
         if (ovr.isEmpty || pc.isEmpty)
           counted.withColumn("__q", lit(cfg.defaultChildrenQuota(d - 1)))
         else {
-          val ovrDf = allKeys.sparkSession.createDataFrame(
-            allKeys.sparkSession.sparkContext.parallelize(
+          val ovrDf = inKeys.sparkSession.createDataFrame(
+            inKeys.sparkSession.sparkContext.parallelize(
               ovr.map(o => org.apache.spark.sql.Row.fromSeq(o._1 :+ o._2))),
             org.apache.spark.sql.types.StructType.fromDDL(
               pc.map(c => s"$c STRING").mkString(", ") + ", __oq LONG"))
@@ -162,12 +156,8 @@ object Quota {
       rejects = Some(rejects.map(_.unionByName(rejSeries)).getOrElse(rejSeries))
       surviving = surviving.join(rejCh, pc :+ cc, "left_anti")
     }
-    val incomplete = allKeys.filter(!complete)
-      .withColumn("reject_depth", lit(0))
-      .withColumn("quota", lit(null).cast("long"))
     inKeys
       .join(rejects.get, kCols, "left")
-      .unionByName(incomplete)
       .withColumn("admitted", col("reject_depth").isNull)
       .select(kCols.map(col) :+ col("admitted") :+ col("reject_depth") :+ col("quota"): _*)
   }

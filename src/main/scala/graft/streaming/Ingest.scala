@@ -215,9 +215,13 @@ object Ingest {
     *  - loaded once, at the first [[frame]] call, from the committed index
     *    (`_hwm` base plus newer deltas, read with the index schema);
     *  - advanced by every commit's index delta ([[advance]]); each advance
-    *    folds the delta in without shuffling the held side and cuts the
-    *    lineage (local checkpoint), so the plan a commit joins against
-    *    does not grow with the number of commits;
+    *    folds the delta in behind a local checkpoint that keeps the
+    *    series_id partitioning
+    *    ([[org.apache.spark.sql.graft.HashPartitionedCheckpoint]]), so the
+    *    plan a commit joins against does not grow with the number of
+    *    commits, and neither a commit's hwm join nor the next fold
+    *    shuffles the held rows. The next commit's first job computes the
+    *    fold as it reads the state, so an advance runs no job of its own;
     *  - dropped when a commit against it fails ([[guard]]), so the next
     *    commit reloads it from the files instead of trusting a state that
     *    may have missed a delta or lost its blocks.
@@ -231,22 +235,28 @@ object Ingest {
       * the window side. */
     val partitions: Int = spark.conf.get("spark.sql.shuffle.partitions").toInt
     private var held: DataFrame = null
+    /** What `held` is computed from until a job has read it: the state it
+      * replaced and the delta it folded. */
+    private var sources: Seq[DataFrame] = Nil
 
     /** The state, loaded from the committed index on first use. */
     def frame: DataFrame = synchronized {
       if (held == null) hold(fold(committedSeries(spark, indexDir).getOrElse(
         spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
           org.apache.spark.sql.types.StructType.fromDDL(
-            "series_id BIGINT, metric STRING, tags MAP<STRING, STRING>, hwm BIGINT")))))
+            "series_id BIGINT, metric STRING, tags MAP<STRING, STRING>, hwm BIGINT")))), Nil)
       held
     }
 
     /** Fold one commit's index delta (buildSeriesIndex rows) into the
-      * state. A delta already folded in (a replayed window) changes
-      * nothing. */
+      * state, taking the delta over (it is freed with the state it
+      * feeds). A delta already folded in (a replayed window) changes
+      * nothing. The fold is computed by the next job that reads the
+      * state — the next commit's hwm join — not here. */
     def advance(delta: DataFrame): Unit = synchronized {
-      hold(fold(frame.unionByName(delta.select(col("series_id"), col("metric"),
-        col("tags"), col("end_ts").as("hwm")))))
+      val prev = frame
+      hold(fold(prev.unionByName(delta.select(col("series_id"), col("metric"),
+        col("tags"), col("end_ts").as("hwm")))), Seq(prev, delta))
     }
 
     /** Run one commit against the state; if it fails, drop the state. */
@@ -255,8 +265,9 @@ object Ingest {
 
     /** Drop the held state; the next [[frame]] reloads it. */
     def invalidate(): Unit = synchronized {
-      if (held != null) release(held)
+      (Option(held) ++ sources).foreach(releaseCheckpoint)
       held = null
+      sources = Nil
     }
 
     /** One row per series. The identity columns group beside
@@ -270,18 +281,35 @@ object Ingest {
         .groupBy(col("series_id"), col("metric"), col("tags"))
         .agg(max(col("hwm")).as("hwm"))
 
-    private def hold(next: DataFrame): Unit = {
-      val cut = next.localCheckpoint(eager = true)
-      if (held != null) release(held)
-      held = cut
+    /** Replace the state by `next`, computed from `from`. The state it
+      * replaces must be computed (a commit's join normally has) before
+      * that state's own sources are freed. */
+    private def hold(next: DataFrame, from: Seq[DataFrame]): Unit = {
+      if (held != null) {
+        checkpointed(held).filterNot(_.isCheckpointed).foreach(_.count())
+        sources.foreach(releaseCheckpoint)
+      }
+      held = org.apache.spark.sql.graft.HashPartitionedCheckpoint(
+        next, "series_id", partitions, eager = false)
+      sources = from
     }
 
-    /** Free the checkpointed blocks of a state frame. */
-    private def release(df: DataFrame): Unit =
-      df.queryExecution.logical.collectFirst {
-        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
-      }.foreach(_.unpersist(blocking = false))
+    /** `df`, hash-partitioned like the state, cut to a leaf in executor
+      * memory that keeps that partitioning: joins and folds against it
+      * shuffle neither side. */
+    private[streaming] def checkpoint(df: DataFrame): DataFrame =
+      org.apache.spark.sql.graft.HashPartitionedCheckpoint(df, "series_id", partitions, eager = true)
   }
+
+  /** The RDD a checkpointed frame reads (none for any other frame). */
+  private def checkpointed(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
+    df.queryExecution.logical.collectFirst {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
+    }
+
+  /** Free the blocks of a checkpointed frame (none for any other). */
+  private def releaseCheckpoint(df: DataFrame): Unit =
+    checkpointed(df).foreach(_.unpersist(blocking = false))
 
   /** The stream commit of [[startCanonicalIngestWithQuota]] (its
     * `foreachBatch` body) over ALREADY-DEDUPED canonical rows: the quota/
@@ -291,24 +319,26 @@ object Ingest {
   def processCanonicalBatch(df: DataFrame, batchId: Long, sinkDir: String,
                             rejectDir: String, cfg: graft.operators.Quota.QuotaConfig,
                             known: KnownSeries): Unit = known.guard {
-    // persisted: admission and the writes both read the batch, which a
-    // streaming query would otherwise recompute, stateful drop included
-    val batch = df.persist()
-    try commitWindow(batch.repartition(known.partitions, col("series_id")), batch,
+    commitWindow(withHwm(df.repartition(known.partitions, col("series_id")), known),
       batchId, sinkDir, rejectDir, cfg, known)
-    finally { batch.unpersist(); () }
   }
 
-  /** [[processCanonicalBatch]] for a caller that holds no state: it loads
-    * one from the committed index. */
-  def processCanonicalBatch(df: DataFrame, batchId: Long, sinkDir: String,
-                            indexDir: String, rejectDir: String,
-                            cfg: graft.operators.Quota.QuotaConfig): Unit =
-    processCanonicalBatch(df, batchId, sinkDir, rejectDir, cfg,
-      new KnownSeries(df.sparkSession, indexDir))
+  /** `rows` (hash-partitioned like the state) with their series' `hwm` in
+    * the state, null for a series the state does not hold. shuffle_hash:
+    * the state is co-partitioned with the rows, so the join builds from
+    * its partitions in place — a broadcast would collect the whole state
+    * to the driver every commit. */
+  private def withHwm(rows: DataFrame, known: KnownSeries): DataFrame =
+    rows.join(known.frame.select(col("series_id"), col("hwm")).hint("shuffle_hash"),
+      Seq("series_id"), "left")
 
-  /** Window rows per sink/index write task (see [[commitWindow]]). */
-  private val RowsPerWriteTask = 100000L
+  /** Write `rows` as one `batch_id=` dir of a metric-partitioned table,
+    * gathered by metric into `n` write tasks first: each metric's rows go
+    * to one task, so a window writes one file per metric rather than one
+    * per metric and row partition. A window of few metrics writes on as
+    * many tasks. */
+  private def writeByMetric(rows: DataFrame, dir: String, n: Int): Unit =
+    rows.repartition(n, col("metric")).write.mode("overwrite").partitionBy("metric").parquet(dir)
 
   /** The commit chain shared by both entries: quota admission, then the
     * sink write, the index delta, and the state advance, in that order (an
@@ -316,80 +346,83 @@ object Ingest {
     * hwm-drop acked samples).
     *
     * `rows` are the window's samples to store, hash-partitioned like the
-    * state (so the index delta needs no shuffle of its own); `candidates`
-    * are the window's samples as decoded, whose distinct shard-key tuples
-    * admission judges ([[graft.operators.Quota.admit]], with a tuple
-    * missing a key label rejected at depth 0). Judging the decoded tuples
-    * rather than the deduped rows gives the same verdicts: a tuple whose
-    * samples all drop on the high-water mark is known, and a known tuple
-    * is admitted either way.
+    * state (so the index delta needs no shuffle of its own), each with its
+    * series' `hwm` from [[withHwm]]. Admission judges only what can be
+    * rejected. A held series' tuple is known, and a known tuple is
+    * admitted either way, so only the window's tuples that no held series
+    * in it carries go through the [[graft.operators.Quota.admit]] cascade
+    * against the state's tuples; a tuple missing a key label (a null
+    * value — gateway tag maps are open-ended) is rejected at depth 0,
+    * since it can never equality-join the cascade. A window whose every
+    * tuple rides on a held series (an established writer under quota)
+    * runs no cascade and reads no state beyond its hwm join. These are
+    * the verdicts `Quota.admit(index, rows)` gives.
+    *
+    * Both writes gather their rows by metric ([[writeByMetric]]).
     *
     * The rejects dir is written only when something was rejected, and on
     * the store's first commit: a deployment that never rejects still
     * gives root readers (`spark.read.parquet(rejectDir)`) an empty frame
     * with the real schema instead of PATH_NOT_FOUND, and every reader
     * treats a missing batch dir as an empty one. */
-  private def commitWindow(rows: DataFrame, candidates: DataFrame, batchId: Long,
-                           sinkDir: String, rejectDir: String,
-                           cfg: graft.operators.Quota.QuotaConfig,
+  private def commitWindow(rows: DataFrame, batchId: Long, sinkDir: String,
+                           rejectDir: String, cfg: graft.operators.Quota.QuotaConfig,
                            known: KnownSeries): Unit = {
     import graft.operators.Quota
     val spark = rows.sparkSession
     val kCols = cfg.shardKey.indices.map(i => s"__k$i")
-    val knownKeys = Quota.keyTuples(known.frame, cfg)
-    // one probe: the window's row count (it sizes the writes) and whether
-    // it carries a tuple the state does not know — only such a tuple can
-    // be rejected, so the quota cascade is built and run only then (and
-    // on the store's first commit, which seeds the rejects dir)
-    val (windowRows, rejected) = phase("admit") {
-      val probe = Quota.withShardKey(candidates, cfg)
-        .groupBy(kCols.map(col): _*).agg(count(lit(1)).as("__n"))
-        .join(knownKeys.withColumn("__known", lit(true)), kCols, "left")
-        .agg(coalesce(sum(col("__n")), lit(0L)), count(when(col("__known").isNull, 1)))
-        .head()
-      val fs = new org.apache.hadoop.fs.Path(rejectDir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val seeding = !fs.exists(new org.apache.hadoop.fs.Path(rejectDir))
-      val rejected =
-        if (!seeding && probe.getLong(1) == 0L) None
+    val complete = kCols.map(col(_).isNotNull).reduce(_ && _)
+    // persisted: admission's probe fills it, and the writes read it
+    val staged = Quota.withShardKey(rows, cfg).persist()
+    try {
+      val rejected = phase("admit") {
+        val fs = new org.apache.hadoop.fs.Path(rejectDir)
+          .getFileSystem(spark.sparkContext.hadoopConfiguration)
+        val seeding = !fs.exists(new org.apache.hadoop.fs.Path(rejectDir))
+        // only a shard-key tuple that no held series carries, or one
+        // missing a key label, can be rejected: the window's tuples seen
+        // only on series the state does not hold
+        val judged = staged.groupBy(kCols.map(col): _*)
+          .agg(max(col("hwm").isNotNull).as("__held"))
+          .filter(!col("__held") || !complete)
+          .select(kCols.map(col): _*)
+        if (!seeding && judged.isEmpty) None
         else {
-          val unknown = Quota.keyTuples(candidates, cfg).join(knownKeys, kCols, "left_anti")
-          val r = Quota.admitKeys(knownKeys, unknown, cfg)
+          val missing = judged.filter(!complete)
+            .withColumn("reject_depth", lit(0))
+            .withColumn("quota", lit(null).cast("long"))
+          val r = Quota.admitKeys(Quota.keyTuples(known.frame, cfg), judged.filter(complete), cfg)
             .filter(!col("admitted"))
             .select(kCols.map(col) :+ col("reject_depth") :+ col("quota"): _*)
+            .unionByName(missing)
             .persist()
           val any = !r.isEmpty
           if (seeding || any) r.write.mode("overwrite").parquet(s"$rejectDir/batch_id=$batchId")
           if (any) Some(r) else { r.unpersist(); None }
         }
-      (probe.getLong(0), rejected)
-    }
-    // write tasks: every task writes one file per metric it holds, and at
-    // a few thousand rows the per-file cost outweighs the parallelism
-    val writeTasks = math.max(1, math.min(known.partitions,
-      math.ceil(windowRows / RowsPerWriteTask.toDouble).toInt))
-    // persisted: the sink write, the index delta and the state advance
-    // each read it
-    val admitted = (rejected match {
-      case None => rows
-      case Some(r) => Quota.withShardKey(rows, cfg)
-        .filter(kCols.map(col(_).isNotNull).reduce(_ && _))
-        .join(broadcast(r.select(kCols.map(col): _*)), kCols.toSeq, "left_anti")
-        .drop(kCols: _*)
-    }).persist()
-    try {
-      phase("sink-write") {
-        admitted.coalesce(writeTasks).write.mode("overwrite").partitionBy("metric")
-          .parquet(s"$sinkDir/batch_id=$batchId")
       }
-      val delta = graft.operators.MetadataOps.buildSeriesIndex(
-        admitted.select(col("metric"), col("tags"), col("ts"), col("series_id")))
-      phase("index-write") {
-        delta.coalesce(writeTasks).write.mode("overwrite").partitionBy("metric")
-          .parquet(s"${known.indexDir}/batch_id=$batchId")
-      }
+      // the reject set is window-bounded: broadcast, so the rows keep the
+      // state's partitioning
+      val admitted = (rejected match {
+        case None => staged
+        case Some(r) => staged.filter(complete)
+          .join(broadcast(r.select(kCols.map(col): _*)), kCols, "left_anti")
+      }).drop(kCols :+ "hwm": _*)
+      // checkpointed: the index write and the state advance both read it,
+      // and the advance folds two partitioned leaves without a shuffle
+      val delta = known.checkpoint(graft.operators.MetadataOps.buildSeriesIndex(
+        admitted.select(col("metric"), col("tags"), col("ts"), col("series_id"))))
+      try {
+        phase("sink-write") {
+          writeByMetric(admitted, s"$sinkDir/batch_id=$batchId", known.partitions)
+        }
+        phase("index-write") {
+          writeByMetric(delta, s"${known.indexDir}/batch_id=$batchId", known.partitions)
+        }
+      } catch { case e: Throwable => releaseCheckpoint(delta); throw e }
+      finally rejected.foreach(_.unpersist())
       phase("state-advance") { known.advance(delta) }
-    } finally { admitted.unpersist(); rejected.foreach(_.unpersist()) }
+    } finally { staged.unpersist(); () }
   }
 
   /** The native-histogram payload columns a remote-write batch may carry
@@ -562,27 +595,14 @@ object Ingest {
     val inBatch = if (payload == Seq("value")) grouped.agg(min(col("value")).as("value"))
       else grouped.agg(min(struct(payload.map(col): _*)).as("__p"))
         .select(keys ++ payload.map(c => col(s"__p.$c").as(c)): _*)
-    // shuffle_hash: the state is co-partitioned with the window, so the
-    // join builds from its partitions in place — a broadcast would
-    // collect the whole state to the driver every commit
-    val fresh = inBatch
-      .join(known.frame.select(col("series_id"), col("hwm")).hint("shuffle_hash"),
-        Seq("series_id"), "left")
-      .filter(col("hwm").isNull || col("ts") > col("hwm"))
-      .drop("hwm")
+    // cross-batch: samples at or below their series' hwm drop; the hwm
+    // column rides along for admission
+    val fresh = withHwm(inBatch, known).filter(col("hwm").isNull || col("ts") > col("hwm"))
     val converted =
       if (!hasExp) fresh
       else expCumulativeToDelta(fresh, batchId, s"${known.indexDir}/_exp_state")
-    commitWindow(converted, canonical, batchId, sinkDir, rejectDir, cfg, known)
+    commitWindow(converted, batchId, sinkDir, rejectDir, cfg, known)
   }
-
-  /** [[remoteWriteBatch]] for a caller that holds no state: it loads one
-    * from the committed index. */
-  def remoteWriteBatch(canonical: DataFrame, batchId: Long, sinkDir: String,
-                       indexDir: String, rejectDir: String,
-                       cfg: graft.operators.Quota.QuotaConfig): Unit =
-    remoteWriteBatch(canonical, batchId, sinkDir, rejectDir, cfg,
-      new KnownSeries(canonical.sparkSession, indexDir))
 
   /** Prometheus NATIVE histograms arrive over remote-write as CUMULATIVE
     * counters (each sample carries total bucket counts since the series

@@ -513,10 +513,11 @@ class GatewaySpec extends AnyFunSuite with Matchers {
     // through the canonical commit chain + the planner's cutoff
     val dir = java.nio.file.Files.createTempDirectory("graft-stale-gw").toString
     val cfg = graft.operators.Quota.QuotaConfig(Seq("metric"), Seq(1000L))
+    val known = new graft.streaming.Ingest.KnownSeries(spark, s"$dir/index")
     graft.streaming.Ingest.processCanonicalBatch(
-      last.drop("kind"), 0L, s"$dir/sink", s"$dir/index", s"$dir/reject", cfg)
+      last.drop("kind"), 0L, s"$dir/sink", s"$dir/reject", cfg, known)
     graft.streaming.Ingest.processCanonicalBatch(
-      markers, 1L, s"$dir/sink", s"$dir/index", s"$dir/reject", cfg)
+      markers, 1L, s"$dir/sink", s"$dir/reject", cfg, known)
     val sunk = spark.read.option("mergeSchema", "true").parquet(s"$dir/sink")
     def names(at: Long): Set[String] =
       PromPlanner.queryRange(

@@ -50,10 +50,10 @@ class KnownSeriesSpec extends AnyFunSuite with Matchers {
 
   test("a drain window's Spark footprint: every job runs inside a SQL " +
        "execution that scans no index file, a fixed execution count per " +
-       "window, an index delta with no Exchange of its own, and a state " +
-       "whose plan stops growing") {
+       "window, an index delta that shuffles only to gather by metric, a state no " +
+       "execution shuffles, and a state whose plan stops growing") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, RDDScanExec, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
     import org.apache.spark.sql.util.QueryExecutionListener
@@ -63,17 +63,28 @@ class KnownSeriesSpec extends AnyFunSuite with Matchers {
     val api = server(dir, spool = true)
     val helper = new AdaptiveSparkPlanHelper {}
     def exchanges(p: SparkPlan): Int = helper.collect(p) { case e: ShuffleExchangeLike => e }.size
+    // the RDDs of the held states the windows commit against
+    val stateRdds = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    def stateRdd: Int = api.knownSeries.get.frame.queryExecution.logical.collectFirst {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+    }.get
+    def stateShuffles(p: SparkPlan): Int = helper.collect(p) {
+      case e: ShuffleExchangeLike if e.child.exists {
+        case r: RDDScanExec => stateRdds.contains(r.rdd.id)
+        case _ => false
+      } => e
+    }.size
     def indexScans(p: SparkPlan): Seq[String] = helper.collect(p) {
       case s: FileSourceScanExec => s.relation.location.rootPaths.map(_.toUri.getPath)
     }.flatten.filter(_.startsWith(index))
-    // (plan text, exchanges, index scans) per SQL execution and (job
-    // group, in a SQL execution, description) per job
-    val execs = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int, Seq[String])]()
+    // (plan text, exchanges, index scans, state shuffles) per SQL
+    // execution and (job group, in a SQL execution, description) per job
+    val execs = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int, Seq[String], Int)]()
     val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, Boolean, String)]()
     val qel = new QueryExecutionListener {
       def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
         execs.add((qe.executedPlan.toString, exchanges(qe.executedPlan),
-          indexScans(qe.executedPlan)))
+          indexScans(qe.executedPlan), stateShuffles(qe.executedPlan)))
       def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
     val jl = new SparkListener {
@@ -110,6 +121,7 @@ class KnownSeriesSpec extends AnyFunSuite with Matchers {
       sc.addSparkListener(jl)
       val perWindow = (2 to 3).map { i =>
         execs.clear()
+        stateRdds.add(stateRdd)
         window(i)
         settle(i)
         execs.asScala.toSeq.filterNot(_._1.contains(s"fp_marker_$i"))
@@ -124,13 +136,18 @@ class KnownSeriesSpec extends AnyFunSuite with Matchers {
       windowJobs.filter(_._3.contains(index)) shouldBe empty
       perWindow.foreach { w =>
         w.flatMap(_._3) shouldBe empty // no execution scans an index file
+        w.map(_._4).sum shouldEqual 0 // nor shuffles the held state
         val indexWrite = w.filter(_._1.contains(s"$index/batch_id="))
         indexWrite should have size 1
-        indexWrite.head._2 shouldEqual 0
+        // the delta (one row per series) computes on the window's series_id
+        // partitioning; its one exchange gathers it by metric for the write
+        indexWrite.head._2 shouldEqual 1
+        indexWrite.head._1 should include ("hashpartitioning(metric")
       }
-      // window flags, the admission probe, sink write, index write, state
-      // advance; a window carrying a new series adds the quota cascade
-      perWindow.map(_.size) shouldEqual Seq(5, 6)
+      // window flags, the admission probe, sink write, index delta, index
+      // write, state advance; a window carrying a new series adds the
+      // quota cascade
+      perWindow.map(_.size) shouldEqual Seq(6, 7)
       val (afterTwo, cachedAfterTwo) = (planSize, sc.getPersistentRDDs.size)
       (4 to 10).foreach(window)
       planSize shouldEqual afterTwo

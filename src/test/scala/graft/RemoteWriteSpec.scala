@@ -107,28 +107,29 @@ class RemoteWriteSpec extends AnyFunSuite with Matchers {
        "gauge passthrough") {
     val dir = tmp("graft-c2d")
     val (sink, index, reject) = (s"$dir/sink", s"$dir/index", s"$dir/reject")
+    val known = new Ingest.KnownSeries(spark, index)
     // batch 0: first two cumulative samples (in-batch lag)
     Ingest.remoteWriteBatch(canonicalHist(Seq(
       "m" -> hist(1000L, Seq(2.0, 1.0), zeroCount = 1.0, zt = 0.5),
       "m" -> hist(2000L, Seq(3.0, 1.0), zeroCount = 1.0, zt = 0.5))),
-      0L, sink, index, reject, cfg)
+      0L, sink, reject, cfg, known)
     // batch 1: layout grows one bucket left and one right (posOffset 0 vs
     // 1) — prev counts align by ABSOLUTE index; seeds from batch 0 state
     Ingest.remoteWriteBatch(canonicalHist(Seq(
       "m" -> hist(3000L, Seq(1.0, 4.0, 2.0, 1.0), posOffset = 0,
         zeroCount = 2.0, zt = 0.5))),
-      1L, sink, index, reject, cfg)
+      1L, sink, reject, cfg, known)
     // batch 2: a bucket decreases (counter reset → absolute), then a
     // scale change (→ absolute again)
     Ingest.remoteWriteBatch(canonicalHist(Seq(
       "m" -> hist(4000L, Seq(1.0, 0.0, 0.0, 0.0), posOffset = 0),
       "m" -> hist(5000L, Seq(2.0), posOffset = 4, schema = 1))),
-      2L, sink, index, reject, cfg)
+      2L, sink, reject, cfg, known)
     // gauge histograms store as-is (already per-sample distributions)
     Ingest.remoteWriteBatch(canonicalHist(Seq(
       "g" -> hist(1000L, Seq(5.0, 5.0), resetHint = 3),
       "g" -> hist(2000L, Seq(7.0, 1.0), resetHint = 3))),
-      3L, sink, index, reject, cfg)
+      3L, sink, reject, cfg, known)
 
     sunkHists(sink, "m") shouldEqual List(
       (1000L, 0, 0, List(2.0, 1.0), 1.0, "otel_exp_histogram"), // first: absolute
@@ -146,9 +147,10 @@ class RemoteWriteSpec extends AnyFunSuite with Matchers {
        "recomputes identical deltas from the pre-crash state version") {
     val dir = tmp("graft-crash")
     val (sink, index, reject) = (s"$dir/sink", s"$dir/index", s"$dir/reject")
+    val known = new Ingest.KnownSeries(spark, index)
     val stateDir = s"$index/_exp_state"
     Ingest.remoteWriteBatch(canonicalHist(Seq(
-      "m" -> hist(1000L, Seq(3.0, 1.0)))), 0L, sink, index, reject, cfg)
+      "m" -> hist(1000L, Seq(3.0, 1.0)))), 0L, sink, reject, cfg, known)
     // crashed attempt: the conversion ran (state delta persisted) but the
     // sink/index commit never happened
     val crashed = canonicalHist(Seq("m" -> hist(2000L, Seq(5.0, 2.0))))
@@ -160,14 +162,14 @@ class RemoteWriteSpec extends AnyFunSuite with Matchers {
     // batch 0's state — the crashed attempt's own row is not older than
     // the retried sample — so the delta is 5-3/2-1, not 5-5/2-2
     Ingest.remoteWriteBatch(canonicalHist(Seq(
-      "m" -> hist(2000L, Seq(5.0, 2.0)))), 2L, sink, index, reject, cfg)
+      "m" -> hist(2000L, Seq(5.0, 2.0)))), 2L, sink, reject, cfg, known)
     sunkHists(sink, "m") shouldEqual List(
       (1000L, 0, 0, List(3.0, 1.0), 0.0, "otel_exp_histogram"),
       (2000L, 0, 0, List(2.0, 1.0), 0.0, "otel_exp_histogram"))
     // state compaction keeps TWO versions per series (the crash protocol's
     // seed-depth requirement) and drops the rest
     Ingest.remoteWriteBatch(canonicalHist(Seq(
-      "m" -> hist(3000L, Seq(6.0, 2.0)))), 3L, sink, index, reject, cfg)
+      "m" -> hist(3000L, Seq(6.0, 2.0)))), 3L, sink, reject, cfg, known)
     Ingest.compactExpState(spark, stateDir)
     // post-r11 layout: the fold publishes a versioned _base dir and
     // consumes the delta segments
@@ -306,11 +308,12 @@ class RemoteWriteSpec extends AnyFunSuite with Matchers {
        "per-interval scalars from a PromQL string") {
     val dir = tmp("graft-sumfield")
     val (sink, index, reject) = (s"$dir/sink", s"$dir/index", s"$dir/reject")
+    val known = new Ingest.KnownSeries(spark, index)
     Ingest.remoteWriteBatch(canonicalHist(Seq(
       "m" -> hist(1000L, Seq(2.0, 0.0), sumV = 10.0),
       "m" -> hist(2000L, Seq(4.0, 1.0), sumV = 25.0), // delta: 3 obs, sum 15
       "m" -> hist(3000L, Seq(1.0, 0.0), sumV = 4.0))), // count reset → absolute
-      0L, sink, index, reject, cfg)
+      0L, sink, reject, cfg, known)
     val sums = spark.read.parquet(sink).filter(col("metric") === "m")
       .select(col("ts").cast("long"), col("exp_sum")).collect()
       .map(r => (r.getLong(0), r.getDouble(1))).sortBy(_._1).toList
@@ -992,11 +995,12 @@ class RemoteWriteSpec extends AnyFunSuite with Matchers {
        "window), consumes its delta dirs, and the conversion still seeds") {
     val dir = tmp("graft-expbase")
     val (sink, index, reject) = (s"$dir/sink", s"$dir/index", s"$dir/reject")
+    val known = new Ingest.KnownSeries(spark, index)
     val stateDir = s"$index/_exp_state"
     Ingest.remoteWriteBatch(canonicalHist(Seq(
-      "m" -> hist(1000L, Seq(2.0, 0.0)))), 0L, sink, index, reject, cfg)
+      "m" -> hist(1000L, Seq(2.0, 0.0)))), 0L, sink, reject, cfg, known)
     Ingest.remoteWriteBatch(canonicalHist(Seq(
-      "m" -> hist(2000L, Seq(5.0, 1.0)))), 1L, sink, index, reject, cfg)
+      "m" -> hist(2000L, Seq(5.0, 1.0)))), 1L, sink, reject, cfg, known)
     val fs = new org.apache.hadoop.fs.Path(stateDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     // a legacy pre-r11 crash leftover that used to poison every state read
@@ -1007,7 +1011,7 @@ class RemoteWriteSpec extends AnyFunSuite with Matchers {
     names shouldEqual Array("_base") // deltas consumed, legacy tmp cleaned
     // the NEXT batch must seed from the base: delta = 7-5=2, 2-1=1
     Ingest.remoteWriteBatch(canonicalHist(Seq(
-      "m" -> hist(3000L, Seq(7.0, 2.0)))), 2L, sink, index, reject, cfg)
+      "m" -> hist(3000L, Seq(7.0, 2.0)))), 2L, sink, reject, cfg, known)
     sunkHists(sink, "m").map(h => (h._1, h._4)) shouldEqual List(
       (1000L, List(2.0, 0.0)), (2000L, List(3.0, 1.0)), (3000L, List(2.0, 1.0)))
   }

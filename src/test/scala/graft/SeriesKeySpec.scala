@@ -66,8 +66,8 @@ class SeriesKeySpec extends AnyFunSuite with Matchers {
       "cpu,b=back\\\\slash,host=a,q=quo\\\"te,region=eu value=1 1000000000")
       .toDF("line"), 0L))
 
-    Ingest.remoteWriteBatch(samples, 0L, s"$dir/sink", s"$dir/index", s"$dir/reject",
-      Quota.QuotaConfig(Seq("metric"), Seq(1000000L)))
+    Ingest.remoteWriteBatch(samples, 0L, s"$dir/sink", s"$dir/reject",
+      Quota.QuotaConfig(Seq("metric"), Seq(1000000L)), new Ingest.KnownSeries(spark, s"$dir/index"))
     val sink = ids(spark.read.parquet(s"$dir/sink"))
     val index = ids(spark.read.parquet(s"$dir/index"))
 

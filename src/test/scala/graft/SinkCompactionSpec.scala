@@ -72,15 +72,16 @@ class SinkCompactionSpec extends AnyFunSuite with Matchers {
        "newest dirs, marks the fold _COMPACTED, and leaves hwm dedup intact") {
     val dir = tmp("graft-sinkcompact")
     val (sink, index) = (s"$dir/sink", s"$dir/index")
+    val known = new Ingest.KnownSeries(spark, index)
     // 12 commits: 10 plain + an NHCB-typed one (schema superset via
     // mergeSchema) + a final plain one — the fold must carry optional
     // columns through null-padded, exactly as readers see them
     (0 until 10).foreach(i => Ingest.remoteWriteBatch(
       plainBatch(i, 1000L * (i + 1), Seq("m", "n")), i.toLong,
-      sink, index, s"$dir/reject", cfg))
-    Ingest.remoteWriteBatch(nhcbBatch(20000L), 10L, sink, index, s"$dir/reject", cfg)
+      sink, s"$dir/reject", cfg, known))
+    Ingest.remoteWriteBatch(nhcbBatch(20000L), 10L, sink, s"$dir/reject", cfg, known)
     Ingest.remoteWriteBatch(plainBatch(11, 21000L, Seq("m")), 11L,
-      sink, index, s"$dir/reject", cfg)
+      sink, s"$dir/reject", cfg, known)
     val before = snapshot(sink)
     val filesBefore = dataFiles(sink)
     batchDirs(sink) should have size 12
@@ -105,7 +106,7 @@ class SinkCompactionSpec extends AnyFunSuite with Matchers {
     Ingest.compactSink(spark, sink, keepBatches = 2, minBatches = 4) shouldEqual None
     // hwm semantics untouched: a stale re-POST of already-folded data drops
     Ingest.remoteWriteBatch(plainBatch(3, 4000L, Seq("m", "n")), 12L,
-      sink, index, s"$dir/reject", cfg)
+      sink, s"$dir/reject", cfg, known)
     snapshot(sink) shouldEqual before
     // retention still works at batch granularity on the compacted layout
     Ingest.dropSinkOlderThan(spark, sink, 50000L) should contain ("batch_id=9")
@@ -116,15 +117,16 @@ class SinkCompactionSpec extends AnyFunSuite with Matchers {
        "consolidated dir that retention can age out independently") {
     val dir = tmp("graft-sinkcompact2")
     val (sink, index) = (s"$dir/sink", s"$dir/index")
+    val known = new Ingest.KnownSeries(spark, index)
     (0 until 6).foreach(i => Ingest.remoteWriteBatch(
       plainBatch(i, 1000L * (i + 1), Seq("m")), i.toLong,
-      sink, index, s"$dir/reject", cfg))
+      sink, s"$dir/reject", cfg, known))
     Ingest.compactSink(spark, sink, keepBatches = 1, minBatches = 4)
       .map(_._1) shouldEqual Some(5)
     batchDirs(sink) shouldEqual Seq("batch_id=4", "batch_id=5")
     (6 until 11).foreach(i => Ingest.remoteWriteBatch(
       plainBatch(i, 1000L * (i + 1), Seq("m")), i.toLong,
-      sink, index, s"$dir/reject", cfg))
+      sink, s"$dir/reject", cfg, known))
     val before = snapshot(sink)
     // second cycle folds ONLY the non-compacted dirs (5..9; 10 kept):
     // batch_id=4 keeps its _COMPACTED marker and its bytes
@@ -143,9 +145,10 @@ class SinkCompactionSpec extends AnyFunSuite with Matchers {
     import org.apache.hadoop.fs.Path
     val dir = tmp("graft-sinkrepair")
     val (sink, index) = (s"$dir/sink", s"$dir/index")
+    val known = new Ingest.KnownSeries(spark, index)
     (0 until 4).foreach(i => Ingest.remoteWriteBatch(
       plainBatch(i, 1000L * (i + 1), Seq("m")), i.toLong,
-      sink, index, s"$dir/reject", cfg))
+      sink, s"$dir/reject", cfg, known))
     val fs = fsFor(sink)
     val before = snapshot(sink)
     def writeJournal(staging: String, hi: Long, ids: Seq[Long]): Unit = {
@@ -198,9 +201,10 @@ class SinkCompactionSpec extends AnyFunSuite with Matchers {
     import spark.implicits._
     val dir = tmp("graft-sinktomb")
     val (sink, index, admin) = (s"$dir/sink", s"$dir/index", s"$dir/admin")
+    val known = new Ingest.KnownSeries(spark, index)
     (0 until 6).foreach(i => Ingest.remoteWriteBatch(
       plainBatch(i, 1000L * (i + 1), Seq("m", "n")), i.toLong,
-      sink, index, s"$dir/reject", cfg))
+      sink, s"$dir/reject", cfg, known))
     // tombstone metric n over the first half, make it physical
     graft.operators.Tombstones.write(spark, admin, Seq("n"), 0L, 3500L)
     graft.operators.Tombstones.purge(spark, sink, admin) should be > 0
@@ -221,9 +225,10 @@ class SinkCompactionSpec extends AnyFunSuite with Matchers {
     val dir = tmp("graft-sinkboot")
     val ws = graft.http.PromApi.WriteSink(s"$dir/sink", s"$dir/index",
       s"$dir/reject", cfg)
+    val known = new Ingest.KnownSeries(spark, ws.indexDir)
     (0 until 5).foreach(i => Ingest.remoteWriteBatch(
       plainBatch(i, 1000L * (i + 1), Seq("m")), i.toLong,
-      ws.sinkDir, ws.indexDir, ws.rejectDir, cfg))
+      ws.sinkDir, ws.rejectDir, cfg, known))
     val before = snapshot(ws.sinkDir)
     val fs = fsFor(ws.sinkDir)
     // simulate a crashed pre-publish swap (roll-back shape)

@@ -394,6 +394,7 @@ class TsLayoutSpec extends AnyFunSuite with Matchers {
     val dir = Files.createTempDirectory("graft_maint").toFile.getAbsolutePath
     val (sink, index, meta, ex) =
       (s"$dir/sink", s"$dir/index", s"$dir/meta", s"$dir/ex")
+    val known = new Ingest.KnownSeries(spark, index)
     val cfg = graft.operators.Quota.QuotaConfig(Seq("metric"), Seq(1000000L))
     // two committed batches -> index deltas + an exp-state delta to fold
     def canonical(ts: Long, v: Double, c: Seq[Double]) = Seq(
@@ -406,9 +407,9 @@ class TsLayoutSpec extends AnyFunSuite with Matchers {
         "exp_counts", "exp_zero_count", "exp_zero_threshold", "exp_sum",
         "__reset_hint")
     Ingest.remoteWriteBatch(canonical(1000L, 1.0, Seq(2.0, 1.0)), 0L,
-      sink, index, s"$dir/reject", cfg)
+      sink, s"$dir/reject", cfg, known)
     Ingest.remoteWriteBatch(canonical(2000L, 2.0, Seq(4.0, 2.0)), 1L,
-      sink, index, s"$dir/reject", cfg)
+      sink, s"$dir/reject", cfg, known)
     // three metadata versions (the upsert keeps 2; a crashed leftover v=1
     // lingers only if the grace GC never ran — simulate via direct dirs)
     (1 to 3).foreach { v =>
