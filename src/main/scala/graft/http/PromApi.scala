@@ -1843,8 +1843,11 @@ object PromApi {
 
   /** Where `/api/v1/write` commits: the sink/index/reject directory triple
     * plus the quota config of the canonical ingest chain (the same triple
-    * `Ingest.startCanonicalIngestWithQuota` maintains — point a read API's
-    * `samples` at `sinkDir` to query what arrives). */
+    * `Ingest.startIngestWithQuota` maintains — point a read API's
+    * `samples` at `sinkDir` to query what arrives). A stream's triple hands
+    * over to this handler: both mint `SeriesKey.id`, and the handler loads
+    * its hwm from the stream's index, so a sample resent after the stream
+    * stops drops at or below the streamed hwm. */
   case class WriteSink(sinkDir: String, indexDir: String, rejectDir: String,
                        cfg: graft.operators.Quota.QuotaConfig,
                        exemplarDir: Option[String] = None)

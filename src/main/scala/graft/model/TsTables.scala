@@ -9,8 +9,9 @@ import org.apache.spark.sql.functions._
   * row per sample of one series, where a series is identified by a metric
   * name plus a label map, and `series_id` is a stable 64-bit hash of the
   * fully-qualified series (the analogue of the reference part-key hash).
-  * [[SeriesKey]] owns that identity format for every writer; the events
-  * stand-in below keeps its own narrow `xxhash64(metric, user)`.
+  * [[SeriesKey]] owns that identity format for every writer, the events
+  * stream's `Ingest.normalize` included; only the batch oracle fixture
+  * [[eventsAsSamples]] keeps its own narrow `xxhash64(metric, user)`.
   *
   * The driver's `events` parquet is the stand-in stream table
   * (FIXTURES.md §B): metric = event_type, one label `user` = user_id,

@@ -317,8 +317,8 @@ object CorpusLayout {
   // append writes nBuckets new files); after thousands of batches the
   // bucketed probes read thousands of small files per bucket — the same
   // read-amplification the part-key index's LSM deltas accrue, and the
-  // same maintenance answer (tools/CompactIndexJob; reference analogue:
-  // Lucene segment merges / C* compaction). compactIndex folds each index
+  // same maintenance answer (Ingest.compactHwm's base fold; reference
+  // analogue: Lucene segment merges / C* compaction). compactIndex folds each index
   // table to ONE segment per bucket, PRESERVING the catalog bucket spec
   // exactly, so the zero-exchange probe plans are untouched.
 
@@ -332,15 +332,14 @@ object CorpusLayout {
     * write time only, so a probe sees the identical row set before and
     * after — compaction changes file counts, never results.
     *
-    * Crash safety (the CompactIndexJob staged-swap shape, expressed in
-    * catalog operations): the fold writes to `<t>__compact` first — a
+    * Crash safety (a staged swap, expressed in catalog operations): the
+    * fold writes to `<t>__compact` first — a
     * crash before the swap leaves the live table untouched (rerun to
     * retry; the stale staging table is dropped up front). The swap is
     * DROP live + RENAME staging→live: a crash between the two leaves the
     * fully-folded staging table holding every row — recovery = rerun
     * compactIndex (which completes the rename) or rename manually.
-    * Concurrent appenders must be quiesced across the swap, exactly like
-    * the part-key compaction. */
+    * Concurrent appenders must be quiesced across the swap. */
   def compactIndex(spark: SparkSession, table: String): Unit = {
     compactBucketedTable(spark, table,
       _.groupBy(col("fp")).agg(min(col("doc_id")).as("doc_id")))

@@ -11,8 +11,8 @@ import graft.model.SeriesKey
   * write buffers, dropping out-of-order and duplicate samples per series
   * (TimeSeriesPartition.scala:130-190). Here the same semantics are a
   * Structured Streaming pipeline: source → normalize → per-series
-  * out-of-order drop (flatMapGroupsWithState keeping the per-series
-  * high-water mark) → append sink partitioned for pruning.
+  * out-of-order drop ([[dropOutOfOrder]], a stateful group keeping the
+  * per-series high-water mark) → append sink partitioned for pruning.
   *
   * At scale: the stateful drop shuffles by series_id (same movement the
   * reference does by shard routing); state is one Long per live series;
@@ -29,51 +29,58 @@ import graft.model.SeriesKey
   */
 object Ingest {
 
-  case class Sample(series_id: Long, metric: String, user: String, ts: Long, value: Double)
+  /** The one canonical sample row every stream sinks: a metric, its tag
+    * map and `series_id = SeriesKey.id(metric, tags)` — the row shape the
+    * Gateway decoders, remote-write and [[normalize]] all emit. */
+  case class Sample(series_id: Long, metric: String,
+                    tags: Map[String, String], ts: Long, value: Double)
 
   /** Event-stream row shape for sessionPathGrams. */
   case class Ev(user_id: Long, event_id: Long, event_type: String, ts_ms: Long)
 
-  /** Sample plus the event-time column the watermark is defined on. */
-  case class TimedSample(series_id: Long, metric: String, user: String,
-                         ts: Long, value: Double, et: java.sql.Timestamp)
-
-  /** Normalize a raw events-shaped frame (streaming or batch) to samples.
-    * `ts` adapts per source physical type (nanos-as-long vs timestamp),
-    * same contract as [[graft.model.TsTables.tsMillis]]. */
-  def normalize(events: DataFrame): DataFrame =
+  /** Normalize a raw events-shaped frame (streaming or batch) to canonical
+    * samples: metric = event_type, one tag `user` = user_id, and the
+    * series id every other writer mints for that series. `ts` adapts per
+    * source physical type (nanos-as-long vs timestamp), same contract as
+    * [[graft.model.TsTables.tsMillis]]. */
+  def normalize(events: DataFrame): DataFrame = {
+    val tags = map(lit("user"), col("user_id").cast("string"))
     events.select(
+      SeriesKey.id(col("event_type"), tags).as("series_id"),
       col("event_type").as("metric"),
-      col("user_id").cast("string").as("user"),
+      tags.as("tags"),
       graft.model.TsTables.tsMillis(events).as("ts"),
       col("value"))
-      .withColumn("series_id", xxhash64(col("metric"), col("user")))
+  }
 
-  /** Drop out-of-order / duplicate samples per series, keeping the
-    * high-water mark in state — streaming-safe, mirrors reference
-    * ingest-time semantics (`outOfOrderDropped` counters).
+  /** Drop out-of-order / duplicate samples per series over canonical
+    * (series_id, metric, tags, ts, value) rows, keeping the high-water
+    * mark in state — streaming-safe, mirrors reference ingest-time
+    * semantics (`outOfOrderDropped` counters).
     *
     * State is bounded: an event-time timeout tied to the watermark evicts
     * the high-water mark of any series idle for `stateTtlMs` — without it,
     * per-series state grows forever as series churn (the 100 TB killer).
     * Late rows are still judged by the per-series mark, not the watermark,
-    * so drop semantics are unchanged. */
-  def dropOutOfOrder(samples: Dataset[Sample], stateTtlMs: Long = 3600000L,
+    * so drop semantics are unchanged. The watermark column `et` stays in
+    * the plan under the typed view; the rows decode as [[Sample]]. */
+  def dropOutOfOrder(samples: DataFrame, stateTtlMs: Long = 3600000L,
                      lateness: String = "10 minutes"): Dataset[Sample] = {
     import samples.sparkSession.implicits._
-    val timed = samples.withColumn("et", timestamp_millis(col("ts")))
-      .withWatermark("et", lateness).as[TimedSample]
-    timed.groupByKey(_.series_id)
+    samples
+      .select(col("series_id"), col("metric"), col("tags"), col("ts"), col("value"))
+      .withColumn("et", timestamp_millis(col("ts")))
+      .withWatermark("et", lateness).as[Sample]
+      .groupByKey(_.series_id)
       .flatMapGroupsWithState[Long, Sample](OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (_: Long, rows: Iterator[TimedSample], state: GroupState[Long]) =>
+        (_: Long, rows: Iterator[Sample], state: GroupState[Long]) =>
           if (state.hasTimedOut) { state.remove(); Iterator.empty }
           else {
             var hwm = state.getOption.getOrElse(Long.MinValue)
-            val out = rows.toSeq.sortBy(s => (s.ts, s.value)).iterator.flatMap { s =>
-              if (s.ts > hwm) {
-                hwm = s.ts
-                Some(Sample(s.series_id, s.metric, s.user, s.ts, s.value))
-              } else None
+            val out = rows.toSeq.sortBy(s => (s.ts, s.value)).filter { s =>
+              val keep = s.ts > hwm
+              if (keep) hwm = s.ts
+              keep
             }.toVector
             state.update(hwm)
             // evict once the watermark passes hwm + TTL (never set a
@@ -85,74 +92,39 @@ object Ingest {
       }
   }
 
-  /** The CANONICAL sample shape with an arbitrary tag map — what the
-    * Gateway wire decoders emit (influx/prom-text tags are open-ended;
-    * the narrow [[Sample]] shape only represents the metric/user key). */
-  case class CanonicalSample(series_id: Long, metric: String,
-                             tags: Map[String, String], ts: Long, value: Double)
-
-  case class TimedCanonical(series_id: Long, metric: String,
-                                    tags: Map[String, String], ts: Long,
-                                    value: Double, et: java.sql.Timestamp)
-
-  /** [[dropOutOfOrder]] over canonical (series_id, metric, tags, ts,
-    * value) rows — same per-series high-water-mark + TTL-evicted state,
-    * tags carried through untouched. */
-  def dropOutOfOrderCanonical(samples: DataFrame, stateTtlMs: Long = 3600000L,
-                              lateness: String = "10 minutes"): Dataset[CanonicalSample] = {
-    import samples.sparkSession.implicits._
-    val timed = samples
-      .select(col("series_id"), col("metric"), col("tags"), col("ts"), col("value"))
-      .withColumn("et", timestamp_millis(col("ts")))
-      .withWatermark("et", lateness).as[TimedCanonical]
-    timed.groupByKey(_.series_id)
-      .flatMapGroupsWithState[Long, CanonicalSample](OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout) {
-        (_: Long, rows: Iterator[TimedCanonical], state: GroupState[Long]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            var hwm = state.getOption.getOrElse(Long.MinValue)
-            val out = rows.toSeq.sortBy(s => (s.ts, s.value)).iterator.flatMap { s =>
-              if (s.ts > hwm) {
-                hwm = s.ts
-                Some(CanonicalSample(s.series_id, s.metric, s.tags, s.ts, s.value))
-              } else None
-            }.toVector
-            state.update(hwm)
-            state.setTimeoutTimestamp(
-              math.max(hwm + stateTtlMs, state.getCurrentWatermarkMs() + 1))
-            out.iterator
-          }
-      }
-  }
-
-  /** [[startIngestWithQuota]] for CANONICAL (series_id, metric, tags, ts,
-    * value) streams — the entry the Gateway decoders feed DIRECTLY:
-    * arbitrary tag maps survive end-to-end (sink, index, quota), and
-    * shard-key labels beyond metric resolve through `tags(label)`
-    * (Quota.keyExpr), so multi-level keys like ws → ns → metric work as
-    * the Quota scaladoc advertises.
+  /** Ingest with cardinality QUOTA enforcement (reference
+    * CardinalityTracker + QuotaExceededProtocol, core/.../memstore/
+    * ratelimit/) over canonical (series_id, metric, tags, ts, value)
+    * streams — the Gateway decoders' rows, or [[normalize]] of an events
+    * stream. Each microbatch runs the out-of-order drop, then the quota/
+    * sink/index commit ([[processCanonicalBatch]]): genuinely-NEW series
+    * are admitted against per-prefix children quotas over the held
+    * [[KnownSeries]] state, only admitted series' samples and index delta
+    * are written, and every rejection lands in `rejectDir` — the
+    * QuotaReached signal, one row per rejected series with the breached
+    * depth and the quota applied. Existing series are never evicted;
+    * admission within a batch is deterministic (child-key order), so a
+    * replay reproduces the same decisions. Index-only ingest is this entry
+    * with quotas that admit every series.
     *
-    * Samples MISSING a shard-key label (null key value — possible here
-    * because gateway tag maps are open-ended, unlike the fixed-shape
-    * [[Sample]] row) are rejected up front with reject_depth = 0: a
-    * null-keyed tuple can never equality-join the admission cascade, so
-    * letting it through would bypass enforcement AND burn a quota slot
-    * for a real child (nulls sort first in the admission window). The
-    * narrow [[Sample]] entry ([[startSamplesIngestWithQuota]]) remains
-    * for metric/user-keyed events streams. */
-  def startCanonicalIngestWithQuota(samples: DataFrame, sinkDir: String,
-                                    indexDir: String, rejectDir: String,
-                                    checkpointDir: String,
-                                    cfg: graft.operators.Quota.QuotaConfig)
+    * Shard-key labels beyond metric resolve through `tags(label)`
+    * (Quota.keyExpr), so multi-level keys like ws → ns → metric work.
+    * Samples MISSING a shard-key label (tag maps are open-ended) are
+    * rejected with reject_depth = 0: a null-keyed tuple can never
+    * equality-join the admission cascade, so letting it through would
+    * bypass enforcement AND burn a quota slot for a real child. */
+  def startIngestWithQuota(samples: DataFrame, sinkDir: String,
+                           indexDir: String, rejectDir: String,
+                           checkpointDir: String,
+                           cfg: graft.operators.Quota.QuotaConfig)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     // the query's held known-series state: loaded at its first batch,
     // advanced by each batch's index delta
     val known = new KnownSeries(samples.sparkSession, indexDir)
-    dropOutOfOrderCanonical(samples).writeStream
+    dropOutOfOrder(samples).writeStream
       .outputMode(OutputMode.Append)
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[CanonicalSample], batchId: Long) =>
+      .foreachBatch { (batch: Dataset[Sample], batchId: Long) =>
         processCanonicalBatch(batch.toDF(), batchId, sinkDir, rejectDir, cfg, known)
       }
       .start()
@@ -311,11 +283,13 @@ object Ingest {
   private def releaseCheckpoint(df: DataFrame): Unit =
     checkpointed(df).foreach(_.unpersist(blocking = false))
 
-  /** The stream commit of [[startCanonicalIngestWithQuota]] (its
-    * `foreachBatch` body) over ALREADY-DEDUPED canonical rows: the quota/
-    * sink/index chain of [[commitWindow]] against `known`. BatchId-keyed
-    * overwrites keep a replay idempotent (the startIngestWithIndex
-    * contract). */
+  /** The stream commit of [[startIngestWithQuota]] (its `foreachBatch`
+    * body) over ALREADY-DEDUPED canonical rows: the quota/sink/index chain
+    * of [[commitWindow]] against `known`. foreachBatch is at-least-once (a
+    * crash between a write and the checkpoint commit replays the batch),
+    * so every write is keyed by batchId and OVERWRITES its own `batch_id=`
+    * dir: a replay rewrites the same files instead of appending
+    * duplicates. */
   def processCanonicalBatch(df: DataFrame, batchId: Long, sinkDir: String,
                             rejectDir: String, cfg: graft.operators.Quota.QuotaConfig,
                             known: KnownSeries): Unit = known.guard {
@@ -922,14 +896,11 @@ object Ingest {
     * tests) feeds an events-shaped frame through this exact chain — the
     * seam the reference keeps between its Kafka consumer and its
     * shard-ingest path. */
-  def pipeline(events: DataFrame): Dataset[Sample] = {
-    import events.sparkSession.implicits._
-    dropOutOfOrder(normalize(events).as[Sample])
-  }
+  def pipeline(events: DataFrame): Dataset[Sample] = dropOutOfOrder(normalize(events))
 
-  /** Shared sink tail: append the deduped samples to a partitioned parquet
-    * layout (metric partition pruning for every query with a metric
-    * predicate). */
+  /** Shared sink tail: append the deduped canonical samples to a
+    * metric-partitioned parquet layout (partition pruning for every query
+    * with a metric predicate) that a PromApi can serve as its samples. */
   def startIngest(events: DataFrame, sinkDir: String,
                   checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
     pipeline(events).writeStream
@@ -939,82 +910,6 @@ object Ingest {
       .option("checkpointLocation", checkpointDir)
       .partitionBy("metric")
       .start()
-
-  /** Ingest with PART-KEY INDEX maintenance (the reference updates its
-    * Lucene part-key index as shards ingest): each microbatch appends its
-    * deduped samples AND a series-index DELTA — one row per series seen
-    * in the batch with the batch's time bounds. Deltas are append-only;
-    * readers fold them with [[graft.operators.MetadataOps.mergeSeriesIndex]]
-    * (merge-on-read, LSM shape — a periodic compaction can rewrite the
-    * directory to one folded segment with the same function). Metadata
-    * queries then touch series-cardinality data without scanning samples,
-    * exactly like the batch `TsLayout.writeSeriesIndex` path. */
-  def startIngestWithIndex(events: DataFrame, sinkDir: String, indexDir: String,
-                           checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    pipeline(events).writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Sample], batchId: Long) =>
-        // foreachBatch is AT-LEAST-ONCE (no FileStreamSink commit log):
-        // a crash between a write and the checkpoint commit replays the
-        // batch. Both writes are therefore keyed by batchId and OVERWRITE
-        // their own directory — a replay rewrites the same files instead
-        // of appending duplicates (the standard foreachBatch idempotence
-        // recipe). Readers load the parent dir; batch_id rides along as a
-        // partition column and is ignored by every consumer.
-        val df = batch.toDF().persist()
-        df.write.mode("overwrite").partitionBy("metric")
-          .parquet(s"$sinkDir/batch_id=$batchId")
-        graft.operators.MetadataOps.buildSeriesIndex(
-            df.select(col("metric"), map(lit("user"), col("user")).as("tags"),
-              col("ts"), col("series_id")))
-          .write.mode("overwrite").partitionBy("metric")
-          .parquet(s"$indexDir/batch_id=$batchId")
-        df.unpersist()
-        ()
-      }
-      .start()
-
-  /** Ingest with cardinality QUOTA enforcement (reference
-    * CardinalityTracker + QuotaExceededProtocol, core/.../memstore/
-    * ratelimit/): each microbatch admits genuinely-NEW series against
-    * per-prefix children quotas computed from the maintained series-index
-    * deltas, then (a) writes only admitted series' samples + index delta
-    * (same idempotent batchId-keyed overwrite as startIngestWithIndex)
-    * and (b) appends every rejection to `rejectDir` — the QuotaReached
-    * signal, one row per rejected series with the breached depth and the
-    * quota applied, queryable as the over-quota counter. Existing series
-    * are never evicted; admission within a batch is deterministic
-    * (child-key order), so a foreachBatch replay reproduces the same
-    * decisions and the overwrite stays idempotent. Per batch this costs
-    * shard-key-depth joins on index-scale data — never sample-scale. */
-  def startIngestWithQuota(events: DataFrame, sinkDir: String, indexDir: String,
-                           rejectDir: String, checkpointDir: String,
-                           cfg: graft.operators.Quota.QuotaConfig)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    import events.sparkSession.implicits._
-    startSamplesIngestWithQuota(normalize(events).as[Sample], sinkDir, indexDir,
-      rejectDir, checkpointDir, cfg)
-  }
-
-  /** [[startIngestWithQuota]] for an already-samples-shaped stream.
-    * NARROW-shape entry: the [[Sample]] row carries exactly one `user`
-    * tag, so only the metric/user shard key is representable here —
-    * gateway streams with arbitrary tag maps (and multi-level shard keys
-    * like ws → ns) go through [[startCanonicalIngestWithQuota]], which
-    * this ADAPTS to (tags = map("user", user)); there is exactly ONE
-    * implementation of the drop semantics and the per-batch quota/sink/
-    * index commit protocol. Sink and index rows carry the canonical
-    * `tags` map. */
-  def startSamplesIngestWithQuota(samples: Dataset[Sample], sinkDir: String,
-                                  indexDir: String, rejectDir: String,
-                                  checkpointDir: String,
-                                  cfg: graft.operators.Quota.QuotaConfig)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    startCanonicalIngestWithQuota(
-      samples.toDF().select(col("series_id"), col("metric"),
-        map(lit("user"), col("user")).as("tags"), col("ts"), col("value")),
-      sinkDir, indexDir, rejectDir, checkpointDir, cfg)
 
   /** Streaming corpus-quality monitor — the LIVE twin of the q117 batch
     * corpus report: per (source, tumbling window), doc/token counts,

@@ -235,16 +235,13 @@ class GatewaySpec extends AnyFunSuite with Matchers {
   test("wire lines → quota ingest → PromQL: the full gateway-to-query chain") {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import graft.streaming.Ingest
-    import graft.streaming.Ingest.Sample
     import spark.implicits._
     val ms = MemoryStream[String]
-    // gateway decode normalized to the ingest Sample shape (user tag)
+    // the gateway's canonical rows feed the quota entry directly
     val samples = Gateway.influxSamples(ms.toDF.toDF("line"), defaultTsMs = 0L)
-      .select(col("series_id"), col("metric"), col("tags")("user").as("user"),
-        col("ts"), col("value")).as[Sample]
     val dir = java.nio.file.Files.createTempDirectory("gw_e2e").toString
     val cfg = graft.operators.Quota.QuotaConfig(Seq("metric", "user"), Seq(10L, 1L))
-    val q = Ingest.startSamplesIngestWithQuota(samples, s"$dir/sink", s"$dir/index",
+    val q = Ingest.startIngestWithQuota(samples, s"$dir/sink", s"$dir/index",
       s"$dir/rejects", s"$dir/ckpt", cfg)
     try {
       ms.addData(
@@ -282,7 +279,7 @@ class GatewaySpec extends AnyFunSuite with Matchers {
     // ws → ns → metric: at most 2 namespaces per workspace
     val cfg = graft.operators.Quota.QuotaConfig(
       Seq("ws", "ns", "metric"), Seq(10L, 2L, 10L))
-    val q = Ingest.startCanonicalIngestWithQuota(samples, s"$dir/sink",
+    val q = Ingest.startIngestWithQuota(samples, s"$dir/sink",
       s"$dir/index", s"$dir/rejects", s"$dir/ckpt", cfg)
     try {
       ms.addData(
@@ -314,7 +311,7 @@ class GatewaySpec extends AnyFunSuite with Matchers {
     val samples = Gateway.influxSamples(ms.toDF.toDF("line"), defaultTsMs = 0L)
     val dir = java.nio.file.Files.createTempDirectory("gw_nullkey").toString
     val cfg = graft.operators.Quota.QuotaConfig(Seq("ws", "metric"), Seq(10L, 1L))
-    val q = Ingest.startCanonicalIngestWithQuota(samples, s"$dir/sink",
+    val q = Ingest.startIngestWithQuota(samples, s"$dir/sink",
       s"$dir/index", s"$dir/rejects", s"$dir/ckpt", cfg)
     try {
       ms.addData(
@@ -603,7 +600,7 @@ class GatewaySpec extends AnyFunSuite with Matchers {
     val srv = new InfluxSocketServer(spark)
     val dir = java.nio.file.Files.createTempDirectory("gw_sock").toString
     val cfg = graft.operators.Quota.QuotaConfig(Seq("metric"), Seq(10L))
-    val q = Ingest.startCanonicalIngestWithQuota(srv.samples(defaultTsMs = 0L),
+    val q = Ingest.startIngestWithQuota(srv.samples(defaultTsMs = 0L),
       s"$dir/sink", s"$dir/index", s"$dir/rejects", s"$dir/ckpt", cfg)
     try {
       // two clients (Telegraf reconnects; framing must be per-connection)

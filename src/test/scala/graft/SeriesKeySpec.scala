@@ -76,6 +76,19 @@ class SeriesKeySpec extends AnyFunSuite with Matchers {
         "remoteWriteBatch index" -> index).foreach { case (writer, got) =>
       withClue(writer) { got shouldEqual Set(want) }
     }
+
+    // the events stream's one label: an events row for (cpu, user 7) is
+    // the series a writer of cpu{user="7"} mints
+    val wantUser = Seq(("cpu", Map("user" -> "7"))).toDF("metric", "tags")
+      .select(SeriesKey.id(col("metric"), col("tags"))).head().getLong(0)
+    val events = ids(Ingest.normalize(
+      Seq((1L, 1000000000L, 7L, "cpu", 1.0, "")).toDF("event_id", "ts", "user_id",
+        "event_type", "value", "props")))
+    val influxUser = ids(Gateway.influxSamples(Seq("cpu,user=7 value=1 1000000000")
+      .toDF("line"), 0L))
+    Seq("Ingest.normalize" -> events, "Gateway.influxSamples" -> influxUser).foreach {
+      case (writer, got) => withClue(writer) { got shouldEqual Set(wantUser) }
+    }
     // a different metric over the same tags is a different series
     ids(spark.read.parquet(s"$dir/layout").withColumn("metric", lit("cpu"))) should
       have size 2

@@ -8,6 +8,13 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 import graft.streaming.{FunnelStream, Ingest}
 import graft.streaming.Ingest.Sample
+import StreamingSpec.UserSample
+
+object StreamingSpec {
+  /** An events-derived row keyed by one `user` column: the shape the
+    * session and downsample operators group on by default. */
+  case class UserSample(series_id: Long, metric: String, user: String, ts: Long, value: Double)
+}
 
 class StreamingSpec extends AnyFunSuite with Matchers {
 
@@ -16,32 +23,38 @@ class StreamingSpec extends AnyFunSuite with Matchers {
 
   test("streaming ingest drops out-of-order and duplicate samples per series") {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val (u, v) = (Map("user" -> "u"), Map("user" -> "v"))
     val ms = MemoryStream[Sample]
-    val q = Ingest.dropOutOfOrder(ms.toDS())
+    val q = Ingest.dropOutOfOrder(ms.toDF())
       .writeStream.format("memory").queryName("ooo_out")
       .outputMode("append").start()
     try {
-      ms.addData(Sample(1, "m", "u", 100, 1.0), Sample(1, "m", "u", 200, 2.0))
+      ms.addData(Sample(1, "m", u, 100, 1.0), Sample(1, "m", u, 200, 2.0))
       q.processAllAvailable()
       ms.addData(
-        Sample(1, "m", "u", 150, 9.0),  // late -> dropped
-        Sample(1, "m", "u", 200, 9.0),  // duplicate ts -> dropped
-        Sample(1, "m", "u", 300, 3.0),  // ok
-        Sample(2, "m", "v", 50, 5.0))   // other series unaffected
+        Sample(1, "m", u, 150, 9.0),  // late -> dropped
+        Sample(1, "m", u, 200, 9.0),  // duplicate ts -> dropped
+        Sample(1, "m", u, 300, 3.0),  // ok
+        Sample(2, "m", v, 50, 5.0))   // other series unaffected
       q.processAllAvailable()
       val got = spark.table("ooo_out").as[Sample].collect()
-        .map(s => (s.series_id, s.ts, s.value)).sorted.toSeq
-      got shouldEqual Seq((1L, 100L, 1.0), (1L, 200L, 2.0), (1L, 300L, 3.0), (2L, 50L, 5.0))
+      got.map(s => (s.series_id, s.ts, s.value)).sorted.toSeq shouldEqual
+        Seq((1L, 100L, 1.0), (1L, 200L, 2.0), (1L, 300L, 3.0), (2L, 50L, 5.0))
+      // tags ride through the drop untouched
+      got.map(s => (s.series_id, s.tags)).toSet shouldEqual Set((1L, u), (2L, v))
     } finally q.stop()
   }
 
   test("ingest maintains an append-only series index; merge-on-read equals batch build") {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import org.apache.spark.sql.functions.{col, lit, map}
+    import org.apache.spark.sql.functions.col
     val ms = MemoryStream[(Long, Long, Long, String, Double, String)]
     val events = ms.toDF.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
     val dir = java.nio.file.Files.createTempDirectory("ingest_idx").toString
-    val q = Ingest.startIngestWithIndex(events, s"$dir/sink", s"$dir/index", s"$dir/ckpt")
+    // index-only ingest: the quota entry with a quota every series fits
+    val admitAll = graft.operators.Quota.QuotaConfig(Seq("metric"), Seq(1000000L))
+    val q = Ingest.startIngestWithQuota(Ingest.normalize(events), s"$dir/sink",
+      s"$dir/index", s"$dir/rejects", s"$dir/ckpt", admitAll)
     try {
       ms.addData((1L, 1000000000L, 7L, "view", 1.0, ""), (2L, 2000000000L, 7L, "view", 2.0, ""))
       q.processAllAvailable()
@@ -59,12 +72,13 @@ class StreamingSpec extends AnyFunSuite with Matchers {
       // and equals the batch index built over everything the sink holds
       val batchBuilt = graft.operators.MetadataOps.buildSeriesIndex(
           spark.read.parquet(s"$dir/sink")
-            .select(col("metric"), map(lit("user"), col("user")).as("tags"),
-              col("ts"), col("series_id")))
+            .select(col("metric"), col("tags"), col("ts"), col("series_id")))
         .collect().map(r => (r.getAs[String]("metric"),
           r.getAs[Map[String, String]]("tags")("user"),
           r.getAs[Long]("start_ts"), r.getAs[Long]("end_ts"))).toSet
       batchBuilt shouldEqual merged
+      // nothing was rejected
+      spark.read.parquet(s"$dir/rejects").count() shouldEqual 0L
     } finally q.stop()
   }
 
@@ -75,8 +89,8 @@ class StreamingSpec extends AnyFunSuite with Matchers {
     val events = ms.toDF.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
     val dir = java.nio.file.Files.createTempDirectory("ingest_quota").toString
     val cfg = graft.operators.Quota.QuotaConfig(Seq("metric", "user"), Seq(10L, 1L))
-    val q = Ingest.startIngestWithQuota(events, s"$dir/sink", s"$dir/index",
-      s"$dir/rejects", s"$dir/ckpt", cfg)
+    val q = Ingest.startIngestWithQuota(Ingest.normalize(events), s"$dir/sink",
+      s"$dir/index", s"$dir/rejects", s"$dir/ckpt", cfg)
     try {
       ms.addData((1L, 1000000000L, 7L, "view", 1.0, ""))
       q.processAllAvailable()
@@ -86,8 +100,7 @@ class StreamingSpec extends AnyFunSuite with Matchers {
         (3L, 3000000000L, 7L, "view", 3.0, ""),
         (4L, 2500000000L, 8L, "click", 4.0, ""))
       q.processAllAvailable()
-      // the narrow entry adapts to the canonical path: sink rows carry
-      // the tags map
+      // sink rows carry the tags map
       val sunk = spark.read.parquet(s"$dir/sink")
         .select(col("metric"), col("tags")("user"), col("ts")).collect()
         .map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet
@@ -106,33 +119,35 @@ class StreamingSpec extends AnyFunSuite with Matchers {
     } finally q.stop()
   }
 
-  test("index compaction folds the delta directory to one segment, bounds preserved") {
+  test("a stream's sink hands over to remote write: one series id, and a " +
+       "resent sample at or below the streamed hwm drops") {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import org.apache.spark.sql.functions.col
     val ms = MemoryStream[(Long, Long, Long, String, Double, String)]
     val events = ms.toDF.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-    val dir = java.nio.file.Files.createTempDirectory("ingest_compact").toString
-    val q = Ingest.startIngestWithIndex(events, s"$dir/sink", s"$dir/index", s"$dir/ckpt")
+    val dir = java.nio.file.Files.createTempDirectory("ingest_handoff").toString
+    val (sink, index, rejects) = (s"$dir/sink", s"$dir/index", s"$dir/rejects")
+    val cfg = graft.operators.Quota.QuotaConfig(Seq("metric"), Seq(1000L))
+    val q = Ingest.startIngestWithQuota(Ingest.normalize(events), sink, index,
+      rejects, s"$dir/ckpt", cfg)
     try {
-      ms.addData((1L, 1000000000L, 7L, "view", 1.0, ""))
-      q.processAllAvailable()
-      ms.addData((2L, 3000000000L, 7L, "view", 2.0, ""), (3L, 2000000000L, 8L, "click", 3.0, ""))
+      ms.addData((1L, 1000000000L, 7L, "view", 1.0, ""), (2L, 2000000000L, 7L, "view", 2.0, ""))
       q.processAllAvailable()
     } finally q.stop()
-    def fold(d: String) = graft.operators.MetadataOps
-      .mergeSeriesIndex(spark.read.parquet(d))
-      .collect().map(r => (r.getAs[String]("metric"),
-        r.getAs[Map[String, String]]("tags")("user"),
-        r.getAs[Long]("start_ts"), r.getAs[Long]("end_ts"))).toSet
-    val before = fold(s"$dir/index")
-    spark.read.parquet(s"$dir/index").count() shouldEqual 3L // 2 view deltas + 1 click
-    graft.tools.CompactIndexJob.run(spark, s"$dir/index")
-    // one folded row per series now, reads unchanged through the fold
-    spark.read.parquet(s"$dir/index").count() shouldEqual 2L
-    spark.read.parquet(s"$dir/index").select("batch_id").distinct()
-      .collect().map(_.getInt(0)).toSeq shouldEqual Seq(-1)
-    fold(s"$dir/index") shouldEqual before
-    before.find(_._1 == "view").get shouldEqual (("view", "7", 1000L, 3000L))
+    // the write handler takes over the same dirs with a fresh state; its
+    // batch id is past the stream's
+    val user7 = Map("user" -> "7")
+    Ingest.remoteWriteBatch(
+      Seq(("view", user7, 2000L, 9.0), // resent at the streamed hwm -> dropped
+          ("view", user7, 1500L, 9.0), // below it -> dropped
+          ("view", user7, 3000L, 3.0)) // newer -> lands
+        .toDF("metric", "tags", "ts", "value"),
+      100L, sink, rejects, cfg, new Ingest.KnownSeries(spark, index))
+    spark.read.parquet(sink).select("ts", "value").as[(Long, Double)].collect()
+      .sorted.toSeq shouldEqual Seq((1000L, 1.0), (2000L, 2.0), (3000L, 3.0))
+    val want = Seq(("view", user7)).toDF("metric", "tags")
+      .select(graft.model.SeriesKey.id(col("metric"), col("tags"))).as[Long].head()
+    spark.read.parquet(index).select("series_id").distinct().as[Long].collect()
+      .toSeq shouldEqual Seq(want)
   }
 
   test("doc quality monitor: windowed per-source counts finalize under the watermark") {
@@ -197,37 +212,6 @@ class StreamingSpec extends AnyFunSuite with Matchers {
       spark.sql("DROP TABLE IF EXISTS stream_ndx_bands")
       spark.sql("DROP TABLE IF EXISTS stream_ndx_sigs")
     }
-  }
-
-  test("narrow and canonical out-of-order drops agree sample-for-sample " +
-       "(the two stateful implementations must never diverge)") {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import org.apache.spark.sql.functions.{col, lit, map}
-    val data = Seq(
-      Sample(1, "m", "u", 100, 1.0), Sample(1, "m", "u", 200, 2.0),
-      Sample(1, "m", "u", 150, 9.0), // late -> dropped
-      Sample(1, "m", "u", 200, 9.0), // dup ts -> dropped
-      Sample(1, "m", "u", 300, 3.0), Sample(2, "m", "v", 50, 5.0))
-    val msA = MemoryStream[Sample]
-    val qA = Ingest.dropOutOfOrder(msA.toDS())
-      .writeStream.format("memory").queryName("par_a").outputMode("append").start()
-    val msB = MemoryStream[Sample]
-    val qB = Ingest.dropOutOfOrderCanonical(
-        msB.toDS().toDF().select(col("series_id"), col("metric"),
-          map(lit("user"), col("user")).as("tags"), col("ts"), col("value")))
-      .writeStream.format("memory").queryName("par_b").outputMode("append").start()
-    try {
-      msA.addData(data.take(2)); msB.addData(data.take(2))
-      qA.processAllAvailable(); qB.processAllAvailable()
-      msA.addData(data.drop(2)); msB.addData(data.drop(2))
-      qA.processAllAvailable(); qB.processAllAvailable()
-      val a = spark.table("par_a").as[Sample].collect()
-        .map(s => (s.series_id, s.ts, s.value)).sorted.toSeq
-      val b = spark.table("par_b").collect()
-        .map(r => (r.getLong(0), r.getLong(3), r.getDouble(4))).sorted.toSeq
-      a shouldEqual b
-      a.nonEmpty shouldEqual true
-    } finally { qA.stop(); qB.stop() }
   }
 
   test("near-dedup ingest crash windows converge: replay between the two markers " +
@@ -351,7 +335,7 @@ class StreamingSpec extends AnyFunSuite with Matchers {
         (6L, ns(500), 2L, "view", 7.0, ""))
       q.processAllAvailable()
       val got = spark.table("seam_out").as[Sample].collect()
-        .map(s => (s.metric, s.user, s.ts, s.value)).sorted.toSeq
+        .map(s => (s.metric, s.tags("user"), s.ts, s.value)).sorted.toSeq
       got shouldEqual Seq(
         ("purchase", "1", 1000L, 5.0), ("purchase", "1", 2000L, 10.0),
         ("purchase", "1", 3000L, 20.0), ("view", "2", 500L, 7.0))
@@ -405,21 +389,21 @@ class StreamingSpec extends AnyFunSuite with Matchers {
   test("ingest state TTL evicts idle series once the watermark passes") {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val ms = MemoryStream[Sample]
-    val q = Ingest.dropOutOfOrder(ms.toDS(), stateTtlMs = 1000L, lateness = "1 second")
+    val q = Ingest.dropOutOfOrder(ms.toDF(), stateTtlMs = 1000L, lateness = "1 second")
       .writeStream.format("memory").queryName("ttl_out")
       .outputMode("append").start()
     try {
       def stateRows: Long = q.lastProgress.stateOperators(0).numRowsTotal
-      ms.addData(Sample(1, "m", "u", 100000L, 1.0))
+      ms.addData(Sample(1, "m", Map("user" -> "u"), 100000L, 1.0))
       q.processAllAvailable()
       stateRows shouldEqual 1L
       // a second series far in the future advances the watermark past
       // series 1's hwm + TTL; the trailing no-data micro-batch fires
       // series 1's event-time timeout and evicts its state, while fresh
       // series 2 survives — bounded state under series churn
-      ms.addData(Sample(2, "m", "v", 10000000L, 2.0))
+      ms.addData(Sample(2, "m", Map("user" -> "v"), 10000000L, 2.0))
       q.processAllAvailable()
-      ms.addData(Sample(2, "m", "v", 10010000L, 3.0))
+      ms.addData(Sample(2, "m", Map("user" -> "v"), 10010000L, 3.0))
       q.processAllAvailable()
       stateRows shouldEqual 1L
       // nothing was lost from the output on the way
@@ -490,16 +474,16 @@ class StreamingSpec extends AnyFunSuite with Matchers {
 
   test("streaming session windows: gap merge, watermark finalize, batch parity") {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val ms = MemoryStream[Sample]
+    val ms = MemoryStream[UserSample]
     val q = Ingest.sessionStats(ms.toDF(), gap = "1 minute", lateness = Some("1 second"))
       .writeStream.format("memory").queryName("sess_out")
       .outputMode("append").start()
     try {
       // two events 30 s apart merge into one session; third 5 min later
-      ms.addData(Sample(1, "m", "u", 0L, 1.0), Sample(1, "m", "u", 30000L, 2.0))
+      ms.addData(UserSample(1, "m", "u", 0L, 1.0), UserSample(1, "m", "u", 30000L, 2.0))
       q.processAllAvailable()
       spark.table("sess_out").count() shouldEqual 0L // session still open
-      ms.addData(Sample(1, "m", "u", 300000L, 4.0))
+      ms.addData(UserSample(1, "m", "u", 300000L, 4.0))
       q.processAllAvailable()
       val rows = spark.table("sess_out").collect()
       rows.length shouldEqual 1
@@ -510,8 +494,8 @@ class StreamingSpec extends AnyFunSuite with Matchers {
       rows.head.getAs[Long]("sum_value_micro") shouldEqual 3000000L
       // batch mode over the same rows agrees with the finalized session
       val batch = Ingest.sessionStats(
-        Seq(Sample(1, "m", "u", 0L, 1.0), Sample(1, "m", "u", 30000L, 2.0),
-            Sample(1, "m", "u", 300000L, 4.0)).toDF(), gap = "1 minute")
+        Seq(UserSample(1, "m", "u", 0L, 1.0), UserSample(1, "m", "u", 30000L, 2.0),
+            UserSample(1, "m", "u", 300000L, 4.0)).toDF(), gap = "1 minute")
       batch.count() shouldEqual 2L
       batch.orderBy("start_ms").collect().map(_.getAs[Long]("n_events")).toSeq shouldEqual Seq(2L, 1L)
     } finally q.stop()
@@ -549,17 +533,17 @@ class StreamingSpec extends AnyFunSuite with Matchers {
 
   test("streaming downsample: watermark finalizes windows in append mode") {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val ms = MemoryStream[Sample]
+    val ms = MemoryStream[UserSample]
     val q = Ingest.downsample(ms.toDF(), "5 minutes", lateness = Some("1 second"))
       .writeStream.format("memory").queryName("ds_stream_out")
       .outputMode("append").start()
     try {
-      ms.addData(Sample(1, "m", "u", 0L, 10.0), Sample(1, "m", "u", 60000L, 20.0))
+      ms.addData(UserSample(1, "m", "u", 0L, 10.0), UserSample(1, "m", "u", 60000L, 20.0))
       q.processAllAvailable()
       // watermark has not passed the first window's end yet -> nothing final
       spark.table("ds_stream_out").count() shouldEqual 0L
       // an event far past the window end advances the watermark
-      ms.addData(Sample(1, "m", "u", 400000L, 5.0))
+      ms.addData(UserSample(1, "m", "u", 400000L, 5.0))
       q.processAllAvailable()
       val rows = spark.table("ds_stream_out").collect()
       rows.length shouldEqual 1
@@ -619,6 +603,18 @@ class StreamingSpec extends AnyFunSuite with Matchers {
     out.withColumn("prev", lag(col("ts"), 1).over(w))
       .filter(col("prev").isNotNull && col("ts") <= col("prev"))
       .count() shouldEqual 0L
+    // the sink is canonical: PromQL serves its (metric, tags, ts, value)
+    // as written — one series' count over a window spanning all of it
+    val s = out.groupBy(col("metric"), col("tags")("user").as("user"))
+      .agg(count(lit(1)).as("n"), min(col("ts")).as("lo"), max(col("ts")).as("hi"))
+      .orderBy(col("n").desc, col("metric"), col("user")).head()
+    val (metric, user, n, lo, hi) =
+      (s.getString(0), s.getString(1), s.getLong(2), s.getLong(3), s.getLong(4))
+    val ctx = graft.promql.PromPlanner.Ctx(spark,
+      out.select(col("metric"), col("tags"), col("ts"), col("value")), hi, hi, 1000L)
+    graft.promql.PromPlanner.queryRange(ctx,
+        s"""count_over_time($metric{user="$user"}[${hi - lo + 1}ms])""")
+      .select("value").as[Double].collect().toSeq shouldEqual Seq(n.toDouble)
   }
 
   test("downsample routing rewrites range functions to ds columns and merges across tiers") {

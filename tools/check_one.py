@@ -1,26 +1,35 @@
 #!/usr/bin/env python3
-"""Compare ONE query's Spark parquet output (written by graft.tools.CheckOne)
-against its oracle SQL run in DuckDB — same canonicalization as
-check_correctness.py.
+"""Compare ONE query's Spark parquet output against its oracle SQL run in
+DuckDB — same canonicalization as check_correctness.py. The Spark side is
+`graft.Verify <sfdir> <outdir> --only=<name>`, which writes the query's
+parquet dir and the oracle_sql.json the SQL is read from.
 
-Usage: python3 tools/check_one.py <name> [sfdir] [outdir]
+Usage: python3 tools/check_one.py <name> [sfdir] [outdir] [--skip-spark]
 """
-import sys, os, math, subprocess
+import json, sys, os, math, subprocess
 import duckdb
 import pyarrow.parquet as pq
 
-name = sys.argv[1]
-sfdir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.01"
-outdir = sys.argv[3] if len(sys.argv) > 3 else "/tmp/check_one"
+args = [a for a in sys.argv[1:] if a != "--skip-spark"]
+name = args[0]
+sfdir = args[1] if len(args) > 1 else "/root/testdata/sf0.01"
+outdir = args[2] if len(args) > 2 else "/tmp/check_one"
 TABLES = ["region","nation","customer","supplier","part","orders","lineitem",
           "events","documents","embeddings"]
 
 if "--skip-spark" not in sys.argv:
-    r = subprocess.run(["sbt","-batch",f"runMain graft.tools.CheckOne {name} {sfdir} {outdir}"],
-                       cwd="/root/repo", capture_output=True, text=True, timeout=1200)
-    if r.returncode != 0:
-        tail = [l for l in (r.stdout+r.stderr).splitlines() if "error" in l.lower()][-30:]
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    r = subprocess.run(["sbt","-batch",f"runMain graft.Verify {sfdir} {outdir} --only={name}"],
+                       cwd=repo, capture_output=True, text=True, timeout=1200)
+    out = (r.stdout+r.stderr).splitlines()
+    if r.returncode != 0 or any(f"[verify] {name} failed" in l for l in out):
+        tail = [l for l in out if "error" in l.lower() or "[verify]" in l][-30:]
         print("SPARK RUN FAILED:\n" + "\n".join(tail)); sys.exit(2)
+
+oracle = json.load(open(os.path.join(outdir, "oracle_sql.json")))
+if name not in oracle:
+    print(f"no oracle SQL for {name} (rows-only query)"); sys.exit(1)
+sql = oracle[name]
 
 con = duckdb.connect()
 for t in TABLES:
@@ -45,7 +54,6 @@ def canon(rows, colnames):
 t = pq.read_table(os.path.join(outdir, name))
 scols, srows = canon([list(r) for r in zip(*[c.to_pylist() for c in t.columns])]
                      if t.num_columns else [], t.column_names)
-sql = open(os.path.join(outdir, f"{name}.sql")).read()
 huge = [(c, ty) for c, ty, *_ in con.execute(f"DESCRIBE {sql}").fetchall()
         if "HUGEINT" in str(ty).upper()]
 if huge:
