@@ -30,13 +30,13 @@ object PeriodicSamples {
     * holds at least one sample and whose value is not NaN.
     *
     * The samples are collected as THREE aligned primitive lists (ts, tie,
-    * value) rather than a list of structs: all aggregate buffers of a
-    * group are updated row-by-row together and partials merge in the same
-    * order, so the lists stay index-aligned, and skipping the per-sample
-    * struct Rows measured ~1.4x faster end-to-end. Post-shuffle samples
-    * are usually already (ts, tie)-ordered (scans read time-sorted
-    * layouts), so an O(n) sortedness check skips the index sort on the
-    * common path.
+    * value; a fourth, the marker flag, with `staleCol`) rather than a list
+    * of structs: all aggregate buffers of a group are updated row-by-row
+    * together and partials merge in the same order, so the lists stay
+    * index-aligned, and skipping the per-sample struct Rows measured
+    * ~1.4x faster end-to-end. Post-shuffle samples are usually already
+    * (ts, tie)-ordered (scans read time-sorted layouts), so an O(n)
+    * sortedness check skips the index sort on the common path.
     *
     * @param df         input samples (long/narrow)
     * @param seriesCols columns identifying one series (the group key)
@@ -44,6 +44,13 @@ object PeriodicSamples {
     * @param valueCol   Double column
     * @param tieCol     secondary within-series order for samples sharing a
     *                   millisecond (e.g. event_id)
+    * @param staleCol   Boolean column flagging staleness-marker rows
+    *                   (Prometheus StaleNaN tombstones). A flagged row is
+    *                   never a sample: its timestamp, whatever its value,
+    *                   CUTS the lookback — a step whose window holds a
+    *                   marker at or after its newest live sample emits
+    *                   nothing (the series is absent there). Set only for
+    *                   instant evaluation over frames that carry markers.
     */
   def apply(df: DataFrame,
             seriesCols: Seq[String],
@@ -52,7 +59,8 @@ object PeriodicSamples {
             startMs: Long, endMs: Long, stepMs: Long, windowMs: Long,
             fn: RangeFn,
             offsetMs: Long = 0L,
-            tieCol: Option[String] = None): DataFrame = {
+            tieCol: Option[String] = None,
+            staleCol: Option[String] = None): DataFrame = {
     require(stepMs > 0 && windowMs > 0, "step and window must be positive")
     val n = seriesCols.size
     // Coalesced to 0: collect_list drops NULLs, and the three lists drop
@@ -61,40 +69,55 @@ object PeriodicSamples {
     // downstream window.
     val tie = tieCol.map(c => coalesce(col(c).cast(LongType), lit(0L)))
       .getOrElse(lit(0L)).as("__tie")
+    // A marker counts whatever its value, so a null one is kept (as NaN,
+    // to stay aligned in the value list); the flag itself is coalesced
+    // like the tie.
+    val stale = staleCol.map(c => coalesce(col(c).cast(BooleanType), lit(false)))
+    val value = col(valueCol).cast(DoubleType)
     // Push the time-range predicate and projection into the scan.
     val prepared = df
       .filter(col(tsCol).cast(LongType) > lit(startMs - offsetMs - windowMs) &&
               col(tsCol).cast(LongType) <= lit(endMs - offsetMs) &&
-              col(tsCol).isNotNull && col(valueCol).isNotNull)
+              col(tsCol).isNotNull &&
+              stale.fold(col(valueCol).isNotNull)(col(valueCol).isNotNull || _))
       .select(seriesCols.map(col) ++
-        Seq(col(tsCol).cast(LongType).as("__ts"), col(valueCol).cast(DoubleType).as("__v"), tie): _*)
+        Seq(col(tsCol).cast(LongType).as("__ts"),
+          stale.fold(value)(_ => coalesce(value, lit(Double.NaN))).as("__v"), tie) ++
+        stale.map(_.as("__st")): _*)
     val agged = prepared
       .groupBy(seriesCols.map(col): _*)
       .agg(collect_list(col("__ts")).as("__tss"),
-        collect_list(col("__tie")).as("__ties"),
-        collect_list(col("__v")).as("__vss"))
+        Seq(collect_list(col("__tie")).as("__ties"),
+          collect_list(col("__v")).as("__vss")) ++
+        stale.map(_ => collect_list(col("__st")).as("__sts")): _*)
     val keySchema = StructType(seriesCols.map(c => prepared.schema(c)))
     val outSchema = StructType(keySchema.fields ++ Seq(
       StructField("step_ts", LongType, nullable = false),
       StructField("value", DoubleType, nullable = false)))
     val outEnc = Encoders.row(outSchema)
+    val withStale = stale.isDefined
     agged.flatMap { row =>
       val tsS = row.getSeq[Long](n)
       val tieS = row.getSeq[Long](n + 1)
       val vS = row.getSeq[Double](n + 2)
+      val stS = if (withStale) row.getSeq[Boolean](n + 3) else null
       val rawLen = tsS.length
       var ts = new Array[Long](rawLen)
       var vs = new Array[Double](rawLen)
       val tieA = new Array[Long](rawLen)
+      // marker timestamps, sorted below; empty without the flag
+      val mk = new Array[Long](if (stS == null) 0 else rawLen)
+      var nm = 0
       var i = 0
       var m = 0
       var isSorted = true
       while (i < rawLen) {
         val v = vS(i)
+        if (stS != null && stS(i)) { mk(nm) = tsS(i); nm += 1 }
         // NaN = no data (reference chunk semantics): dropped BEFORE
         // windowing, so counter correction spans the gap and a window's
         // first/last sample never lands on a NaN
-        if (!java.lang.Double.isNaN(v)) {
+        else if (!java.lang.Double.isNaN(v)) {
           ts(m) = tsS(i); vs(m) = v; tieA(m) = tieS(i)
           if (m > 0 && (ts(m) < ts(m - 1) || (ts(m) == ts(m - 1) && tieA(m) < tieA(m - 1))))
             isSorted = false
@@ -122,16 +145,22 @@ object PeriodicSamples {
         ts = ts2; vs = vs2
       }
       if (fn.needsCounterCorrection) monotonize(vs)
+      java.util.Arrays.sort(mk, 0, nm)
       val keySeq = (0 until n).map(row.get)
       val out = new ArrayBuffer[Row]
       var lo = 0; var hi = 0
+      var mlo = 0; var mhi = 0
       var t = startMs
       while (t <= endMs) {
         val wEnd = t - offsetMs
         val wStart = wEnd - windowMs
         while (lo < len && ts(lo) <= wStart) lo += 1
         while (hi < len && ts(hi) <= wEnd) hi += 1
-        if (hi > lo) {
+        while (mlo < nm && mk(mlo) <= wStart) mlo += 1
+        while (mhi < nm && mk(mhi) <= wEnd) mhi += 1
+        // the newest marker in the window hides the series when it is at
+        // or after the newest live sample (an equal-ts tie hides it too)
+        if (hi > lo && !(mhi > mlo && mk(mhi - 1) >= ts(hi - 1))) {
           val v = fn.eval(ts, vs, lo, hi, wStart, wEnd)
           if (!v.isNaN) out += Row.fromSeq(keySeq ++ Seq[Any](t, v))
         }

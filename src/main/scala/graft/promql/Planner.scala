@@ -483,7 +483,7 @@ object PromPlanner {
       SeriesKey.entries(col("metric"), col("tags")).as("__ent"),
       col("ts"), col("value"), tie.as("__tie")) ++
       // staleness-marker tombstones ride along for the instant-lookback
-      // cutoff (periodicWithStaleCutoff); absent everywhere else
+      // cutoff (periodicFrom's cutStale); absent everywhere else
       (if (df.columns.contains("__stale")) Seq(col("__stale")) else Nil)
     df.select(cols: _*)
   }
@@ -494,60 +494,22 @@ object PromPlanner {
     * a join that AQE turns into a broadcast when the series set is small.
     * At 100 TB this keeps the big shuffle narrow and the label payload off
     * the wire. */
-  private def periodic(ctx: Ctx, sel: Selector, fn: RangeFn, windowMs: Long): DataFrame =
-    periodicFrom(ctx, selectorSamples(ctx, sel), sel, fn, windowMs)
+  private def periodic(ctx: Ctx, sel: Selector, fn: RangeFn, windowMs: Long,
+                       cutStale: Boolean = false): DataFrame =
+    periodicFrom(ctx, selectorSamples(ctx, sel), sel, fn, windowMs, cutStale)
 
-  /** INSTANT-vector evaluation honoring upstream staleness MARKERS
-    * (prometheus tsdb tombstone rows, `__stale` = true in storage): a
-    * marker is excluded from every range vector (its value is NaN, which
-    * the kernel drops — range-function semantics need nothing extra) but
-    * CUTS the instant lookback — a marker newer than the newest live
-    * sample makes the series absent at that step. Computed as three
-    * kernel passes joined on (series, step): the base function over live
-    * rows, plus last-live-ts and last-marker-ts; steps where the marker
-    * wins are dropped. Frames WITHOUT the column — every production
-    * ingest path today, and corpus loads carrying no `stale` token — take
-    * the single-pass kernel untouched (driver-side column check). */
-  private def periodicWithStaleCutoff(ctx: Ctx, sel: Selector, fn: RangeFn,
-                                      windowMs: Long): DataFrame = {
-    val src = selectorSamples(ctx, sel)
-    if (!src.columns.contains("__stale"))
-      periodicFrom(ctx, src, sel, fn, windowMs)
-    else {
-      val isMarker = coalesce(col("__stale"), lit(false))
-      val live = src.filter(!isMarker)
-      val base = periodicFrom(ctx, live, sel, fn, windowMs)
-      // markers store value = NaN (no-data to every range vector); the
-      // tombstone's payload is its TIMESTAMP, so lift it through the
-      // timestamp kernel over constant-valued rows
-      val markers = src.filter(isMarker).withColumn("value", lit(0.0))
-      val cutTs = periodicFrom(ctx, markers, sel,
-          RangeFns.byName("timestamp"), windowMs)
-        .select(col("__key"), col("step_ts"), col("value").as("__cut"))
-      // the last-live-timestamp pass is needed ONLY for series that have
-      // a marker at all (the cut filter short-circuits on __cut null):
-      // bound it by a broadcast semi-join on the marker series keys, so
-      // its kernel input is O(marked series' samples) — one dead target's
-      // markers must not cost a second full scan of a 100 TB store on
-      // every instant query (the base pass is already the full one).
-      // same series-identity semi-join, keyed on the entries array the
-      // selector already carries (no per-row JSON keys on the live side)
-      val markerKeys = markers.select(col("__ent")).distinct()
-      val liveMarked = live
-        .join(broadcast(markerKeys), Seq("__ent"), "left_semi")
-      val liveTs = periodicFrom(ctx, liveMarked, sel,
-          RangeFns.byName("timestamp"), windowMs)
-        .select(col("__key"), col("step_ts"), col("value").as("__lts"))
-      base.join(cutTs, Seq("__key", "step_ts"), "left")
-        .join(liveTs, Seq("__key", "step_ts"), "left")
-        .filter(col("__cut").isNull ||
-          (col("__lts").isNotNull && col("__lts") > col("__cut")))
-        .drop("__cut", "__lts")
-    }
-  }
-
+  /** `cutStale` is set for INSTANT-vector evaluation, which honors
+    * upstream staleness MARKERS (prometheus tsdb tombstone rows, `__stale`
+    * = true in storage): a marker is excluded from every range vector (its
+    * value is NaN, which the kernel drops) but CUTS the instant lookback —
+    * a marker at or after the newest live sample makes the series absent
+    * at that step. The kernel decides it in its one pass (its `staleCol`);
+    * a frame without the column (no remote-write/OTLP window carried a
+    * marker, no corpus `stale` token) keeps the plain kernel — a
+    * driver-side column check. */
   private def periodicFrom(ctx: Ctx, src0: DataFrame, sel: Selector,
-                           fn: RangeFn, windowMs: Long): DataFrame = {
+                           fn: RangeFn, windowMs: Long,
+                           cutStale: Boolean = false): DataFrame = {
     // Group the kernel on the sorted-entries ARRAY (__ent when the
     // selector provided it, else derived from the labels map): identical
     // partitioning to the JSON string key, but the per-SAMPLE row pays
@@ -556,7 +518,9 @@ object PromPlanner {
     // 2.1x faster end-to-end, OPTIMIZATION_r17.md §8).
     val keyE = if (src0.columns.contains("__ent")) col("__ent")
                else SeriesKey.entriesOf(col("labels"))
-    val slim = src0.select(keyE.as("__ke"), col("ts"), col("value"), col("__tie"))
+    val staleCol = Some("__stale").filter(c => cutStale && src0.columns.contains(c))
+    val slim = src0.select(Seq(keyE.as("__ke"), col("ts"), col("value"), col("__tie")) ++
+      staleCol.map(col): _*)
     // @ modifier pins the evaluation time: compute the single pinned step,
     // then replicate its value across the requested step grid.
     // @ start()/end() sentinels resolve against the query range here.
@@ -567,7 +531,7 @@ object PromPlanner {
     }
     val out = PeriodicSamples(slim, Seq("__ke"), "ts", "value",
       evalStart, evalEnd, ctx.stepMs, windowMs, fn,
-      offsetMs = sel.offsetMs, tieCol = Some("__tie"))
+      offsetMs = sel.offsetMs, tieCol = Some("__tie"), staleCol = staleCol)
     // The key IS the sorted label set serialized as JSON — produce it (and
     // the label map) from the grouped entries on the (small) output.
     val gridded = atResolved match {
@@ -606,8 +570,8 @@ object PromPlanner {
 
     case sel: Selector =>
       // instant selector: implicit last_over_time over the staleness window
-      periodicWithStaleCutoff(ctx, sel, RangeFns.LastOverTime,
-        sel.windowMs.getOrElse(ctx.lookbackMs))
+      periodic(ctx, sel, RangeFns.LastOverTime,
+        sel.windowMs.getOrElse(ctx.lookbackMs), cutStale = true)
 
     case FuncCall(name, args) => planFunc(ctx, name, args)
 
@@ -875,7 +839,7 @@ object PromPlanner {
           // no __name__; r10 upstream-corpus finding). `last` is the
           // FiloDB passthrough and keeps it.
           dropNameIf(
-            periodicWithStaleCutoff(ctx, sel, RangeFns.byName(n), ctx.lookbackMs),
+            periodic(ctx, sel, RangeFns.byName(n), ctx.lookbackMs, cutStale = true),
             n == "timestamp")
         case sel: Selector if sel.windowMs.isDefined =>
           lazy val routedRI = routedBase(ctx, sel) // shared by guard + branch
@@ -1222,7 +1186,7 @@ object PromPlanner {
           // absent() answers 1 past it (the cutoff-aware presence);
           // absent_over_time keeps range-vector semantics (markers merely
           // excluded) and stays on the plain path above
-          absent(ctx, sel, ctx.lookbackMs, cutoff = true)
+          absent(ctx, sel, ctx.lookbackMs, cutStale = true)
         case sel: Selector =>
           // Prometheus type error — don't let the generic branch silently
           // evaluate the matrix selector as last_over_time
@@ -1504,10 +1468,8 @@ object PromPlanner {
   }
 
   private def absent(ctx: Ctx, sel: Selector, windowMs: Long,
-                     cutoff: Boolean = false): DataFrame = {
-    val present =
-      if (cutoff) periodicWithStaleCutoff(ctx, sel, RangeFns.PresentOverTime, windowMs)
-      else periodic(ctx, sel, RangeFns.PresentOverTime, windowMs)
+                     cutStale: Boolean = false): DataFrame = {
+    val present = periodic(ctx, sel, RangeFns.PresentOverTime, windowMs, cutStale)
     // synthesize labels from Equals matchers (reference AbsentFunctionMapper;
     // the METRIC NAME is never part of the synthesized set — upstream
     // `absent(nonexistent{job="j"})` answers {job="j"}, not

@@ -27,9 +27,9 @@ import graft.model.SeriesKey
   *  - `stale`: Prometheus staleness marker — a TOMBSTONE row (`__stale` =
   *    true, value NaN): excluded from every range vector by the kernel's
   *    NaN-as-no-sample rule, and CUTTING the instant lookback (a marker
-  *    newer than the last live sample makes the series absent at that
-  *    step — PromPlanner.periodicWithStaleCutoff), upstream tsdb
-  *    staleness semantics.
+  *    at or after the last live sample makes the series absent at that
+  *    step — the window kernel's marker cut, PeriodicSamples' staleCol),
+  *    upstream tsdb staleness semantics.
   *
   * Eval directives: `eval instant at <t> <expr>` (unordered vector/scalar
   * compare, 1e-6 relative tolerance, NaN==NaN), `eval_ordered` (ordered —
@@ -192,7 +192,7 @@ object TestCorpus {
   /** One load line: `metric{labels} v1 v2 0+10x3 _ stale ...` — a `stale`
     * token becomes a TOMBSTONE row ((ts, NaN, true)): NaN keeps it out of
     * every range vector (kernel no-data rule), the flag drives the
-    * instant-lookback cutoff (PromPlanner.periodicWithStaleCutoff). */
+    * instant-lookback cutoff (the window kernel's staleCol). */
   private def parseSeries(line: String, stepMs: Long)
       : (Map[String, String], Seq[(Long, Double, Boolean)]) = {
     val (sel, spec) = splitSelector(line)

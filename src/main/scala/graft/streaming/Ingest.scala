@@ -289,22 +289,24 @@ object Ingest {
     * crash between a write and the checkpoint commit replays the batch),
     * so every write is keyed by batchId and OVERWRITES its own `batch_id=`
     * dir: a replay rewrites the same files instead of appending
-    * duplicates. */
+    * duplicates. The stream's own dedup state starts empty on a fresh
+    * checkpoint, so the held hwm still drops what the sink already has. */
   def processCanonicalBatch(df: DataFrame, batchId: Long, sinkDir: String,
                             rejectDir: String, cfg: graft.operators.Quota.QuotaConfig,
                             known: KnownSeries): Unit = known.guard {
-    commitWindow(withHwm(df.repartition(known.partitions, col("series_id")), known),
+    commitWindow(aboveHwm(df.repartition(known.partitions, col("series_id")), known),
       batchId, sinkDir, rejectDir, cfg, known)
   }
 
   /** `rows` (hash-partitioned like the state) with their series' `hwm` in
-    * the state, null for a series the state does not hold. shuffle_hash:
-    * the state is co-partitioned with the rows, so the join builds from
-    * its partitions in place — a broadcast would collect the whole state
-    * to the driver every commit. */
-  private def withHwm(rows: DataFrame, known: KnownSeries): DataFrame =
+    * the state, null for a series the state does not hold, less the rows
+    * at or below it. shuffle_hash: the state is co-partitioned with the
+    * rows, so the join builds from its partitions in place — a broadcast
+    * would collect the whole state to the driver every commit. */
+  private def aboveHwm(rows: DataFrame, known: KnownSeries): DataFrame =
     rows.join(known.frame.select(col("series_id"), col("hwm")).hint("shuffle_hash"),
       Seq("series_id"), "left")
+      .filter(col("hwm").isNull || col("ts") > col("hwm"))
 
   /** Write `rows` as one `batch_id=` dir of a metric-partitioned table,
     * gathered by metric into `n` write tasks first: each metric's rows go
@@ -321,7 +323,7 @@ object Ingest {
     *
     * `rows` are the window's samples to store, hash-partitioned like the
     * state (so the index delta needs no shuffle of its own), each with its
-    * series' `hwm` from [[withHwm]]. Admission judges only what can be
+    * series' `hwm` from [[aboveHwm]]. Admission judges only what can be
     * rejected. A held series' tuple is known, and a known tuple is
     * admitted either way, so only the window's tuples that no held series
     * in it carries go through the [[graft.operators.Quota.admit]] cascade
@@ -571,7 +573,7 @@ object Ingest {
         .select(keys ++ payload.map(c => col(s"__p.$c").as(c)): _*)
     // cross-batch: samples at or below their series' hwm drop; the hwm
     // column rides along for admission
-    val fresh = withHwm(inBatch, known).filter(col("hwm").isNull || col("ts") > col("hwm"))
+    val fresh = aboveHwm(inBatch, known)
     val converted =
       if (!hasExp) fresh
       else expCumulativeToDelta(fresh, batchId, s"${known.indexDir}/_exp_state")
@@ -873,17 +875,6 @@ object Ingest {
         min(col("vmin")).as("min"), max(col("vmax")).as("max"))
       .select(seriesCols.map(col) ++ Seq(unix_millis(col("w.end")).as("ts"),
         col("le"), col("values"), col("min"), col("max")): _*)
-  }
-
-  /** Raw/downsample query routing (LongTimeRangePlanner semantics): serve
-    * (from, boundary] from the downsample table's avg column and
-    * (boundary, to] from raw, stitched by union. */
-  def routedRead(raw: DataFrame, ds: DataFrame, boundaryMs: Long): DataFrame = {
-    val cold = ds.filter(col("ts") <= boundaryMs)
-      .select(col("series_id"), col("metric"), col("user"), col("ts"), col("avg").as("value"))
-    val hot = raw.filter(col("ts") > boundaryMs)
-      .select(col("series_id"), col("metric"), col("user"), col("ts"), col("value"))
-    cold.unionByName(hot)
   }
 
   /** The raw events schema every source produces (file rows directly;

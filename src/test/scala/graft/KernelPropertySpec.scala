@@ -199,6 +199,75 @@ class KernelPropertySpec extends AnyFunSuite with Matchers {
     }
   }
 
+  test("staleness-marker cutoff matches a plain-Scala per-step oracle") {
+    // random live/marker mixes: markers of any value (NaN, null, a
+    // number), markers at a live sample's ts, past the window end and
+    // older than the newest live sample; NaN and null-flag live rows; an
+    // offset. A step is cut when the newest marker in its window is at or
+    // after the window's newest live sample.
+    val rnd = new scala.util.Random(31337)
+    val rows = (0 until 30).flatMap { sid =>
+      val n = 1 + rnd.nextInt(50)
+      (0 until n).map { i =>
+        val ts = (rnd.nextInt(60) * 200 + 100).toLong // collisions on purpose
+        if (rnd.nextInt(5) == 0)
+          (s"s$sid", ts, rnd.nextInt(3) match {
+            case 0 => Some(Double.NaN); case 1 => None; case _ => Some(7.0)
+          }, i.toLong, Some(true))
+        else
+          (s"s$sid", ts, Some(if (rnd.nextInt(12) == 0) Double.NaN else rnd.nextDouble() * 1000),
+            i.toLong, if (rnd.nextBoolean()) Some(false) else None)
+      }
+    }
+    val df = rnd.shuffle(rows).toDF("skey", "ts", "value", "tie", "stale").repartition(7)
+    val (start, end, step, w, offset) = (1000L, 12000L, 700L, 2500L, 300L)
+
+    var (cut, kept, tied) = (0, 0, 0)
+    def oracle(fn: RangeFn): Map[(String, Long), Double] =
+      rows.groupBy(_._1).toSeq.flatMap { case (sid, ss) =>
+        val scanned = ss.filter(r => r._2 > start - offset - w && r._2 <= end - offset)
+        val markers = scanned.filter(_._5.contains(true)).map(_._2)
+        val live = scanned
+          .filter(r => !r._5.contains(true) && !r._3.get.isNaN)
+          .sortBy(r => (r._2, r._4))
+        val ts = live.map(_._2).toArray
+        val vs = live.map(_._3.get).toArray
+        if (fn.needsCounterCorrection) PeriodicSamples.monotonize(vs)
+        (start to end by step).flatMap { t =>
+          val (wStart, wEnd) = (t - offset - w, t - offset)
+          val in = ts.indices.filter(i => ts(i) > wStart && ts(i) <= wEnd)
+          val mk = markers.filter(m => m > wStart && m <= wEnd)
+          if (in.isEmpty) None
+          else if (mk.nonEmpty && mk.max >= ts(in.last)) {
+            cut += 1
+            if (mk.max == ts(in.last)) tied += 1
+            None
+          } else {
+            if (mk.nonEmpty) kept += 1
+            val v = fn.eval(in.map(ts).toArray, in.map(vs).toArray, 0, in.size, wStart, wEnd)
+            if (v.isNaN) None else Some((sid, t) -> v)
+          }
+        }
+      }.toMap
+
+    for (fnName <- Seq("last_over_time", "timestamp", "present_over_time", "rate")) {
+      val fn = RangeFns.byName(fnName)
+      val got = PeriodicSamples(df, Seq("skey"), "ts", "value", start, end, step, w,
+        fn, offsetMs = offset, tieCol = Some("tie"), staleCol = Some("stale"))
+        .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getDouble(2)).toMap
+      val want = oracle(fn)
+      want should not be empty
+      withClue(s"$fnName: keys") { got.keySet shouldEqual want.keySet }
+      want.foreach { case (k, v) =>
+        withClue(s"$fnName at $k") { got(k) shouldEqual v }
+      }
+    }
+    // the mix exercised every branch of the rule
+    cut should be > 0
+    kept should be > 0
+    tied should be > 0
+  }
+
   test("simplified regex matchers are equivalent to anchored rlike") {
     val values = Seq("purchase", "purchase2", "view", "1", "12", "21", "a|b",
       "foo.bar", "fooXbar", "", "x", "prefix", "prefixtail")

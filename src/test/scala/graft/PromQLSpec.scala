@@ -713,6 +713,16 @@ class PromQLSpec extends AnyFunSuite with Matchers {
     // identical frame WITHOUT the column: the marker row is a plain NaN
     val plainDf = df.drop("__stale")
     at(2000L, "m", plainDf) shouldEqual List(1.0)
+    // the cut moves with the evaluation time: offset and @ shift it
+    at(2000L, "m offset 1s") shouldEqual List(1.0)
+    at(3000L, "m offset 1s") shouldEqual Nil
+    at(5000L, "m offset 1s") shouldEqual List(3.0)
+    at(1000L, "m @ 2000") shouldEqual Nil
+    at(4000L, "m @ 2000") shouldEqual Nil
+    // one range query cuts per step: absent from the marker until revived
+    PromPlanner.queryRange(PromPlanner.Ctx(spark, df, 1000L, 5000L, 1000L), "m")
+      .select("step_ts", "value").as[(Long, Double)].collect().sorted.toList shouldEqual
+      List((1000L, 1.0), (4000L, 3.0), (5000L, 3.0))
   }
 
   test("kernel entries-array key serializes byte-identically to the JSON label key") {

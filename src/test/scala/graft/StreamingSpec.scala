@@ -150,6 +150,34 @@ class StreamingSpec extends AnyFunSuite with Matchers {
       .toSeq shouldEqual Seq(want)
   }
 
+  test("a stream resending over remote write's sink drops samples at or " +
+       "below the held hwm: only the newer sample lands") {
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val dir = java.nio.file.Files.createTempDirectory("ingest_resend").toString
+    val (sink, index, rejects) = (s"$dir/sink", s"$dir/index", s"$dir/rejects")
+    val cfg = graft.operators.Quota.QuotaConfig(Seq("metric"), Seq(1000L))
+    val user7 = Map("user" -> "7")
+    Ingest.remoteWriteBatch(
+      Seq(("view", user7, 1000L, 1.0), ("view", user7, 2000L, 2.0))
+        .toDF("metric", "tags", "ts", "value"),
+      100L, sink, rejects, cfg, new Ingest.KnownSeries(spark, index))
+    // a stream on a fresh checkpoint: its own dedup state starts empty, so
+    // only the hwm it loads from the index stands between the resend and
+    // the sink
+    val ms = MemoryStream[(Long, Long, Long, String, Double, String)]
+    val events = ms.toDF.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+    val q = Ingest.startIngestWithQuota(Ingest.normalize(events), sink, index,
+      rejects, s"$dir/ckpt", cfg)
+    try {
+      ms.addData((1L, 1500000000L, 7L, "view", 9.0, ""), // below the hwm -> dropped
+        (2L, 2000000000L, 7L, "view", 9.0, ""),          // at it -> dropped
+        (3L, 3000000000L, 7L, "view", 3.0, ""))          // newer -> lands
+      q.processAllAvailable()
+    } finally q.stop()
+    spark.read.parquet(sink).select("ts", "value").as[(Long, Double)].collect()
+      .sorted.toSeq shouldEqual Seq((1000L, 1.0), (2000L, 2.0), (3000L, 3.0))
+  }
+
   test("doc quality monitor: windowed per-source counts finalize under the watermark") {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     // 60 words with real English stopwords: passes every row rule, langId=en
@@ -574,16 +602,6 @@ class StreamingSpec extends AnyFunSuite with Matchers {
       .head().getDouble(0)
     q should be <= 120.0
     q should be > 50.0
-  }
-
-  test("routed read stitches downsample (cold) and raw (hot) at the boundary") {
-    val raw = Seq((1L, "m", "u", 100L, 1.0), (1L, "m", "u", 900L, 9.0))
-      .toDF("series_id", "metric", "user", "ts", "value")
-    val ds = Seq((1L, "m", "u", 500L, 0.0, 0.0, 0.0, 1.0, 42.0))
-      .toDF("series_id", "metric", "user", "ts", "min", "max", "sum", "count", "avg")
-    val out = Ingest.routedRead(raw, ds, boundaryMs = 500L)
-      .orderBy("ts").select("ts", "value").as[(Long, Double)].collect()
-    out shouldEqual Array((500L, 42.0), (900L, 9.0))
   }
 
   test("end-to-end file ingest: events parquet -> partitioned samples sink") {
