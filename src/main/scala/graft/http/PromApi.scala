@@ -485,28 +485,13 @@ class PromApi(spark: SparkSession, samples: DataFrame, port: Int = 0,
           // read, and at 1024-file windows the decode is ~0.7 s a
           // snapshot POST should not wait out (r16 judge finding)
           commitLock.synchronized {
-            def committed(dir: String) = fs.exists(
-              new org.apache.hadoop.fs.Path(s"$dir/batch_id=$batchId/_SUCCESS"))
-            if (flags.seriesTotal > 0L && committed(ws.sinkDir)) {
+            if (flags.seriesTotal > 0L && graft.streaming.Ingest.resumeCommitted(
+                spark, batchId, ws.sinkDir, knownSeries.get)) {
               // a predecessor crashed between this very window's commit and
-              // its spool cleanup. Re-running the chain would hwm-drop every
-              // sample and OVERWRITE the committed batch dir with an empty
-              // one — instead repair forward: the sink write is durable, so
-              // rebuild the (possibly missing) index delta from it, fold it
-              // into the held state (a no-op when the state already has
-              // it), re-append exemplars (content-dedup'd, so a no-op when
+              // its spool cleanup: the samples commit was repaired forward
+              // above; re-append exemplars (content-dedup'd, so a no-op when
               // they landed) and re-apply the metadata (idempotent), then
               // clean up.
-              val delta = s"${ws.indexDir}/batch_id=$batchId"
-              if (!committed(ws.indexDir)) {
-                val rows = spark.read.parquet(s"${ws.sinkDir}/batch_id=$batchId")
-                graft.operators.MetadataOps.buildSeriesIndex(
-                    rows.select(col("metric"), col("tags"), col("ts"), col("series_id")))
-                  .write.mode("overwrite").partitionBy("metric").parquet(delta)
-              }
-              val known = knownSeries.get
-              known.guard(known.advance(
-                graft.streaming.Ingest.readIndex(spark, ws.indexDir, delta)))
               appendExemplarFrame(ws, decoded, flags, batchId)
               upsertMetas(decoded, flags)
             } else commitRows(ws, decoded, flags, batchId)

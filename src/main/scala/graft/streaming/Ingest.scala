@@ -288,14 +288,46 @@ object Ingest {
     * of [[commitWindow]] against `known`. foreachBatch is at-least-once (a
     * crash between a write and the checkpoint commit replays the batch),
     * so every write is keyed by batchId and OVERWRITES its own `batch_id=`
-    * dir: a replay rewrites the same files instead of appending
-    * duplicates. The stream's own dedup state starts empty on a fresh
-    * checkpoint, so the held hwm still drops what the sink already has. */
+    * dir. A replay whose sink batch already landed is repaired forward
+    * ([[resumeCommitted]]), never re-run: its rows are at or below the
+    * hwm of the state that reloads them, so the chain would overwrite the
+    * batch with an empty one. The stream's own dedup state starts empty
+    * on a fresh checkpoint, so the held hwm still drops what the sink
+    * already has. */
   def processCanonicalBatch(df: DataFrame, batchId: Long, sinkDir: String,
                             rejectDir: String, cfg: graft.operators.Quota.QuotaConfig,
-                            known: KnownSeries): Unit = known.guard {
-    commitWindow(aboveHwm(df.repartition(known.partitions, col("series_id")), known),
-      batchId, sinkDir, rejectDir, cfg, known)
+                            known: KnownSeries): Unit =
+    if (!resumeCommitted(df.sparkSession, batchId, sinkDir, known)) known.guard {
+      commitWindow(aboveHwm(df.repartition(known.partitions, col("series_id")), known),
+        batchId, sinkDir, rejectDir, cfg, known)
+    }
+
+  /** Finish a commit whose sink batch `batch_id=<batchId>` already landed
+    * (a replayed stream batch, or a drain window whose spool cleanup a
+    * crash cut off): rebuild the index delta from the sink batch when it
+    * is missing, and fold the delta into `known` (a no-op when the state
+    * already holds it). Re-running the chain instead would hwm-drop every
+    * row and OVERWRITE the committed batch with an empty one. False, and
+    * nothing touched, when the sink batch is not committed. */
+  private[graft] def resumeCommitted(spark: SparkSession, batchId: Long, sinkDir: String,
+                                     known: KnownSeries): Boolean = {
+    val fs = new org.apache.hadoop.fs.Path(sinkDir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (sink, delta) = (s"$sinkDir/batch_id=$batchId", s"${known.indexDir}/batch_id=$batchId")
+    def committed(dir: String) = fs.exists(new org.apache.hadoop.fs.Path(s"$dir/_SUCCESS"))
+    if (!committed(sink)) false
+    else known.guard {
+      // an all-dropped batch committed an empty sink dir: nothing to index
+      val stored = fs.listStatus(new org.apache.hadoop.fs.Path(sink))
+        .exists(!_.getPath.getName.startsWith("_"))
+      if (!committed(delta) && stored)
+        writeByMetric(graft.operators.MetadataOps.buildSeriesIndex(spark.read.parquet(sink)
+          .select(col("metric"), col("tags"), col("ts"), col("series_id"))),
+          delta, known.partitions)
+      if (fs.exists(new org.apache.hadoop.fs.Path(delta)))
+        known.advance(readIndex(spark, known.indexDir, delta))
+      true
+    }
   }
 
   /** `rows` (hash-partitioned like the state) with their series' `hwm` in

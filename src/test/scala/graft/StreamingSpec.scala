@@ -178,6 +178,33 @@ class StreamingSpec extends AnyFunSuite with Matchers {
       .sorted.toSeq shouldEqual Seq((1000L, 1.0), (2000L, 2.0), (3000L, 3.0))
   }
 
+  test("a replayed stream batch keeps its committed rows: the same batch id " +
+       "over a reloaded state, with and without its index delta") {
+    val dir = java.nio.file.Files.createTempDirectory("ingest_replay").toString
+    val (sink, index, rejects) = (s"$dir/sink", s"$dir/index", s"$dir/rejects")
+    val cfg = graft.operators.Quota.QuotaConfig(Seq("metric"), Seq(1000L))
+    val user7 = Map("user" -> "7")
+    val id = Seq(("view", user7)).toDF("metric", "tags")
+      .select(graft.model.SeriesKey.id(col("metric"), col("tags"))).as[Long].head()
+    val batch = Seq(Sample(id, "view", user7, 1000L, 1.0), Sample(id, "view", user7, 2000L, 2.0)).toDF()
+    def commit(): Unit = // a restarted query: its state reloads from the index
+      Ingest.processCanonicalBatch(batch, 0L, sink, rejects, cfg, new Ingest.KnownSeries(spark, index))
+    def stored = spark.read.parquet(sink).select("ts", "value").as[(Long, Double)].collect().sorted.toSeq
+    def hwm = spark.read.parquet(index).agg(max("end_ts")).as[Long].head()
+    commit()
+    // crash after both writes, before the checkpoint commit: the replay
+    // finds its own delta in the state it reloads
+    commit()
+    stored shouldEqual Seq((1000L, 1.0), (2000L, 2.0))
+    hwm shouldEqual 2000L
+    // crash between the sink and the index write: the delta is rebuilt
+    val idx0 = new org.apache.hadoop.fs.Path(s"$index/batch_id=0")
+    idx0.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(idx0, true)
+    commit()
+    stored shouldEqual Seq((1000L, 1.0), (2000L, 2.0))
+    hwm shouldEqual 2000L
+  }
+
   test("doc quality monitor: windowed per-source counts finalize under the watermark") {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     // 60 words with real English stopwords: passes every row rule, langId=en
