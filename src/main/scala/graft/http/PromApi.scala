@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import graft.model.SeriesKey
 import graft.promql.PromPlanner
 import graft.operators.MetadataOps
-import graft.streaming.SpoolDrain
+import graft.streaming.{Ingest, SpoolDrain}
 
 /** Prometheus-compatible HTTP API (SURVEY.md §3.1/§2.8), served by the JDK
   * HttpServer (zero extra dependencies):
@@ -160,28 +160,13 @@ class PromApi(spark: SparkSession, samples: DataFrame, port: Int = 0,
     * racing instances. Spool mode never touches it: its batch ids are
     * spool ids (see the spool section). */
   private lazy val writeBatchId = new java.util.concurrent.atomic.AtomicLong(
-    writeSink.map(ws => math.max(maxId(ws.sinkDir)(batchDirId),
-      maxId(s"${ws.sinkDir}/_claims")(_.toLongOption)) + 1L).getOrElse(0L))
+    writeSink.map(ws => math.max(Ingest.maxId(spark, ws.sinkDir)(),
+      Ingest.maxId(spark, s"${ws.sinkDir}/_claims")(_.toLongOption)) + 1L).getOrElse(0L))
 
   /** The write sink's filesystem. */
   private def sinkFs(ws: PromApi.WriteSink): org.apache.hadoop.fs.FileSystem =
     new org.apache.hadoop.fs.Path(ws.sinkDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** Largest id `id` parses from the names in `dir`; -1 when none. Seeds
-    * both id counters. The parse is guarded: a crashed-write leftover
-    * like `batch_id=7.tmp` must not throw in a counter's lazy init (it
-    * would permanently fail the write endpoint). */
-  private def maxId(dir: String)(id: String => Option[Long]): Long = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) -1L
-    else fs.listStatus(p).flatMap(st => id(st.getPath.getName)).foldLeft(-1L)(math.max)
-  }
-
-  /** `batch_id=<n>` → n; only all-digit suffixes count. */
-  private def batchDirId(name: String): Option[Long] =
-    if (name.startsWith("batch_id=")) name.stripPrefix("batch_id=").toLongOption else None
 
   /** Mint a batch id no other writer holds: atomically create a claim
     * file under `<sink>/_claims/<id>` (createNewFile is the one atomic
@@ -238,8 +223,8 @@ class PromApi(spark: SparkSession, samples: DataFrame, port: Int = 0,
 
   private lazy val spoolSeq = new java.util.concurrent.atomic.AtomicLong(
     writeSink.map(ws => math.max(
-      maxId(s"${ws.sinkDir}/_spool")(_.split('.').headOption.flatMap(_.toLongOption)),
-      maxId(ws.sinkDir)(batchDirId)) + 1L).getOrElse(0L))
+      Ingest.maxId(spark, s"${ws.sinkDir}/_spool")(_.split('.').headOption.flatMap(_.toLongOption)),
+      Ingest.maxId(spark, ws.sinkDir)()) + 1L).getOrElse(0L))
 
   // ---- in-process claim ledger --------------------------------------------
   //
@@ -1364,7 +1349,6 @@ class PromApi(spark: SparkSession, samples: DataFrame, port: Int = 0,
   private def commitRows(ws: PromApi.WriteSink,
                          decoded: Dataset[SpoolDrain.SpoolRow],
                          flags: SpoolDrain.WindowFlags, batchId: Long): Unit = {
-    import graft.streaming.Ingest
     if (flags.seriesTotal > 0L) {
       Ingest.remoteWriteBatch(
         SpoolDrain.assembleCanonical(decoded,
@@ -1829,10 +1813,12 @@ object PromApi {
   /** Where `/api/v1/write` commits: the sink/index/reject directory triple
     * plus the quota config of the canonical ingest chain (the same triple
     * `Ingest.startIngestWithQuota` maintains — point a read API's
-    * `samples` at `sinkDir` to query what arrives). A stream's triple hands
-    * over to this handler: both mint `SeriesKey.id`, and the handler loads
-    * its hwm from the stream's index, so a sample resent after the stream
-    * stops drops at or below the streamed hwm. */
+    * `samples` at `sinkDir` to query what arrives). A stream and this
+    * handler run the one commit (`Ingest.remoteWriteBatch`) over the same
+    * triple, so either hands over to the other: both mint `SeriesKey.id`,
+    * each loads its hwm from the other's index, so a resent sample drops
+    * at or below the held hwm, and each starts its batch ids past the
+    * batches the sink already holds. */
   case class WriteSink(sinkDir: String, indexDir: String, rejectDir: String,
                        cfg: graft.operators.Quota.QuotaConfig,
                        exemplarDir: Option[String] = None)

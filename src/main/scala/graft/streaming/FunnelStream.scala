@@ -21,7 +21,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * State is one (stage, ts) pair per user — fixed-width, and evicted by
   * event-time timeout once the watermark passes last activity + TTL, so
   * state size tracks ACTIVE users, not all users ever seen (the 100 TB
-  * contract, same as Ingest.dropOutOfOrder). */
+  * contract). */
 object FunnelStream {
 
   case class FEvent(user_id: Long, ts: Long, event_type: String,

@@ -518,9 +518,10 @@ object Gateway {
     * scrape loop does: when a target stops answering, append one marker
     * per series the last successful scrape exposed, stamped at the failed
     * scrape's time. The rows are canonical tombstones (`value` NaN,
-    * `__stale` = true) that ride the same quota/dedup/sink chain as
-    * samples ([[graft.streaming.Ingest.processCanonicalBatch]] /
-    * `remoteWriteBatch`) and cut the instant lookback immediately —
+    * `__stale` = true) that ride the same commit as samples
+    * ([[graft.streaming.Ingest.remoteWriteBatch]], which a stream batch
+    * runs through [[graft.streaming.Ingest.processCanonicalBatch]]; the
+    * flag is kept as payload) and cut the instant lookback immediately —
     * without them a dead target's series linger in instant queries and
     * /federate for the full staleness window.
     *
@@ -555,8 +556,7 @@ object Gateway {
 
   /** [[ScrapeRow]] plus its event-time column — the watermark column must
     * SURVIVE into the grouped Dataset for EventTimeTimeout (dropping it
-    * after withWatermark fails analysis; same pattern as
-    * [[Ingest]]'s timed canonical rows). */
+    * after withWatermark fails analysis). */
   private[streaming] case class TimedScrape(target: String, series_id: Long,
                                             metric: String,
                                             tags: Map[String, String],
@@ -594,8 +594,9 @@ object Gateway {
     * snapshot, and pull the vanish timer backwards (r15 advisor finding).
     *
     * Returns ONLY the synthesized marker rows; union them with the sample
-    * stream into the sink (markers are data rows, so the quota/dedup/sink
-    * chain applies unchanged). State is one small map per live target —
+    * stream into [[graft.streaming.Ingest.startIngestWithQuota]] (markers
+    * are data rows: the commit dedups, hwm-cuts and admits them like
+    * samples and stores their `__stale` flag). State is one small map per live target —
     * at 1000 targets x 10k series this is tens of MB across the cluster,
     * partitioned by target, and each micro-batch touches only targets
     * with new scrapes plus expired timers. */

@@ -1,39 +1,30 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.OutputMode
 import graft.model.SeriesKey
 
 /** Streaming ingestion of the canonical samples model (SURVEY.md §2.9).
   *
   * The reference ingests Kafka-partitioned BinaryRecords into per-shard
   * write buffers, dropping out-of-order and duplicate samples per series
-  * (TimeSeriesPartition.scala:130-190). Here the same semantics are a
-  * Structured Streaming pipeline: source → normalize → per-series
-  * out-of-order drop ([[dropOutOfOrder]], a stateful group keeping the
-  * per-series high-water mark) → append sink partitioned for pruning.
+  * against the series' last ingested timestamp
+  * (TimeSeriesPartition.scala:130-190). Here every writer — a stream's
+  * micro-batch ([[startIngestWithQuota]]), a remote-write POST, a spool
+  * drain window — commits through the one [[remoteWriteBatch]]: the
+  * in-batch least-value dedup per (series, ts), the cut at the series'
+  * held high-water mark, then the quota/sink/index chain, into a sink
+  * partitioned (batch_id, metric) for pruning.
   *
-  * At scale: the stateful drop shuffles by series_id (same movement the
-  * reference does by shard routing); state is one Long per live series;
-  * the sink partitioning (metric, date) gives partition pruning to every
-  * query with a metric + time predicate — the Spark analogue of shard-key
-  * routing + time-bucketed chunks.
-  *
-  * The quota commit ([[processCanonicalBatch]], [[remoteWriteBatch]])
-  * reads one held [[KnownSeries]] state per series index: the committed
-  * series with their high-water marks, partitioned by series_id in
-  * executor memory. It is the source of the remote-write hwm dedup and of
-  * the quota's known set; each commit advances it by its own index delta,
-  * so a commit lists and scans no index files.
+  * The commit reads one held [[KnownSeries]] state per series index: the
+  * committed series with their high-water marks, partitioned by series_id
+  * in executor memory. It is the source of the hwm cut and of the quota's
+  * known set; each commit advances it by its own index delta, so a commit
+  * lists and scans no index files, and no stream keeps a state store on
+  * the samples path.
   */
 object Ingest {
-
-  /** The one canonical sample row every stream sinks: a metric, its tag
-    * map and `series_id = SeriesKey.id(metric, tags)` — the row shape the
-    * Gateway decoders, remote-write and [[normalize]] all emit. */
-  case class Sample(series_id: Long, metric: String,
-                    tags: Map[String, String], ts: Long, value: Double)
 
   /** Event-stream row shape for sessionPathGrams. */
   case class Ev(user_id: Long, event_id: Long, event_type: String, ts_ms: Long)
@@ -53,59 +44,26 @@ object Ingest {
       col("value"))
   }
 
-  /** Drop out-of-order / duplicate samples per series over canonical
-    * (series_id, metric, tags, ts, value) rows, keeping the high-water
-    * mark in state — streaming-safe, mirrors reference ingest-time
-    * semantics (`outOfOrderDropped` counters).
-    *
-    * State is bounded: an event-time timeout tied to the watermark evicts
-    * the high-water mark of any series idle for `stateTtlMs` — without it,
-    * per-series state grows forever as series churn (the 100 TB killer).
-    * Late rows are still judged by the per-series mark, not the watermark,
-    * so drop semantics are unchanged. The watermark column `et` stays in
-    * the plan under the typed view; the rows decode as [[Sample]]. */
-  def dropOutOfOrder(samples: DataFrame, stateTtlMs: Long = 3600000L,
-                     lateness: String = "10 minutes"): Dataset[Sample] = {
-    import samples.sparkSession.implicits._
-    samples
-      .select(col("series_id"), col("metric"), col("tags"), col("ts"), col("value"))
-      .withColumn("et", timestamp_millis(col("ts")))
-      .withWatermark("et", lateness).as[Sample]
-      .groupByKey(_.series_id)
-      .flatMapGroupsWithState[Long, Sample](OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (_: Long, rows: Iterator[Sample], state: GroupState[Long]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            var hwm = state.getOption.getOrElse(Long.MinValue)
-            val out = rows.toSeq.sortBy(s => (s.ts, s.value)).filter { s =>
-              val keep = s.ts > hwm
-              if (keep) hwm = s.ts
-              keep
-            }.toVector
-            state.update(hwm)
-            // evict once the watermark passes hwm + TTL (never set a
-            // timeout behind the current watermark — that's an error)
-            state.setTimeoutTimestamp(
-              math.max(hwm + stateTtlMs, state.getCurrentWatermarkMs() + 1))
-            out.iterator
-          }
-      }
-  }
-
   /** Ingest with cardinality QUOTA enforcement (reference
     * CardinalityTracker + QuotaExceededProtocol, core/.../memstore/
-    * ratelimit/) over canonical (series_id, metric, tags, ts, value)
-    * streams — the Gateway decoders' rows, or [[normalize]] of an events
-    * stream. Each microbatch runs the out-of-order drop, then the quota/
-    * sink/index commit ([[processCanonicalBatch]]): genuinely-NEW series
-    * are admitted against per-prefix children quotas over the held
-    * [[KnownSeries]] state, only admitted series' samples and index delta
-    * are written, and every rejection lands in `rejectDir` — the
-    * QuotaReached signal, one row per rejected series with the breached
-    * depth and the quota applied. Existing series are never evicted;
-    * admission within a batch is deterministic (child-key order), so a
-    * replay reproduces the same decisions. Index-only ingest is this entry
-    * with quotas that admit every series.
+    * ratelimit/) over canonical (metric, tags, ts, value[, payload])
+    * streams — the Gateway decoders' rows (staleness markers' `__stale`
+    * included), or [[normalize]] of an events stream. Each micro-batch
+    * commits as one remote-write batch ([[processCanonicalBatch]]): the
+    * in-batch dedup and the held-hwm cut drop out-of-order and duplicate
+    * samples, then genuinely-NEW series are admitted against per-prefix
+    * children quotas over the held [[KnownSeries]] state, only admitted
+    * series' samples and index delta are written, and every rejection
+    * lands in `rejectDir` — the QuotaReached signal, one row per rejected
+    * series with the breached depth and the quota applied. Existing series
+    * are never evicted; admission within a batch is deterministic
+    * (child-key order), so a replay reproduces the same decisions.
+    * Index-only ingest is this entry with quotas that admit every series.
+    *
+    * Stream batch N commits as sink batch `base + N`, where the base
+    * ([[streamBatchBase]]) starts past every batch the sink, index and
+    * rejects already hold: a stream on a fresh checkpoint never lands on an
+    * earlier writer's batch id.
     *
     * Shard-key labels beyond metric resolve through `tags(label)`
     * (Quota.keyExpr), so multi-level keys like ws → ns → metric work.
@@ -118,17 +76,58 @@ object Ingest {
                            checkpointDir: String,
                            cfg: graft.operators.Quota.QuotaConfig)
       : org.apache.spark.sql.streaming.StreamingQuery = {
+    val spark = samples.sparkSession
     // the query's held known-series state: loaded at its first batch,
     // advanced by each batch's index delta
-    val known = new KnownSeries(samples.sparkSession, indexDir)
-    dropOutOfOrder(samples).writeStream
-      .outputMode(OutputMode.Append)
+    val known = new KnownSeries(spark, indexDir)
+    val base = streamBatchBase(spark, checkpointDir, sinkDir, indexDir, rejectDir)
+    samples.writeStream
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Sample], batchId: Long) =>
-        processCanonicalBatch(batch.toDF(), batchId, sinkDir, rejectDir, cfg, known)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        processCanonicalBatch(batch, base + batchId, sinkDir, rejectDir, cfg, known)
       }
       .start()
   }
+
+  /** The sink batch id a stream's batch 0 commits as: one past the
+    * largest `batch_id=` under `dirs` at the stream's first start,
+    * persisted in its checkpoint dir (`batch_base`) so a
+    * restart on the same checkpoint maps each replayed batch to the sink
+    * batch it committed. Written through a hidden tmp file and a rename,
+    * so a crash never leaves a partial base. */
+  private def streamBatchBase(spark: SparkSession, checkpointDir: String,
+                              dirs: String*): Long = {
+    val file = new org.apache.hadoop.fs.Path(s"$checkpointDir/batch_base")
+    val fs = file.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(file)) {
+      val in = fs.open(file)
+      try new String(in.readAllBytes(), "UTF-8").trim.toLong finally in.close()
+    } else {
+      val base = dirs.map(maxId(spark, _)()).max + 1L
+      val tmp = new org.apache.hadoop.fs.Path(s"$checkpointDir/_batch_base-${java.util.UUID.randomUUID()}")
+      val out = fs.create(tmp, true)
+      try out.write(base.toString.getBytes("UTF-8")) finally out.close()
+      if (!fs.rename(tmp, file)) throw new java.io.IOException(s"cannot publish $file")
+      base
+    }
+  }
+
+  /** Largest id `id` parses from the names in `dir` (by default the
+    * `batch_id=<n>` dirs); -1 when none. Seeds every batch-id counter.
+    * The parse is guarded: a crashed-write leftover like `batch_id=7.tmp`
+    * must not throw in a counter's lazy init (it would permanently fail
+    * the write endpoint). */
+  private[graft] def maxId(spark: SparkSession, dir: String)
+                         (id: String => Option[Long] = batchDirId): Long = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) -1L
+    else fs.listStatus(p).flatMap(st => id(st.getPath.getName)).foldLeft(-1L)(math.max)
+  }
+
+  /** `batch_id=<n>` → n; only all-digit suffixes count. */
+  private def batchDirId(name: String): Option[Long] =
+    if (name.startsWith("batch_id=")) name.stripPrefix("batch_id=").toLongOption else None
 
   /** Opt-in write-path timing (SPARK_GRAFT_DRAIN_TIMING=1), the one read
     * of the switch: the spool drain prints its `[drain]` decode/commit/
@@ -284,23 +283,19 @@ object Ingest {
     checkpointed(df).foreach(_.unpersist(blocking = false))
 
   /** The stream commit of [[startIngestWithQuota]] (its `foreachBatch`
-    * body) over ALREADY-DEDUPED canonical rows: the quota/sink/index chain
-    * of [[commitWindow]] against `known`. foreachBatch is at-least-once (a
+    * body): the remote-write commit ([[remoteWriteBatch]]) of the batch's
+    * raw canonical rows against `known`. foreachBatch is at-least-once (a
     * crash between a write and the checkpoint commit replays the batch),
     * so every write is keyed by batchId and OVERWRITES its own `batch_id=`
     * dir. A replay whose sink batch already landed is repaired forward
     * ([[resumeCommitted]]), never re-run: its rows are at or below the
-    * hwm of the state that reloads them, so the chain would overwrite the
-    * batch with an empty one. The stream's own dedup state starts empty
-    * on a fresh checkpoint, so the held hwm still drops what the sink
-    * already has. */
+    * hwm of the state that reloads them, so the commit would overwrite
+    * the batch with an empty one. */
   def processCanonicalBatch(df: DataFrame, batchId: Long, sinkDir: String,
                             rejectDir: String, cfg: graft.operators.Quota.QuotaConfig,
                             known: KnownSeries): Unit =
-    if (!resumeCommitted(df.sparkSession, batchId, sinkDir, known)) known.guard {
-      commitWindow(aboveHwm(df.repartition(known.partitions, col("series_id")), known),
-        batchId, sinkDir, rejectDir, cfg, known)
-    }
+    if (!resumeCommitted(df.sparkSession, batchId, sinkDir, known))
+      remoteWriteBatch(df, batchId, sinkDir, rejectDir, cfg, known)
 
   /** Finish a commit whose sink batch `batch_id=<batchId>` already landed
     * (a replayed stream batch, or a drain window whose spool cleanup a
@@ -348,7 +343,7 @@ object Ingest {
   private def writeByMetric(rows: DataFrame, dir: String, n: Int): Unit =
     rows.repartition(n, col("metric")).write.mode("overwrite").partitionBy("metric").parquet(dir)
 
-  /** The commit chain shared by both entries: quota admission, then the
+  /** The commit chain of [[remoteWriteBatch]]: quota admission, then the
     * sink write, the index delta, and the state advance, in that order (an
     * index delta that landed before its sink batch would make a replay
     * hwm-drop acked samples).
@@ -542,14 +537,8 @@ object Ingest {
     * a partial base a reader would trust. Call periodically (PromApi
     * auto-triggers every `hwmCompactEvery` accepted writes). */
   def compactHwm(spark: SparkSession, indexDir: String): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(indexDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val root = new org.apache.hadoop.fs.Path(indexDir)
-    if (!fs.exists(root)) return
-    val batchIds = fs.listStatus(root).map(_.getPath.getName)
-      .flatMap(_.stripPrefix("batch_id=").toLongOption)
-    if (batchIds.isEmpty) return
-    val upto = batchIds.max
+    val upto = maxId(spark, indexDir)()
+    if (upto < 0) return
     // one row per series with its identity: the base is what a
     // [[KnownSeries]] load starts from (metric/tags are functionally
     // dependent on series_id — the grouping cardinality is unchanged)
@@ -559,17 +548,17 @@ object Ingest {
     publishBase(spark, indexDir, "_hwm", upto, folded)
   }
 
-  /** One HTTP remote-write batch (`/api/v1/write`, reference gateway
-    * ingest semantics): canonical (metric, tags, ts, value[, exp_*]) rows
-    * → out-of-order/duplicate drop → native-histogram cumulative→delta
+  /** The one commit every writer runs — an HTTP remote-write batch
+    * (`/api/v1/write`, reference gateway ingest semantics), a spool drain
+    * window, a stream's micro-batch ([[processCanonicalBatch]]):
+    * canonical (metric, tags, ts, value[, payload]) rows →
+    * out-of-order/duplicate drop → native-histogram cumulative→delta
     * conversion → the quota/sink/index commit ([[commitWindow]]).
     *
-    * The streaming path's per-series high-water mark lives in stream
-    * state; an HTTP batch recovers the SAME semantics from the held
-    * known-series state (`known`, [[KnownSeries]]):
+    * The drop is the reference's per-series last-timestamp rule, read
+    * from the held known-series state (`known`, [[KnownSeries]]):
     *  - in-batch: equal-ts duplicates keep the least (value, payload)
-    *    row — exactly what the stateful drop admits when a batch carries
-    *    them together;
+    *    row;
     *  - cross-batch: a series' `hwm` (its indexed `end_ts`) is the
     *    persisted high-water mark — samples at or below it drop, so a
     *    re-POST of already-written data is a no-op and regressing writers
@@ -913,26 +902,6 @@ object Ingest {
     * Kafka after JSON decode). */
   val EventsSchema =
     "event_id LONG, ts TIMESTAMP_NTZ, user_id LONG, event_type STRING, value DOUBLE, props STRING"
-
-  /** The source-agnostic ingest pipeline: normalize → per-series
-    * out-of-order/duplicate drop. Every source (file, Kafka, memory-stream
-    * tests) feeds an events-shaped frame through this exact chain — the
-    * seam the reference keeps between its Kafka consumer and its
-    * shard-ingest path. */
-  def pipeline(events: DataFrame): Dataset[Sample] = dropOutOfOrder(normalize(events))
-
-  /** Shared sink tail: append the deduped canonical samples to a
-    * metric-partitioned parquet layout (partition pruning for every query
-    * with a metric predicate) that a PromApi can serve as its samples. */
-  def startIngest(events: DataFrame, sinkDir: String,
-                  checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    pipeline(events).writeStream
-      .outputMode(OutputMode.Append)
-      .format("parquet")
-      .option("path", sinkDir)
-      .option("checkpointLocation", checkpointDir)
-      .partitionBy("metric")
-      .start()
 
   /** Streaming corpus-quality monitor — the LIVE twin of the q117 batch
     * corpus report: per (source, tumbling window), doc/token counts,
@@ -1518,27 +1487,33 @@ object Ingest {
     }
   }
 
-  /** Streaming ingest from a parquet directory source. */
+  /** Streaming ingest from a parquet directory source: [[normalize]] of
+    * the events rows into [[startIngestWithQuota]]. */
   def startFileIngest(spark: SparkSession, srcDir: String, sinkDir: String,
-                      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    startIngest(spark.readStream.schema(EventsSchema).parquet(srcDir),
-      sinkDir, checkpointDir)
+                      indexDir: String, rejectDir: String, checkpointDir: String,
+                      cfg: graft.operators.Quota.QuotaConfig)
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    startIngestWithQuota(normalize(spark.readStream.schema(EventsSchema).parquet(srcDir)),
+      sinkDir, indexDir, rejectDir, checkpointDir, cfg)
 
   /** Streaming ingest from Kafka: one JSON-encoded events row per record.
-    * Identical pipeline to the file source — only the source swaps. The
+    * Identical chain to the file source — only the source swaps. The
     * container ships no broker (and no kafka connector jar), so this path
-    * is compile-checked here and exercised through `pipeline` with
-    * simulated out-of-order partitions in StreamingSpec; on a real cluster
-    * it needs only spark-sql-kafka on the classpath. */
+    * is compile-checked here and its decode ([[decodeKafkaValueFrame]])
+    * driven through [[startIngestWithQuota]] in StreamingSpec; on a real
+    * cluster it needs only spark-sql-kafka on the classpath. */
   def startKafkaIngest(spark: SparkSession, bootstrapServers: String, topic: String,
-                       sinkDir: String, checkpointDir: String,
-                       startingOffsets: String = "latest"): org.apache.spark.sql.streaming.StreamingQuery = {
+                       sinkDir: String, indexDir: String, rejectDir: String,
+                       checkpointDir: String, cfg: graft.operators.Quota.QuotaConfig,
+                       startingOffsets: String = "latest")
+      : org.apache.spark.sql.streaming.StreamingQuery = {
     val raw = spark.readStream.format("kafka")
       .option("kafka.bootstrap.servers", bootstrapServers)
       .option("subscribe", topic)
       .option("startingOffsets", startingOffsets)
       .load()
-    startIngest(decodeKafkaValueFrame(raw), sinkDir, checkpointDir)
+    startIngestWithQuota(normalize(decodeKafkaValueFrame(raw)),
+      sinkDir, indexDir, rejectDir, checkpointDir, cfg)
   }
 
   /** The record decode of [[startKafkaIngest]], factored on the FRAME
@@ -1548,7 +1523,7 @@ object Ingest {
     * the only piece a spec cannot drive in this container. One
     * JSON-encoded events row per record value; a malformed value decodes
     * to an all-null struct and is DROPPED here (null ts/event_type carry
-    * no series identity — sinking them would poison the dedup state). */
+    * no series identity — sinking them would poison the series index). */
   def decodeKafkaValueFrame(raw: DataFrame): DataFrame =
     raw
       .select(from_json(col("value").cast("string"),

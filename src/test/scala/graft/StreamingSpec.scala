@@ -7,10 +7,14 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 import graft.streaming.{FunnelStream, Ingest}
-import graft.streaming.Ingest.Sample
-import StreamingSpec.UserSample
+import StreamingSpec.{Sample, UserSample}
 
 object StreamingSpec {
+  /** A canonical sample row, as the Gateway decoders and
+    * `Ingest.normalize` emit it. */
+  case class Sample(series_id: Long, metric: String,
+                    tags: Map[String, String], ts: Long, value: Double)
+
   /** An events-derived row keyed by one `user` column: the shape the
     * session and downsample operators group on by default. */
   case class UserSample(series_id: Long, metric: String, user: String, ts: Long, value: Double)
@@ -21,13 +25,21 @@ class StreamingSpec extends AnyFunSuite with Matchers {
   lazy val spark: SparkSession = GraftSession.builder("local[4]", "4").getOrCreate()
   import spark.implicits._
 
+  /** The index-only quota: every series fits. */
+  private val admitAll = graft.operators.Quota.QuotaConfig(Seq("metric"), Seq(1000000L))
+
+  /** A stream's sink rows as (metric, user tag, ts, value), sorted. */
+  private def sunkByUser(sink: String): Seq[(String, String, Long, Double)] =
+    spark.read.parquet(sink).select(col("metric"), col("tags")("user"), col("ts"), col("value"))
+      .as[(String, String, Long, Double)].collect().sorted.toSeq
+
   test("streaming ingest drops out-of-order and duplicate samples per series") {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val (u, v) = (Map("user" -> "u"), Map("user" -> "v"))
     val ms = MemoryStream[Sample]
-    val q = Ingest.dropOutOfOrder(ms.toDF())
-      .writeStream.format("memory").queryName("ooo_out")
-      .outputMode("append").start()
+    val dir = java.nio.file.Files.createTempDirectory("ingest_ooo").toString
+    val q = Ingest.startIngestWithQuota(ms.toDF(), s"$dir/sink", s"$dir/index",
+      s"$dir/rejects", s"$dir/ckpt", admitAll)
     try {
       ms.addData(Sample(1, "m", u, 100, 1.0), Sample(1, "m", u, 200, 2.0))
       q.processAllAvailable()
@@ -37,12 +49,96 @@ class StreamingSpec extends AnyFunSuite with Matchers {
         Sample(1, "m", u, 300, 3.0),  // ok
         Sample(2, "m", v, 50, 5.0))   // other series unaffected
       q.processAllAvailable()
-      val got = spark.table("ooo_out").as[Sample].collect()
-      got.map(s => (s.series_id, s.ts, s.value)).sorted.toSeq shouldEqual
-        Seq((1L, 100L, 1.0), (1L, 200L, 2.0), (1L, 300L, 3.0), (2L, 50L, 5.0))
-      // tags ride through the drop untouched
-      got.map(s => (s.series_id, s.tags)).toSet shouldEqual Set((1L, u), (2L, v))
+      // the commit mints the series id from the tags, which ride through
+      // the drop untouched
+      sunkByUser(s"$dir/sink") shouldEqual Seq(("m", "u", 100L, 1.0),
+        ("m", "u", 200L, 2.0), ("m", "u", 300L, 3.0), ("m", "v", 50L, 5.0))
     } finally q.stop()
+  }
+
+  test("a stream on a fresh checkpoint over an earlier stream's sink lands " +
+       "its samples; a restart on that checkpoint keeps its batch ids") {
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val dir = java.nio.file.Files.createTempDirectory("ingest_fresh_ckpt").toString
+    val (sink, index, rejects) = (s"$dir/sink", s"$dir/index", s"$dir/rejects")
+    def stream() = {
+      val ms = MemoryStream[(Long, Long, Long, String, Double, String)]
+      (ms, Ingest.normalize(ms.toDF.toDF("event_id", "ts", "user_id", "event_type", "value", "props")))
+    }
+    def start(events: org.apache.spark.sql.DataFrame, ckpt: String) =
+      Ingest.startIngestWithQuota(events, sink, index, rejects, s"$dir/$ckpt", admitAll)
+    val (a, aEvents) = stream()
+    val qa = start(aEvents, "ckpt_a")
+    try {
+      a.addData((1L, 1000000000L, 7L, "view", 1.0, ""), (2L, 2000000000L, 7L, "view", 2.0, ""))
+      qa.processAllAvailable()
+    } finally qa.stop()
+    // stream B: its batch 0 must not resolve to A's committed batch 0
+    val (b, bEvents) = stream()
+    val qb = start(bEvents, "ckpt_b")
+    try {
+      b.addData((3L, 3000000000L, 7L, "view", 3.0, ""))
+      qb.processAllAvailable()
+    } finally qb.stop()
+    // B restarts on its checkpoint: its batch 1 commits past its batch 0
+    b.addData((4L, 4000000000L, 7L, "view", 4.0, ""))
+    val qb2 = start(bEvents, "ckpt_b")
+    try qb2.processAllAvailable() finally qb2.stop()
+    sunkByUser(sink) shouldEqual Seq(("view", "7", 1000L, 1.0),
+      ("view", "7", 2000L, 2.0), ("view", "7", 3000L, 3.0), ("view", "7", 4000L, 4.0))
+    spark.read.parquet(sink).select("batch_id").distinct().as[Long].collect()
+      .sorted.toSeq shouldEqual Seq(0L, 1L, 2L)
+  }
+
+  test("staleness markers survive a stream: the sink keeps __stale and an " +
+       "instant query after the marker returns no series") {
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    import graft.promql.PromPlanner
+    val dir = java.nio.file.Files.createTempDirectory("ingest_stale").toString
+    val target = Map("target" -> "a")
+    val id = Seq(("up", target)).toDF("metric", "tags")
+      .select(graft.model.SeriesKey.id(col("metric"), col("tags"))).as[Long].head()
+    // the scrape stream's canonical marker shape, for the live sample too
+    val ms = MemoryStream[graft.streaming.Gateway.StaleMarkerRow]
+    def row(ts: Long, value: Double, stale: Boolean) =
+      graft.streaming.Gateway.StaleMarkerRow(id, "up", target, ts, value, stale)
+    val q = Ingest.startIngestWithQuota(ms.toDF(), s"$dir/sink", s"$dir/index",
+      s"$dir/rejects", s"$dir/ckpt", admitAll)
+    try {
+      ms.addData(row(10000L, 1.0, stale = false))
+      q.processAllAvailable()
+      ms.addData(row(20000L, Double.NaN, stale = true))
+      q.processAllAvailable()
+    } finally q.stop()
+    val sunk = spark.read.parquet(s"$dir/sink")
+    sunk.select("ts", "__stale").as[(Long, Boolean)].collect().sorted.toSeq shouldEqual
+      Seq((10000L, false), (20000L, true))
+    def at(ms: Long): Seq[Double] =
+      PromPlanner.queryRange(PromPlanner.Ctx(spark, sunk, ms, ms, 1000L), """up{target="a"}""")
+        .select("value").as[Double].collect().toSeq
+    at(15000L) shouldEqual Seq(1.0)
+    at(25000L) shouldEqual Seq.empty[Double]
+  }
+
+  test("a sample behind the stream's event-time watermark lands when it is " +
+       "newer than its series' hwm") {
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val ms = MemoryStream[(Long, Long, Long, String, Double, String)]
+    val events = ms.toDF.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+    val dir = java.nio.file.Files.createTempDirectory("ingest_late").toString
+    val q = Ingest.startIngestWithQuota(Ingest.normalize(events), s"$dir/sink",
+      s"$dir/index", s"$dir/rejects", s"$dir/ckpt", admitAll)
+    try {
+      def ns(msec: Long) = msec * 1000000L
+      ms.addData((1L, ns(3600000L), 7L, "view", 1.0, "")) // an hour in
+      q.processAllAvailable()
+      // a new series an hour behind the first: older than any 10-minute
+      // watermark, but above its own (absent) hwm
+      ms.addData((2L, ns(60000L), 8L, "view", 2.0, ""))
+      q.processAllAvailable()
+    } finally q.stop()
+    sunkByUser(s"$dir/sink") shouldEqual
+      Seq(("view", "7", 3600000L, 1.0), ("view", "8", 60000L, 2.0))
   }
 
   test("ingest maintains an append-only series index; merge-on-read equals batch build") {
@@ -52,7 +148,6 @@ class StreamingSpec extends AnyFunSuite with Matchers {
     val events = ms.toDF.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
     val dir = java.nio.file.Files.createTempDirectory("ingest_idx").toString
     // index-only ingest: the quota entry with a quota every series fits
-    val admitAll = graft.operators.Quota.QuotaConfig(Seq("metric"), Seq(1000000L))
     val q = Ingest.startIngestWithQuota(Ingest.normalize(events), s"$dir/sink",
       s"$dir/index", s"$dir/rejects", s"$dir/ckpt", admitAll)
     try {
@@ -369,13 +464,14 @@ class StreamingSpec extends AnyFunSuite with Matchers {
   test("shared ingest pipeline (file/Kafka seam) dedupes across out-of-order source partitions") {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     // events-SHAPED input, exactly what both startFileIngest and
-    // startKafkaIngest feed into Ingest.pipeline — batches simulate Kafka
-    // partitions delivering interleaved, out-of-order records (ts in nanos)
+    // startKafkaIngest feed into Ingest.normalize → startIngestWithQuota —
+    // batches simulate Kafka partitions delivering interleaved,
+    // out-of-order records (ts in nanos)
     val ms = MemoryStream[(Long, Long, Long, String, Double, String)]
     val events = ms.toDF.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-    val q = Ingest.pipeline(events)
-      .writeStream.format("memory").queryName("seam_out")
-      .outputMode("append").start()
+    val dir = java.nio.file.Files.createTempDirectory("ingest_seam").toString
+    val q = Ingest.startIngestWithQuota(Ingest.normalize(events), s"$dir/sink",
+      s"$dir/index", s"$dir/rejects", s"$dir/ckpt", admitAll)
     try {
       def ns(msec: Long) = msec * 1000000L
       // partition A: user 1 purchases, in-batch disorder sorts out
@@ -389,9 +485,7 @@ class StreamingSpec extends AnyFunSuite with Matchers {
         (5L, ns(3000), 1L, "purchase", 20.0, ""),
         (6L, ns(500), 2L, "view", 7.0, ""))
       q.processAllAvailable()
-      val got = spark.table("seam_out").as[Sample].collect()
-        .map(s => (s.metric, s.tags("user"), s.ts, s.value)).sorted.toSeq
-      got shouldEqual Seq(
+      sunkByUser(s"$dir/sink") shouldEqual Seq(
         ("purchase", "1", 1000L, 5.0), ("purchase", "1", 2000L, 10.0),
         ("purchase", "1", 3000L, 20.0), ("view", "2", 500L, 7.0))
     } finally q.stop()
@@ -439,31 +533,6 @@ class StreamingSpec extends AnyFunSuite with Matchers {
       cold = Some(graft.promql.PromPlanner.ColdTier(ds5, 300000L)))
     graft.promql.PromPlanner.queryRange(c, """sum_over_time(m{u="1"}[10m])""")
       .select("value").as[Double].head() shouldEqual 16.0 +- 1e-9
-  }
-
-  test("ingest state TTL evicts idle series once the watermark passes") {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val ms = MemoryStream[Sample]
-    val q = Ingest.dropOutOfOrder(ms.toDF(), stateTtlMs = 1000L, lateness = "1 second")
-      .writeStream.format("memory").queryName("ttl_out")
-      .outputMode("append").start()
-    try {
-      def stateRows: Long = q.lastProgress.stateOperators(0).numRowsTotal
-      ms.addData(Sample(1, "m", Map("user" -> "u"), 100000L, 1.0))
-      q.processAllAvailable()
-      stateRows shouldEqual 1L
-      // a second series far in the future advances the watermark past
-      // series 1's hwm + TTL; the trailing no-data micro-batch fires
-      // series 1's event-time timeout and evicts its state, while fresh
-      // series 2 survives — bounded state under series churn
-      ms.addData(Sample(2, "m", Map("user" -> "v"), 10000000L, 2.0))
-      q.processAllAvailable()
-      ms.addData(Sample(2, "m", Map("user" -> "v"), 10010000L, 3.0))
-      q.processAllAvailable()
-      stateRows shouldEqual 1L
-      // nothing was lost from the output on the way
-      spark.table("ttl_out").count() shouldEqual 3L
-    } finally q.stop()
   }
 
   test("streaming funnel: stages emit once as reached; stale stragglers ignored") {
@@ -638,7 +707,8 @@ class StreamingSpec extends AnyFunSuite with Matchers {
     Files.copy(
       java.nio.file.Paths.get("/root/testdata/sf0.001/events.parquet"),
       java.nio.file.Paths.get(s"$src/events.parquet"))
-    val q = Ingest.startFileIngest(spark, src, sink, chk)
+    val q = Ingest.startFileIngest(spark, src, sink, s"$tmp/index", s"$tmp/rejects",
+      chk, admitAll)
     try q.processAllAvailable() finally q.stop()
     val out = spark.read.parquet(sink)
     out.count() should be > 0L
@@ -716,8 +786,8 @@ class StreamingSpec extends AnyFunSuite with Matchers {
     val raw = ms.toDF
       .toDF("key", "value", "topic", "partition", "offset", "timestamp")
     val dir = java.nio.file.Files.createTempDirectory("kafka_shape").toString
-    val q = Ingest.startIngest(Ingest.decodeKafkaValueFrame(raw),
-      s"$dir/sink", s"$dir/ckpt")
+    val q = Ingest.startIngestWithQuota(Ingest.normalize(Ingest.decodeKafkaValueFrame(raw)),
+      s"$dir/sink", s"$dir/index", s"$dir/rejects", s"$dir/ckpt", admitAll)
     def rec(json: String) =
       (Array.empty[Byte], json.getBytes("UTF-8"), "events", 0, 0L, 0L)
     try {
